@@ -672,17 +672,19 @@ def main(argv: list[str] | None = None) -> int:
             return 2
 
         from mongoshake_spark.plans.repair import multiset_form
+        from mongoshake_spark.sources.tables import read_parquet
 
         def _verify_one(table: str, key) -> dict:
-            src = spark.read.parquet(_path(args.source_dir, table))
+            # the source reads as full sync read it (nanos -> micros); the
+            # target is the engine's own output
+            src = read_parquet(spark, _path(args.source_dir, table))
             dst = spark.read.parquet(_path(args.target_dir, table))
             if key == MULTISET:
-                src = multiset_form(src)
                 # canonicalize the column ORDER through the source's: the
                 # content rendering is name-sorted inside multiset_form,
                 # and this keeps schema comparison order-insensitive too
-                dst = multiset_form(dst.select(*spark.read.parquet(
-                    _path(args.source_dir, table)).columns))
+                dst = multiset_form(dst.select(*src.columns))
+                src = multiset_form(src)
                 key = "_vkey"
             names = [c for c in src.columns if c != key]
             sig_cols = [F.col(c).cast("string") for c in names]
@@ -733,7 +735,7 @@ def main(argv: list[str] | None = None) -> int:
         def _full_insert_plan(table: str, key) -> None:
             """Plan recreating a table MISSING from the target: every
             source row (or content group) as an 'i' op."""
-            src = spark.read.parquet(_path(args.source_dir, table))
+            src = read_parquet(spark, _path(args.source_dir, table))
             if key == MULTISET:
                 g = multiset_form(src)
                 payloads = [c for c in g.columns if c != "_vkey"]

@@ -586,7 +586,13 @@ def simhash_pairs64(
     ``bucket_cap=None`` for the exact join.
 
     ``sims`` (testing/reuse hook): a precomputed (doc_id, simhash)
-    DataFrame; skips fingerprint computation."""
+    DataFrame; skips fingerprint computation.
+
+    Precondition: ``doc_id`` is unique in ``docs`` (and in ``sims``). The
+    uncapped path emits each pair once from its lowest matching band
+    instead of running a ``distinct``, so repeated ids yield repeated
+    ``(doc_a, doc_b)`` pairs (``duplicate_clusters`` re-distincts its
+    edges; direct consumers of the pair list see the repeats)."""
     if max_hamming >= SIMHASH64_BANDS:
         raise ValueError(
             f"max_hamming={max_hamming} voids the {SIMHASH64_BANDS}-band "

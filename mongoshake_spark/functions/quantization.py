@@ -47,6 +47,8 @@ never hash-shuffles.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -667,7 +669,13 @@ def ivfadc_score(
     step performs the identical two roundings); subtraction, division
     and comparison are single IEEE ops on both sides; and the probe
     tie-break (cs desc, cid asc) is the same lexicographic order the old
-    row_number window used."""
+    row_number window used.
+
+    Eager at build time: three ``collect``s (centroids, queries,
+    codebooks) run Spark jobs when this is CALLED, not when the result is
+    executed, so model errors surface at construction. A zero, NaN or
+    null ``cnorm``/``qnorm`` is rejected there with a ``ValueError``
+    naming the row: the cosine probe divides by ``qnorm * cnorm``."""
     if rerank is not None and unit is None:
         raise ValueError("ivfadc_score: rerank needs the raw-vector table")
     spark = codes.sparkSession
@@ -680,6 +688,17 @@ def ivfadc_score(
 
     cent_rows = cents.select("cid", "cvec", "cnorm").collect()
     q_rows = queries.collect()
+    for rows, id_name, norm_name in (
+        (cent_rows, "cid", "cnorm"),
+        (q_rows, "query_id", "qnorm"),
+    ):
+        for r in rows:
+            norm = r[norm_name]
+            if norm is None or norm == 0 or math.isnan(norm):
+                raise ValueError(
+                    f"ivfadc_score: {norm_name}={norm} at {id_name}="
+                    f"{r[id_name]!r}; the cosine probe needs a non-zero number"
+                )
     cb_rows = codebooks.select("sub", "cluster", "centroid").collect()
     by_sub: dict[int, list] = {}
     for r in cb_rows:

@@ -403,8 +403,8 @@ def hard_negatives(
     # scaling fixture; BENCH_SCALING.md). An explicit repartition is
     # exempt from AQE coalescing; one narrow exchange buys full stage
     # width on every cache consumer. Downstream aggregates re-key
-    # anyway, and the BM25 sum is rounded before ranking, so the
-    # partitioning is result-invariant.
+    # anyway, and the BM25 sum is rounded to 6 dp before ranking, so
+    # ulp-level reorder noise is absorbed except at exact boundaries.
     tf = tf.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     tf = tf.persist()
     _PERSISTED_TF.append(tf)

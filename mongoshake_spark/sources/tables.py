@@ -10,6 +10,8 @@ reduces to: read, and optionally a key-range predicate per logical piece
 
 from __future__ import annotations
 
+import os
+
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,22 +63,43 @@ def _cacheable_roots() -> tuple:
     the built-in default; deployments extend/replace it via the
     SPARK_GRAFT_CACHE_ROOTS env var (os.pathsep-separated prefixes) —
     a configuration decision, not a hardcoded host path."""
-    import os
-
     env = os.environ.get("SPARK_GRAFT_CACHE_ROOTS")
     if env:
         return tuple(p for p in env.split(os.pathsep) if p)
     return ("/root/testdata/",)
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Full-collection scan (S4). Parquet scans arrive pre-split; Catalyst
-    pushes filters/projections into the scan (checked in tests via
-    ``PushedFilters`` in the formatted plan).
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read a snapshot-plane parquet source — one file or a directory of
+    part files — as the engine types it. Full sync (through
+    ``load_table``), verify and repair all read sources here, so a copy
+    and its source compare column for column.
 
     TIMESTAMP(NANOS) columns (Spark has no ns type; session reads them as
     long via ``nanosAsLong``) are converted to microsecond timestamps —
     the fixture values are whole microseconds, so this is lossless.
+    """
+    # Runtime-settable; required so this works on ANY caller's session,
+    # not just ours from get_spark().
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    schema = (
+        pq.read_schema(path)
+        if os.path.isfile(path)
+        else pq.ParquetDataset(path).schema
+    )
+    for field in schema:
+        if str(field.type) == "timestamp[ns]":
+            df = df.withColumn(
+                field.name, F.expr(f"timestamp_micros({field.name} div 1000)")
+            )
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Full-collection scan (S4). Parquet scans arrive pre-split; Catalyst
+    pushes filters/projections into the scan (checked in tests via
+    ``PushedFilters`` in the formatted plan). Types as ``read_parquet``.
     """
     path = f"{sf_dir}/{name}.parquet"
     cacheable = any(path.startswith(r) for r in _cacheable_roots())
@@ -88,15 +111,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 return cached
             for k in [k for k in _TABLE_CACHE if k[0] != key[0]]:
                 del _TABLE_CACHE[k]
-    # Runtime-settable; required so this works on ANY caller session (the
-    # driver's verify creates its own), not just ours from get_spark().
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for field in pq.read_schema(path):
-        if str(field.type) == "timestamp[ns]":
-            df = df.withColumn(
-                field.name, F.expr(f"timestamp_micros({field.name} div 1000)")
-            )
+    df = read_parquet(spark, path)
     if cacheable:
         with _cache_lock():
             _TABLE_CACHE[key] = df

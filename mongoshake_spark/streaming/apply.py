@@ -21,17 +21,16 @@ Reference semantics being reproduced:
   checkpointLocation (offset+commit logs). Resume = restart the query with
   the same location.
 
-Two barrier modes:
-- ``strict_barriers=True``: the faithful interleaving — every DDL row is
-  its own barrier; segment k MERGEs before DDL k executes. Required when
-  the DDL executor mutates state later ops depend on (a real catalog).
-- default (coalesced): when the DDL executor is side-effect-free w.r.t.
-  the data plane (here: it logs the commands), the per-batch CRUD rows
-  merge in ONE pass and the DDLs are logged in global order. Final state
-  is provably identical — last-writer-wins by a globally monotone ordinal
-  is associative over ordered segments: merge(merge(T,S1),S2) ==
-  merge(T, S1 ∪ S2) — and the DDL log sequence is the same. This removes
-  an O(#DDL) per-batch cost (observed 121s -> ~8s on a DDL-heavy feed).
+One apply per micro-batch: the batch's CRUD rows fold into the state in
+ONE MERGE, and its DDL rows are journaled (and executed, with a
+``ddl_executor``) in global ``(ts, id)`` order before that MERGE commits.
+This reaches the same final state as the batcher's segment/barrier
+interleaving: last-writer-wins by a globally monotone ordinal is
+associative over ordered segments — merge(merge(T,S1),S2) ==
+merge(T, S1 ∪ S2) — and the DDL log sequence is the same. The barrier
+statements act on the session catalog (streaming/ddl.SparkCatalogDDL),
+never on the kernel's state, so no DDL can observe a half-applied batch.
+A batch's Spark job count is therefore independent of its DDL count.
 
 Scale notes: the target state lives ON DISK between micro-batches, in a
 parquet layout HASH-BUCKETED on the merge key (``_bucket = pmod(hash(key),
@@ -41,9 +40,10 @@ n_buckets)`` partition column). Each micro-batch:
 2. reads ONLY those ``_bucket=`` partitions back (partition pruning — the
    literal ``IN`` on the partition column reaches the file index, so
    untouched buckets are never opened),
-3. MERGEs the batch into that slice,
-4. ``localCheckpoint``s the merged slice (O(slice) — this is also what
-   lets Spark overwrite the same files the slice was read from), and
+3. MERGEs the batch into that slice and drops the tombstones the
+   watermark has passed,
+4. ``localCheckpoint``s the merged slice once (O(slice) — this is also
+   what lets Spark overwrite the same files the slice was read from), and
 5. rewrites ONLY the touched buckets via dynamic partition overwrite (the
    committer stages files and renames on commit, so a crash mid-flush
    leaves each bucket either old or new, never truncated — and either
@@ -52,13 +52,13 @@ n_buckets)`` partition column). Each micro-batch:
 Per-batch I/O — read AND write — therefore scales with the batch's key
 spread, not the state size; the reference's apply layer is incremental for
 the same reason (executor/db_writer_bulk.go writes only the batch's
-documents). ``n_buckets`` is persisted in a ``_layout.json`` marker inside
-the state dir; on open, a legacy flat ``*.parquet`` layout or a bucket-
-count mismatch triggers a ONE-TIME re-bucketing rewrite (staged into a
-sibling dir and swapped in, so the old state survives a crash mid-
-migration). On a real cluster the state table is Delta and
-``_apply_segment`` becomes a single ``MERGE INTO``; the kernel isolates
-that swap to one method.
+documents). The slice is re-read from disk every batch, so the plan never
+deepens across batches. ``n_buckets`` is persisted in a ``_layout.json``
+marker inside the state dir; on open, a legacy flat ``*.parquet`` layout
+or a bucket-count mismatch triggers a ONE-TIME re-bucketing rewrite
+(staged into a sibling dir and swapped in, so the old state survives a
+crash mid-migration). On a real cluster the state table is Delta and the
+fold is a single ``MERGE INTO`` (``_apply_delta``).
 """
 
 from __future__ import annotations
@@ -68,6 +68,7 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -87,14 +88,13 @@ class ApplyKernel:
     key: str = "user_id"
     val: str = "value"
     ord: str = "id"
-    strict_barriers: bool = False
     n_buckets: int = 64
     # State-plane format. "parquet" (default) is the self-contained local
     # form: bucket-pruned slice reads + dynamic partition overwrite.
     # "delta" is the 100 TB production form (DEPLOYMENT.md): the same
     # per-batch fold lands as a transactional Delta MERGE INTO keyed on
     # (_bucket, key) — partition-pruned by the bucket equi-term, ACID
-    # commit per segment, tombstone compaction as a partition-scoped
+    # commit per batch, tombstone compaction as a partition-scoped
     # DELETE. Requires the delta-spark package and a session built with
     # its extensions (configure_spark_with_delta_pip); availability-gated
     # at construction so a missing package fails loudly, not mid-stream.
@@ -113,7 +113,6 @@ class ApplyKernel:
     # idempotent (replace/delete by id is).
     mirror: object | None = None
     ddl_log: list[tuple] = field(default_factory=list)
-    _state: DataFrame | None = field(default=None, repr=False)
     _layout_checked: bool = field(default=False, repr=False)
     # Low watermark for tombstone compaction: max ordinal across batches
     # whose flush has committed. Replay (at-least-once) re-delivers only
@@ -123,19 +122,13 @@ class ApplyKernel:
     # bucket). Persisted in _layout.json; lost-marker fallback is None =
     # compact nothing, which is merely conservative.
     _watermark: int | None = field(default=None, repr=False)
-    _merges_since_truncate: int = field(default=0, repr=False)
     # Instrumentation, refreshed per batch: how many state parquet files the
-    # partition-pruned slice read covered, and how many rows it held. The
-    # scale contract (per-batch input ∝ batch, not state) is asserted on
-    # these in tests/test_streaming.py.
+    # partition-pruned slice read covered, and how many rows it held (from
+    # the files' parquet footers, so neither costs a Spark job). The scale
+    # contract (per-batch input ∝ batch, not state) is asserted on these in
+    # tests/test_streaming.py.
     last_state_files_read: int = field(default=0, repr=False)
     last_state_rows_read: int = field(default=0, repr=False)
-
-    # Truncate state lineage after this many chained merges: each segment
-    # nests another aggregate into the logical plan, and past a few dozen
-    # levels Janino's generated code exhausts driver heap. localCheckpoint
-    # materializes the small state and resets plan depth.
-    LINEAGE_TRUNCATE_EVERY = 8
 
     def __post_init__(self) -> None:
         if self.state_format not in ("parquet", "delta"):
@@ -211,7 +204,7 @@ class ApplyKernel:
             return
         if self._is_delta:
             # an EXISTING non-delta state dir must refuse loudly: the
-            # first delta segment write is mode("overwrite") on an
+            # first delta batch write is mode("overwrite") on an
             # is-not-yet-DeltaTable path, which would replace the whole
             # accumulated parquet state with one batch's net rows
             entries_ = os.listdir(self.target_dir)
@@ -305,143 +298,42 @@ class ApplyKernel:
         shutil.rmtree(old)
         self._write_marker()
 
-    def _begin_batch(self, touched_buckets: list[int]) -> None:
-        """Load the slice of state this batch can touch: ONLY the
-        ``_bucket=`` partitions its keys hash into. The ``isin`` on the
-        partition column is pruned at the file index, so state I/O per
-        batch is O(touched buckets), not O(state)."""
-        self._ensure_layout()
-        self.last_state_files_read = 0
-        self.last_state_rows_read = 0
-        if self._is_delta:
-            # MERGE INTO reads (and prunes) the target itself; there is
-            # no in-memory slice to stage
-            self._state = None
-            return
-        if not self._bucket_dirs():
-            self._state = None
-            return
-        sliced = (
-            self.spark.read.parquet(self.target_dir)
-            .filter(F.col("_bucket").isin(touched_buckets))
-            .drop("_bucket")
-            .persist()
+    def _apply_parquet(self, crud: DataFrame, touched: list[int]) -> None:
+        """The batch's one MERGE on the parquet plane (steps 2-5 of the
+        module docstring). The slice read covers ONLY the touched
+        ``_bucket=`` partitions — the ``isin`` on the partition column is
+        pruned at the file index — and the dynamic partition overwrite
+        rewrites only those, so state I/O per batch is O(touched
+        buckets), not O(state). The ``localCheckpoint`` severs the merged
+        slice's dependency on the very files the overwrite replaces."""
+        bucket_dirs = self._bucket_dirs()
+        files = [
+            os.path.join(self.target_dir, d, f)
+            for d in bucket_dirs
+            if int(d.split("=", 1)[1]) in touched
+            for f in os.listdir(os.path.join(self.target_dir, d))
+            if f.endswith(".parquet")
+        ]
+        self.last_state_files_read = len(files)
+        self.last_state_rows_read = sum(
+            pq.read_metadata(f).num_rows for f in files
         )
-        self.last_state_rows_read = sliced.count()
-        self.last_state_files_read = sum(
-            sum(
-                1
-                for f in os.listdir(os.path.join(self.target_dir, d))
-                if f.endswith(".parquet")
+        state = None
+        if bucket_dirs:
+            state = (
+                self.spark.read.parquet(self.target_dir)
+                .filter(F.col("_bucket").isin(touched))
+                .drop("_bucket")
             )
-            for d in self._bucket_dirs()
-            if int(d.split("=", 1)[1]) in touched_buckets
-        )
-        self._state = sliced
-
-    def _apply_segment(self, segment: DataFrame) -> None:
-        """One MERGE into the state (tombstones retained — see
-        operators/merge.merge_upsert). This is the format swap point:
-        parquet folds into the in-batch slice; delta lands the same
-        per-segment fold as a transactional ``MERGE INTO``."""
-        if self._is_delta:
-            self._apply_segment_delta(segment)
-            return
-        new_state = merge.merge_upsert(self._state, segment, self.key, self.val, self.ord)
-        self._merges_since_truncate += 1
-        if self._merges_since_truncate >= self.LINEAGE_TRUNCATE_EVERY:
-            staged = new_state.localCheckpoint(eager=True)
-            self._merges_since_truncate = 0
-        else:
-            staged = new_state.persist()
-            staged.count()
-        if self._state is not None:
-            self._state.unpersist()
-        self._state = staged
-
-    def _apply_segment_delta(self, segment: DataFrame) -> None:
-        """The production MERGE INTO (executor/db_writer_bulk.go's ladder
-        collapsed, same as the parquet fold): the segment reduces to its
-        net per-key rows (max-ordinal value/op — merge_upsert's batch
-        fold), then merges on ``(_bucket, key)``. The ``_bucket``
-        equi-term prunes the Delta scan to the batch's partitions — the
-        same O(touched buckets) I/O contract the parquet slice read
-        carries — and ``s.ord >= t.ord`` makes a replayed batch converge
-        to identical state (last-writer-wins by ordinal, idempotent)."""
-        from delta.tables import DeltaTable
-
-        net = merge.merge_upsert(
-            None, segment, self.key, self.val, self.ord
-        ).withColumn("_bucket", self._bucket_expr())
-        if not DeltaTable.isDeltaTable(self.spark, self.target_dir):
-            (
-                net.write.format("delta")
-                .partitionBy("_bucket")
-                .mode("overwrite")
-                .save(self.target_dir)
-            )
-            return
-        t = DeltaTable.forPath(self.spark, self.target_dir)
-        (
-            t.alias("t")
-            .merge(
-                net.alias("s"),
-                f"t._bucket = s._bucket AND t.{self.key} = s.{self.key}",
-            )
-            .whenMatchedUpdate(
-                condition=f"s.{self.ord} >= t.{self.ord}",
-                set={
-                    self.val: f"s.{self.val}",
-                    self.ord: f"s.{self.ord}",
-                    "op": "s.op",
-                },
-            )
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def _flush(self, touched_buckets: list[int]) -> None:
-        """Durability point, once per micro-batch: the committed state the
-        next run resumes from (paired with the stream's checkpoint — a
-        replayed batch re-MERGEs idempotently).
-
-        Incremental on BOTH sides: ``_begin_batch`` read only the touched
-        buckets, and this rewrites only those buckets (dynamic partition
-        overwrite — untouched ``_bucket=`` directories are never opened).
-        A batch with no CRUD rows writes nothing. The ``localCheckpoint``
-        severs the slice's dependency on the very files the overwrite
-        replaces (and is O(slice), the lineage reset the old full re-read
-        used to pay O(state) for).
-        """
-        if self._is_delta:
-            # each segment's MERGE already committed; the flush-time work
-            # left is the same lazy tombstone compaction the parquet path
-            # runs — scoped to the batch's partitions by the _bucket
-            # predicate, so compaction I/O stays O(touched buckets)
-            t = self._delta_table() if touched_buckets else None
-            if t is not None and self._watermark is not None:
-                buckets = ", ".join(str(int(b)) for b in touched_buckets)
-                t.delete(
-                    f"op = 'd' AND {self.ord} <= {int(self._watermark)} "
-                    f"AND _bucket IN ({buckets})"
-                )
-            return
-        if self._state is None or not touched_buckets:
-            if self._state is not None:
-                self._state.unpersist()
-            self._state = None
-            return
-        out = self._state
+        out = merge.merge_upsert(state, crud, self.key, self.val, self.ord)
         if self._watermark is not None:
-            # lazy tombstone compaction: this flush rewrites the touched
+            # lazy tombstone compaction: this batch rewrites the touched
             # buckets anyway, so dead tombstones in them are dropped for
             # free (see operators/merge.compact for the safety argument)
             out = merge.compact(out, self._watermark, ord_col=self.ord)
-        staged = out.localCheckpoint(eager=True)
-        self._state.unpersist()
-        self._state = None
         (
-            staged.withColumn("_bucket", self._bucket_expr())
+            out.localCheckpoint(eager=True)
+            .withColumn("_bucket", self._bucket_expr())
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_bucket")
@@ -449,6 +341,56 @@ class ApplyKernel:
         )
         if not os.path.isfile(self._marker_path()):
             self._write_marker()
+
+    def _apply_delta(self, crud: DataFrame, touched: list[int]) -> None:
+        """The production MERGE INTO (executor/db_writer_bulk.go's ladder
+        collapsed, same as the parquet fold): the batch reduces to its
+        net per-key rows (max-ordinal value/op — merge_upsert's batch
+        fold), then merges on ``(_bucket, key)``. The ``_bucket``
+        equi-term prunes the Delta scan to the batch's partitions — the
+        same O(touched buckets) I/O contract the parquet slice read
+        carries — and ``s.ord >= t.ord`` makes a replayed batch converge
+        to identical state (last-writer-wins by ordinal, idempotent).
+        Tombstone compaction then runs as a DELETE scoped to the same
+        partitions."""
+        from delta.tables import DeltaTable
+
+        net = merge.merge_upsert(
+            None, crud, self.key, self.val, self.ord
+        ).withColumn("_bucket", self._bucket_expr())
+        t = self._delta_table()
+        if t is not None:
+            (
+                t.alias("t")
+                .merge(
+                    net.alias("s"),
+                    f"t._bucket = s._bucket AND t.{self.key} = s.{self.key}",
+                )
+                .whenMatchedUpdate(
+                    condition=f"s.{self.ord} >= t.{self.ord}",
+                    set={
+                        self.val: f"s.{self.val}",
+                        self.ord: f"s.{self.ord}",
+                        "op": "s.op",
+                    },
+                )
+                .whenNotMatchedInsertAll()
+                .execute()
+            )
+        else:
+            (
+                net.write.format("delta")
+                .partitionBy("_bucket")
+                .mode("overwrite")
+                .save(self.target_dir)
+            )
+            t = DeltaTable.forPath(self.spark, self.target_dir)
+        if self._watermark is not None:
+            buckets = ", ".join(str(int(b)) for b in touched)
+            t.delete(
+                f"op = 'd' AND {self.ord} <= {int(self._watermark)} "
+                f"AND _bucket IN ({buckets})"
+            )
 
     def state_view(self) -> DataFrame | None:
         """User-facing final state: tombstones filtered (W4 deletes).
@@ -516,20 +458,19 @@ class ApplyKernel:
             )
             touched = [r["_b"] for r in per_bucket]
             batch_max = max((r["_m"] for r in per_bucket), default=None)
+            # barriers before the batch's MERGE commits (module docstring)
+            self._apply_ddl(ddl_rows)
             if touched:
-                self._begin_batch(touched)
-            if self.strict_barriers and ddl_rows:
-                self._strict_apply(crud, ddl_rows)
-            else:
-                if touched:
-                    self._apply_segment(crud)
-                self._apply_ddl(ddl_rows)
-            self._flush(touched)
+                self._ensure_layout()
+                if self._is_delta:
+                    self._apply_delta(crud, touched)
+                else:
+                    self._apply_parquet(crud, touched)
             if self.mirror is not None and touched:
                 # net ops from COMMITTED state (replay-safe: a replayed
                 # batch re-reads the same converged rows), restricted to
                 # this batch's keys — O(batch) via the same bucket-pruned
-                # slice read _begin_batch uses, never O(state)
+                # slice read _apply_parquet uses, never O(state)
                 keys = crud.select(self.key).distinct()
                 committed_scan = (
                     self.spark.read.format("delta").load(self.target_dir)
@@ -554,46 +495,6 @@ class ApplyKernel:
         finally:
             batch.unpersist()
 
-    def _strict_apply(self, crud: DataFrame, ddl_rows: list) -> None:
-        """Faithful interleaving: segment k, DDL k, segment k+1, ...
-
-        Segment occupancy is computed in ONE aggregation up front (count
-        per inter-barrier segment), so empty segments — the common case
-        when DDLs cluster — skip their MERGE entirely instead of running
-        a no-op distributed job each (a DDL-heavy batch otherwise costs
-        O(#DDL) jobs).
-        """
-
-        def lit_bound(b):
-            return F.struct(
-                F.lit(b[0]).alias("ts"), F.lit(b[1]).cast("bigint").alias("id")
-            )
-
-        pos = F.struct(F.col("ts").alias("ts"), F.col("id").alias("id"))
-        bounds = [(r["ts"], r["id"]) for r in ddl_rows]
-        # segment index per row: number of barriers before this row
-        seg_idx = F.lit(0)
-        for b in bounds:
-            seg_idx = seg_idx + F.when(pos > lit_bound(b), 1).otherwise(0)
-        occupancy = {
-            r["seg"]: r["cnt"]
-            for r in crud.groupBy(seg_idx.alias("seg")).agg(F.count("*").alias("cnt")).collect()
-        }
-        prev = None
-        for i, r in enumerate(ddl_rows):
-            b = (r["ts"], r["id"])
-            if occupancy.get(i, 0) > 0:
-                seg = crud.filter(
-                    (pos < lit_bound(b))
-                    if prev is None
-                    else ((pos > lit_bound(prev)) & (pos < lit_bound(b)))
-                )
-                self._apply_segment(seg)
-            self._apply_ddl([r])
-            prev = b
-        if occupancy.get(len(bounds), 0) > 0:
-            self._apply_segment(crud.filter(pos > lit_bound(prev)))
-
     def _quarantine(self, unknown: DataFrame) -> None:
         if self.dead_letter_dir and not unknown.isEmpty():
             unknown.write.mode("append").parquet(self.dead_letter_dir)
@@ -606,7 +507,6 @@ def run_incr_sync(
     checkpoint_dir: str,
     dead_letter_dir: str | None = None,
     max_files_per_trigger: int = 1,
-    strict_barriers: bool = False,
     timeout_sec: float = 300.0,
     mirror: object | None = None,
 ) -> ApplyKernel:
@@ -616,10 +516,7 @@ def run_incr_sync(
     B6 for a bounded run). checkpointLocation gives resume (S13).
     ``mirror`` passes through to ``ApplyKernel.mirror`` (the live-target
     hook, e.g. sources/live.mongo_ops_mirror for tunnel=direct)."""
-    kernel = ApplyKernel(
-        spark, target_dir, dead_letter_dir, strict_barriers=strict_barriers,
-        mirror=mirror,
-    )
+    kernel = ApplyKernel(spark, target_dir, dead_letter_dir, mirror=mirror)
     drain_feed(
         spark, feed_dir, kernel.process_batch, checkpoint_dir,
         max_files_per_trigger, timeout_sec,

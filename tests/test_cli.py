@@ -340,6 +340,49 @@ def test_cli_repair_mode_closes_the_loop(spark, sf_dir, tmp_path, capsys):
                  "--repair-dir", empty]) == 2
 
 
+def test_cli_verify_and_repair_nanos_timestamp_source(spark, tmp_path, capsys):
+    """A TIMESTAMP(NANOS) source column reads the same way in full sync,
+    verify and repair: a clean copy verifies in sync, and a diverged one
+    repairs back to in sync."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mongoshake_spark.plans.full_sync import full_sync
+
+    src = tmp_path / "src"
+    src.mkdir()
+    ts = [1_700_000_000_000_001_000 + k * 1_000_000 for k in range(3)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("ns")),
+            "value": pa.array([0.5, 1.5, 2.5]),
+        }),
+        src / "events.parquet",
+    )
+    target = str(tmp_path / "t")
+    verify = ["--sync-mode", "verify", "--source-dir", str(src),
+              "--target-dir", target, "--verify-table", "events",
+              "--verify-key", "event_id"]
+    # the full-sync mode's copy, restricted to the one table
+    full_sync(spark, str(src), target, tables=("events",))
+    assert main(verify) == 0
+    assert json.loads(capsys.readouterr().out)["in_sync"] is True
+
+    events = spark.read.parquet(f"{target}/events")
+    events.filter("event_id != 2").localCheckpoint(eager=True).write.mode(
+        "overwrite"
+    ).parquet(f"{target}/events")
+    repair_dir = str(tmp_path / "repair")
+    assert main([*verify, "--repair-dir", repair_dir]) == 1
+    capsys.readouterr()
+    assert main(["--sync-mode", "repair", "--target-dir", target,
+                 "--repair-dir", repair_dir]) == 0
+    capsys.readouterr()
+    assert main(verify) == 0
+    assert json.loads(capsys.readouterr().out)["in_sync"] is True
+
+
 def test_cli_repair_recreates_dropped_table_and_ignores_stale_plans(
     spark, sf_dir, tmp_path, capsys
 ):

@@ -137,9 +137,7 @@ def test_kernel_executes_ddl_in_barrier_order(spark, tmp_path, ddl):
         rows,
         "id long, ts timestamp, user_id long, op string, ns string, value double, o string",
     )
-    kernel = ApplyKernel(
-        spark, str(tmp_path / "t"), strict_barriers=True, ddl_executor=ddl
-    )
+    kernel = ApplyKernel(spark, str(tmp_path / "t"), ddl_executor=ddl)
     kernel.process_batch(batch, 0)
     assert [a[0] for a in ddl.actions] == [
         "create", "createIndexes", "renameCollection", "drop",

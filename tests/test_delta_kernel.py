@@ -111,11 +111,10 @@ def _scn_replay_idempotence(sess, path):
     assert sorted(tuple(r) for r in k.state_view().collect()) == first
 
 
-def _scn_strict_barriers_order(sess, path):
+def _scn_ddl_barrier_order(sess, path):
     from mongoshake_spark.streaming.apply import ApplyKernel
 
-    k = ApplyKernel(sess, path, state_format="delta",
-                    strict_barriers=True, n_buckets=4)
+    k = ApplyKernel(sess, path, state_format="delta", n_buckets=4)
     # NOTE: the DDL command rides in the `o` column (value stays double)
     # — the original, never-executed form of this test had them swapped
     # and only the shim lane's first real run caught it
@@ -187,7 +186,7 @@ def _scn_rejects_bucket_count_mismatch(sess, path):
 _SCENARIOS = [
     _scn_merge_last_writer_wins_and_tombstones,
     _scn_replay_idempotence,
-    _scn_strict_barriers_order,
+    _scn_ddl_barrier_order,
     _scn_tombstone_compaction_past_watermark,
     _scn_new_kernel_resumes_from_state_dir,
     _scn_rejects_bucket_count_mismatch,

@@ -348,6 +348,46 @@ def test_ivfpq_validations_and_full_probe_shape(spark):
     }
 
 
+def _ivfadc_model(spark, cnorm, qnorm):
+    """A one-cell, one-query IVFADC model (m=1, d=2, k_code=1) with the
+    given centroid and query norms."""
+    codes = spark.createDataFrame(
+        [(1, 7, [0])], "vec_id long, cell long, codes array<int>"
+    )
+    cents = spark.createDataFrame(
+        [(7, [1.0, 0.0], cnorm)], "cid long, cvec array<double>, cnorm double"
+    )
+    codebooks = spark.createDataFrame(
+        [(0, 0, [0.0, 0.0])], "sub int, cluster int, centroid array<double>"
+    )
+    queries = spark.createDataFrame(
+        [(3, [1.0, 0.0], qnorm)], "query_id long, qvec array<double>, qnorm double"
+    )
+    return codes, cents, codebooks, queries
+
+
+@pytest.mark.parametrize(
+    "cnorm, qnorm, message",
+    [
+        # zero: the cosine probe would divide by zero
+        (0.0, 1.0, r"cnorm=0\.0 at cid=7"),
+        # NaN: probe scores would be NaN, which Python's sort leaves in
+        # no defined order
+        (1.0, float("nan"), "qnorm=nan at query_id=3"),
+    ],
+    ids=["zero_cnorm", "nan_qnorm"],
+)
+def test_ivfadc_score_rejects_degenerate_norm(spark, cnorm, qnorm, message):
+    """Degenerate norms are rejected when the model tables are collected,
+    naming the offending row; the same model with valid norms scores."""
+    from mongoshake_spark.functions.quantization import ivfadc_score
+
+    with pytest.raises(ValueError, match=message):
+        ivfadc_score(*_ivfadc_model(spark, cnorm, qnorm), m=1, d=2, k=1, n_probe=1)
+    out = ivfadc_score(*_ivfadc_model(spark, 1.0, 1.0), m=1, d=2, k=1, n_probe=1)
+    assert [r["neighbor_id"] for r in out.collect()] == [1]
+
+
 def test_sq8_roundtrip_and_extremes_exact(spark):
     """SQ8: codes are one byte per dimension (0..255); per-dim min and
     max reconstruct EXACTLY (they are the quantizer's anchor points);

@@ -91,75 +91,37 @@ def test_resume_from_checkpoint(spark, sf_dir, feed, tmp_path):
     assert _final_state(spark, target) == _expected_state(spark, sf_dir)
 
 
-def test_ddl_barrier_segmentation(spark, tmp_path):
-    """batcher_test.go-style scenario: DDL rows at chosen positions split
-    the batch; apply order is segment, barrier, segment, barrier, tail."""
-    import datetime
-
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = []
-    # ops: i i c u c d  (ids 1..6) -> segments [1,2] [4] [6], barriers 3,5
-    for i, op in enumerate(["i", "i", "c", "u", "c", "d"], start=1):
-        rows.append(
-            (i, t0 + datetime.timedelta(seconds=i), 7, op, "db0.c1", float(i), "{}")
-        )
-    batch = spark.createDataFrame(
-        rows, "id long, ts timestamp, user_id long, op string, ns string, value double, o string"
-    )
-    kernel = ApplyKernel(spark, str(tmp_path / "t"), strict_barriers=True)
-    applied_order = []
-    orig_seg, orig_ddl = kernel._apply_segment, kernel._apply_ddl
-
-    def rec_seg(seg):
-        ids = [r["id"] for r in seg.orderBy("id").collect()]
-        if ids:
-            applied_order.append(("seg", ids))
-        orig_seg(seg)
-
-    def rec_ddl(rows_):
-        applied_order.append(("ddl", [r["id"] for r in rows_]))
-        orig_ddl(rows_)
-
-    kernel._apply_segment, kernel._apply_ddl = rec_seg, rec_ddl
-    kernel.process_batch(batch, 0)
-    assert applied_order == [
-        ("seg", [1, 2]),
-        ("ddl", [3]),
-        ("seg", [4]),
-        ("ddl", [5]),
-        ("seg", [6]),
-    ]
-    # delete (id 6) was last writer for user 7 -> target empty
-    assert _final_state(spark, str(tmp_path / "t")) == {}
-
-
 BARRIER_SCENARIOS = {
     # op sequences mirroring collector/batcher_test.go's scenario tables:
-    # DDL at the front, back, consecutive, interleaved, none, all, noop runs
-    "no_ddl": "iiuud",
-    "ddl_front": "ciiu",
-    "ddl_back": "iiuc",
-    "ddl_consecutive": "iccu",
-    "ddl_interleaved": "icicic",
-    "all_ddl": "ccc",
-    "noop_runs": "ninuin",
-    "single_row_ddl": "c",
-    "delete_after_barrier": "icd",
+    # DDL at the front, back, consecutive, interleaved, none, all, noop
+    # runs; each maps to (ops, number of keys the ops cycle over)
+    "no_ddl": ("iiuud", 3),
+    "ddl_front": ("ciiu", 3),
+    "ddl_back": ("iiuc", 3),
+    "ddl_consecutive": ("iccu", 3),
+    "ddl_interleaved": ("icicic", 3),
+    "all_ddl": ("ccc", 3),
+    "noop_runs": ("ninuin", 3),
+    "single_row_ddl": ("c", 3),
+    "delete_after_barrier": ("icd", 3),
+    # barriers split one key's history into segments [1,2] [4] [6]; the
+    # delete after the last barrier is the key's last writer
+    "one_key_segments": ("iicucd", 1),
 }
 
 
 @pytest.mark.parametrize("name", list(BARRIER_SCENARIOS))
 def test_strict_barrier_scenarios(spark, tmp_path, name):
-    """batcher_test.go behavioral spec: for every DDL placement, the strict
-    kernel must (a) apply DDLs in global order, (b) interleave segments and
-    barriers exactly as a sequential apply would, (c) reach the same final
-    state as a row-at-a-time reference simulation."""
+    """batcher_test.go behavioral spec: for every DDL placement, the
+    kernel's one apply per micro-batch must (a) journal DDLs in global
+    order and (b) reach the same final state as a row-at-a-time reference
+    simulation that applies segment k, then DDL k."""
     import datetime
 
-    ops = BARRIER_SCENARIOS[name]
+    ops, n_keys = BARRIER_SCENARIOS[name]
     t0 = datetime.datetime(2024, 1, 1)
     rows = [
-        (i, t0 + datetime.timedelta(seconds=i), i % 3, op, "db0.c1", float(i), "{}")
+        (i, t0 + datetime.timedelta(seconds=i), i % n_keys, op, "db0.c1", float(i), "{}")
         for i, op in enumerate(ops, start=1)
     ]
     batch = spark.createDataFrame(
@@ -171,7 +133,7 @@ def test_strict_barrier_scenarios(spark, tmp_path, name):
     sim_state: dict = {}
     sim_ddl = []
     for i, op in enumerate(ops, start=1):
-        uid = i % 3
+        uid = i % n_keys
         if op == "i" or op == "u":
             sim_state[uid] = float(i)
         elif op == "d":
@@ -181,31 +143,55 @@ def test_strict_barrier_scenarios(spark, tmp_path, name):
             sim_ddl.append(i)
     sim_visible = {k: v for k, v in sim_state.items() if v is not None}
 
-    kernel = ApplyKernel(spark, str(tmp_path / "t"), strict_barriers=True)
-    events = []
-    orig_seg, orig_ddl = kernel._apply_segment, kernel._apply_ddl
-
-    def rec_seg(seg):
-        ids = [r["id"] for r in seg.orderBy("id").collect()]
-        if ids:
-            events.append(("seg", ids))
-        orig_seg(seg)
-
-    def rec_ddl(rows_):
-        events.append(("ddl", [r["id"] for r in rows_]))
-        orig_ddl(rows_)
-
-    kernel._apply_segment, kernel._apply_ddl = rec_seg, rec_ddl
+    kernel = ApplyKernel(spark, str(tmp_path / "t"))
     kernel.process_batch(batch, 0)
 
     # (a) DDL ids in order
-    assert [i for kind, ids in events if kind == "ddl" for i in ids] == sim_ddl
-    # (b) every applied id appears in ascending global order across events
-    flat = [i for _, ids in events for i in ids]
-    assert flat == sorted(flat)
-    # (c) final visible state matches the sequential simulation
+    assert [e[0] for e in kernel.ddl_log] == sim_ddl
+    # (b) final visible state matches the sequential simulation
     got = {r["user_id"]: r["value"] for r in (kernel.state_view() or batch.limit(0)).collect()}
     assert got == sim_visible
+
+
+def test_batch_job_count_independent_of_ddl_count(spark, tmp_path):
+    """A micro-batch costs the same Spark jobs whether it carries no DDL
+    or dozens: its CRUD rows fold in one MERGE and its DDL rows arrive in
+    one collect, so DDLs add no per-barrier job."""
+    import datetime
+
+    t0 = datetime.datetime(2024, 1, 1)
+    crud = [
+        (i, t0 + datetime.timedelta(seconds=i), i % 40, "iu"[i % 2], "db0.c1", float(i), "{}")
+        for i in range(1, 201)
+    ]
+    ddl = [
+        (1000 + j, t0 + datetime.timedelta(seconds=4 * j, milliseconds=500), 0,
+         "c", "db0.$cmd", 0.0, '{"create": "c%d"}' % j)
+        for j in range(50)
+    ]
+    schema = (
+        "id long, ts timestamp, user_id long, op string, ns string, "
+        "value double, o string"
+    )
+    sc = spark.sparkContext
+
+    def jobs(name, rows):
+        kernel = ApplyKernel(spark, str(tmp_path / name), n_buckets=8)
+        batch = spark.createDataFrame(rows, schema)
+        group = f"apply-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            kernel.process_batch(batch, 0)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return kernel, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, crud_only = jobs("crud_only", crud)
+    kernel, with_ddl = jobs("with_ddl", crud + ddl)
+    assert len(kernel.ddl_log) == 50
+    assert crud_only > 0
+    assert with_ddl == crud_only
 
 
 def test_txn_reassembly_in_batch(spark):
@@ -235,8 +221,8 @@ def test_txn_reassembly_in_batch(spark):
 
 
 def test_kernel_all_options_combined(spark, sf_dir, feed, tmp_path):
-    """Interaction test: strict barriers + journal + dead-letter + metrics
-    listener all enabled on one run — options must compose."""
+    """Interaction test: journal + dead-letter + metrics listener all
+    enabled on one run, over a feed with DDL rows — options must compose."""
     from mongoshake_spark.streaming import metrics, read_oplog_stream
 
     listener = metrics.attach(spark)
@@ -246,7 +232,6 @@ def test_kernel_all_options_combined(spark, sf_dir, feed, tmp_path):
             str(tmp_path / "t"),
             dead_letter_dir=str(tmp_path / "dlq"),
             journal_dir=str(tmp_path / "j"),
-            strict_barriers=True,
         )
         q = (
             read_oplog_stream(spark, feed, max_files_per_trigger=4)
