@@ -111,10 +111,13 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--receive-max-wall", type=float, default=300.0,
                    help="receive mode: unconditional wall-clock bound")
     p.add_argument("--multi-ns", action="store_true",
-                   help="incr: route each oplog to a per-namespace target "
-                        "under TARGET_DIR/<ns> (the reference's "
-                        "whole-deployment replication shape) instead of "
-                        "folding everything into one table")
+                   help="incr: replicate every namespace into ONE table "
+                        "at TARGET_DIR keyed and bucketed on (ns, user_id) "
+                        "(the reference's whole-deployment replication "
+                        "shape) instead of folding all rows on user_id "
+                        "alone; a TARGET_DIR in the old per-namespace "
+                        "layout is refused (start from a fresh checkpoint "
+                        "and target)")
     p.add_argument("--resume", action="store_true",
                    help="full sync: skip namespaces with completion markers")
     p.add_argument("--verify-table", default="customer",
@@ -501,10 +504,10 @@ def main(argv: list[str] | None = None) -> int:
         try:
             if args.multi_ns:
                 if mirror is not None:
-                    # each ns kernel would bulk_write into the ONE
-                    # configured collection — wrong target for every ns
-                    # but the named one; per-ns mirror routing is not
-                    # wired, so refuse rather than misdeliver
+                    # the mirror would bulk_write every namespace into
+                    # the ONE configured collection — wrong target for
+                    # every ns but the named one; per-ns mirror routing
+                    # is not wired, so refuse rather than misdeliver
                     print(
                         "conf error: --multi-ns cannot be combined with a "
                         "tunnel=direct live mirror (the mirror targets one "
@@ -514,16 +517,17 @@ def main(argv: list[str] | None = None) -> int:
                     return 2
                 from mongoshake_spark.streaming.multi import run_multi_incr_sync
 
-                multi = run_multi_incr_sync(
+                kernel = run_multi_incr_sync(
                     spark, args.feed_dir, args.target_dir, args.checkpoint_dir,
                     max_files_per_trigger=cfg.files_per_trigger,
                 )
+                state = kernel.state_view()
                 out = {
                     "mode": mode,
-                    "namespaces": sorted(multi.kernels),
-                    "ddl_applied": sum(
-                        len(k.ddl_log) for k in multi.kernels.values()
-                    ),
+                    "namespaces": sorted(
+                        r["ns"] for r in state.select("ns").distinct().collect()
+                    ) if state is not None else [],
+                    "ddl_applied": len(kernel.ddl_log),
                 }
             else:
                 kernel = run_incr_sync(

@@ -18,6 +18,8 @@ read-union-rewrite on plain parquet here).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,7 +49,7 @@ def last_writer_wins(
 def merge_upsert(
     target: DataFrame | None,
     updates: DataFrame,
-    key_col: str = "user_id",
+    key_col: str | Sequence[str] = "user_id",
     val_col: str = "value",
     ord_col: str = "id",
     op_col: str = "op",
@@ -67,10 +69,13 @@ def merge_upsert(
 
     Idempotent — replaying a batch yields the same state, which is the
     at-least-once safety argument the reference relies on (README.md:57).
+    ``key_col`` is one column or a sequence of them (a composite key such
+    as ``(ns, user_id)``).
     """
+    keys = [key_col] if isinstance(key_col, str) else list(key_col)
 
     def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy(key_col).agg(
+        return df.groupBy(*keys).agg(
             F.expr(f"max_by({val_col}, {ord_col})").alias(val_col),
             F.expr(f"max_by({op_col}, {ord_col})").alias(op_col),
             F.max(ord_col).alias(ord_col),
@@ -79,7 +84,7 @@ def merge_upsert(
     batch_state = fold(updates.filter(F.col(op_col).isin("i", "u", "d")))
     if target is None:
         return batch_state
-    cols = [key_col, val_col, op_col, ord_col]
+    cols = [*keys, val_col, op_col, ord_col]
     return fold(target.select(*cols).unionByName(batch_state.select(*cols)))
 
 

@@ -1159,13 +1159,13 @@ SELECT ns2 AS ns, user_id, value FROM (
 WHERE last_op <> 'd' ORDER BY ns, user_id""",
     "Whole-deployment incremental sync (the reference's default shape: "
     "every namespace through one job): the oplog split into two "
-    "namespaces streams through MultiTableApplyKernel — one checkpoint, "
-    "one kernel per ns, per-ns bucketed state/watermark — and each "
-    "namespace's materialized target must equal ITS OWN last-writer-wins "
-    "reconstruction. Runs a real 2-micro-batch stream (cross-batch "
-    "accumulation + watermark advance need one boundary; each extra "
-    "batch costs a MERGE cycle per namespace on the bench's critical "
-    "path) (streaming/multi.py; CLI --multi-ns).",
+    "namespaces streams through ONE apply kernel keyed and bucketed on "
+    "(ns, user_id) — one checkpoint, one state table with an ns column, "
+    "one watermark — and each namespace's rows in that table must equal "
+    "ITS OWN last-writer-wins reconstruction. Runs a real 2-micro-batch "
+    "stream (cross-batch accumulation + watermark advance need one "
+    "boundary; each extra batch costs a MERGE cycle on the bench's "
+    "critical path) (streaming/multi.py; CLI --multi-ns).",
     stream=True,
 )
 def q37_multi_ns(spark, sf_dir):
@@ -1195,31 +1195,28 @@ def q37_multi_ns(spark, sf_dir):
     for i, f in enumerate(parts):
         os.utime(os.path.join(feed, f), (base + i, base + i))
     # 8 shuffle partitions for the drain: each micro-batch runs one MERGE
-    # cycle per touched namespace and the per-cycle constant scales with
-    # partition count, not rows, at this feed size (same sizing rule as
-    # the other bounded stream drains)
+    # cycle and the per-cycle constant scales with partition count, not
+    # rows, at this feed size (same sizing rule as the other bounded
+    # stream drains)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         # n_buckets sized to the fixture like shuffle partitions: each
-        # flush rewrites every touched bucket file, and at ~3.5k keys
-        # per namespace 8 buckets keeps the per-batch file I/O constant
-        # small (64-bucket default is a 100TB-state sizing); kernel
-        # semantics are invariant to the bucket count
-        multi = run_multi_incr_sync(
+        # flush rewrites every touched bucket file, and at ~7k keys 8
+        # buckets keeps the per-batch file I/O constant small (64-bucket
+        # default is a 100TB-state sizing); kernel semantics are
+        # invariant to the bucket count
+        kernel = run_multi_incr_sync(
             spark, feed, root, ckpt, max_files_per_trigger=1, n_buckets=8
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    out = None
-    for ns in sorted(multi.kernels):
-        part = (
-            spark.read.parquet(f"{root}/{ns}")
-            .filter(F.col("op") != "d")
-            .select(F.lit(ns).alias("ns"), "user_id", "value")
-        )
-        out = part if out is None else out.unionByName(part)
-    return out.orderBy("ns", "user_id").localCheckpoint(eager=True)
+    return (
+        kernel.state_view()
+        .select("ns", "user_id", "value")
+        .orderBy("ns", "user_id")
+        .localCheckpoint(eager=True)
+    )
 
 
 @_q(

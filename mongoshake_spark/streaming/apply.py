@@ -15,8 +15,8 @@ Reference semantics being reproduced:
   MERGE (operators/merge.py). Replays are safe (at-least-once + idempotent
   apply is the reference's own argument, README.md:57).
 - conflict recorder (W7, executor/duplicate.go): rows that cannot be
-  applied (unknown op codes here) append to a dead-letter table instead of
-  failing the stream.
+  applied (unknown op codes, NULL key columns, commands without a ns)
+  append to a dead-letter table instead of failing the stream.
 - checkpoint (S13, collector/ckpt/): delegated to Structured Streaming's
   checkpointLocation (offset+commit logs). Resume = restart the query with
   the same location.
@@ -33,8 +33,11 @@ never on the kernel's state, so no DDL can observe a half-applied batch.
 A batch's Spark job count is therefore independent of its DDL count.
 
 Scale notes: the target state lives ON DISK between micro-batches, in a
-parquet layout HASH-BUCKETED on the merge key (``_bucket = pmod(hash(key),
-n_buckets)`` partition column). Each micro-batch:
+parquet layout HASH-BUCKETED on the merge key (``_bucket = pmod(hash(*key),
+n_buckets)`` partition column). The key is one column (``user_id``) or a
+tuple of columns: the multi-namespace path (streaming/multi.py) keys one
+kernel on ``(ns, user_id)``, so every namespace of a batch folds in the
+same MERGE. Each micro-batch:
 
 1. computes the set of buckets its keys hash into,
 2. reads ONLY those ``_bucket=`` partitions back (partition pruning — the
@@ -57,7 +60,9 @@ deepens across batches. ``n_buckets`` is persisted in a ``_layout.json``
 marker inside the state dir; on open, a legacy flat ``*.parquet`` layout
 or a bucket-count mismatch triggers a ONE-TIME re-bucketing rewrite
 (staged into a sibling dir and swapped in, so the old state survives a
-crash mid-migration). On a real cluster the state table is Delta and the
+crash mid-migration). A state dir whose subdirectories hold their own
+``_layout.json`` (the retired one-kernel-per-namespace layout) is refused
+at open. On a real cluster the state table is Delta and the
 fold is a single ``MERGE INTO`` (``_apply_delta``).
 """
 
@@ -67,6 +72,7 @@ import json
 import os
 import shutil
 from dataclasses import dataclass, field
+from functools import reduce
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -85,7 +91,8 @@ class ApplyKernel:
     target_dir: str
     dead_letter_dir: str | None = None
     journal_dir: str | None = None
-    key: str = "user_id"
+    # merge key: one column, or a tuple of columns (a composite key)
+    key: str | tuple[str, ...] = "user_id"
     val: str = "value"
     ord: str = "id"
     n_buckets: int = 64
@@ -146,6 +153,27 @@ class ApplyKernel:
                     "its extensions (delta.pip_utils."
                     "configure_spark_with_delta_pip)"
                 ) from exc
+        if os.path.isdir(self.target_dir):
+            nested = sorted(
+                d for d in os.listdir(self.target_dir)
+                if os.path.isfile(os.path.join(self.target_dir, d, "_layout.json"))
+            )
+            if nested:
+                # the per-namespace multi-ns layout (one kernel state dir
+                # per sanitized ns) holds no ns column, and a sanitized dir
+                # name cannot be mapped back to its namespace: no exact
+                # migration exists, so refuse rather than write beside it
+                raise RuntimeError(
+                    f"{self.target_dir} holds per-namespace kernel state "
+                    f"({len(nested)} subdirectories with their own "
+                    f"_layout.json, e.g. {nested[0]}); that layout is no "
+                    "longer read and cannot be migrated exactly — start "
+                    "from a fresh checkpoint and an empty target directory"
+                )
+
+    @property
+    def _keys(self) -> tuple[str, ...]:
+        return (self.key,) if isinstance(self.key, str) else tuple(self.key)
 
     @property
     def _is_delta(self) -> bool:
@@ -161,7 +189,9 @@ class ApplyKernel:
     # -- target state -------------------------------------------------------
 
     def _bucket_expr(self):
-        return F.pmod(F.hash(F.col(self.key)), F.lit(self.n_buckets))
+        return F.pmod(
+            F.hash(*[F.col(k) for k in self._keys]), F.lit(self.n_buckets)
+        )
 
     def _marker_path(self) -> str:
         # leading underscore: invisible to Spark's file index, like _SUCCESS
@@ -295,6 +325,13 @@ class ApplyKernel:
         )
         os.rename(self.target_dir, old)
         os.rename(tmp, self.target_dir)
+        # side tables kept under the state dir (the multi-namespace
+        # kernel's default _dead_letter) are not state: carry them over
+        for e in os.listdir(old):
+            if e.startswith("_") and not e.startswith(
+                ("_bucket=", "_SUCCESS", "_layout.json")
+            ):
+                os.rename(os.path.join(old, e), os.path.join(self.target_dir, e))
         shutil.rmtree(old)
         self._write_marker()
 
@@ -325,7 +362,7 @@ class ApplyKernel:
                 .filter(F.col("_bucket").isin(touched))
                 .drop("_bucket")
             )
-        out = merge.merge_upsert(state, crud, self.key, self.val, self.ord)
+        out = merge.merge_upsert(state, crud, self._keys, self.val, self.ord)
         if self._watermark is not None:
             # lazy tombstone compaction: this batch rewrites the touched
             # buckets anyway, so dead tombstones in them are dropped for
@@ -346,7 +383,7 @@ class ApplyKernel:
         """The production MERGE INTO (executor/db_writer_bulk.go's ladder
         collapsed, same as the parquet fold): the batch reduces to its
         net per-key rows (max-ordinal value/op — merge_upsert's batch
-        fold), then merges on ``(_bucket, key)``. The ``_bucket``
+        fold), then merges on ``_bucket`` and each key column. The ``_bucket``
         equi-term prunes the Delta scan to the batch's partitions — the
         same O(touched buckets) I/O contract the parquet slice read
         carries — and ``s.ord >= t.ord`` makes a replayed batch converge
@@ -356,16 +393,16 @@ class ApplyKernel:
         from delta.tables import DeltaTable
 
         net = merge.merge_upsert(
-            None, crud, self.key, self.val, self.ord
+            None, crud, self._keys, self.val, self.ord
         ).withColumn("_bucket", self._bucket_expr())
         t = self._delta_table()
         if t is not None:
+            on = " AND ".join(
+                f"t.{c} = s.{c}" for c in ("_bucket", *self._keys)
+            )
             (
                 t.alias("t")
-                .merge(
-                    net.alias("s"),
-                    f"t._bucket = s._bucket AND t.{self.key} = s.{self.key}",
-                )
+                .merge(net.alias("s"), on)
                 .whenMatchedUpdate(
                     condition=f"s.{self.ord} >= t.{self.ord}",
                     set={
@@ -434,21 +471,27 @@ class ApplyKernel:
                 # M4 audit journal (collector/syncer.go:635-638): append-only
                 # side output of every oplog handled, before filtering.
                 batch.write.mode("append").parquet(self.journal_dir)
-            # null-safe: for op=NULL `~isin(...)` is NULL and a plain
-            # filter would silently DROP the row from every path (not
-            # quarantined, not applied) — the W7 contract is that rows
-            # which cannot be applied reach the dead-letter table
+            # W7: rows which cannot be applied reach the dead-letter
+            # table — an unknown or NULL op, a CRUD row with a NULL key
+            # column (nothing to merge on), a command with a NULL ns (no
+            # namespace to run on). coalesce makes the test null-safe: a
+            # plain filter on a NULL predicate would silently DROP the
+            # row from every path (not quarantined, not applied)
+            keyed = reduce(
+                lambda a, b: a & b, [F.col(k).isNotNull() for k in self._keys]
+            )
+            is_crud = F.col("op").isin("i", "u", "d") & keyed
+            is_ddl = (F.col("op") == "c") & F.col("ns").isNotNull()
             self._quarantine(
                 batch.filter(
-                    ~F.col("op").isin("i", "u", "d", "n", "c")
-                    | F.col("op").isNull()
+                    ~F.coalesce(is_crud | is_ddl | (F.col("op") == "n"), F.lit(False))
                 )
             )
             ddl_rows = sorted(
-                batch.filter(F.col("op") == "c").select("id", "ts", "ns", "o").collect(),
+                batch.filter(is_ddl).select("id", "ts", "ns", "o").collect(),
                 key=lambda r: (r["ts"], r["id"]),
             )
-            crud = batch.filter(F.col("op").isin("i", "u", "d"))
+            crud = batch.filter(is_crud)
             # one job yields both the touched-bucket set and the batch's
             # max ordinal (the next watermark candidate)
             per_bucket = (
@@ -471,7 +514,7 @@ class ApplyKernel:
                 # batch re-reads the same converged rows), restricted to
                 # this batch's keys — O(batch) via the same bucket-pruned
                 # slice read _apply_parquet uses, never O(state)
-                keys = crud.select(self.key).distinct()
+                keys = crud.select(*self._keys).distinct()
                 committed_scan = (
                     self.spark.read.format("delta").load(self.target_dir)
                     if self._is_delta
@@ -482,9 +525,9 @@ class ApplyKernel:
                     .filter(F.col("_bucket").isin(touched))
                     .drop("_bucket")
                 )
-                net = committed.join(keys, self.key, "leftsemi").select(
-                    self.key, self.val, "op"
-                )
+                net = committed.join(
+                    keys, list(self._keys), "leftsemi"
+                ).select(*self._keys, self.val, "op")
                 self.mirror(net, batch_id)
             if batch_max is not None:
                 # advance AFTER the flush commits: a replay of this batch

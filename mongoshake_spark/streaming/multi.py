@@ -2,323 +2,70 @@
 sync shape.
 
 MongoShake's incremental path applies EVERY replicated namespace through
-one worker set (collector/syncer.go drives all namespaces; the executor
-routes each oplog to its collection via the ns field). The single-table
-``ApplyKernel`` (streaming/apply.py) is the per-namespace fold; this
-module composes one kernel per namespace behind a single foreachBatch
-callback, so one stream + one checkpoint drives the whole deployment:
+one worker set (collector/syncer.go drives all namespaces; a row reaches
+a worker by hash(ns) or hash(_id), oplog/hasher.go), not through a
+worker of its own per collection. Here the same shape is ONE
+``ApplyKernel`` whose merge key is ``(ns, user_id)``, behind one
+foreachBatch callback and one checkpoint:
 
-- each micro-batch is split by ``ns`` and folded into that namespace's
-  own bucketed target directory (``root_dir/<safe(ns)>``) — per-ns
-  state, per-ns watermark, per-ns tombstone compaction, exactly the
-  reference's per-collection apply granularity;
-- the driver-side work is bounded by the number of DISTINCT namespaces
-  in the batch (table count, not row count) — the same bound the
-  reference's per-collection writer map carries — and the per-ns kernel
-  flushes run CONCURRENTLY from a driver thread pool (``max_parallel_ns``
-  workers), matching the reference's per-worker fan-out
-  (collector/coordinator/incr.go:60-74, one syncer goroutine per
-  worker): per-batch wall grows with ceil(tables / pool), not tables;
-- ordering: within a namespace the per-kernel (key, ordinal) MERGE
-  resolves order exactly as the single-table kernel does; ACROSS
-  namespaces the reference makes no ordering promise either (workers are
-  hash-partitioned per ns/key), so none is introduced here;
-- replay safety: the stream checkpoint replays a failed batch into
-  EVERY namespace kernel; each per-ns MERGE is idempotent, so the batch
-  is at-least-once delivered and exactly-once materialized per ns —
-  the composition inherits the single-kernel argument unchanged;
-- the M4 audit journal (``journal_dir``) is written ONCE at the batch
-  level, before any routing — the single-kernel contract ("every oplog
-  handled, before filtering") — so unroutable rows are journaled too;
-  per-ns kernels do NOT journal (that would double-count);
-- UNROUTABLE rows (ns NULL, or a ns that sanitizes to a path-hostile
-  name like '', '.', '..') reach the dead-letter — ALWAYS: when no
-  ``dead_letter_dir`` is given they land under
-  ``root_dir/_dead_letter/@unroutable`` rather than vanishing (W7: rows
-  that cannot be applied must be recorded, never dropped).
+- every namespace of a micro-batch folds in the kernel's one MERGE over
+  ``_bucket = pmod(hash(ns, user_id), n_buckets)``, so a batch's Spark
+  job count does not grow with its namespace count;
+- ``root_dir`` holds one bucketed table with an ``ns`` column, one
+  ``_layout.json`` (bucket count and compaction watermark), and the
+  dead-letter table under ``root_dir/_dead_letter`` unless another is
+  given;
+- ordering: per ``(ns, key)`` the MERGE resolves last-writer-wins by
+  ordinal exactly as for one table; command rows (``db.$cmd`` included)
+  are journaled — and executed, with a ``ddl_executor`` — ONCE each, in
+  global ``(ts, id)`` order, through the kernel's barrier;
+- replay safety, the M4 journal and W7 are the kernel's own: a replayed
+  batch re-MERGEs idempotently, the journal records every row before
+  filtering, and rows with a NULL ``ns`` reach the dead-letter table.
 
-A namespace seen for the first time mid-stream (a created collection)
-gets its kernel lazily — the reference's dynamic collection handling.
+A root in the retired one-kernel-per-namespace layout (subdirectories
+holding their own ``_layout.json``) is refused at open by ``ApplyKernel``:
+those files carry no ``ns`` column, so no exact migration exists.
 
 ``mirror`` is deliberately NOT accepted here: a live mirror targets one
-db.coll, so wiring one mirror into every per-ns kernel would deliver
-every namespace into that single collection (the CLI refuses the
-combination for the same reason).
+db.coll, so it would deliver every namespace into that single collection
+(the CLI refuses the combination for the same reason).
 """
 
 from __future__ import annotations
-
-import hashlib
-import os
-import re
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongoshake_spark.streaming.apply import ApplyKernel, drain_feed
 
-#: characters allowed verbatim in a namespace's directory name; anything
-#: else is replaced and the name disambiguated with a hash suffix
-_SAFE_CHARS = re.compile(r"[^A-Za-z0-9._-]")
-
-#: dead-letter subdirectory for unroutable rows. '@' is outside
-#: _SAFE_CHARS' alphabet, so no sanitized namespace can ever collide
-#: with it.
-UNROUTABLE = "@unroutable"
+#: the merge key of the multi-namespace kernel
+NS_KEY = ("ns", "user_id")
 
 
-def safe_ns_dir(ns: str) -> str | None:
-    """Directory name for a namespace, or None when the ns is unroutable.
+def multi_ns_kernel(
+    spark: SparkSession, root_dir: str, **kernel_kwargs
+) -> ApplyKernel:
+    """The one kernel for every namespace under ``root_dir``."""
+    if "mirror" in kernel_kwargs:
+        raise ValueError(
+            "the multi-namespace kernel does not accept a mirror: a live "
+            "mirror targets ONE collection and would misdeliver every "
+            "namespace but the named one"
+        )
+    root_dir = root_dir.rstrip("/")
+    # W7: NULL-ns rows must be recorded, never dropped, so the
+    # dead-letter table always exists (default under the root)
+    kernel_kwargs.setdefault("dead_letter_dir", f"{root_dir}/_dead_letter")
+    return ApplyKernel(spark, root_dir, key=NS_KEY, **kernel_kwargs)
 
-    Substituting hostile characters alone is not enough: '..' or '.'
-    would escape/corrupt the root layout, and two distinct namespaces
-    could collide after substitution. Any ns that needed substitution
-    gets a deterministic 8-hex suffix of the ORIGINAL name, so distinct
-    namespaces keep distinct directories."""
-    safe = _SAFE_CHARS.sub("_", ns)
-    if safe in ("", ".", ".."):
+
+def ns_state_view(kernel: ApplyKernel, ns: str) -> DataFrame | None:
+    """One namespace's visible state, read from the shared table."""
+    state = kernel.state_view()
+    if state is None:
         return None
-    if safe != ns:
-        safe += "-" + hashlib.sha256(ns.encode()).hexdigest()[:8]
-    return safe
-
-
-class MultiTableApplyKernel:
-    """One ApplyKernel per namespace, driven by a single foreachBatch."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        root_dir: str,
-        ns_col: str = "ns",
-        journal_dir: str | None = None,
-        dead_letter_dir: str | None = None,
-        max_parallel_ns: int = 8,
-        max_live_kernels: int | None = None,
-        **kernel_kwargs,
-    ) -> None:
-        if "mirror" in kernel_kwargs:
-            raise ValueError(
-                "MultiTableApplyKernel does not accept a mirror: a live "
-                "mirror targets ONE collection, and fanning one mirror "
-                "across every namespace kernel would misdeliver every "
-                "namespace but the named one"
-            )
-        self.spark = spark
-        self.root_dir = root_dir.rstrip("/")
-        self.ns_col = ns_col
-        self.journal_dir = journal_dir
-        self.dead_letter_dir = dead_letter_dir or f"{self.root_dir}/_dead_letter"
-        if max_parallel_ns < 1:
-            raise ValueError("max_parallel_ns must be >= 1")
-        if max_live_kernels is not None and max_live_kernels < 1:
-            raise ValueError("max_live_kernels must be >= 1 (or None)")
-        self.max_parallel_ns = max_parallel_ns
-        # Deployment-scale hygiene: a 10k-namespace deployment with most
-        # namespaces idle would otherwise hold 10k kernel objects (each
-        # caching layout/watermark state) forever. Kernels are fully
-        # reconstructible from their state dirs (_layout.json persists
-        # n_buckets AND the compaction watermark), so least-recently-USED
-        # ones past this cap are dropped after each batch and lazily
-        # rebuilt on the namespace's next appearance. None = never evict.
-        self.max_live_kernels = max_live_kernels
-        self.kernel_kwargs = kernel_kwargs
-        # insertion-ordered dict doubles as the LRU: _kernel_for moves a
-        # reused namespace to the back, eviction pops from the front
-        self.kernels: dict[str, ApplyKernel] = {}
-        self._pool: ThreadPoolExecutor | None = None
-
-    def _get_pool(self) -> ThreadPoolExecutor:
-        # ONE pool for the kernel's lifetime, not one per micro-batch: in
-        # PySpark's pinned-thread mode every new Python thread binds a
-        # JVM-side thread/connection, so a long stream churning 8 fresh
-        # threads per batch would leak them; a persistent pool bounds
-        # the thread count at max_parallel_ns for the whole run
-        if self._pool is None:
-            self._pool = ThreadPoolExecutor(
-                max_workers=self.max_parallel_ns,
-                thread_name_prefix="ns-apply",
-            )
-        return self._pool
-
-    def _kernel_for(self, ns: str, safe: str) -> ApplyKernel:
-        k = self.kernels.pop(ns, None)
-        if k is None:
-            k = ApplyKernel(
-                self.spark,
-                f"{self.root_dir}/{safe}",
-                dead_letter_dir=f"{self.dead_letter_dir}/{safe}",
-                **self.kernel_kwargs,
-            )
-        # (re)insert at the back: the dict's insertion order is the LRU
-        self.kernels[ns] = k
-        return k
-
-    def _evict_idle_kernels(self) -> list[str]:
-        """Drop least-recently-used kernels past ``max_live_kernels``;
-        returns the evicted namespaces. Called after each batch, so the
-        batch's own namespaces (just moved to the back) survive and only
-        idle ones fall out; their on-disk state dirs are untouched and a
-        rebuilt kernel re-reads ``_layout.json`` on first use."""
-        evicted = []
-        if self.max_live_kernels is not None:
-            while len(self.kernels) > self.max_live_kernels:
-                ns = next(iter(self.kernels))
-                del self.kernels[ns]
-                evicted.append(ns)
-        return evicted
-
-    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
-        batch = batch.persist()
-        try:
-            if self.journal_dir:
-                # M4: the WHOLE batch, before any routing — unroutable
-                # rows are audited too (per-ns kernels don't journal;
-                # they would double-count)
-                batch.write.mode("append").parquet(self.journal_dir)
-            # bounded by table count per batch, not row count — the same
-            # driver-side bound the reference's writer map carries
-            names = sorted(
-                r[0]
-                for r in batch.select(self.ns_col).distinct().collect()
-                if r[0] is not None
-            )
-            unroutable = batch.filter(F.col(self.ns_col).isNull())
-            # admin commands arrive on 'db.$cmd' (the reference routes
-            # them to every worker of that db, oplog grammar): deliver
-            # each db's command rows to EVERY kernel of that db, merged
-            # into its slice so the kernel's (ts, id) barrier ordering
-            # covers them. A db with no live kernel makes its commands
-            # no-ops — collection state materializes on first CRUD, the
-            # same effective semantics the catalog-less kernel records.
-            cmd_ns = {ns for ns in names if ns.endswith(".$cmd")}
-            tasks: list[tuple[ApplyKernel, DataFrame]] = []
-            cmd_delivered = set()
-            for ns in names:
-                if ns in cmd_ns:
-                    continue
-                safe = safe_ns_dir(ns)
-                if safe is None:
-                    unroutable = unroutable.unionByName(
-                        batch.filter(F.col(self.ns_col) == ns)
-                    )
-                    continue
-                db = ns.split(".", 1)[0]
-                ns_pred = F.col(self.ns_col) == ns
-                if f"{db}.$cmd" in cmd_ns:
-                    ns_pred = ns_pred | (F.col(self.ns_col) == f"{db}.$cmd")
-                    cmd_delivered.add(f"{db}.$cmd")
-                # kernels are created HERE, on the batch thread — the
-                # pool workers below never touch self.kernels
-                tasks.append(
-                    (self._kernel_for(ns, safe), batch.filter(ns_pred))
-                )
-            # a $cmd namespace whose db has NO CRUD rows in THIS batch
-            # still has to reach that db's LIVE kernels (a single-row DDL
-            # micro-batch is routine at maxFilesPerTrigger=1): without
-            # this, the drop/collMod would be applied to nothing and
-            # silently lost despite live targets — violating W7. Only a
-            # db with no live kernel at all makes its commands no-ops
-            # (collection state materializes on first CRUD).
-            for cmd in cmd_ns - cmd_delivered:
-                db_prefix = cmd[: -len("$cmd")]  # 'db0.'
-                live = [
-                    ns for ns in list(self.kernels)
-                    if ns.startswith(db_prefix)
-                ]
-                cmd_rows = batch.filter(F.col(self.ns_col) == cmd)
-                for ns in live:
-                    tasks.append((self._kernel_for(ns, safe_ns_dir(ns)), cmd_rows))
-            self._run_ns_tasks(tasks, batch_id)
-            # W7: rows that cannot be routed must be RECORDED, never
-            # dropped — unconditionally (the dir defaults under root)
-            if not unroutable.isEmpty():
-                unroutable.write.mode("append").parquet(
-                    f"{self.dead_letter_dir}/{UNROUTABLE}"
-                )
-            self._evict_idle_kernels()
-        finally:
-            batch.unpersist()
-
-    def _run_ns_tasks(
-        self, tasks: list[tuple[ApplyKernel, DataFrame]], batch_id: int
-    ) -> None:
-        """Apply every namespace slice, CONCURRENTLY from a driver thread
-        pool (the reference fans incremental apply out per worker —
-        collector/coordinator/incr.go:60-74 starts one syncer goroutine
-        per worker, collector/syncer.go drives them in parallel; a serial
-        per-namespace loop would make per-batch wall grow linearly in
-        live-table count while executors idle).
-
-        Safety argument:
-        - Spark job submission is thread-safe; each per-ns kernel owns a
-          DISJOINT state directory (root_dir/<safe(ns)>), so flushes
-          never overlap on disk.
-        - ``self.kernels`` is only mutated on the batch thread (kernels
-          are constructed before submission).
-        - each worker tags its jobs with a scheduler pool name, so a
-          FAIR-scheduled session interleaves namespaces evenly; under
-          default FIFO the jobs still run concurrently on spare slots.
-        - failure: ALL in-flight namespaces are awaited before the first
-          error re-raises out of foreachBatch (no half-submitted batch
-          left racing a retry); the retry re-MERGEs idempotently per ns,
-          the same replay argument the serial form had.
-        - a SHARED ddl_executor (kernel_kwargs) stays safe: spark.sql
-          catalog commands are thread-safe, its actions-list appends are
-          GIL-atomic, and cross-namespace ordering of its journal was
-          never promised (same as the reference's per-worker goroutines);
-          per-namespace DDL ordering is preserved because each ns's
-          commands run inside its own kernel's barrier sequence.
-        """
-        if not tasks:
-            return
-        if len(tasks) == 1 or self.max_parallel_ns == 1:
-            for kernel, df in tasks:
-                kernel.process_batch(df, batch_id)
-            return
-        sc = self.spark.sparkContext
-
-        def run(idx_kernel_df):
-            idx, kernel, df = idx_kernel_df
-            sc.setLocalProperty("spark.scheduler.pool", f"ns-{idx % 16}")
-            try:
-                kernel.process_batch(df, batch_id)
-            finally:
-                sc.setLocalProperty("spark.scheduler.pool", None)
-
-        pool = self._get_pool()
-        futures = [
-            pool.submit(run, (i, k, df)) for i, (k, df) in enumerate(tasks)
-        ]
-        errors = []
-        for f in futures:
-            exc = f.exception()  # waits; never half-abandons a batch
-            if exc is not None:
-                errors.append(exc)
-        if errors:
-            raise errors[0]
-
-    def state_view(self, ns: str) -> DataFrame | None:
-        """Per-namespace state. A namespace whose kernel was LRU-evicted
-        gets a TRANSIENT read-only kernel built from its state dir
-        (eviction drops the OBJECT, never the state), so views stay
-        available across evictions. The transient kernel is deliberately
-        NOT registered in ``self.kernels``: that dict is only mutated on
-        the batch thread (the thread-safety argument in _run_ns_tasks),
-        and a monitoring thread's view must not race the LRU order."""
-        k = self.kernels.get(ns)
-        if k is None:
-            safe = safe_ns_dir(ns)
-            if safe is None or not os.path.isdir(f"{self.root_dir}/{safe}"):
-                return None
-            k = ApplyKernel(
-                self.spark,
-                f"{self.root_dir}/{safe}",
-                dead_letter_dir=f"{self.dead_letter_dir}/{safe}",
-                **self.kernel_kwargs,
-            )
-        return k.state_view()
+    return state.filter(F.col("ns") == ns).drop("ns")
 
 
 def run_multi_incr_sync(
@@ -329,15 +76,16 @@ def run_multi_incr_sync(
     max_files_per_trigger: int = 1,
     timeout_sec: float = 300.0,
     **kernel_kwargs,
-) -> MultiTableApplyKernel:
-    """Drain a replay feed into per-namespace targets (availableNow run,
-    one checkpoint for the whole deployment — the reference's single
-    replication job over all namespaces). Shares ``drain_feed`` with the
-    single-table entry point: identical timeout/resume contract
-    (TimeoutError, stream stopped, checkpoint resumes)."""
-    multi = MultiTableApplyKernel(spark, root_dir, **kernel_kwargs)
+) -> ApplyKernel:
+    """Drain a replay feed into the multi-namespace table at ``root_dir``
+    (availableNow run, one checkpoint for the whole deployment — the
+    reference's single replication job over all namespaces). Shares
+    ``drain_feed`` with the single-table entry point: identical
+    timeout/resume contract (TimeoutError, stream stopped, checkpoint
+    resumes)."""
+    kernel = multi_ns_kernel(spark, root_dir, **kernel_kwargs)
     drain_feed(
-        spark, feed_dir, multi.process_batch, checkpoint_dir,
+        spark, feed_dir, kernel.process_batch, checkpoint_dir,
         max_files_per_trigger, timeout_sec,
     )
-    return multi
+    return kernel

@@ -1,7 +1,7 @@
 """Per-phase profile of the tunnel/daemon floors (VERDICT r12 item 8):
-q38_tunnel_formats, q40_receiver_daemon, q37_multi_ns_sync. Confirms the
-codec stages are JVM-side (no BatchEvalPython/ArrowEvalPython except the
-DECLARED Arrow sender boundary) and attributes the wall to phases."""
+q38_tunnel_formats and q40_receiver_daemon. Confirms the codec stages are
+JVM-side (no BatchEvalPython/ArrowEvalPython except the DECLARED Arrow
+sender boundary) and attributes the wall to phases."""
 
 from __future__ import annotations
 
@@ -105,57 +105,6 @@ def main() -> None:
             f"  rep{rep}: bind {t0-t_bind:4.2f}s  socket send (Arrow sender, "
             f"live TCP) {t1-t0:5.2f}s  receiver fold+flush {t2-t1:5.2f}s  "
             f"target read {t3-t2:4.2f}s  rows={n}"
-        )
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    print("== q37_multi_ns_sync phases ==")
-    from mongoshake_spark.streaming.multi import run_multi_incr_sync
-
-    for rep in range(2):
-        two_ns = ov.withColumn(
-            "ns",
-            F.when(F.col("user_id") % 2 == 0, F.lit("db0.even")).otherwise(
-                F.lit("db0.odd")
-            ),
-        )
-        tmp = _stream_tmpdir("q37prof_")
-        feed, root, ckpt = (os.path.join(tmp, d) for d in ("feed", "root", "ck"))
-        t0 = time.time()
-        (
-            two_ns.repartitionByRange(2, "ts", "id")
-            .sortWithinPartitions("ts", "id")
-            .write.parquet(feed)
-        )
-        parts = sorted(f for f in os.listdir(feed) if f.endswith(".parquet"))
-        base = time.time() - len(parts) - 10
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(feed, f), (base + i, base + i))
-        t1 = time.time()
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            multi = run_multi_incr_sync(
-                spark, feed, root, ckpt, max_files_per_trigger=1, n_buckets=8
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        t2 = time.time()
-        out = None
-        for ns in sorted(multi.kernels):
-            part = (
-                spark.read.parquet(f"{root}/{ns}")
-                .filter(F.col("op") != "d")
-                .select(F.lit(ns).alias("ns"), "user_id", "value")
-            )
-            out = part if out is None else out.unionByName(part)
-        out.orderBy("ns", "user_id").write.format("noop").mode("overwrite").save()
-        t3 = time.time()
-        print(
-            f"  rep{rep}: feed write {t1-t0:5.2f}s  2-batch drain "
-            f"(2 MERGE cycles x 2 ns) {t2-t1:5.2f}s  target read+sort "
-            f"{t3-t2:4.2f}s"
         )
         import shutil
 

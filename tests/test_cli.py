@@ -527,9 +527,9 @@ def test_cli_http_port_bind_failure_is_conf_error(spark, sf_dir, tmp_path, capsy
 
 
 def test_cli_incr_multi_ns_routes_per_namespace(spark, sf_dir, tmp_path, capsys):
-    """--multi-ns: the whole-deployment shape through the CLI — each
-    namespace lands in its own target and equals its own per-ns
-    last-writer-wins reconstruction."""
+    """--multi-ns: the whole-deployment shape through the CLI — every
+    namespace lands in the one table at TARGET_DIR and each equals its
+    own per-ns last-writer-wins reconstruction."""
     from pyspark.sql import functions as F
 
     from mongoshake_spark.operators.merge import last_writer_wins
@@ -549,20 +549,56 @@ def test_cli_incr_multi_ns_routes_per_namespace(spark, sf_dir, tmp_path, capsys)
     out = json.loads(capsys.readouterr().out)
     ov = oplog_view(load_table(spark, sf_dir, "events"))
     all_ns = sorted(r["ns"] for r in ov.select("ns").distinct().collect())
-    assert out["namespaces"] == all_ns
-    for ns in all_ns[:3]:  # spot-check three namespaces
-        want = {
+    want = {
+        ns: {
             r["user_id"]: r["value"]
             for r in last_writer_wins(ov.filter(F.col("ns") == ns)).collect()
         }
+        for ns in all_ns
+    }
+    # the namespaces holding live documents in the target
+    assert out["namespaces"] == [ns for ns in all_ns if want[ns]]
+    assert out["ddl_applied"] == ov.filter(F.col("op") == "c").count()
+    state = spark.read.parquet(root).filter(F.col("op") != "d")
+    for ns in all_ns[:3]:  # spot-check three namespaces
         got = {
             r["user_id"]: r["value"]
-            for r in spark.read.parquet(f"{root}/{ns}")
-            .filter(F.col("op") != "d")
+            for r in state.filter(F.col("ns") == ns)
             .select("user_id", "value")
             .collect()
         }
-        assert got == want
+        assert got == want[ns]
+
+
+def test_cli_multi_ns_counts_each_command_once(spark, sf_dir, tmp_path, capsys):
+    """One db0.$cmd row in a batch that carries two db0 namespaces is one
+    applied DDL: it runs once through the kernel's barrier, so
+    ``ddl_applied`` counts it once."""
+    import datetime
+    import os
+
+    t0 = datetime.datetime(2024, 1, 1)
+    feed = str(tmp_path / "feed")
+    spark.createDataFrame(
+        [
+            (1, t0, 1, "i", "db0.a", 1.0, "{}"),
+            (2, t0, 2, "i", "db0.b", 2.0, "{}"),
+            (3, t0, 3, "c", "db0.$cmd", None, '{"create": "a2"}'),
+        ],
+        "id long, ts timestamp, user_id long, op string, ns string, "
+        "value double, o string",
+    ).coalesce(1).write.parquet(feed)
+    root = str(tmp_path / "root")
+    rc = main([
+        "--sync-mode", "incr", "--multi-ns",
+        "--source-dir", sf_dir, "--target-dir", root,
+        "--feed-dir", feed, "--checkpoint-dir", str(tmp_path / "ck"),
+    ])
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out)
+    assert out["ddl_applied"] == 1
+    assert out["namespaces"] == ["db0.a", "db0.b"]
+    assert not any("$cmd" in d for d in os.listdir(root))
 
 
 def test_cli_multi_ns_refuses_single_collection_mirror(spark, sf_dir, tmp_path, capsys):

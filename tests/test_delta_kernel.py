@@ -353,29 +353,29 @@ def test_delta_matrix_real(delta_spark, tmp_path, scenario):
 
 
 def test_delta_multi_ns_fanout_on_shim(shim, tmp_path):
-    """MultiTableApplyKernel passes state_format through kernel_kwargs,
-    so the multi-namespace fan-out runs every per-ns kernel on the delta
-    plane: two namespaces, cross-ns keys, an eviction/rebuild cycle —
-    end state per namespace must match the single-kernel semantics."""
-    from mongoshake_spark.streaming.multi import MultiTableApplyKernel
+    """The multi-namespace kernel passes state_format through, so every
+    namespace lands in ONE delta table merged on (_bucket, ns, user_id):
+    two namespaces sharing a user id, a second batch through a fresh
+    kernel re-opened from the state dir — end state per namespace must
+    match the single-kernel semantics."""
+    from mongoshake_spark.streaming.multi import multi_ns_kernel, ns_state_view
 
-    multi = MultiTableApplyKernel(
-        shim, str(tmp_path / "root"), state_format="delta", n_buckets=4,
-        max_live_kernels=1,  # forces evict + rebuild-from-state-dir
-    )
-    multi.process_batch(_batch(shim, [
-        (1, T0, 1, "i", "db.a", 1.0, "{}"),
-        (2, T0, 1, "i", "db.b", 10.0, "{}"),
-        (3, T0, 2, "i", "db.a", 2.0, "{}"),
-    ]), 0)
-    multi.process_batch(_batch(shim, [
+    root = str(tmp_path / "root")
+    multi_ns_kernel(shim, root, state_format="delta", n_buckets=4).process_batch(
+        _batch(shim, [
+            (1, T0, 1, "i", "db.a", 1.0, "{}"),
+            (2, T0, 1, "i", "db.b", 10.0, "{}"),
+            (3, T0, 2, "i", "db.a", 2.0, "{}"),
+        ]), 0)
+    kernel = multi_ns_kernel(shim, root, state_format="delta", n_buckets=4)
+    kernel.process_batch(_batch(shim, [
         (4, T0, 1, "u", "db.a", 1.5, "{}"),
         (5, T0, 1, "d", "db.b", 0.0, "{}"),
         (6, T0, 3, "i", "db.b", 30.0, "{}"),
     ]), 1)
     a = {(r["user_id"], r["value"])
-         for r in multi.state_view("db.a").collect()}
+         for r in ns_state_view(kernel, "db.a").collect()}
     b = {(r["user_id"], r["value"])
-         for r in multi.state_view("db.b").collect()}
+         for r in ns_state_view(kernel, "db.b").collect()}
     assert a == {(1, 1.5), (2, 2.0)}
     assert b == {(3, 30.0)}  # user 1's delete tombstoned it out

@@ -605,8 +605,10 @@ def test_registry_package_integrity():
         # 144 re-pinned in round 12 (hybrid_rrf_topk doc text) and again
         # in round 13: text_vector_neardup doc text updated to describe
         # the tiled block scan that replaced the self-join (oracle SQL
-        # unchanged both times)
-        144: "37abf2ab17822a0dac7507d56dbbb952",
+        # unchanged both times); re-pinned again when q37_multi_ns_sync's
+        # doc text moved to the one-kernel (ns, user_id) layout (oracle
+        # SQL unchanged)
+        144: "acb95696e35e6e9dc95257eaeb148c16",
     }
     assert len(QUERIES) >= 131
     if len(QUERIES) in pins:

@@ -194,6 +194,57 @@ def test_batch_job_count_independent_of_ddl_count(spark, tmp_path):
     assert with_ddl == crud_only
 
 
+def test_batch_job_count_independent_of_namespace_count(spark, tmp_path):
+    """The multi-namespace kernel folds every namespace of a batch in its
+    one MERGE: the same 1000 CRUD rows cost the same Spark jobs spread
+    over 1 namespace or over 16, and no more than the single-table
+    kernel on the same rows. Measured on the second batch, so the slice
+    read of existing state is counted too."""
+    import datetime
+
+    from mongoshake_spark.streaming.multi import multi_ns_kernel
+
+    t0 = datetime.datetime(2024, 1, 1)
+    schema = (
+        "id long, ts timestamp, user_id long, op string, ns string, "
+        "value double, o string"
+    )
+    sc = spark.sparkContext
+
+    def rows(n_ns, base):
+        return [
+            (base + i, t0 + datetime.timedelta(seconds=base + i), i % 250,
+             "iu"[i % 2], f"db{i % n_ns % 4}.c{i % n_ns}", float(i), "{}")
+            for i in range(1000)
+        ]
+
+    def jobs(name, kernel, n_ns):
+        kernel.process_batch(spark.createDataFrame(rows(n_ns, 0), schema), 0)
+        batch = spark.createDataFrame(rows(n_ns, 1000), schema)
+        group = f"apply-jobs-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            kernel.process_batch(batch, 1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one_ns = jobs("ns1", multi_ns_kernel(spark, str(tmp_path / "ns1")), 1)
+    sixteen_ns = jobs("ns16", multi_ns_kernel(spark, str(tmp_path / "ns16")), 16)
+    single = jobs(
+        "single",
+        ApplyKernel(
+            spark, str(tmp_path / "single"),
+            dead_letter_dir=str(tmp_path / "single_dl"),
+        ),
+        16,
+    )
+    assert one_ns > 0
+    assert sixteen_ns == one_ns
+    assert sixteen_ns <= single
+
+
 def test_txn_reassembly_in_batch(spark):
     """B3 within-batch fallback: committed txn emits all ops in order,
     uncommitted txn emits nothing, aborted rows are dropped."""
@@ -676,11 +727,29 @@ def test_txn_reassembly_spans_arrow_chunks(spark, tmp_path):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
 
 
+_MULTI_SCHEMA = (
+    "id long, ts timestamp, user_id long, op string, ns string, "
+    "value double, o string"
+)
+
+
+def _ns_state(spark, root, ns):
+    """One namespace's live ``{user_id: value}`` in the shared table."""
+    return {
+        r["user_id"]: r["value"]
+        for r in spark.read.parquet(root)
+        .filter((F.col("ns") == ns) & (F.col("op") != "d"))
+        .select("user_id", "value")
+        .collect()
+    }
+
+
 def test_multi_table_apply_routes_per_namespace(spark, sf_dir, tmp_path):
-    """The whole-deployment shape: one stream + one checkpoint drives a
-    kernel per namespace; each target equals that namespace's own
-    last-writer-wins reconstruction, and cross-ns keys never mix."""
-    from mongoshake_spark.streaming.multi import run_multi_incr_sync
+    """The whole-deployment shape: one stream + one checkpoint drive one
+    kernel keyed on (ns, user_id); each namespace's rows in the shared
+    table equal that namespace's own last-writer-wins reconstruction,
+    and cross-ns keys never mix."""
+    from mongoshake_spark.streaming.multi import NS_KEY, run_multi_incr_sync
 
     # synthesize a 2-namespace feed: the events oplog with rows split
     # deterministically between two collections
@@ -708,11 +777,16 @@ def test_multi_table_apply_routes_per_namespace(spark, sf_dir, tmp_path):
     base = _time.time() - len(parts) - 10
     for i, f in enumerate(parts):
         _os.utime(_os.path.join(feed, f), (base + i, base + i))
-    multi = run_multi_incr_sync(
-        spark, feed, str(tmp_path / "root"), str(tmp_path / "ck"),
-        max_files_per_trigger=1,
+    root = str(tmp_path / "root")
+    kernel = run_multi_incr_sync(
+        spark, feed, root, str(tmp_path / "ck"), max_files_per_trigger=1,
     )
-    assert set(multi.kernels) == {"db0.even", "db0.odd"}
+    assert kernel.key == NS_KEY
+    # one bucketed table: no per-namespace directory under the root
+    assert [d for d in _os.listdir(root) if not d.startswith(("_", "."))] == []
+    assert {
+        r["ns"] for r in spark.read.parquet(root).select("ns").distinct().collect()
+    } == {"db0.even", "db0.odd"}
     for ns, parity in (("db0.even", 0), ("db0.odd", 1)):
         want = {
             r["user_id"]: r["value"]
@@ -720,293 +794,138 @@ def test_multi_table_apply_routes_per_namespace(spark, sf_dir, tmp_path):
                 two_ns.filter(F.col("ns") == ns)
             ).collect()
         }
-        got = {
-            r["user_id"]: r["value"]
-            for r in spark.read.parquet(str(tmp_path / "root") + "/" + ns)
-            .filter(F.col("op") != "d")
-            .select("user_id", "value")
-            .collect()
-        }
+        got = _ns_state(spark, root, ns)
         assert got == want
         assert all(k % 2 == parity for k in got)
 
 
 def test_multi_table_apply_lazy_namespace_and_unroutable(spark, tmp_path):
-    """A namespace first seen mid-stream gets its kernel lazily;
-    unroutable rows (NULL ns, path-hostile ns) reach the dead-letter —
-    with NO dead_letter_dir configured they default under the root, and
-    the M4 batch journal records them too."""
+    """A namespace first seen mid-stream needs no setup: it is one more
+    ``ns`` value in the shared table. Rows with a NULL ns reach the
+    dead-letter table — with NO dead_letter_dir configured it defaults
+    under the root — and the M4 batch journal records them too."""
     import datetime
     import os
 
-    from mongoshake_spark.streaming.multi import UNROUTABLE, MultiTableApplyKernel
+    from mongoshake_spark.streaming.multi import multi_ns_kernel, ns_state_view
 
     t0 = datetime.datetime(2024, 1, 1)
-    schema = (
-        "id long, ts timestamp, user_id long, op string, ns string, "
-        "value double, o string"
-    )
     root = str(tmp_path / "root")
     jdir = str(tmp_path / "journal")
-    multi = MultiTableApplyKernel(spark, root, journal_dir=jdir)
+    kernel = multi_ns_kernel(spark, root, journal_dir=jdir)
     b0 = spark.createDataFrame(
         [
             (1, t0, 1, "i", "db0.a", 1.0, "{}"),
-            (2, t0, 2, "i", None, 2.0, "{}"),      # NULL ns
-            (3, t0, 3, "i", "..", 3.0, "{}"),       # path escape attempt
+            (2, t0, 2, "i", None, 2.0, "{}"),       # NULL ns: unroutable
+            (3, t0, 3, "c", None, None, '{"drop": "a"}'),  # command, no ns
         ],
-        schema,
+        _MULTI_SCHEMA,
     )
-    multi.process_batch(b0, 0)
-    assert set(multi.kernels) == {"db0.a"}
-    b1 = spark.createDataFrame([(4, t0, 4, "i", "db0.b", 4.0, "{}")], schema)
-    multi.process_batch(b1, 1)
-    assert set(multi.kernels) == {"db0.a", "db0.b"}
+    kernel.process_batch(b0, 0)
+    assert kernel.ddl_log == []
+    b1 = spark.createDataFrame(
+        [(4, t0, 4, "i", "db0.b", 4.0, "{}")], _MULTI_SCHEMA
+    )
+    kernel.process_batch(b1, 1)
+    assert {
+        r["ns"] for r in spark.read.parquet(root).select("ns").distinct().collect()
+    } == {"db0.a", "db0.b"}
     # unroutable rows recorded under the DEFAULT dead-letter, never dropped
-    dl = spark.read.parquet(f"{root}/_dead_letter/{UNROUTABLE}")
+    dl = spark.read.parquet(f"{root}/_dead_letter")
     assert sorted(r["id"] for r in dl.collect()) == [2, 3]
-    # nothing escaped the root; the '..' target was never created
-    assert not os.path.isdir(str(tmp_path / "_bucket=0"))
     # M4: the journal holds every row of every batch, unroutable included
     assert spark.read.parquet(jdir).count() == 4
-    assert multi.state_view("db0.b").count() == 1
-    assert multi.state_view("db0.missing") is None
+    assert ns_state_view(kernel, "db0.b").count() == 1
+    assert ns_state_view(kernel, "db0.missing").count() == 0
+    # the dead-letter table lives under the root: a one-time re-bucketing
+    # of the state (new bucket count) carries it over
+    rebucketed = multi_ns_kernel(spark, root, n_buckets=8)
+    assert ns_state_view(rebucketed, "db0.a").count() == 1
+    dl = spark.read.parquet(f"{root}/_dead_letter")
+    assert sorted(r["id"] for r in dl.collect()) == [2, 3]
+    assert ns_state_view(
+        multi_ns_kernel(spark, str(tmp_path / "empty")), "db0.a"
+    ) is None
+    assert not os.path.exists(str(tmp_path / "empty"))
 
 
-def test_multi_table_apply_parallel_fanout(spark, tmp_path):
-    """The per-namespace kernel flushes run CONCURRENTLY from a driver
-    thread pool (the reference starts one syncer goroutine per worker —
-    collector/coordinator/incr.go:60-74); a serial loop makes per-batch
-    wall grow linearly in live-table count while executors idle. A
-    12-namespace batch must (a) produce byte-identical per-ns state
-    under pool=1 and pool=8, and (b) actually OVERLAP kernel flushes —
-    asserted structurally (max observed in-flight kernels > 1) rather
-    than by wall-clock ratio, which flakes on loaded/low-core hosts."""
-    import threading
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mongoshake_spark.streaming.apply import ApplyKernel
-    from mongoshake_spark.streaming.multi import MultiTableApplyKernel
-
-    n_ns = 12
-    rows = (
-        spark.range(0, 6000)
-        .select(
-            (F.col("id") % 500).alias("user_id"),
-            (F.col("id") * 1.5).alias("value"),
-            F.col("id").alias("id"),
-            F.lit("i").alias("op"),
-            F.to_timestamp(F.lit("2024-01-01")).alias("ts"),
-            F.concat(
-                F.lit("db0.c"), (F.col("id") % n_ns).cast("string")
-            ).alias("ns"),
-            F.lit(None).cast("string").alias("o"),
-        )
-        .persist()
-    )
-    rows.count()
-
-    # instrument concurrency structurally: count kernels whose
-    # process_batch is in flight at once (deterministic on any host,
-    # unlike a wall-clock ratio)
-    gauge = {"now": 0, "max": 0}
-    gauge_lock = threading.Lock()
-    orig = ApplyKernel.process_batch
-
-    def counted(self, df, bid):
-        with gauge_lock:
-            gauge["now"] += 1
-            gauge["max"] = max(gauge["max"], gauge["now"])
-        try:
-            return orig(self, df, bid)
-        finally:
-            with gauge_lock:
-                gauge["now"] -= 1
-
-    def run(par, root):
-        m = MultiTableApplyKernel(spark, root, max_parallel_ns=par)
-        t0 = time.monotonic()
-        m.process_batch(rows, 0)
-        return time.monotonic() - t0, m
-
-    try:
-        run(1, str(tmp_path / "warm"))  # JVM/codegen warmup out of band
-        w_serial, m1 = run(1, str(tmp_path / "serial"))
-        ApplyKernel.process_batch = counted
-        try:
-            w_par, m8 = run(8, str(tmp_path / "parallel"))
-        finally:
-            ApplyKernel.process_batch = orig
-    finally:
-        rows.unpersist()
-    assert set(m1.kernels) == set(m8.kernels) and len(m8.kernels) == n_ns
-    for ns in m8.kernels:
-        want = {
-            (r["user_id"], r["value"])
-            for r in m1.state_view(ns).collect()
-        }
-        got = {
-            (r["user_id"], r["value"])
-            for r in m8.state_view(ns).collect()
-        }
-        assert got == want and len(got) > 0
-    # the fan-out must not degrade to a serial loop: with pool=8 over 12
-    # namespaces, >1 kernel must have been in flight simultaneously
-    # (wall-clock was 0.41x serial on an idle local[32], but that ratio
-    # is load-dependent — the structural gauge is not)
-    assert gauge["max"] > 1, (
-        f"no kernel overlap observed (max in-flight {gauge['max']}) — "
-        f"pool=8 over {n_ns} namespaces ran serially "
-        f"(par {w_par:.2f}s vs serial {w_serial:.2f}s)"
-    )
-
-
-def test_multi_table_parallel_failure_fails_whole_batch(spark, tmp_path):
-    """A namespace flush failure must fail the WHOLE foreachBatch (so
-    streaming retries the batch; idempotent per-ns MERGE makes the
-    replay safe) — and every other in-flight namespace is awaited first,
-    never left racing the retry."""
+def test_multi_table_ns_sanitization_is_collision_free(spark, tmp_path):
+    """``ns`` is a column, not a path: names a per-namespace directory
+    layout would have had to sanitize ('..', '/', '@', '') are ordinary
+    key values, stay distinct from their look-alikes, and create nothing
+    outside the root."""
     import datetime
+    import os
 
-    import pytest
-
-    from mongoshake_spark.streaming.multi import MultiTableApplyKernel
+    from mongoshake_spark.streaming.multi import multi_ns_kernel
 
     t0 = datetime.datetime(2024, 1, 1)
-    schema = (
-        "id long, ts timestamp, user_id long, op string, ns string, "
-        "value double, o string"
+    names = ["db0.coll-1_x", "..", ".", "", "a/b", "a_b", "a@b", "a#b"]
+    root = str(tmp_path / "nest" / "root")
+    kernel = multi_ns_kernel(spark, root, n_buckets=4)
+    kernel.process_batch(spark.createDataFrame(
+        [(i, t0, 7, "i", ns, float(i), "{}") for i, ns in enumerate(names)],
+        _MULTI_SCHEMA,
+    ), 0)
+    got = {
+        r["ns"]: r["value"]
+        for r in kernel.state_view().select("ns", "value").collect()
+    }
+    assert got == {ns: float(i) for i, ns in enumerate(names)}
+    assert os.listdir(str(tmp_path / "nest")) == ["root"]
+    assert not any(
+        os.path.isdir(os.path.join(root, d)) and not d.startswith("_")
+        for d in os.listdir(root)
     )
-    root = str(tmp_path / "root")
-    multi = MultiTableApplyKernel(spark, root, max_parallel_ns=4)
-    b0 = spark.createDataFrame(
-        [(i, t0, i, "i", f"db0.c{i % 4}", float(i), "{}") for i in range(8)],
-        schema,
-    )
-    multi.process_batch(b0, 0)
-
-    boom = RuntimeError("kernel down")
-
-    class _Exploding:
-        def process_batch(self, df, bid):
-            raise boom
-
-    multi.kernels["db0.c1"] = _Exploding()
-    b1 = spark.createDataFrame(
-        [(i + 100, t0, i, "u", f"db0.c{i % 4}", float(i) + 9, "{}") for i in range(8)],
-        schema,
-    )
-    with pytest.raises(RuntimeError, match="kernel down"):
-        multi.process_batch(b1, 1)
-    # the healthy namespaces were awaited and applied (at-least-once);
-    # their second delivery on retry re-merges to the same state
-    assert multi.state_view("db0.c0").filter("value > 9").count() > 0
-
-
-def test_multi_table_kernel_lru_eviction_rebuilds_from_state_dir(spark, tmp_path):
-    """VERDICT round-8 deployment hygiene: a 10k-namespace deployment must
-    not hold 10k kernel objects forever. With ``max_live_kernels`` set,
-    idle kernels are LRU-evicted after each batch; a later batch (or a
-    state_view) rebuilds the kernel from its state dir — and the rebuild
-    must re-read ``_layout.json`` (watermark + layout), so an
-    evict-then-reuse namespace stays byte-correct."""
-    import datetime
-
-    from mongoshake_spark.streaming.multi import MultiTableApplyKernel
-
-    t0 = datetime.datetime(2024, 1, 1)
-    schema = (
-        "id long, ts timestamp, user_id long, op string, ns string, "
-        "value double, o string"
-    )
-    multi = MultiTableApplyKernel(
-        spark, str(tmp_path / "root"), max_parallel_ns=2,
-        max_live_kernels=2, n_buckets=4,
-    )
-    b0 = spark.createDataFrame(
-        [(i, t0, i % 3, "i", f"db0.c{i % 4}", float(i), "{}") for i in range(12)],
-        schema,
-    )
-    multi.process_batch(b0, 0)
-    assert len(multi.kernels) == 2  # 4 namespaces seen, cap held
-    evicted = [f"db0.c{j}" for j in range(4) if f"db0.c{j}" not in multi.kernels]
-    assert len(evicted) == 2
-
-    # view of an evicted namespace: a TRANSIENT kernel reads the state
-    # dir; the kernel map is NOT mutated (state_view may run off the
-    # batch thread — see _run_ns_tasks' thread-safety argument)
-    ns = evicted[0]
-    j = int(ns[-1])
-    got = {(r["user_id"], r["value"]) for r in multi.state_view(ns).collect()}
-    assert got == {(i % 3, float(i)) for i in range(12) if i % 4 == j}
-    assert ns not in multi.kernels and len(multi.kernels) == 2
-    # the rebuild re-read _layout.json: a fresh kernel over the same dir
-    # recovers the persisted compaction watermark (this namespace's
-    # batch-0 max ordinal)
-    from mongoshake_spark.streaming.apply import ApplyKernel
-
-    probe = ApplyKernel(spark, f"{multi.root_dir}/{ns}", n_buckets=4)
-    probe.state_view()
-    assert probe._watermark == max(i for i in range(12) if i % 4 == j)
-
-    # update + delete routed through ANOTHER evict/rebuild cycle still
-    # converge (the layout re-read kept bucketing consistent, so no
-    # double-counted generations). Every ns holds users {0,1,2}
-    # (ids j, j+4, j+8 -> all three residues): update user 0, delete
-    # user 1, leave user 2.
-    b1 = spark.createDataFrame(
-        [
-            (100, t0, 0, "u", ns, 999.0, "{}"),
-            (101, t0, 1, "d", ns, 0.0, "{}"),
-        ],
-        schema,
-    )
-    multi.process_batch(b1, 1)
-    assert len(multi.kernels) <= 2
-    final = {(r["user_id"], r["value"]) for r in multi.state_view(ns).collect()}
-    (v2,) = [float(i) for i in range(12) if i % 4 == j and i % 3 == 2]
-    assert final == {(0, 999.0), (2, v2)}
-
-
-def test_multi_table_ns_sanitization_is_collision_free(tmp_path):
-    from mongoshake_spark.streaming.multi import safe_ns_dir
-
-    assert safe_ns_dir("db0.coll-1_x") == "db0.coll-1_x"  # clean passes through
-    assert safe_ns_dir("..") is None
-    assert safe_ns_dir(".") is None
-    assert safe_ns_dir("") is None
-    a, b = safe_ns_dir("a/b"), safe_ns_dir("a_b")
-    assert a != b and "/" not in a          # substitution disambiguated
-    assert safe_ns_dir("a/b") == a          # deterministic
-    assert safe_ns_dir("a@b") != safe_ns_dir("a#b")  # distinct ns stay distinct
 
 
 def test_multi_table_rejects_mirror(spark, tmp_path):
     import pytest
 
-    from mongoshake_spark.streaming.multi import MultiTableApplyKernel
+    from mongoshake_spark.streaming.multi import multi_ns_kernel
 
     with pytest.raises(ValueError, match="mirror"):
-        MultiTableApplyKernel(spark, str(tmp_path / "r"), mirror=lambda d, b: None)
+        multi_ns_kernel(spark, str(tmp_path / "r"), mirror=lambda d, b: None)
+
+
+def test_multi_table_refuses_legacy_per_namespace_root(spark, tmp_path):
+    """A root in the retired one-kernel-per-namespace layout (each
+    namespace's own bucketed dir with its own _layout.json) fails loudly
+    at open, naming the directory and the remedy: those files carry no
+    ns column, so no exact migration exists."""
+    import json
+    import os
+
+    from mongoshake_spark.streaming.multi import multi_ns_kernel
+
+    root = tmp_path / "root"
+    for ns in ("db0.a", "db0.b"):
+        os.makedirs(root / ns / "_bucket=0")
+        (root / ns / "_layout.json").write_text(
+            json.dumps({"n_buckets": 64, "watermark": 3})
+        )
+    with pytest.raises(RuntimeError, match="per-namespace") as err:
+        multi_ns_kernel(spark, str(root))
+    msg = str(err.value)
+    assert str(root) in msg and "db0.a" in msg and "fresh checkpoint" in msg
+    assert sorted(os.listdir(root)) == ["db0.a", "db0.b"]  # nothing written
 
 
 def test_multi_table_resume_from_checkpoint(spark, sf_dir, tmp_path):
     """S13 for the whole-deployment shape: crash after a prefix of
-    batches, restart with the same checkpoint and a FRESH kernel map
-    (lazy kernels re-open their per-ns watermarked state), and every
-    namespace's final state is exact — nothing lost or double-applied."""
-    from mongoshake_spark.streaming.multi import MultiTableApplyKernel
+    batches, restart with the same checkpoint and a FRESH kernel (it
+    re-opens the shared watermarked state), and every namespace's final
+    state is exact — nothing lost or double-applied."""
+    from mongoshake_spark.streaming.multi import multi_ns_kernel
     from mongoshake_spark.streaming.replay import write_replay_feed
 
     feed = str(tmp_path / "feed")
     write_replay_feed(spark, sf_dir, feed, batch_rows=200)
     root, ckpt = str(tmp_path / "root"), str(tmp_path / "ck")
 
-    multi = MultiTableApplyKernel(spark, root)
+    kernel = multi_ns_kernel(spark, root)
     seen = {"n": 0}
-    orig = multi.process_batch
+    orig = kernel.process_batch
 
     def first_two(batch, bid):
         if seen["n"] >= 2:
@@ -1024,10 +943,10 @@ def test_multi_table_resume_from_checkpoint(spark, sf_dir, tmp_path):
     with pytest.raises(Exception):
         q.awaitTermination()
 
-    multi2 = MultiTableApplyKernel(spark, root)  # fresh kernel map
+    kernel2 = multi_ns_kernel(spark, root)  # fresh kernel
     q2 = (
         read_oplog_stream(spark, feed, max_files_per_trigger=1)
-        .writeStream.foreachBatch(multi2.process_batch)
+        .writeStream.foreachBatch(kernel2.process_batch)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
@@ -1040,32 +959,32 @@ def test_multi_table_resume_from_checkpoint(spark, sf_dir, tmp_path):
             r["user_id"]: r["value"]
             for r in merge.last_writer_wins(ov.filter(F.col("ns") == ns)).collect()
         }
-        got = {
-            r["user_id"]: r["value"]
-            for r in spark.read.parquet(f"{root}/{ns}")
-            .filter(F.col("op") != "d")
-            .select("user_id", "value")
-            .collect()
-        }
-        assert got == want
+        assert _ns_state(spark, root, ns) == want
+
+
+class _RecordingDDL:
+    """A ddl_executor that records each command it is asked to run."""
+
+    def __init__(self):
+        self.executed = []
+
+    def execute(self, ns, o):
+        self.executed.append((ns, o))
 
 
 def test_multi_table_routes_admin_commands_per_db(spark, tmp_path):
-    """'db.$cmd' command rows reach EVERY kernel of that db (merged into
-    each slice so barrier ordering covers them) and no literal '$cmd'
-    target directory is created; another db's kernels never see them."""
+    """A 'db.$cmd' command row is journaled and executed ONCE, in global
+    (ts, id) order, however many namespaces of that db the batch
+    carries; no '$cmd' state appears and other namespaces are intact."""
     import datetime
     import os
 
-    from mongoshake_spark.streaming.multi import MultiTableApplyKernel
+    from mongoshake_spark.streaming.multi import multi_ns_kernel
 
     t0 = datetime.datetime(2024, 1, 1)
-    schema = (
-        "id long, ts timestamp, user_id long, op string, ns string, "
-        "value double, o string"
-    )
     root = str(tmp_path / "root")
-    multi = MultiTableApplyKernel(spark, root)
+    ddl = _RecordingDDL()
+    kernel = multi_ns_kernel(spark, root, ddl_executor=ddl)
     batch = spark.createDataFrame(
         [
             (1, t0, 1, "i", "db0.a", 1.0, "{}"),
@@ -1073,13 +992,14 @@ def test_multi_table_routes_admin_commands_per_db(spark, tmp_path):
             (3, t0, 3, "c", "db0.$cmd", None, '{"create": "a2"}'),
             (4, t0, 4, "i", "db1.x", 4.0, "{}"),
         ],
-        schema,
+        _MULTI_SCHEMA,
     )
-    multi.process_batch(batch, 0)
-    assert set(multi.kernels) == {"db0.a", "db0.b", "db1.x"}
-    assert [x[0] for x in multi.kernels["db0.a"].ddl_log] == [3]
-    assert [x[0] for x in multi.kernels["db0.b"].ddl_log] == [3]
-    assert multi.kernels["db1.x"].ddl_log == []
+    kernel.process_batch(batch, 0)
+    assert [x[0] for x in kernel.ddl_log] == [3]
+    assert ddl.executed == [("db0.$cmd", '{"create": "a2"}')]
+    assert {
+        (r["ns"], r["user_id"]) for r in kernel.state_view().collect()
+    } == {("db0.a", 1), ("db0.b", 2), ("db1.x", 4)}
     assert not any("$cmd" in d or "_cmd" in d for d in os.listdir(root))
 
 
@@ -1245,29 +1165,28 @@ def test_receiver_max_wall_flushes_pending(spark, tmp_path):
     assert s["logs"] == 40 and s["state_rows"] == 5
 
 
-def test_multi_table_cmd_only_batch_reaches_live_kernels(spark, tmp_path):
-    """A micro-batch whose ONLY rows for a db are db.$cmd commands must
-    still reach that db's live kernels (single-row DDL batches are
-    routine at maxFilesPerTrigger=1) — before the fix they were silently
-    dropped: not applied, not ddl_logged, not dead-lettered."""
+def test_multi_table_cmd_only_batch_is_journaled_once(spark, tmp_path):
+    """A micro-batch whose ONLY row is a db.$cmd command (routine at
+    maxFilesPerTrigger=1) still reaches the barrier: journaled and
+    executed once, with the existing state untouched."""
     import datetime
 
-    from mongoshake_spark.streaming.multi import MultiTableApplyKernel
+    from mongoshake_spark.streaming.multi import multi_ns_kernel
 
     t0 = datetime.datetime(2024, 1, 1)
-    schema = (
-        "id long, ts timestamp, user_id long, op string, ns string, "
-        "value double, o string"
+    ddl = _RecordingDDL()
+    kernel = multi_ns_kernel(
+        spark, str(tmp_path / "root"), n_buckets=4, ddl_executor=ddl
     )
-    multi = MultiTableApplyKernel(spark, str(tmp_path / "root"), n_buckets=4)
-    multi.process_batch(spark.createDataFrame(
+    kernel.process_batch(spark.createDataFrame(
         [(1, t0, 1, "i", "db0.c1", 1.0, "{}"),
-         (2, t0, 2, "i", "db1.c9", 2.0, "{}")], schema), 0)
-    # batch 1: ONLY a db0 command — no db0 CRUD rows anywhere
-    multi.process_batch(spark.createDataFrame(
-        [(3, t0, 0, "c", "db0.$cmd", 0.0, '{"drop":"c1"}')], schema), 1)
-    assert [o[0] for o in multi.kernels["db0.c1"].ddl_log] == [3]
-    assert multi.kernels["db1.c9"].ddl_log == []  # other dbs untouched
+         (2, t0, 2, "i", "db1.c9", 2.0, "{}")], _MULTI_SCHEMA), 0)
+    # batch 1: ONLY a db0 command — no CRUD rows anywhere
+    kernel.process_batch(spark.createDataFrame(
+        [(3, t0, 0, "c", "db0.$cmd", 0.0, '{"drop":"c1"}')], _MULTI_SCHEMA), 1)
+    assert [o[0] for o in kernel.ddl_log] == [3]
+    assert ddl.executed == [("db0.$cmd", '{"drop":"c1"}')]
+    assert kernel.state_view().count() == 2
 
 
 def test_ann_ingest_store_matches_batch_and_is_replay_idempotent(
@@ -1428,12 +1347,19 @@ def test_write_class_feed_one_file_per_class_in_one_job(spark, tmp_path):
         F.concat(F.lit("t"), F.col("id")).alias("text"),
     )
     feed = str(tmp_path / "feed")
-    tracker = spark.sparkContext.statusTracker()
-    jobs_before = len(tracker.getJobIdsForGroup(None) or [])
-    _write_class_feed(df, F.col("doc_id") % 3, 3, feed, str(tmp_path))
-    jobs_after = len(tracker.getJobIdsForGroup(None) or [])
+    sc = spark.sparkContext
+    # count under a job group of its own: the ungrouped job list is a
+    # window the status tracker trims by 100 once the session passes
+    # spark.ui.retainedJobs, so a before/after difference on it can go
+    # negative mid-suite
+    sc.setJobGroup("class-feed-write", "class-feed-write")
+    try:
+        _write_class_feed(df, F.col("doc_id") % 3, 3, feed, str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     # ONE write job (the old per-class filter+coalesce loop ran three)
-    assert jobs_after - jobs_before == 1
+    assert len(sc.statusTracker().getJobIdsForGroup("class-feed-write")) == 1
     files = sorted(os.listdir(feed))
     assert files == ["class0.parquet", "class1.parquet", "class2.parquet"]
     mtimes = [os.path.getmtime(os.path.join(feed, f)) for f in files]
