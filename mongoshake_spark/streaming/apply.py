@@ -39,10 +39,10 @@ tuple of columns: the multi-namespace path (streaming/multi.py) keys one
 kernel on ``(ns, user_id)``, so every namespace of a batch folds in the
 same MERGE. Each micro-batch:
 
-1. computes the set of buckets its keys hash into,
-2. reads ONLY those ``_bucket=`` partitions back (partition pruning — the
-   literal ``IN`` on the partition column reaches the file index, so
-   untouched buckets are never opened),
+1. runs ONE census, a single aggregate returning the touched buckets,
+   the max ordinal, the W7 bad-row count and the DDL rows,
+2. reads ONLY the touched buckets' files back, with the schema of their
+   footers (untouched buckets are never opened; Spark infers nothing),
 3. MERGEs the batch into that slice and drops the tombstones the
    watermark has passed,
 4. ``localCheckpoint``s the merged slice once (O(slice) — this is also
@@ -77,6 +77,7 @@ from functools import reduce
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from mongoshake_spark.operators import merge
 
@@ -197,6 +198,16 @@ class ApplyKernel:
         # leading underscore: invisible to Spark's file index, like _SUCCESS
         return os.path.join(self.target_dir, "_layout.json")
 
+    def _read_marker(self) -> dict:
+        """``_layout.json``, or ``{}`` when missing or torn (a legacy
+        writer's crash): the unknown bucket count then rebuckets once, and
+        no watermark compacts nothing, which is merely conservative."""
+        try:
+            with open(self._marker_path()) as f:
+                return json.load(f)
+        except (OSError, json.JSONDecodeError):
+            return {}
+
     def _write_marker(self) -> None:
         # atomic: the marker rewrites after EVERY flush, so an in-place
         # truncate+write would leave a corrupt file under a crash mid-dump
@@ -232,17 +243,21 @@ class ApplyKernel:
         self._layout_checked = True
         if not os.path.isdir(self.target_dir):
             return
+        entries = os.listdir(self.target_dir)
+        doc = self._read_marker()
+        marker = doc.get("n_buckets")
+        if self._watermark is None:
+            self._watermark = doc.get("watermark")
         if self._is_delta:
             # an EXISTING non-delta state dir must refuse loudly: the
             # first delta batch write is mode("overwrite") on an
             # is-not-yet-DeltaTable path, which would replace the whole
             # accumulated parquet state with one batch's net rows
-            entries_ = os.listdir(self.target_dir)
             has_parquet_state = any(
                 e.startswith("_bucket=") or e.endswith(".parquet")
-                for e in entries_
+                for e in entries
             )
-            if has_parquet_state and "_delta_log" not in entries_:
+            if has_parquet_state and "_delta_log" not in entries:
                 raise RuntimeError(
                     f"{self.target_dir} holds parquet-format kernel state "
                     "but state_format='delta' was requested; reopen with "
@@ -258,41 +273,17 @@ class ApplyKernel:
             # different buckets, miss every match and silently DUPLICATE
             # keys (the same hazard the parquet path migrates away from;
             # for delta we refuse loudly instead of rewriting the table)
-            if os.path.isfile(self._marker_path()):
-                try:
-                    with open(self._marker_path()) as f:
-                        doc = json.load(f)
-                except (json.JSONDecodeError, OSError):
-                    doc = {}
-                marker_buckets = doc.get("n_buckets")
-                if marker_buckets is not None and marker_buckets != self.n_buckets:
-                    raise RuntimeError(
-                        f"delta state at {self.target_dir} was written with "
-                        f"n_buckets={marker_buckets}; reopening with "
-                        f"n_buckets={self.n_buckets} would merge on "
-                        "mismatched _bucket values and silently duplicate "
-                        "keys — reopen with the original bucket count"
-                    )
-                if self._watermark is None:
-                    self._watermark = doc.get("watermark")
+            if marker is not None and marker != self.n_buckets:
+                raise RuntimeError(
+                    f"delta state at {self.target_dir} was written with "
+                    f"n_buckets={marker}; reopening with "
+                    f"n_buckets={self.n_buckets} would merge on "
+                    "mismatched _bucket values and silently duplicate "
+                    "keys — reopen with the original bucket count"
+                )
             return
-        entries = os.listdir(self.target_dir)
         flat = [f for f in entries if f.endswith(".parquet")]
         bucketed = [f for f in entries if f.startswith("_bucket=")]
-        marker = None
-        if os.path.isfile(self._marker_path()):
-            try:
-                with open(self._marker_path()) as f:
-                    doc = json.load(f)
-            except (json.JSONDecodeError, OSError):
-                # a torn marker from a legacy (pre-atomic) writer crash:
-                # treat as missing — n_buckets mismatch then triggers the
-                # one-time rebucket below, and watermark=None compacts
-                # nothing, which is merely conservative
-                doc = {}
-            marker = doc.get("n_buckets")
-            if self._watermark is None:
-                self._watermark = doc.get("watermark")
         if not flat and (not bucketed or marker == self.n_buckets):
             return
         parts = []
@@ -335,33 +326,36 @@ class ApplyKernel:
         shutil.rmtree(old)
         self._write_marker()
 
-    def _apply_parquet(self, crud: DataFrame, touched: list[int]) -> None:
-        """The batch's one MERGE on the parquet plane (steps 2-5 of the
-        module docstring). The slice read covers ONLY the touched
-        ``_bucket=`` partitions — the ``isin`` on the partition column is
-        pruned at the file index — and the dynamic partition overwrite
-        rewrites only those, so state I/O per batch is O(touched
-        buckets), not O(state). The ``localCheckpoint`` severs the merged
-        slice's dependency on the very files the overwrite replaces."""
-        bucket_dirs = self._bucket_dirs()
+    def _read_slice(self, touched: list[int]) -> tuple[DataFrame | None, list]:
+        """The committed rows of the ``touched`` buckets, and the parquet
+        footers of the files that hold them. The driver lists the touched
+        ``_bucket=`` dirs itself and hands Spark the files with the schema
+        of their first footer, so untouched buckets are never opened and
+        Spark infers nothing. The slice is None while no touched bucket
+        holds a file."""
         files = [
             os.path.join(self.target_dir, d, f)
-            for d in bucket_dirs
+            for d in self._bucket_dirs()
             if int(d.split("=", 1)[1]) in touched
             for f in os.listdir(os.path.join(self.target_dir, d))
             if f.endswith(".parquet")
         ]
-        self.last_state_files_read = len(files)
-        self.last_state_rows_read = sum(
-            pq.read_metadata(f).num_rows for f in files
-        )
-        state = None
-        if bucket_dirs:
-            state = (
-                self.spark.read.parquet(self.target_dir)
-                .filter(F.col("_bucket").isin(touched))
-                .drop("_bucket")
-            )
+        footers = [pq.read_metadata(f) for f in files]
+        if not files:
+            return None, footers
+        schema = from_arrow_schema(footers[0].schema.to_arrow_schema())
+        return self.spark.read.schema(schema).parquet(*files), footers
+
+    def _apply_parquet(self, crud: DataFrame, touched: list[int]) -> None:
+        """The batch's one MERGE on the parquet plane (steps 2-5 of the
+        module docstring). The slice read covers ONLY the touched
+        buckets' files, and the dynamic partition overwrite rewrites only
+        those buckets, so state I/O per batch is O(touched buckets), not
+        O(state). The ``localCheckpoint`` severs the merged slice's
+        dependency on the very files the overwrite replaces."""
+        state, footers = self._read_slice(touched)
+        self.last_state_files_read = len(footers)
+        self.last_state_rows_read = sum(m.num_rows for m in footers)
         out = merge.merge_upsert(state, crud, self._keys, self.val, self.ord)
         if self._watermark is not None:
             # lazy tombstone compaction: this batch rewrites the touched
@@ -473,34 +467,43 @@ class ApplyKernel:
                 batch.write.mode("append").parquet(self.journal_dir)
             # W7: rows which cannot be applied reach the dead-letter
             # table — an unknown or NULL op, a CRUD row with a NULL key
-            # column (nothing to merge on), a command with a NULL ns (no
-            # namespace to run on). coalesce makes the test null-safe: a
-            # plain filter on a NULL predicate would silently DROP the
-            # row from every path (not quarantined, not applied)
+            # column or a NULL ordinal (nothing to merge on or to order
+            # by), a command with a NULL ns (no namespace to run on).
+            # coalesce makes the test null-safe: a plain filter on a NULL
+            # predicate would silently DROP the row from every path
+            # (not quarantined, not applied)
+            op = F.col("op")
             keyed = reduce(
-                lambda a, b: a & b, [F.col(k).isNotNull() for k in self._keys]
+                lambda a, b: a & b,
+                [F.col(c).isNotNull() for c in (*self._keys, self.ord)],
             )
-            is_crud = F.col("op").isin("i", "u", "d") & keyed
-            is_ddl = (F.col("op") == "c") & F.col("ns").isNotNull()
-            self._quarantine(
-                batch.filter(
-                    ~F.coalesce(is_crud | is_ddl | (F.col("op") == "n"), F.lit(False))
+            is_crud = op.isin("i", "u", "d") & keyed
+            is_ddl = (op == "c") & F.col("ns").isNotNull()
+            bad = ~F.coalesce(is_crud | is_ddl | (op == "n"), F.lit(False))
+            # the census: one aggregate, one row per touched bucket with
+            # its max ordinal (the next watermark candidate), plus one
+            # row (_b NULL) carrying the DDL rows and the bad-row count
+            census = (
+                batch.groupBy(F.when(is_crud, self._bucket_expr()).alias("_b"))
+                .agg(
+                    F.max(self.ord).alias("_m"),
+                    F.count_if(bad).alias("_bad"),
+                    F.collect_list(
+                        F.when(is_ddl, F.struct("id", "ts", "ns", "o"))
+                    ).alias("_ddl"),
                 )
-            )
-            ddl_rows = sorted(
-                batch.filter(is_ddl).select("id", "ts", "ns", "o").collect(),
-                key=lambda r: (r["ts"], r["id"]),
-            )
-            crud = batch.filter(is_crud)
-            # one job yields both the touched-bucket set and the batch's
-            # max ordinal (the next watermark candidate)
-            per_bucket = (
-                crud.groupBy(self._bucket_expr().alias("_b"))
-                .agg(F.max(self.ord).alias("_m"))
                 .collect()
             )
-            touched = [r["_b"] for r in per_bucket]
-            batch_max = max((r["_m"] for r in per_bucket), default=None)
+            per_bucket = {r["_b"]: r["_m"] for r in census if r["_b"] is not None}
+            touched = list(per_bucket)
+            batch_max = max(per_bucket.values(), default=None)
+            if self.dead_letter_dir and any(r["_bad"] for r in census):
+                batch.filter(bad).write.mode("append").parquet(self.dead_letter_dir)
+            ddl_rows = sorted(
+                (d for r in census for d in r["_ddl"]),
+                key=lambda d: (d["ts"], d["id"]),
+            )
+            crud = batch.filter(is_crud)
             # barriers before the batch's MERGE commits (module docstring)
             self._apply_ddl(ddl_rows)
             if touched:
@@ -515,15 +518,10 @@ class ApplyKernel:
                 # this batch's keys — O(batch) via the same bucket-pruned
                 # slice read _apply_parquet uses, never O(state)
                 keys = crud.select(*self._keys).distinct()
-                committed_scan = (
-                    self.spark.read.format("delta").load(self.target_dir)
-                    if self._is_delta
-                    else self.spark.read.parquet(self.target_dir)
-                )
                 committed = (
-                    committed_scan
-                    .filter(F.col("_bucket").isin(touched))
-                    .drop("_bucket")
+                    self.spark.read.format("delta").load(self.target_dir)
+                    .filter(F.col("_bucket").isin(touched)).drop("_bucket")
+                    if self._is_delta else self._read_slice(touched)[0]
                 )
                 net = committed.join(
                     keys, list(self._keys), "leftsemi"
@@ -537,10 +535,6 @@ class ApplyKernel:
                 self._write_marker()
         finally:
             batch.unpersist()
-
-    def _quarantine(self, unknown: DataFrame) -> None:
-        if self.dead_letter_dir and not unknown.isEmpty():
-            unknown.write.mode("append").parquet(self.dead_letter_dir)
 
 
 def run_incr_sync(

@@ -5,16 +5,18 @@ doc as the living map, so a stale row is a false claim.
 
 Exit 0 = consistent; 1 = findings (printed).
 """
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
     from mongoshake_spark.plans import QUERIES
 
-    text = open("/root/repo/COVERAGE.md").read()
+    text = open(os.path.join(ROOT, "COVERAGE.md")).read()
     registry = set(QUERIES)
     # query-name tokens: qNN_..., or snake_case names we know the shape of
     referenced = set(re.findall(r"\b(q\d+_[a-z0-9_]+)\b", text))

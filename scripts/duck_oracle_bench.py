@@ -9,10 +9,11 @@ Defaults: /root/testdata/sf0.1, /tmp/duck_oracle_bench.json
 Prints one JSON line: {"total": sec, "n": #queries, "queries": {name: sec}}.
 """
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

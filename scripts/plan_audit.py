@@ -28,10 +28,11 @@ Exit code 0 = clean; 1 = findings (printed per query).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def _bracket_groups(s: str) -> list[str]:
     """Top-level ``[...]`` groups of a plan node's argument list (handles

@@ -8,10 +8,12 @@ before the round gate runs.
 """
 import hashlib
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 
@@ -144,7 +146,7 @@ def main():
             "fails": fails,
             "queries": results,
         }
-        with open("/root/repo/CORRECTNESS_SELF.json", "w") as f:
+        with open(os.path.join(ROOT, "CORRECTNESS_SELF.json"), "w") as f:
             json.dump(out, f, indent=1)
     return 1 if fails else 0
 

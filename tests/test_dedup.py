@@ -326,9 +326,6 @@ def test_dedup_scale_proof_invariants(spark, sf_dir):
     must stay reproducible: on the skewed fixture, max_df collapses the
     inverted-index candidate-pair term, the simhash hot-bucket census
     engages, and identical-fingerprint pairs survive the re-split."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import scripts.dedup_scale_proof as proof
     from pyspark.sql import functions as F
 
@@ -381,9 +378,6 @@ def test_ann_recall_proof_invariants(spark, sf_dir):
     """The BASELINE.md ANN proof must stay reproducible at test scale:
     IVF recall is monotone in n_probe and probing every cell recovers
     the exact brute-force top-k."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import scripts.ann_recall_proof as proof
     from pyspark.sql import functions as F
 

@@ -114,9 +114,6 @@ def test_plan_audit_detector(spark):
     """scripts/plan_audit.window_flags must FIRE on a global ordered
     window and stay quiet on a partitioned one and on a whole-group
     frame — otherwise the sweep is vacuous."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -152,9 +149,6 @@ def test_plan_audit_post_window_filter_detector():
     so the firing shape is validated on synthetic plan text (the live
     shape only occurs when pushdown is blocked — a cache boundary, a
     non-deterministic barrier)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from scripts.plan_audit import post_window_filter_flags
 
     fired = "\n".join([
@@ -254,9 +248,6 @@ def test_selfcheck_driver_canon_gate_rejects_arrays():
     """The r5 escape (array-typed outputs shipped green through selfcheck
     then ERRed in the driver's pandas canonicalizer) must be impossible:
     the gate fails on array cells and passes scalar-only outputs."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import pytest as _pytest
     from scripts.selfcheck import driver_canon_gate
 

@@ -493,9 +493,6 @@ def test_hard_negatives_windows_are_anchor_bounded(spark, sf_dir):
     quiet (no post-window anchor filter), and every window partitioned
     by the document id has the anchor IN-filter INSIDE its subtree."""
     import re
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from scripts.plan_audit import (
         _bracket_groups,
         post_window_filter_flags,

@@ -197,9 +197,11 @@ def test_batch_job_count_independent_of_ddl_count(spark, tmp_path):
 def test_batch_job_count_independent_of_namespace_count(spark, tmp_path):
     """The multi-namespace kernel folds every namespace of a batch in its
     one MERGE: the same 1000 CRUD rows cost the same Spark jobs spread
-    over 1 namespace or over 16, and no more than the single-table
-    kernel on the same rows. Measured on the second batch, so the slice
-    read of existing state is counted too."""
+    over 1 namespace or over 16, and as many as the single-table kernel
+    on the same rows, with or without a dead-letter dir (the census
+    counts bad rows, so a clean batch never probes for them). Measured
+    on the second batch, so the slice read of existing state is counted
+    too."""
     import datetime
 
     from mongoshake_spark.streaming.multi import multi_ns_kernel
@@ -232,17 +234,70 @@ def test_batch_job_count_independent_of_namespace_count(spark, tmp_path):
 
     one_ns = jobs("ns1", multi_ns_kernel(spark, str(tmp_path / "ns1")), 1)
     sixteen_ns = jobs("ns16", multi_ns_kernel(spark, str(tmp_path / "ns16")), 16)
-    single = jobs(
-        "single",
+    single_dl = jobs(
+        "single_dl",
         ApplyKernel(
-            spark, str(tmp_path / "single"),
-            dead_letter_dir=str(tmp_path / "single_dl"),
+            spark, str(tmp_path / "single_dl"),
+            dead_letter_dir=str(tmp_path / "single_dl_dlq"),
         ),
         16,
     )
+    single = jobs("single", ApplyKernel(spark, str(tmp_path / "single")), 16)
     assert one_ns > 0
-    assert sixteen_ns == one_ns
-    assert sixteen_ns <= single
+    assert sixteen_ns == one_ns == single_dl == single
+
+
+W7_BAD_ROWS = {
+    # one row the single-table kernel cannot apply: (id, user_id, op, ns)
+    "unknown_op": (100, 3, "x", "db0.c1"),
+    "null_op": (100, 3, None, "db0.c1"),
+    "null_user_id": (100, None, "i", "db0.c1"),
+    "command_null_ns": (100, 0, "c", None),
+    # a NULL ordinal orders nothing: it must neither reach the buckets'
+    # max ordinal beside rows of other buckets nor write a state row
+    "null_id": (None, 3, "i", "db0.c1"),
+    # a clean batch (CRUD, a noop and a command) writes no dead letter
+    "no_bad_row": None,
+}
+
+
+@pytest.mark.parametrize("name", list(W7_BAD_ROWS))
+def test_single_table_bad_row_dead_lettered_once(spark, tmp_path, name):
+    """W7 (executor/duplicate.go) on the single-table kernel: the one row
+    that cannot be applied lands in the dead-letter table exactly once,
+    and the batch's clean rows apply around it."""
+    import datetime
+    import os
+
+    t0 = datetime.datetime(2024, 1, 1)
+    rows = [
+        (i, t0 + datetime.timedelta(seconds=i), i % 20, "iu"[i % 2],
+         "db0.c1", float(i), "{}")
+        for i in range(1, 41)
+    ]
+    rows += [
+        (41, t0, 0, "n", "", None, "{}"),
+        (42, t0, 0, "c", "db0.$cmd", None, '{"create": "c2"}'),
+    ]
+    bad = W7_BAD_ROWS[name]
+    if bad is not None:
+        rid, uid, op, ns = bad
+        rows.append((rid, t0, uid, op, ns, -1.0, '{"drop": "c1"}'))
+    dl = str(tmp_path / "dlq")
+    kernel = ApplyKernel(spark, str(tmp_path / "t"), dead_letter_dir=dl)
+    kernel.process_batch(spark.createDataFrame(rows, _MULTI_SCHEMA), 0)
+
+    got = {r["user_id"]: r["value"] for r in kernel.state_view().collect()}
+    assert got == {k: float(20 + k) for k in range(1, 20)} | {0: 40.0}
+    assert spark.read.parquet(str(tmp_path / "t")).filter(
+        F.col("id").isNull() | F.col("op").isNull()
+    ).count() == 0
+    assert [e[0] for e in kernel.ddl_log] == [42]
+    if bad is None:
+        assert not os.path.exists(dl)
+    else:
+        dead = spark.read.parquet(dl).select("id", "user_id", "op", "ns")
+        assert [tuple(r) for r in dead.collect()] == [bad]
 
 
 def test_txn_reassembly_in_batch(spark):
