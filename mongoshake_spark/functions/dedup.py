@@ -1,28 +1,35 @@
 """Deduplication operators for the training-data pipeline.
 
-Four families over ``documents`` plus one over ``embeddings``:
+Families over ``documents`` (embedding near-dup: functions/similarity.py);
+each near-dup family generates its pairs with ONE self-join:
 
-- exact           : hash-groupBy (md5 of the text)
-- minhash_pairs   : MinHash + LSH banding (shingle -> 16 minhashes ->
-                    4 bands -> bucket self-join)
-- simhash_pairs   : 32-bit SimHash + 8-bit-band candidate join, Hamming <= 3
-                    (oracle-parity form; band-key space is only 4x256 —
-                    use simhash_pairs64 in production)
-- simhash_pairs64 : 64-bit SimHash (FNV-1a token hashes), 4x16-bit bands
-                    -> >= 2^16 distinct band keys, plus a bucket-size cap
-                    that re-splits hot buckets — the production path
-- ngram_pairs     : 3-shingle Jaccard via inverted-index self-join
-- (embedding near-dup lives in functions/similarity.py)
+- exact           : hash-groupBy (md5 of the raw or normalized text)
+- MinHash         : shingle -> 16 minhashes -> 4 bands ->
+                    :func:`minhash_band_pairs`, shared by minhash_pairs,
+                    incremental_minhash_pairs, minhash_estimate_pairs
+                    (Jaccard estimate per candidate) and streaming/neardup
+- SimHash         : fingerprint -> 4 bands of bits/4 -> one band join for
+                    the 32-bit oracle form (simhash_pairs, 4x8-bit) and
+                    the 64-bit production form (simhash_pairs64, 4x16-bit,
+                    optional hot-bucket cap), Hamming <= 3
+- n-gram          : 3-shingle posting self-join (:func:`_shingle_overlap`)
+                    thresholded as Jaccard or as asymmetric containment
+- winnowing       : MOSS fingerprints + postings self-join (winnow_pairs)
+- spans / lines   : duplicate_spans, dedup_lines
 
 Scale notes (the reason these shapes were chosen):
 - Everything is hash -> shuffle-on-small-key -> aggregate; the only wide
   rows are (doc_id, shingle_hash) pairs, never the documents themselves.
-- The LSH band join shuffles on (band, band_key) — a high-cardinality key,
-  so it parallelizes to any cluster size; hot buckets (boilerplate text)
-  are exactly what AQE skew-join splitting handles.
-- Hashes are the dialect-portable polynomial (functions/texthash.py) so the
-  DuckDB oracle can verify pair sets value-for-value. For pure production
-  use, swap in xxhash64 via the ``hash_expr`` parameter.
+- The self-joins shuffle on high-cardinality bucket keys, so they spread
+  over any cluster. A hot bucket (boilerplate text) is NOT fixed by AQE:
+  its skew split divides the join input, but the bucket's quadratic pair
+  work stays in a few tasks — on sf1, dedup_containment takes 30.07 s at
+  32 cores and 31.05 s at 8 (BENCH_SCALING). ``max_df`` and SimHash's
+  ``bucket_cap`` bound that work.
+- MinHash and 32-bit SimHash hash with the dialect-portable polynomial
+  (functions/texthash.py), so the DuckDB oracle verifies pair sets
+  value-for-value; the n-gram index keys on xxhash64 shingle hashes,
+  since only counts leave it.
 """
 
 from __future__ import annotations
@@ -35,6 +42,7 @@ from mongoshake_spark.functions.texthash import MOD, poly_hash_spark
 N_MINHASH = 16
 N_BANDS = 4
 SIMHASH_BITS = 32
+SIMHASH_BANDS = 4  # both widths: bits / 4 per band
 
 
 def exact_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -248,15 +256,12 @@ def minhash_bands(
     )
 
 
-def minhash_pairs(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Candidate near-duplicate pairs: docs sharing >= 1 LSH band.
-    The band table is locally checkpointed — both sides of the self-join
-    reuse the materialized rows instead of recomputing the shingle+hash
-    pipeline twice, and the blocks are released when the result goes out
-    of scope (no persist left pinned in a long-lived session)."""
-    bands = minhash_bands(docs, text_col).localCheckpoint(eager=True)
-    a = bands.alias("a")
-    b = bands.alias("b")
+def minhash_band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)``, doc_a < doc_b, sharing >= 1 band of a
+    :func:`minhash_bands` table (a pair joins once per shared band, hence
+    the ``distinct``). Checkpoint the bands or their signatures first so
+    the two join sides do not each rerun the signature kernel."""
+    a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
             b,
@@ -266,6 +271,17 @@ def minhash_pairs(docs: DataFrame, text_col: str = "text") -> DataFrame:
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
+    )
+
+
+def minhash_pairs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Candidate near-duplicate pairs: docs sharing >= 1 LSH band.
+    The band table is locally checkpointed — both sides of the self-join
+    reuse the materialized rows instead of recomputing the shingle+hash
+    pipeline twice, and the blocks are released when the result goes out
+    of scope (no persist left pinned in a long-lived session)."""
+    return minhash_band_pairs(
+        minhash_bands(docs, text_col).localCheckpoint(eager=True)
     )
 
 
@@ -322,18 +338,7 @@ def incremental_minhash_pairs(
         .distinct()
         .withColumn("origin", F.lit("corpus"))
     )
-    a, b = inc_bands.alias("a"), inc_bands.alias("b")
-    vs_self = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        .withColumn("origin", F.lit("increment"))
-    )
+    vs_self = minhash_band_pairs(inc_bands).withColumn("origin", F.lit("increment"))
     return vs_corpus.unionByName(vs_self)
 
 
@@ -395,44 +400,19 @@ def simhash_values(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def simhash_pairs(docs: DataFrame, text_col: str = "text", max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs with Hamming distance <= 3, found via 4×8-bit band
-    candidate join (pigeonhole: <=3 differing bits across 4 bands leaves at
-    least one band identical, so the band join finds every qualifying pair
-    — same result set as a brute-force cross join, at shuffle-join cost)."""
-    if max_hamming > 3:
-        raise ValueError(
-            f"max_hamming={max_hamming} voids the 4-band pigeonhole "
-            "guarantee (exact only for <= 3); add bands or brute-force"
-        )
-    spark = docs.sparkSession
-    sims = simhash_values(docs, text_col).localCheckpoint(eager=True)
-    bands = spark.range(SIMHASH_BITS // 8).withColumnRenamed("id", "k")
-    keyed = sims.crossJoin(F.broadcast(bands)).select(
-        "doc_id", "simhash", "k", F.expr("(simhash >> (8 * CAST(k AS INT))) & 255").alias("band_val")
-    )
-    a, b = keyed.alias("a"), keyed.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.k") == F.col("b.k"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("CAST(bit_count(a.simhash ^ b.simhash) AS INT)").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    """Near-dup pairs ``(doc_a, doc_b, hamming)`` with Hamming distance
+    <= 3 over the 32-bit fingerprint (:func:`simhash_values`), found by
+    the shared band join (:func:`_simhash_band_pairs`) with 4x8-bit bands
+    — same pair set as a brute-force cross join, at shuffle-join cost.
+    The oracle-parity form: use :func:`simhash_pairs64` in production.
+    Precondition: ``doc_id`` is unique in ``docs``."""
+    return _simhash_band_pairs(docs, text_col, max_hamming, SIMHASH_BITS)
 
 
 FNV64_OFFSET = 0xCBF29CE484586325
 FNV64_PRIME = 0x100000001B3
 U64 = 1 << 64
 SIMHASH64_BITS = 64
-SIMHASH64_BANDS = 4  # 16 bits each -> band-key space 4 * 2^16
 
 
 def _fnv1a64(s: str) -> int:
@@ -552,13 +532,20 @@ def simhash_band_keys(sims: DataFrame) -> DataFrame:
     Arithmetic note: ``(simhash >> s) & 65535`` on the SIGNED bigint equals
     the unsigned band for s in {0,16,32,48} — the arithmetic-shift
     correction term is a multiple of 2^16 and the mask removes it."""
-    spark = sims.sparkSession
-    bands = spark.range(SIMHASH64_BANDS).withColumnRenamed("id", "k")
+    return _simhash_bands(sims, SIMHASH64_BITS // SIMHASH_BANDS)
+
+
+def _simhash_bands(sims: DataFrame, width: int) -> DataFrame:
+    """(doc_id, simhash, k, band_val): band k is fingerprint bits
+    [k * width, (k + 1) * width)."""
+    bands = sims.sparkSession.range(SIMHASH_BANDS).withColumnRenamed("id", "k")
     return sims.crossJoin(F.broadcast(bands)).select(
         "doc_id",
         "simhash",
         "k",
-        F.expr("(simhash >> (16 * CAST(k AS INT))) & 65535").alias("band_val"),
+        F.expr(f"(simhash >> ({width} * CAST(k AS INT))) & {(1 << width) - 1}").alias(
+            "band_val"
+        ),
     )
 
 
@@ -570,9 +557,9 @@ def simhash_pairs64(
     sims: DataFrame | None = None,
 ) -> DataFrame:
     """Production near-dup pairs: Hamming <= 3 over the 64-bit fingerprint
-    via 4x16-bit band candidate join (pigeonhole: <= 3 differing bits
-    across 4 bands leaves >= 1 band identical, so without a cap the band
-    join is EXACT — same pair set as brute force at shuffle-join cost).
+    (:func:`simhash_values64`) via the shared band join
+    (:func:`_simhash_band_pairs`) with 4x16-bit bands — without a cap
+    EXACT, the same pair set as brute force at shuffle-join cost.
 
     ``bucket_cap`` bounds the per-bucket quadratic term the way the
     reference bounds collision groups (executor/collision_matrix.go:167-222
@@ -593,19 +580,39 @@ def simhash_pairs64(
     instead of running a ``distinct``, so repeated ids yield repeated
     ``(doc_a, doc_b)`` pairs (``duplicate_clusters`` re-distincts its
     edges; direct consumers of the pair list see the repeats)."""
-    if max_hamming >= SIMHASH64_BANDS:
+    return _simhash_band_pairs(
+        docs, text_col, max_hamming, SIMHASH64_BITS, bucket_cap, sims
+    )
+
+
+def _simhash_band_pairs(
+    docs: DataFrame,
+    text_col: str,
+    max_hamming: int,
+    bits: int,
+    bucket_cap: int | None = None,
+    sims: DataFrame | None = None,
+) -> DataFrame:
+    """The SimHash band self-join for both fingerprint widths: ``bits``
+    picks the fingerprint (32 -> :func:`simhash_values`, 64 ->
+    :func:`simhash_values64`) and the band width ``bits / 4``. Pigeonhole:
+    <= 3 differing bits across 4 bands leave >= 1 band identical, so the
+    uncapped join finds every pair with Hamming <= ``max_hamming``."""
+    if max_hamming >= SIMHASH_BANDS:
         raise ValueError(
-            f"max_hamming={max_hamming} voids the {SIMHASH64_BANDS}-band "
+            f"max_hamming={max_hamming} voids the {SIMHASH_BANDS}-band "
             "pigeonhole guarantee (exact only for <= "
-            f"{SIMHASH64_BANDS - 1}); add bands or brute-force"
+            f"{SIMHASH_BANDS - 1}); add bands or brute-force"
         )
     if sims is None:
         # checkpoint, not persist: both join sides and the census reuse the
         # materialized fingerprints, and the blocks free on GC instead of
         # accumulating across calls. A caller-supplied ``sims`` is used
         # as-is — the caller owns its caching.
-        sims = simhash_values64(docs, text_col).localCheckpoint(eager=True)
-    keyed = simhash_band_keys(sims)
+        fingerprint = simhash_values64 if bits == SIMHASH64_BITS else simhash_values
+        sims = fingerprint(docs, text_col).localCheckpoint(eager=True)
+    width = bits // SIMHASH_BANDS
+    keyed = _simhash_bands(sims, width)
     if bucket_cap is not None:
         # Hot-bucket census. The over-cap list is tiny by construction
         # (<= corpus/cap entries), so it broadcasts.
@@ -617,7 +624,7 @@ def simhash_pairs64(
                 "extra_bits",
                 F.least(
                     F.ceil(F.log2(F.col("n_bucket") / F.lit(bucket_cap))),
-                    F.lit(16),
+                    F.lit(width),
                 ).cast("int"),
             )
             .select("k", "band_val", "extra_bits")
@@ -626,7 +633,7 @@ def simhash_pairs64(
             "sub",
             F.when(F.col("extra_bits").isNull(), F.lit(0)).otherwise(
                 F.expr(
-                    "(simhash >> (16 * CAST((k + 1) % 4 AS INT))) "
+                    f"(simhash >> ({width} * CAST((k + 1) % {SIMHASH_BANDS} AS INT))) "
                     "& ((1 << extra_bits) - 1)"
                 )
             ),
@@ -643,45 +650,31 @@ def simhash_pairs64(
     )
     if bucket_cap is None:
         # min-matching-band emission replaces the pair `distinct`: a
-        # Hamming<=3 pair collides in up to all 4 bands and used to be
-        # deduplicated through its own (doc_a, doc_b, hamming) exchange.
-        # Which bands match is fully determined IN-ROW by the xor of the
-        # two fingerprints (band j matches iff its 16-bit chunk is 0), so
-        # emitting the pair only from its LOWEST matching band yields each
-        # pair exactly once — same set, one less corpus-pairs shuffle
-        # (guide §2.4). Only valid uncapped: a re-split bucket's `sub`
-        # bits depend on the census broadcast, so whether a pair matched
-        # in a LOWER band is no longer row-computable — the capped path
-        # keeps the distinct.
+        # Hamming<=3 pair collides in up to all 4 bands. Which bands match
+        # is fully determined IN-ROW by the xor of the two fingerprints
+        # (band j matches iff its chunk is 0), so emitting the pair only
+        # from its LOWEST matching band yields each pair exactly once (for
+        # unique doc ids) — same set, one less corpus-pairs shuffle (guide
+        # §2.4). Only valid uncapped: a re-split bucket's `sub` bits depend
+        # on the census broadcast, so whether a pair matched in a LOWER
+        # band is no longer row-computable — the capped path keeps the
+        # distinct.
         first_band = F.expr(
             "CASE "
             + " ".join(
-                f"WHEN ((a.simhash ^ b.simhash) >> {16 * j}) & 65535 = 0 "
-                f"THEN {j}"
-                for j in range(SIMHASH64_BANDS - 1)
+                f"WHEN ((a.simhash ^ b.simhash) >> {width * j}) "
+                f"& {(1 << width) - 1} = 0 THEN {j}"
+                for j in range(SIMHASH_BANDS - 1)
             )
-            + f" ELSE {SIMHASH64_BANDS - 1} END"
+            + f" ELSE {SIMHASH_BANDS - 1} END"
         )
-        return (
-            joined.filter(F.col("a.k") == first_band)
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.expr("CAST(bit_count(a.simhash ^ b.simhash) AS INT)").alias(
-                    "hamming"
-                ),
-            )
-            .filter(F.col("hamming") <= max_hamming)
-        )
-    return (
-        joined.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.expr("CAST(bit_count(a.simhash ^ b.simhash) AS INT)").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+        joined = joined.filter(F.col("a.k") == first_band)
+    pairs = joined.select(
+        F.col("a.doc_id").alias("doc_a"),
+        F.col("b.doc_id").alias("doc_b"),
+        F.expr("CAST(bit_count(a.simhash ^ b.simhash) AS INT)").alias("hamming"),
+    ).filter(F.col("hamming") <= max_hamming)
+    return pairs if bucket_cap is None else pairs.distinct()
 
 
 def duplicate_clusters(
@@ -937,6 +930,20 @@ def ngram_jaccard_pairs(
     ``n_sh``), so numerator and denominators come out of the ONE pair
     aggregation — no counts table, no join back onto the pairs.
     """
+    return _shingle_overlap(docs, text_col, max_df).filter(
+        F.col("common") * den >= num * (F.col("na") + F.col("nb") - F.col("common"))
+    )
+
+
+def _shingle_overlap(
+    docs: DataFrame, text_col: str, max_df: int | None
+) -> DataFrame:
+    """``(doc_a, doc_b, common, na, nb)`` for every unordered pair
+    doc_a < doc_b sharing >= 1 shingle: the n-gram posting self-join over
+    :func:`_shingle_index`, shared by Jaccard and containment. ``common``
+    is the shared-shingle count, ``na``/``nb`` the docs' shingle counts
+    (read off the index rows). Each candidate is built once, not once per
+    direction."""
     sh = _shingle_index(docs, text_col, max_df)
     a, b = sh.alias("a"), sh.alias("b")
     return (
@@ -947,10 +954,6 @@ def ngram_jaccard_pairs(
             F.min(F.col("a.n_sh")).alias("na"),
             F.min(F.col("b.n_sh")).alias("nb"),
         )
-        .filter(
-            F.col("common") * den >= num * (F.col("na") + F.col("nb") - F.col("common"))
-        )
-        .select("doc_a", "doc_b", "common", "na", "nb")
     )
 
 
@@ -1100,9 +1103,11 @@ def winnow_pairs(
     ``(doc_a, doc_b, shared)``.
 
     Scale shape: the self-join keys on the fingerprint hash — high
-    cardinality (1e9+7 space), so the exchange partitions evenly and AQE's
-    skew split covers any boilerplate fingerprint shared by thousands of
-    documents; per-doc fingerprints are already distinct so ``count(*)``
+    cardinality (1e9+7 space), so the exchange partitions evenly. A
+    boilerplate fingerprint shared by thousands of documents is still a
+    hot bucket: AQE's skew split divides the join input, but the
+    bucket's quadratic pair work stays inside a few tasks (module
+    docstring); per-doc fingerprints are already distinct so ``count(*)``
     per pair IS the shared-fingerprint count. The pair aggregate has
     map-side partial combine. Same postings-join shape as
     :func:`ngram_jaccard_pairs`, at ~2/(w+1) the row count.
@@ -1141,18 +1146,7 @@ def minhash_estimate_pairs(
     shuffle).
     """
     sigs = minhash_signatures(docs, text_col).localCheckpoint(eager=True)
-    bands = minhash_bands(docs, text_col, sigs=sigs)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = minhash_band_pairs(minhash_bands(docs, text_col, sigs=sigs))
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"m{i}").alias(f"_a{i}") for i in range(N_MINHASH)],
@@ -1434,28 +1428,32 @@ def ngram_containment_pairs(
     Both directions are emitted when both hold; n_inner carries the
     denominator so the caller can re-threshold without recomputation.
 
-    ``n_inner`` rides on the index rows (``_shingle_index`` attaches
-    ``n_sh``), so the whole operator is ONE pass over the shared index:
-    self-join, aggregate, threshold — no counts table, no join back
-    onto the candidate pairs.
+    Containment reads the same unordered-pair overlap aggregate as
+    Jaccard (:func:`_shingle_overlap`: self-join on ``a < b``, so each
+    candidate is built once): every pair explodes into its two
+    directions, ``(a, b, common, na)`` and ``(b, a, common, nb)``, and
+    the threshold keeps the ones that hold — no counts table, no join
+    back onto the candidate pairs.
     """
-    sh = _shingle_index(docs, text_col, max_df)
-    a, b = sh.alias("a"), sh.alias("b")
+    both = F.explode(
+        F.array(
+            F.struct(
+                F.col("doc_a").alias("inner_id"),
+                F.col("doc_b").alias("outer_id"),
+                F.col("na").alias("n_inner"),
+            ),
+            F.struct(
+                F.col("doc_b").alias("inner_id"),
+                F.col("doc_a").alias("outer_id"),
+                F.col("nb").alias("n_inner"),
+            ),
+        )
+    )
     return (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("inner_id"), F.col("b.doc_id").alias("outer_id")
-        )
-        .agg(
-            F.count("*").alias("common"),
-            F.min(F.col("a.n_sh")).alias("n_inner"),
-        )
+        _shingle_overlap(docs, text_col, max_df)
+        .select("common", both.alias("d"))
+        .select("d.inner_id", "d.outer_id", "common", "d.n_inner")
         .filter(F.col("common") * den >= num * F.col("n_inner"))
-        .select("inner_id", "outer_id", "common", "n_inner")
     )
 
 

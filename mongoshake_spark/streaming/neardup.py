@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from mongoshake_spark.functions.dedup import (
     incremental_minhash_pairs,
+    minhash_band_pairs,
     minhash_bands,
 )
 from mongoshake_spark.streaming.index_lifecycle import resolve_store
@@ -74,43 +75,25 @@ def streaming_lsh_dedup(
         # between micro-batches transparently redirects both the probe
         # and the append to the compacted generation
         idx = resolve_store(index_dir)
+        # bands materialize ONCE per batch and serve both the pair
+        # probe and the index append — without the shared handle the
+        # signature kernel (the batch's dominant compute) ran twice
+        inc_bands = minhash_bands(batch_df, text_col).localCheckpoint(eager=True)
         # one pass of the incremental operator against the index-so-far;
         # first batch has no index yet -> increment-internal pairs only
         if _index_exists(idx):
-            corpus_bands = spark.read.parquet(idx)
-            # bands materialize ONCE per batch and serve both the pair
-            # probe and the index append — without the shared handle the
-            # signature kernel (the batch's dominant compute) ran twice
-            inc_bands = minhash_bands(batch_df, text_col).localCheckpoint(
-                eager=True
-            )
             # a crash-REPLAYED batch violates the operator's disjoint-id
             # contract (its own bands are already in the index), which
             # would emit (x, x) self-pairs — new pair keys that no batch
             # run produces, breaking the restart-idempotency argument;
             # a doc is never its own near-dup, so drop them here
             pairs = incremental_minhash_pairs(
-                corpus_bands, batch_df, text_col=text_col,
+                spark.read.parquet(idx), batch_df, text_col=text_col,
                 increment_bands=inc_bands,
             ).filter(F.col("doc_a") != F.col("doc_b"))
         else:
-            inc_bands = minhash_bands(batch_df, text_col).localCheckpoint(
-                eager=True
-            )
-            a, b = inc_bands.alias("a"), inc_bands.alias("b")
-            pairs = (
-                a.join(
-                    b,
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.band_key") == F.col("b.band_key"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")),
-                )
-                .select(
-                    F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                )
-                .distinct()
-                .withColumn("origin", F.lit("increment"))
+            pairs = minhash_band_pairs(inc_bands).withColumn(
+                "origin", F.lit("increment")
             )
         pairs.withColumn("batch_id", F.lit(batch_id).cast("long")).write.mode(
             "append"

@@ -69,6 +69,33 @@ def test_simhash64_pairs_match_bruteforce(spark, sf_dir):
     assert via_bands == brute
 
 
+def test_simhash32_pairs_match_bruteforce_without_repeats(spark, sf_dir):
+    """The 32-bit path shares the 64-bit band join and its lowest-band
+    emission: the pair set equals the all-pairs xor/bit_count join, and
+    no (doc_a, doc_b) comes out twice although a close pair matches in
+    several 8-bit bands."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    rows = [
+        (r["doc_a"], r["doc_b"], r["hamming"])
+        for r in dedup.simhash_pairs(docs).collect()
+    ]
+    assert len({(a, b) for a, b, _ in rows}) == len(rows)
+    sims = dedup.simhash_values(docs)
+    x, y = sims.alias("x"), sims.alias("y")
+    brute = {
+        (r["doc_a"], r["doc_b"], r["hamming"])
+        for r in x.join(y, F.col("x.doc_id") < F.col("y.doc_id"))
+        .select(
+            F.col("x.doc_id").alias("doc_a"),
+            F.col("y.doc_id").alias("doc_b"),
+            F.expr("CAST(bit_count(x.simhash ^ y.simhash) AS INT)").alias("hamming"),
+        )
+        .filter(F.col("hamming") <= 3)
+        .collect()
+    }
+    assert brute and set(rows) == brute
+
+
 def test_simhash64_bucket_cap_resplit(spark):
     """A hot bucket (many docs sharing one band value) must be re-split by
     extra fingerprint bits, and identical-fingerprint pairs must survive

@@ -339,6 +339,16 @@ def test_semantic_neardup_assignment_broadcasts_centroids(spark, sf_dir):
     assert "Window" not in plan
 
 
+def test_simhash32_uncapped_plan_has_no_pair_distinct(spark, sf_dir):
+    """The uncapped 32-bit SimHash join emits each pair from its lowest
+    matching band, so no aggregate (the old pair ``distinct``) may
+    follow the band self-join."""
+    from mongoshake_spark.functions import dedup
+
+    plan = _plan(dedup.simhash_pairs(load_table(spark, sf_dir, "documents")))
+    assert "HashAggregate" not in plan
+
+
 def test_minhash_estimate_no_corpus_broadcast_hint(spark, sf_dir):
     """The signature matrix and band table are corpus-sized — none of the
     three joins (band self-join, two signature lookups) may carry a

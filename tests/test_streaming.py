@@ -1175,6 +1175,37 @@ def test_streaming_neardup_index_persists_across_runs(spark, tmp_path):
     assert all(p[1] == 3 for p in pairs2)  # only the new doc pairs
 
 
+def test_streaming_neardup_first_batch_emits_increment_pairs(spark, tmp_path):
+    """The first micro-batch (no band index yet) pairs the batch against
+    itself: a near-dup pair inside the first file comes out once, with
+    origin='increment', equal to the batch minhash_pairs over the same
+    docs, and no doc pairs with itself."""
+    import os
+
+    from mongoshake_spark.functions.dedup import minhash_pairs
+    from mongoshake_spark.streaming.neardup import run_streaming_lsh_dedup
+
+    rows = [
+        (1, "the quick brown fox jumps over the lazy dog tonight"),
+        (2, "completely different words about spark and shuffles here"),
+        (3, "the quick brown fox jumps over the lazy dog today"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    feed = str(tmp_path / "feed")
+    docs.coalesce(1).write.parquet(feed)
+    work = str(tmp_path / "work")
+    pairs = {tuple(r) for r in run_streaming_lsh_dedup(
+        spark, feed, "doc_id bigint, text string", work
+    ).collect()}
+    assert pairs == {(1, 3, "increment")}
+    assert {(a, b) for a, b, _ in pairs} == {
+        tuple(r) for r in minhash_pairs(docs).collect()
+    }
+    written = spark.read.parquet(os.path.join(work, "pairs"))
+    assert written.count() == 1  # no repeat across the pair's shared bands
+    assert written.filter("doc_a = doc_b").count() == 0
+
+
 def test_receiver_max_wall_flushes_pending(spark, tmp_path):
     """The receiver's wall-clock bound must exit THROUGH a flush: logs
     received but not yet batch-applied when max_wall strikes land in the
