@@ -301,6 +301,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cores": spark.sparkContext.defaultParallelism,
         "pool": POOL,
         "pooled_run_totals": [t for t, _ in pooled],
         "serial_total": serial_total,
@@ -336,10 +337,13 @@ def main() -> None:
     # like-for-like number against the serial DuckDB baseline), dropping
     # the smallest spans first if the line would still overflow. Dropped
     # entries are summed into queries_omitted_sec so the line stays
-    # self-consistent; BENCH_FULL.json always has everything.
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_FULL.json"), "w") as f:
-        json.dump(full, f, indent=1)
+    # self-consistent; BENCH_FULL.json always has everything. The same
+    # payload also lands in BENCH_FULL_c{cores}.json, so runs at
+    # different core counts keep their per-query spans side by side.
+    here = os.path.dirname(os.path.abspath(__file__))
+    for name in ("BENCH_FULL.json", f"BENCH_FULL_c{full['cores']}.json"):
+        with open(os.path.join(here, name), "w") as f:
+            json.dump(full, f, indent=1)
     line = dict(full)
     del line["serial_queries"]
     del line["duckdb_queries"]  # per-query duck spans live in BENCH_FULL.json

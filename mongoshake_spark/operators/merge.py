@@ -34,16 +34,13 @@ def last_writer_wins(
     """Materialize final state from a CDC stream: per key, take the value
     at the max ordinal among i/u/d ops; drop keys whose last op is 'd'.
 
-    ``max_by`` aggregation, not a window: partial aggregation runs map-side
-    so the shuffle carries one candidate per (partition, key) instead of
-    every version — a window (row_number) would shuffle every row.
+    ``merge_upsert``'s ``max_by`` fold from an empty target, not a window:
+    partial aggregation runs map-side so the shuffle carries one candidate
+    per (partition, key) instead of every version — a window
+    (row_number) would shuffle every row.
     """
-    crud = oplog.filter(F.col(op_col).isin("i", "u", "d"))
-    agg = crud.groupBy(key_col).agg(
-        F.expr(f"max_by({val_col}, {ord_col})").alias(val_col),
-        F.expr(f"max_by({op_col}, {ord_col})").alias("_last_op"),
-    )
-    return agg.filter(F.col("_last_op") != "d").drop("_last_op")
+    state = merge_upsert(None, oplog, key_col, val_col, ord_col, op_col)
+    return state.filter(F.col(op_col) != "d").select(key_col, val_col)
 
 
 def merge_upsert(
@@ -53,9 +50,10 @@ def merge_upsert(
     val_col: str = "value",
     ord_col: str = "id",
     op_col: str = "op",
+    partition_by: str | None = None,
 ) -> DataFrame:
     """One MERGE step: fold a batch of CDC rows into the current target
-    state, returning the new state ``(key, value, ordinal, op)``.
+    state, returning the new state ``(key, value, op, ordinal)``.
 
     Semantics match W2 (insert), W3 (update incl. upsert), W4 (delete),
     W5 (dup-key -> update): last writer by ordinal wins. Deletes are kept
@@ -67,25 +65,33 @@ def merge_upsert(
     tombstones; ``compact`` physically removes them once the source
     watermark passes their ordinal (the apply kernel does this at flush).
 
+    The same associativity makes ONE fold over ``target ∪ batch`` equal
+    to folding the batch first, so the step costs one aggregate.
     Idempotent — replaying a batch yields the same state, which is the
     at-least-once safety argument the reference relies on (README.md:57).
     ``key_col`` is one column or a sequence of them (a composite key such
     as ``(ns, user_id)``).
+
+    ``partition_by`` (one of the key columns) hash-partitions the union
+    on that column into the session's default parallelism before the
+    fold (``operators/parallel.fan_out_scan``'s width rule): the fold
+    then needs no exchange of its own, and all rows of one value of the
+    column meet in one task, so a ``partitionBy`` write of the result
+    emits one file per value.
     """
     keys = [key_col] if isinstance(key_col, str) else list(key_col)
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy(*keys).agg(
-            F.expr(f"max_by({val_col}, {ord_col})").alias(val_col),
-            F.expr(f"max_by({op_col}, {ord_col})").alias(op_col),
-            F.max(ord_col).alias(ord_col),
-        )
-
-    batch_state = fold(updates.filter(F.col(op_col).isin("i", "u", "d")))
-    if target is None:
-        return batch_state
-    cols = [*keys, val_col, op_col, ord_col]
-    return fold(target.select(*cols).unionByName(batch_state.select(*cols)))
+    rows = updates.filter(F.col(op_col).isin("i", "u", "d"))
+    if target is not None:
+        cols = [*keys, val_col, op_col, ord_col]
+        rows = target.select(*cols).unionByName(rows.select(*cols))
+    if partition_by is not None:
+        width = rows.sparkSession.sparkContext.defaultParallelism
+        rows = rows.repartition(width, partition_by)
+    return rows.groupBy(*keys).agg(
+        F.expr(f"max_by({val_col}, {ord_col})").alias(val_col),
+        F.expr(f"max_by({op_col}, {ord_col})").alias(op_col),
+        F.max(ord_col).alias(ord_col),
+    )
 
 
 def compact(

@@ -42,28 +42,39 @@ same MERGE. Each micro-batch:
 1. runs ONE census, a single aggregate returning the touched buckets,
    the max ordinal, the W7 bad-row count and the DDL rows,
 2. reads ONLY the touched buckets' files back, with the schema of their
-   footers (untouched buckets are never opened; Spark infers nothing),
-3. MERGEs the batch into that slice and drops the tombstones the
-   watermark has passed,
-4. ``localCheckpoint``s the merged slice once (O(slice) — this is also
-   what lets Spark overwrite the same files the slice was read from), and
-5. rewrites ONLY the touched buckets via dynamic partition overwrite (the
-   committer stages files and renames on commit, so a crash mid-flush
-   leaves each bucket either old or new, never truncated — and either
-   version re-MERGEs to the same state on replay).
+   footers (untouched buckets are never opened; Spark infers nothing,
+   and the driver lists the files: session.get_spark raises Spark's
+   parallel-listing threshold above the slice),
+3. MERGEs the batch into that slice in ONE fold: the slice and the
+   batch's CRUD rows are unioned, hash-partitioned on ``_bucket`` across
+   the task slots and folded by ``operators/merge.merge_upsert``; the
+   tombstones the watermark has passed are dropped,
+4. writes the result with ``partitionBy("_bucket")`` into a staging dir
+   under the target, one file per touched bucket, and
+5. swaps each touched ``_bucket=k`` dir with its staged copy on the
+   driver: the live dir is first moved aside, then the staged one is
+   renamed in (a bucket whose rows all compacted away just loses its
+   dir). A crash between any two renames leaves each bucket live or set
+   aside, never lost: on open and before each flush, a set-aside bucket
+   whose live dir is missing is restored and the staging area is
+   cleared. The replayed batch then re-MERGEs over old and new buckets
+   alike to the same state, since last-writer-wins by ordinal holds per
+   bucket.
 
 Per-batch I/O — read AND write — therefore scales with the batch's key
 spread, not the state size; the reference's apply layer is incremental for
 the same reason (executor/db_writer_bulk.go writes only the batch's
 documents). The slice is re-read from disk every batch, so the plan never
-deepens across batches. ``n_buckets`` is persisted in a ``_layout.json``
-marker inside the state dir; on open, a legacy flat ``*.parquet`` layout
-or a bucket-count mismatch triggers a ONE-TIME re-bucketing rewrite
-(staged into a sibling dir and swapped in, so the old state survives a
-crash mid-migration). A state dir whose subdirectories hold their own
-``_layout.json`` (the retired one-kernel-per-namespace layout) is refused
-at open. On a real cluster the state table is Delta and the
-fold is a single ``MERGE INTO`` (``_apply_delta``).
+deepens across batches; the write lands beside the files it replaces,
+not on them, so it needs no checkpoint. ``n_buckets`` is persisted in a
+``_layout.json`` marker inside the state dir; on open, a legacy flat
+``*.parquet`` layout or a bucket-count mismatch triggers a ONE-TIME
+re-bucketing rewrite (staged into a sibling dir and swapped in, so the
+old state survives a crash mid-migration). A state dir whose
+subdirectories hold their own ``_layout.json`` (the retired
+one-kernel-per-namespace layout) is refused at open. On a real cluster
+the state table is Delta and the fold is a single ``MERGE INTO``
+(``_apply_delta``).
 """
 
 from __future__ import annotations
@@ -83,6 +94,12 @@ from mongoshake_spark.operators import merge
 
 TARGET_SCHEMA = "user_id bigint, value double, id bigint"
 
+#: a flush's staged buckets and the live buckets it set aside, both under
+#: the state dir; the leading underscore (and no "=") keeps them out of
+#: Spark's file index, like _SUCCESS
+STAGING_DIR = "_staging"
+ASIDE_DIR = "_aside"
+
 
 @dataclass
 class ApplyKernel:
@@ -98,7 +115,7 @@ class ApplyKernel:
     ord: str = "id"
     n_buckets: int = 64
     # State-plane format. "parquet" (default) is the self-contained local
-    # form: bucket-pruned slice reads + dynamic partition overwrite.
+    # form: bucket-pruned slice reads + a staged per-bucket swap.
     # "delta" is the 100 TB production form (DEPLOYMENT.md): the same
     # per-batch fold lands as a transactional Delta MERGE INTO keyed on
     # (_bucket, key) — partition-pruned by the bucket equi-term, ACID
@@ -229,20 +246,22 @@ class ApplyKernel:
         """Open-time layout guard (once per kernel): a legacy flat
         ``*.parquet`` layout, or a bucketed layout whose ``_layout.json``
         n_buckets disagrees with this kernel's, is re-bucketed ONCE into
-        the configured layout. Without this, the first dynamic-partition
+        the configured layout. Without this, the first bucketed
         flush into a flat dir would leave the flat files beside the new
         ``_bucket=`` dirs (conflicting structures / double-counted rows),
         and resuming with a different n_buckets would scatter keys across
         two generations of buckets — silent duplicates.
 
         The rewrite stages into a sibling dir and swaps via rename, so a
-        crash mid-migration leaves the original state intact.
+        crash mid-migration leaves the original state intact. A flush cut
+        mid-swap is recovered first (``_recover_swap``).
         """
         if self._layout_checked:
             return
         self._layout_checked = True
         if not os.path.isdir(self.target_dir):
             return
+        self._recover_swap()
         entries = os.listdir(self.target_dir)
         doc = self._read_marker()
         marker = doc.get("n_buckets")
@@ -302,14 +321,14 @@ class ApplyKernel:
         full = parts[0]
         for p in parts[1:]:
             full = full.unionByName(p)
-        staged = full.localCheckpoint(eager=True)
         tmp = self.target_dir.rstrip("/") + ".__rebucket__"
         old = self.target_dir.rstrip("/") + ".__old__"
         for leftover in (tmp, old):  # debris from a crashed prior migration
             if os.path.isdir(leftover):
                 shutil.rmtree(leftover)
         (
-            staged.withColumn("_bucket", self._bucket_expr())
+            full.withColumn("_bucket", self._bucket_expr())
+            .repartition(self.spark.sparkContext.defaultParallelism, "_bucket")
             .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(tmp)
@@ -348,30 +367,58 @@ class ApplyKernel:
 
     def _apply_parquet(self, crud: DataFrame, touched: list[int]) -> None:
         """The batch's one MERGE on the parquet plane (steps 2-5 of the
-        module docstring). The slice read covers ONLY the touched
-        buckets' files, and the dynamic partition overwrite rewrites only
-        those buckets, so state I/O per batch is O(touched buckets), not
-        O(state). The ``localCheckpoint`` severs the merged slice's
-        dependency on the very files the overwrite replaces."""
+        module docstring): one ``_bucket`` shuffle, one write. The slice
+        read covers ONLY the touched buckets' files and the swap replaces
+        only those buckets, so state I/O per batch is O(touched buckets),
+        not O(state)."""
+        self._recover_swap()
         state, footers = self._read_slice(touched)
         self.last_state_files_read = len(footers)
         self.last_state_rows_read = sum(m.num_rows for m in footers)
-        out = merge.merge_upsert(state, crud, self._keys, self.val, self.ord)
+        bucket = self._bucket_expr()
+        out = merge.merge_upsert(
+            None if state is None else state.withColumn("_bucket", bucket),
+            crud.withColumn("_bucket", bucket),
+            (*self._keys, "_bucket"), self.val, self.ord,
+            partition_by="_bucket",
+        )
         if self._watermark is not None:
             # lazy tombstone compaction: this batch rewrites the touched
             # buckets anyway, so dead tombstones in them are dropped for
             # free (see operators/merge.compact for the safety argument)
             out = merge.compact(out, self._watermark, ord_col=self.ord)
-        (
-            out.localCheckpoint(eager=True)
-            .withColumn("_bucket", self._bucket_expr())
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bucket")
-            .parquet(self.target_dir)
-        )
+        staging = os.path.join(self.target_dir, STAGING_DIR)
+        aside = os.path.join(self.target_dir, ASIDE_DIR)
+        out.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
+        # the live dir moves aside before its staged copy comes in, so no
+        # crash point loses a bucket (_recover_swap puts it back)
+        os.makedirs(aside)
+        for name in (f"_bucket={b}" for b in touched):
+            live = os.path.join(self.target_dir, name)
+            if os.path.isdir(live):
+                os.rename(live, os.path.join(aside, name))
+            # no staged copy: every merged row of the bucket compacted away
+            if os.path.isdir(os.path.join(staging, name)):
+                os.rename(os.path.join(staging, name), live)
+        shutil.rmtree(aside)
+        shutil.rmtree(staging)
         if not os.path.isfile(self._marker_path()):
             self._write_marker()
+
+    def _recover_swap(self) -> None:
+        """Undo a flush cut between its swaps: restore every set-aside
+        bucket whose live dir is missing, then drop the set-aside and
+        staging areas (a live dir beside its set-aside copy was swapped
+        in completely)."""
+        aside = os.path.join(self.target_dir, ASIDE_DIR)
+        if os.path.isdir(aside):
+            for name in os.listdir(aside):
+                live = os.path.join(self.target_dir, name)
+                if not os.path.exists(live):
+                    os.rename(os.path.join(aside, name), live)
+            shutil.rmtree(aside)
+        staging = os.path.join(self.target_dir, STAGING_DIR)
+        shutil.rmtree(staging, ignore_errors=True)
 
     def _apply_delta(self, crud: DataFrame, touched: list[int]) -> None:
         """The production MERGE INTO (executor/db_writer_bulk.go's ladder

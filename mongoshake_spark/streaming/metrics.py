@@ -19,6 +19,17 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+#: the micro-batch phases (``StreamingQueryProgress.durationMs`` keys,
+#: in ms) each /progress entry reports: where a batch's time went
+PHASES = (
+    "latestOffset",
+    "queryPlanning",
+    "addBatch",
+    "walCommit",
+    "commitOffsets",
+    "triggerExecution",
+)
+
 
 @dataclass
 class ReplMetrics:
@@ -67,11 +78,14 @@ class MetricsListener(StreamingQueryListener):
         self.metrics.batches += 1
         self.metrics.rows_in += p.numInputRows
         self.metrics.last_rows_per_sec = p.processedRowsPerSecond or 0.0
-        self.metrics.last_batch_ms = (p.durationMs or {}).get("triggerExecution", 0)
+        phases = p.durationMs or {}
+        self.metrics.last_batch_ms = phases.get("triggerExecution", 0)
         with self.metrics.lock:
-            self.metrics.progress.append(
-                {"batchId": p.batchId, "numInputRows": p.numInputRows}
-            )
+            self.metrics.progress.append({
+                "batchId": p.batchId,
+                "numInputRows": p.numInputRows,
+                "durationMs": {k: phases[k] for k in PHASES if k in phases},
+            })
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         pass
@@ -97,7 +111,8 @@ class MetricsServer:
     - ``/worker``   — per-recent-batch rows (the worker-queue analog: on
       Spark the "workers" are executor tasks the scheduler owns, so the
       per-batch feed IS the per-worker view)
-    - ``/progress`` — the recent-batch window verbatim
+    - ``/progress`` — the recent-batch window verbatim, each entry with
+      its batch's phase durations (``PHASES``)
 
     Daemon-threaded and bound to ``127.0.0.1`` (monitoring plane, not a
     public service); ``port=0`` lets the OS pick — read ``.port``.

@@ -99,6 +99,13 @@ def test_metrics_listener_and_journal(spark, sf_dir, tmp_path):
             assert worker["batches"] == listener.metrics.batches
             progress = fetch("/progress")
             assert sum(p["numInputRows"] for p in progress) == total
+            # per-phase durations: the foreachBatch apply is one phase
+            # of its trigger
+            drained = [p for p in progress if p["numInputRows"] > 0]
+            assert drained
+            for p in drained:
+                phases = p["durationMs"]
+                assert phases["addBatch"] <= phases["triggerExecution"], p
             try:
                 fetch("/nope")
                 raise AssertionError("unknown route must 404")

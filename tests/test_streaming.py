@@ -247,6 +247,153 @@ def test_batch_job_count_independent_of_namespace_count(spark, tmp_path):
     assert sixteen_ns == one_ns == single_dl == single
 
 
+def test_batch_over_wide_state_runs_five_jobs_one_file_per_bucket(
+    spark, tmp_path
+):
+    """A micro-batch over existing state costs at most five Spark jobs
+    (the batch's cache, the census's two, the ``_bucket`` shuffle and the
+    write), also when its slice spans more bucket files than Spark's
+    default parallel-listing threshold (32). After each flush every
+    bucket dir holds exactly one parquet file, whatever the write
+    width."""
+    import datetime
+    import os
+
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def batch(base):
+        return spark.createDataFrame(
+            [
+                (base + i, t0 + datetime.timedelta(seconds=base + i), i % 500,
+                 "iud"[i % 3], "db0.c1", float(i), "{}")
+                for i in range(1000)
+            ],
+            _MULTI_SCHEMA,
+        )
+
+    target = str(tmp_path / "t")
+    kernel = ApplyKernel(spark, target)
+    kernel.process_batch(batch(0), 0)
+    sc = spark.sparkContext
+    group = "apply-jobs-wide-slice"
+    sc.setJobGroup(group, group)
+    try:
+        kernel.process_batch(batch(1000), 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert kernel.last_state_files_read > 32
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+
+    buckets = [d for d in os.listdir(target) if d.startswith("_bucket=")]
+    assert len(buckets) == kernel.n_buckets
+    for d in buckets:
+        files = os.listdir(os.path.join(target, d))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, (d, files)
+    # key k's last op is the second batch's row 500 + k
+    got = {r["user_id"]: r["value"] for r in kernel.state_view().collect()}
+    assert got == {
+        k: float(500 + k) for k in range(500) if (500 + k) % 3 != 2
+    }
+
+
+def test_crash_between_bucket_swaps_replays_to_same_state(
+    spark, tmp_path, monkeypatch
+):
+    """A flush cut between its per-bucket swaps loses no bucket. The
+    swap fails after 0, 1 and half of the touched buckets, each time
+    just after the next live bucket dir was moved aside; a fresh kernel
+    on the same dir restores it, and the replayed batch converges to the
+    state of an uncrashed run with no staging or set-aside dir left. The
+    batch updates the even keys of the other buckets and re-delivers the
+    committed deletes of one bucket, whose merged rows all compact away:
+    that bucket's dir goes and does not come back."""
+    import datetime
+    import os
+    import shutil
+
+    from mongoshake_spark.streaming.apply import ASIDE_DIR, STAGING_DIR
+
+    t0 = datetime.datetime(2024, 1, 1)
+    n_buckets = 8
+
+    def mk(rows):
+        return spark.createDataFrame(
+            [
+                (i, t0 + datetime.timedelta(seconds=i), k, op, "db0.c1",
+                 float(i), "{}")
+                for i, k, op in rows
+            ],
+            _MULTI_SCHEMA,
+        )
+
+    def snapshot(target):
+        return sorted(tuple(r) for r in spark.read.parquet(target).collect())
+
+    base = str(tmp_path / "base")
+    kernel = ApplyKernel(spark, base, n_buckets=n_buckets)
+    keys = spark.range(40).withColumnRenamed("id", "user_id")
+    bucket_of = {
+        r["user_id"]: r["b"]
+        for r in keys.select(
+            "user_id", kernel._bucket_expr().alias("b")
+        ).collect()
+    }
+    doomed = bucket_of[0]
+    deletes = [
+        (100 + j, k, "d") for j, k in enumerate(sorted(bucket_of))
+        if bucket_of[k] == doomed
+    ]
+    kernel.process_batch(mk([(1 + k, k, "i") for k in bucket_of]), 0)
+    # the tombstones outrank the watermark of their own flush (40) and
+    # stay; the watermark then passes them
+    kernel.process_batch(mk(deletes), 1)
+    # odd keys stay untouched, so a lost bucket shows in the state
+    replay_rows = deletes + [
+        (200 + k, k, "u") for k in bucket_of
+        if bucket_of[k] != doomed and k % 2 == 0
+    ]
+    replay = mk(replay_rows)
+    touched = len({bucket_of[k] for _, k, _ in replay_rows})
+    assert touched > 2
+
+    ref = str(tmp_path / "ref")
+    shutil.copytree(base, ref)
+    ApplyKernel(spark, ref, n_buckets=n_buckets).process_batch(replay, 2)
+    want = snapshot(ref)
+    assert f"_bucket={doomed}" not in os.listdir(ref)
+    assert {r[-1] for r in want} == set(bucket_of.values()) - {doomed}
+
+    real_rename = os.rename
+    for crash_after in (0, 1, touched // 2):
+        target = str(tmp_path / f"crash{crash_after}")
+        shutil.copytree(base, target)
+        swapped = []
+
+        def rename(src, dst, crash_after=crash_after, swapped=swapped):
+            if os.path.basename(os.path.dirname(src)) == STAGING_DIR:
+                if len(swapped) == crash_after:
+                    raise OSError("injected crash between bucket swaps")
+                swapped.append(src)
+            real_rename(src, dst)
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", rename)
+            with pytest.raises(OSError, match="injected"):
+                ApplyKernel(spark, target, n_buckets=n_buckets).process_batch(
+                    replay, 2
+                )
+        # the cut left a live bucket dir set aside and missing
+        aside = os.listdir(os.path.join(target, ASIDE_DIR))
+        assert set(aside) - set(os.listdir(target))
+
+        ApplyKernel(spark, target, n_buckets=n_buckets).process_batch(replay, 2)
+        assert snapshot(target) == want, crash_after
+        entries = set(os.listdir(target))
+        assert not {STAGING_DIR, ASIDE_DIR} & entries
+        assert f"_bucket={doomed}" not in entries
+
+
 W7_BAD_ROWS = {
     # one row the single-table kernel cannot apply: (id, user_id, op, ns)
     "unknown_op": (100, 3, "x", "db0.c1"),
