@@ -9,38 +9,48 @@ Schmid, "Product Quantization for Nearest Neighbor Search", TPAMI 2011).
 No reference analog (MongoShake has no vector plane); standard
 training-data-pipeline infrastructure.
 
-Pieces (all composable DataFrame ops, no driver-side corpus loops):
+Pieces. The PQ family runs on the numpy kernels of
+``functions/vec`` behind ``mapInArrow``, over a frozen driver-side
+:class:`PQModel` (an (m, k, d) codebook plus a mask of the codewords
+that exist):
 
 - :func:`pq_train` — per-subspace codebooks via the same deterministic
   Lloyd arithmetic as ``clustering.kmeans_fit`` (smallest-id init,
-  rounded centroids/distances), all m subspaces trained JOINTLY in one
-  (sub, cluster)-keyed chain — m·k codebook rows total;
-- :func:`pq_encode` — nearest-codeword assignment per subspace,
-  computed IN-ROW against the BROADCAST collected codebook (array_min
-  over (d2, cluster) structs — the same tie-break as
-  ``clustering._assign``): map-only over the corpus, zero exchanges;
+  rounded centroids/distances), all m subspaces trained jointly. The
+  seed is one ``orderBy(id).limit(k)`` collect; each update is one
+  map-only pass that emits per-partition ``(sum, count)`` for every
+  (sub, cluster, pos), combined on the driver. Returns the m·k-row
+  ``(sub, cluster, centroid)`` frame as a local relation;
+- :func:`pq_encode` — nearest codeword per subspace, one map-only
+  ``mapInArrow`` pass over the corpus (ties to the smaller cluster id,
+  as ``clustering._assign`` and the oracle break them);
 - :func:`pq_reconstruct` — codes back to the quantized vector (codebook
   lookups, order-preserving flatten);
 - :func:`pq_topk` — asymmetric distance computation (ADC): the query
-  keeps its EXACT subvectors; per (query, sub, codeword) inner products
-  form Q broadcast lookup MAPS keyed ``sub·stride + cluster``; each
-  corpus code row then scores ALL queries in-row by m map lookups per
-  query — no corpus exchange before the (WindowGroupLimit-pruned)
-  top-k window. Approximate cosine =
+  keeps its EXACT subvectors. The query vectors are collected once, the
+  Q·m·k lookup table and the codeword norms are built on the driver,
+  and one ``mapInArrow`` pass encodes each corpus row, scores every
+  query and keeps a per-partition top-``max(k, rerank)`` per query; the
+  ranking window finishes. Approximate cosine =
   ADC-dot / (‖q‖ · ‖reconstruction‖), with ‖reconstruction‖² =
   Σ_sub ‖codeword‖² (the subspaces are an orthogonal decomposition).
 
-Float determinism: every cross-engine-checked sum folds in a FIXED
-order (per-sub dots left-to-right inside a subspace via the shared
-``dot_expr`` fold; across subspaces via an array_sort-by-sub fold) so
-the DuckDB oracle reproduces bit-identical doubles — an unordered
-SQL ``sum()`` over doubles would be association-order-dependent.
+Float determinism: every cross-engine-checked double is computed by a
+kernel that replays the SQL fold it replaced — dots and squared
+distances left to right inside a subspace, ADC sums in subspace order,
+Spark's HALF_UP ``round(x, 6)`` — so the results are bit-identical to
+the higher-order-function plans and the DuckDB oracle reproduces them.
+The one reduction across rows, the Lloyd mean, sums EXACTLY
+(``vec.exact_sum_parts``), so a codebook does not depend on how the
+corpus is partitioned.
 
-Scale shape: codebooks and ADC tables are k·m- and Q·m·k-entry
-broadcasts; the corpus is touched by one map-only pass per train
-iteration (whose only exchange carries m·k·d partial means per
-partition), one map-only encode pass, and one map-only scoring pass
-whose single exchange is the WindowGroupLimit-pruned top-k window.
+Scale shape: the frozen model (``m·k·d`` entries) and the query LUT
+(``Q·m·k`` entries) are driver-resident and shipped in each task's
+closure, each under a declared ceiling (``_PQ_MODEL_MAX_ENTRIES``,
+``_PQ_LUT_MAX_ENTRIES``). The corpus is touched by one map-only pass per
+train iteration (its output is m·k·d rows per partition), one map-only
+encode pass, and one map-only scoring pass whose single exchange is the
+top-k window over at most ``Q·max(k, rerank)`` rows per partition.
 Nothing is all-pairs; nothing collects the corpus; the corpus itself
 never hash-shuffles.
 """
@@ -48,10 +58,21 @@ never hash-shuffles.
 from __future__ import annotations
 
 import math
+from functools import partial
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
+from mongoshake_spark.functions import vec
 from mongoshake_spark.functions.similarity import (
     assign_nearest_centroid,
     dot_expr,
@@ -59,67 +80,93 @@ from mongoshake_spark.functions.similarity import (
 )
 
 
-#: key stride for the flattened (sub, cluster) lookup maps: key =
-#: sub * _LUT_STRIDE + cluster. Codeword ids are 0..k_code-1 (init
-#: numbers them 0..k-1 and updates only re-emit existing ids), so any
-#: stride > k_code is collision-free; 1 << 20 leaves the bound loud.
+#: key stride for the flattened (sub, cluster) lookup maps of
+#: :func:`ivfadc_score`: key = sub * _LUT_STRIDE + cluster. Codeword ids
+#: are 0..k_code-1 (init numbers them 0..k-1 and updates only re-emit
+#: existing ids), so any stride > k_code is collision-free; 1 << 20
+#: leaves the bound loud.
 _LUT_STRIDE = 1 << 20
 
+#: ceiling on a frozen :class:`PQModel` (m·k·d codebook doubles, 32 MiB):
+#: the model is collected to the driver and pickled into every encode
+#: and scoring task, so an unbounded k or dim fails here, loudly
+_PQ_MODEL_MAX_ENTRIES = 1 << 22
+#: ceiling on :func:`pq_topk`'s query lookup table (Q·m·k doubles), which
+#: rides in every scoring task the same way
+_PQ_LUT_MAX_ENTRIES = 1 << 22
 
-def _codebook_arr(codebooks: DataFrame) -> DataFrame:
-    """The m·k-row codebook collected into ONE array-of-structs row —
-    the broadcast side of every in-row nearest-codeword fold."""
-    return codebooks.agg(
-        F.collect_list(F.struct("sub", "cluster", "centroid")).alias("_cb")
-    )
 
-
-def _best_code(vec_col: str, s: int, d: int):
-    """struct<d2, cluster> of the nearest codeword of subspace ``s`` for
-    the current row's ``vec_col`` slice, computed in-row against the
-    collected ``_cb`` column. The d2 arithmetic (zip_with squared-diff
-    fold, round 6) and the (d2, cluster) lexicographic min are exactly
-    the old grouped form's, so the winning codeword is bit-identical —
-    only the plan shape changes (no per-(vector, sub) shuffle)."""
-    sv = F.slice(F.col(vec_col), s * d + 1, d)
-
-    def one(c):
-        d2 = F.aggregate(
-            F.zip_with(
-                sv,
-                c["centroid"],
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.struct(
-            F.round(d2, 6).alias("d2"), c["cluster"].alias("cluster")
+def _check_ceiling(what: str, entries: int, cap: int) -> None:
+    if entries > cap:
+        raise ValueError(
+            f"{what}: {entries} entries exceed the driver-residency "
+            f"ceiling {cap} — the table is collected to the driver and "
+            "shipped to every task by design; lower m, k or the query count"
         )
 
-    return F.array_min(
-        F.transform(
-            F.filter(F.col("_cb"), lambda c: c["sub"] == F.lit(s)), one
+
+class PQModel:
+    """A frozen PQ quantizer: ``codebook`` (m, k, d) doubles and ``mask``
+    (m, k), True where codeword (sub, cluster) exists (a codeword that
+    lost every member in a Lloyd update drops out, like the oracle's
+    ``c1r`` rows). Built on the driver, bounded by
+    ``_PQ_MODEL_MAX_ENTRIES``, shipped to tasks inside their closures."""
+
+    def __init__(self, codebook, mask):
+        self.codebook = np.asarray(codebook, dtype=np.float64)
+        self.mask = np.asarray(mask, dtype=bool)
+        self.m, self.k, self.d = self.codebook.shape
+        _check_ceiling("PQModel", self.codebook.size, _PQ_MODEL_MAX_ENTRIES)
+
+    @classmethod
+    def from_frame(cls, codebooks: DataFrame) -> "PQModel":
+        """The model of a ``(sub, cluster, centroid)`` codebook frame — one
+        collect (none for the local relation :func:`pq_train` returns)."""
+        rows = codebooks.select("sub", "cluster", "centroid").collect()
+        if not rows:
+            raise ValueError("PQModel: empty codebook table")
+        m = max(int(r["sub"]) for r in rows) + 1
+        k = max(int(r["cluster"]) for r in rows) + 1
+        d = len(rows[0]["centroid"])
+        if any(len(r["centroid"]) != d for r in rows):
+            raise ValueError("PQModel: codewords of different lengths")
+        _check_ceiling("PQModel", m * k * d, _PQ_MODEL_MAX_ENTRIES)
+        cb = np.zeros((m, k, d))
+        mask = np.zeros((m, k), dtype=bool)
+        for r in rows:
+            cb[r["sub"], r["cluster"]] = r["centroid"]
+            mask[r["sub"], r["cluster"]] = True
+        return cls(cb, mask)
+
+    def to_frame(self, spark) -> DataFrame:
+        """``(sub, cluster, centroid)``, one row per existing codeword, as
+        a local relation."""
+        return spark.createDataFrame(
+            [
+                (int(s), int(c), self.codebook[s, c].tolist())
+                for s, c in zip(*np.nonzero(self.mask))
+            ],
+            "sub int, cluster int, centroid array<double>",
         )
+
+
+def _as_model(codebooks) -> PQModel:
+    return (
+        codebooks
+        if isinstance(codebooks, PQModel)
+        else PQModel.from_frame(codebooks)
     )
 
 
-def _sub_rows(
-    vecs: DataFrame, m: int, d: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """(id, sub, sv): the corpus exploded into its m subvectors in-row."""
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("sub"),
-                F.slice(F.col(vec_col), s * d + 1, d).alias("sv"),
-            )
-            for s in range(m)
-        ]
-    )
-    return vecs.select(id_col, F.explode(subs).alias("x")).select(
-        id_col, "x.sub", "x.sv"
-    )
+_LLOYD_SCHEMA = StructType(
+    [
+        StructField("sub", IntegerType()),
+        StructField("cluster", IntegerType()),
+        StructField("pos", IntegerType()),
+        StructField("n", LongType()),
+        StructField("parts", ArrayType(DoubleType())),
+    ]
+)
 
 
 def pq_train(
@@ -131,158 +178,113 @@ def pq_train(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Fit per-subspace codebooks; returns ``(sub, cluster, centroid)``
-    — m·k rows, localCheckpoint'ed (broadcast-sized, reused by encode
-    and every ADC query batch).
-
-    All m subspaces train JOINTLY: one Lloyd chain over (id, sub, sv)
-    rows keyed by (sub, cluster) instead of m independent chains —
-    identical arithmetic per subspace (same smallest-id init, same
-    round(d2,6)/cluster-asc tie-break, same rounded means as
-    ``clustering.kmeans_fit``), one update job per iteration for ALL
-    subspaces — the nearest-codeword assignment happens IN-ROW inside
-    that job (see :func:`_best_code`), so an iteration's only exchange
-    carries the m·k·d partial means."""
-    return _pq_train_dims(vecs, m, k, iters, id_col, vec_col)[0]
+    — one row per codeword, a local relation built from the frozen
+    model (see :func:`_pq_fit`)."""
+    model = _pq_fit(vecs, m, k, iters, id_col, vec_col)
+    return model.to_frame(vecs.sparkSession)
 
 
-def _pq_train_dims(
+def _pq_fit(
     vecs: DataFrame,
     m: int,
     k: int,
     iters: int,
     id_col: str,
     vec_col: str,
-) -> tuple[DataFrame, int]:
-    """``(codebooks, d)`` — :func:`pq_train` plus the subspace width it
-    derived, so in-process callers (pq_topk) skip the codebook-probe
-    job that re-infers it."""
+) -> PQModel:
+    """The :class:`PQModel` behind :func:`pq_train`.
+
+    All m subspaces train jointly with the arithmetic of
+    ``clustering.kmeans_fit``: the k smallest-id vectors seed every
+    subspace (rounded to 6 dp), and each of the ``iters - 1`` updates is
+    ONE map-only pass (``vec.lloyd_partials``) whose per-partition exact
+    sums the driver combines into ``round(sum / count, 6)`` means. The
+    sum is exact, so the codebook is the same at any partition width."""
     if k < 1 or iters < 1:
         raise ValueError("pq_train: k and iters must be >= 1")
     if k >= _LUT_STRIDE:
-        # flattened (sub·stride + cluster) LUT keys are collision-free
-        # only while cluster ids stay below the stride; map_from_entries
-        # is last-wins, so a collision would silently corrupt ADC scores
+        # ivfadc_score's flattened (sub·stride + cluster) LUT keys are
+        # collision-free only while cluster ids stay below the stride;
+        # map_from_entries is last-wins, so a collision would silently
+        # corrupt ADC scores
         raise ValueError(
             f"pq_train: k_code={k} >= LUT stride {_LUT_STRIDE} — "
             "codeword ids would collide in the flattened ADC lookup maps"
         )
-    # init: the k smallest-id vectors, sliced per subspace (k·m rows
-    # total, k bounded by the operator's own parameter — the same
-    # driver residency clustering._init_centroids has). The dimension
-    # comes from the seed rows themselves — the former separate
-    # _infer_dim first() was one more full-plan job for a value the
-    # seed collect already holds.
+    # init: the k smallest-id vectors (k bounded by the operator's own
+    # parameter — the driver residency clustering._init_centroids has);
+    # the dimension comes from the seed rows themselves
     seed_rows = (
         vecs.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
     )
     if not seed_rows:
         raise ValueError("pq: empty vector table")
-    dim = len(seed_rows[0][1])
+    dim = next(
+        (len(r[vec_col]) for r in seed_rows if r[vec_col] is not None), 0
+    )
     if dim % m != 0:
         raise ValueError(f"pq_train: dim {dim} not divisible by m={m}")
     d = dim // m
-    spark = vecs.sparkSession
-    init = spark.createDataFrame(
-        [
-            (s, i, list(r[1])[s * d : (s + 1) * d])
-            for s in range(m)
-            for i, r in enumerate(seed_rows)
-        ],
-        "sub int, cluster int, centroid array<double>",
+    n = len(seed_rows)
+    seeds = vec.rows_matrix(seed_rows, id_col, vec_col, dim, "pq_train")
+    model = PQModel(
+        vec.spark_round(seeds.reshape(n, m, d).transpose(1, 0, 2)),
+        np.ones((m, n), dtype=bool),
     )
-    cents = init.select(
-        "sub",
-        "cluster",
-        F.transform("centroid", lambda x: F.round(x, 6)).alias("centroid"),
-    )
-    base = vecs.select(vec_col)
     for _ in range(iters - 1):
-        # assignment + update input built IN-ROW (guide §2.4): for each
-        # vector and subspace the nearest codeword is an array_min fold
-        # over the broadcast collected codebook — the former shape
-        # exploded (id, sub, sv) rows, shuffled them through a
-        # groupBy(id, sub) argmin and joined the result BACK to the
-        # exploded rows (two corpus-sized exchanges per iteration);
-        # the per-(sub, cluster, pos) means aggregate below is now the
-        # only exchange, and it carries m·k·d rows per upstream
-        # partition after map-side combine. The averaged row multiset —
-        # and therefore every rounded mean — is identical.
-        subbest = F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("sub"),
-                    _best_code(vec_col, s, d)["cluster"].alias("cluster"),
-                    F.slice(F.col(vec_col), s * d + 1, d).alias("sv"),
-                )
-                for s in range(m)
-            ]
-        )
-        pos = (
-            base.crossJoin(F.broadcast(_codebook_arr(cents)))
-            .select(F.explode(subbest).alias("x"))
-            .select("x.sub", "x.cluster", F.posexplode("x.sv").alias("pos", "val"))
-        )
-        means = pos.groupBy("sub", "cluster", "pos").agg(
-            F.round(F.avg(F.col("val").cast("double")), 6).alias("mv")
-        )
-        # truncate the m·k-row centroid lineage per update, like
-        # clustering.kmeans_fit does (the last update's checkpoint is
-        # the returned frame — no second checkpoint of the same rows)
-        cents = (
-            means.groupBy("sub", "cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-                    lambda s: s["mv"],
-                ).alias("centroid")
+        rows = (
+            vecs.select(id_col, vec_col)
+            .mapInArrow(
+                partial(
+                    vec.lloyd_partials, codebook=model.codebook,
+                    mask=model.mask, id_col=id_col, vec_col=vec_col,
+                ),
+                _LLOYD_SCHEMA,
             )
-            .localCheckpoint()
+            .collect()
         )
-    if iters == 1:
-        cents = cents.localCheckpoint(eager=True)
-    return cents, d
+        parts: dict = {}
+        counts = np.zeros((m, n), dtype=np.int64)
+        for r in rows:
+            parts.setdefault((r["sub"], r["cluster"], r["pos"]), []).extend(
+                r["parts"]
+            )
+            if r["pos"] == 0:
+                counts[r["sub"], r["cluster"]] += r["n"]
+        cb = np.zeros((m, n, d))
+        for (s, c, j), ps in parts.items():
+            cb[s, c, j] = vec.combine_parts(ps) / counts[s, c]
+        model = PQModel(vec.spark_round(cb), counts > 0)
+    return model
 
 
 def pq_encode(
     vecs: DataFrame,
-    codebooks: DataFrame,
+    codebooks,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: tuple[int, int] | None = None,
     keep_cols: tuple[str, ...] = (),
-    cb_arr: DataFrame | None = None,
 ) -> DataFrame:
     """(id, *keep_cols, codes array<int>): nearest codeword per
     subspace, codes ordered by subspace index. Distance ties break to
     the smaller cluster id, exactly like ``clustering._assign`` (and
     the oracle).
 
-    Encoding is MAP-ONLY (guide §2.4): each row folds its subvectors
-    against the broadcast collected codebook and emits its code array
-    directly — the former shape exploded m rows per vector and paid two
-    corpus exchanges (groupBy(id, sub) argmin + groupBy(id) re-pack) to
-    produce the same array. ``keep_cols`` ride through on the row for
-    free (the old shape needed a corpus self-join to re-attach them).
-    ``dims=(m, d)`` skips the codebook-probe job when the caller
-    already knows the geometry. ``cb_arr``: a pre-built
-    :func:`_codebook_arr` frame, aggregated once by callers that encode
-    many batches against one frozen codebook (the nearest-codeword
-    array_min is order-independent, so reuse is bit-exact)."""
-    if dims is not None:
-        m, d = dims
-    else:
-        m_d = codebooks.agg(
-            F.max("sub").alias("mx"), F.max(F.size("centroid")).alias("d")
-        ).first()
-        m, d = int(m_d["mx"]) + 1, int(m_d["d"])
-    codes = F.array(
-        *[_best_code(vec_col, s, d)["cluster"] for s in range(m)]
+    ``codebooks`` is a :class:`PQModel` or a ``(sub, cluster,
+    centroid)`` frame (collected once, here). Encoding is ONE map-only
+    ``mapInArrow`` pass (``vec.encode`` per Arrow batch); ``keep_cols``
+    ride through on the row."""
+    model = _as_model(codebooks)
+    schema = StructType(
+        [vecs.schema[c] for c in (id_col, *keep_cols)]
+        + [StructField("codes", ArrayType(IntegerType()))]
     )
-    if cb_arr is None:
-        cb_arr = _codebook_arr(codebooks)
-    return (
-        vecs.crossJoin(F.broadcast(cb_arr))
-        .select(id_col, *keep_cols, codes.alias("codes"))
+    return vecs.select(*dict.fromkeys([id_col, *keep_cols, vec_col])).mapInArrow(
+        partial(
+            vec.encode_batches, codebook=model.codebook, mask=model.mask,
+            id_col=id_col, vec_col=vec_col, keep_cols=keep_cols,
+        ),
+        schema,
     )
 
 
@@ -361,13 +363,22 @@ def pq_topk(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    codebooks: DataFrame | None = None,
+    codebooks=None,
     rerank: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k by ADC over PQ codes. Queries score with
     their EXACT vectors against the quantized corpus; pass pre-trained
-    ``codebooks`` to reuse a fitted quantizer (the production shape —
-    train once, encode incrementally).
+    ``codebooks`` (a frame or a :class:`PQModel`) to reuse a fitted
+    quantizer (the production shape — train once, encode incrementally).
+
+    Build-time driver work: the model (trained here, or collected from
+    ``codebooks``), then ONE collect of the query vectors. A query whose
+    norm is zero (or NaN) is dropped, as ``with_norm`` drops it; a null
+    or wrong-length query embedding raises ``ValueError`` naming its id.
+    The Q·m·k LUT, the query norms and the codeword norms are
+    ``vec.fold_dot`` folds on the driver. The scoring pass is one
+    ``mapInArrow`` over the corpus (``vec.adc_topk``), and the
+    ranking window finishes over its per-partition top-k rows.
 
     ``rerank=C`` adds the standard two-stage production finisher (Jégou
     et al. §V: ADC shortlists, exact re-rank): the top-C ADC candidates
@@ -379,105 +390,65 @@ def pq_topk(
     ADC pass still scans nothing but m-byte codes. Recall@k at C=10·k is
     measured in scripts/ann_recall_proof.py (gated >= 0.9 at sf0.1)."""
     if codebooks is None:
-        codebooks, d = _pq_train_dims(vecs, m, k_code, iters, id_col, vec_col)
+        model = _pq_fit(vecs, m, k_code, iters, id_col, vec_col)
     else:
-        m_d = codebooks.agg(
-            F.max("sub").alias("mx"), F.max(F.size("centroid")).alias("d")
-        ).first()
-        m, d = int(m_d["mx"]) + 1, int(m_d["d"])
-    # per-codeword squared norms: the reconstruction's norm decomposes
-    # across the orthogonal subspaces
-    cn = codebooks.select(
-        "sub", "cluster", F.expr(dot_expr("centroid", "centroid")).alias("cn2")
+        model = _as_model(codebooks)
+    m, d = model.m, model.d
+    q_rows = (
+        vecs.filter(F.col(id_col).isin(list(query_ids)))
+        .select(id_col, vec_col)
+        .collect()
     )
-    unit = with_norm(vecs, vec_col)
-    q_subs = _sub_rows(
-        unit.filter(F.col(id_col).isin(list(query_ids))), m, d, id_col, vec_col
-    ).withColumnRenamed(id_col, "query_id").withColumnRenamed("sv", "qsv")
-    qnorm = unit.filter(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), F.col("vnorm").alias("qnorm")
+    qv = vec.rows_matrix(q_rows, id_col, vec_col, m * d, "pq_topk")
+    qids = np.array([r[id_col] for r in q_rows])
+    if len(set(qids.tolist())) != len(qids):
+        raise ValueError(f"pq_topk: duplicate {id_col} among the queries")
+    qnorm = np.sqrt(vec.fold_dot(qv, qv))
+    keep = qnorm > 0
+    qv, qids, qnorm = qv[keep], qids[keep], qnorm[keep]
+    _check_ceiling("pq_topk LUT", len(qids) * m * model.k, _PQ_LUT_MAX_ENTRIES)
+    lut = np.stack(
+        [
+            vec.fold_dot(qv[:, None, s * d : (s + 1) * d], model.codebook[s][None])
+            for s in range(m)
+        ],
+        axis=1,
     )
-    # ADC lookup tables, flattened to (sub·stride + cluster) -> dsub
-    # maps: one per query (collected with qnorm into a single broadcast
-    # row) plus one shared cn2 map. Scoring is then IN-ROW over the
-    # code scan — m map lookups per (neighbor, query), folded in sub
-    # order — where the former shape posexploded m rows per vector,
-    # joined the Q·m·k ADC table and re-grouped by (query, neighbor)
-    # through a corpus×Q exchange with two collect_list folds. The
-    # Python-loop fold below adds the same doubles in the same sub-
-    # ascending order as the old array_sort(collect_list(...)) fold, so
-    # every cos_sim is bit-identical.
-    adc = q_subs.join(F.broadcast(codebooks), "sub").select(
-        "query_id",
-        "sub",
-        "cluster",
-        F.expr(dot_expr("qsv", "centroid")).alias("dsub"),
-    )
-    qlut = adc.groupBy("query_id").agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    (F.col("sub") * _LUT_STRIDE + F.col("cluster")).alias("key"),
-                    F.col("dsub").alias("value"),
-                )
-            )
-        ).alias("_lut")
-    )
-    qs = qlut.join(qnorm, "query_id").agg(
-        F.collect_list(F.struct("query_id", "_lut", "qnorm")).alias("_qs")
-    )
-    cnmap = cn.agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    (F.col("sub") * _LUT_STRIDE + F.col("cluster")).alias("key"),
-                    F.col("cn2").alias("value"),
-                )
-            )
-        ).alias("_cn")
-    )
-    codes = pq_encode(vecs, codebooks, id_col, vec_col, dims=(m, d))
-
-    def lut_sum(lut_col):
-        expr = F.lit(0.0)
-        for s in range(m):
-            expr = expr + F.element_at(
-                lut_col,
-                F.lit(s * _LUT_STRIDE) + F.element_at(F.col("codes"), s + 1),
-            )
-        return expr
-
-    out = (
-        codes.crossJoin(F.broadcast(qs))
-        .crossJoin(F.broadcast(cnmap))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            "codes",
-            F.explode("_qs").alias("q"),
-            "_cn",
-        )
-        .filter(F.col("neighbor_id") != F.col("q.query_id"))
-        .select(
-            F.col("q.query_id").alias("query_id"),
-            "neighbor_id",
-            F.round(
-                lut_sum(F.col("q._lut"))
-                / (F.col("q.qnorm") * F.sqrt(lut_sum(F.col("_cn")))),
-                6,
-            ).alias("cos_sim"),
-        )
+    id_type = vecs.schema[id_col].dataType
+    out = vecs.select(id_col, vec_col).mapInArrow(
+        partial(
+            vec.adc_topk, codebook=model.codebook, mask=model.mask, lut=lut,
+            qnorm=qnorm, qids=qids, depth=max(k, rerank or 0),
+            id_col=id_col, vec_col=vec_col,
+        ),
+        StructType(
+            [
+                StructField("query_id", id_type),
+                StructField("neighbor_id", id_type),
+                StructField("cos_sim", DoubleType()),
+            ]
+        ),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
     if rerank is not None:
-        qv = unit.filter(F.col(id_col).isin(list(query_ids))).select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("_qv"),
-            F.col("vnorm").alias("_qn"),
+        qframe = vecs.sparkSession.createDataFrame(
+            [
+                (q, v.tolist(), float(n))
+                for q, v, n in zip(qids.tolist(), qv, qnorm)
+            ],
+            StructType(
+                [
+                    StructField("query_id", id_type),
+                    StructField("_qv", vecs.schema[vec_col].dataType),
+                    StructField("_qn", DoubleType()),
+                ]
+            ),
         )
         out = _exact_rerank(
-            out, w, unit, qv, rerank, k, id_col, vec_col, "pq_topk"
+            out, w, with_norm(vecs, vec_col), qframe, rerank, k, id_col,
+            vec_col, "pq_topk",
         )
     return (
         out.withColumn("rank", F.row_number().over(w))
@@ -573,13 +544,9 @@ def ivfpq_topk(
     # cache keeps full stage width (blocks LRU-evict under pressure)
     res = ivfpq_assign_residuals(unit, cents, id_col, vec_col).persist()
     res.count()  # materialize once for train + encode + the cell map
-    codebooks = pq_train(res, m, k_code, iters, id_col, "res")
-    # cell rides through the map-only encode — the former
-    # `.join(res.select(id, cell), id)` re-attached it with a
-    # corpus-sized shuffle of both sides
-    codes = pq_encode(
-        res, codebooks, id_col, "res", dims=(m, d), keep_cols=("cell",)
-    )
+    model = _pq_fit(res, m, k_code, iters, id_col, "res")
+    # cell rides through the map-only encode
+    codes = pq_encode(res, model, id_col, "res", keep_cols=("cell",))
     queries = unit.filter(F.col(id_col).isin(list(query_ids))).select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
@@ -588,7 +555,7 @@ def ivfpq_topk(
     return ivfadc_score(
         codes,
         cents,
-        codebooks,
+        model.to_frame(unit.sparkSession),
         queries,
         m=m,
         d=d,
@@ -748,14 +715,7 @@ def ivfadc_score(
                 )
             )
 
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        MapType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import MapType
 
     qid_type = queries.schema["query_id"].dataType
     cell_type = cents.schema["cid"].dataType

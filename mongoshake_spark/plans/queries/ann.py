@@ -463,12 +463,15 @@ ORDER BY query_id, rank"""
     "ann_pq_adc",
     _PQ_ORACLE,
     "Product-quantization ANN (Jégou et al. 2011): per-subspace codebooks "
-    "(m=4 x 16 dims, k=8, the deterministic 2-iteration k-means), corpus "
-    "encoded to 4-byte codes (~128x compression of the embedding store — "
-    "the actual 100TB cost), queries scored by asymmetric distance "
-    "computation against broadcast lookup tables; every cross-engine sum "
-    "folds in a fixed subspace order so the oracle reproduces identical "
-    "doubles (functions/quantization.pq_train/pq_encode/pq_topk).",
+    "(m=4 x 16 dims, k=8, the deterministic 2-iteration k-means: one "
+    "seed collect, one map-only Lloyd pass with exact per-partition "
+    "sums), corpus encoded to 4-byte codes (~128x compression of the "
+    "embedding store — the actual 100TB cost), queries scored by "
+    "asymmetric distance computation against a driver-built Q·m·k lookup "
+    "table in ONE mapInArrow pass that keeps a per-partition top-k per "
+    "query; the numpy kernels (functions/vec) replay the SQL folds "
+    "bit-exactly, so the oracle reproduces identical doubles; 7 Spark "
+    "jobs per call (functions/quantization.pq_train/pq_encode/pq_topk).",
 )
 def ann_pq_adc_q(spark, sf_dir):
     from mongoshake_spark.functions import quantization as pq
@@ -484,10 +487,12 @@ def ann_pq_adc_q(spark, sf_dir):
     _PQ_RERANK_ORACLE,
     "Two-stage PQ retrieval — the production finisher on ann_pq_adc "
     "(Jégou et al. 2011 §V): the ADC pass shortlists top-C=25 candidates "
-    "per query from the m-byte codes, then ONLY those Q·C rows are "
-    "re-scored with exact cosine against their stored vectors (the "
-    "shortlist broadcasts onto the corpus scan — candidate-sized I/O, "
-    "never a corpus shuffle) and the final top-k ranks by the exact "
+    "per query (the mapInArrow scoring pass keeps a per-partition "
+    "top-25 per query), then ONLY those Q·C rows are re-scored with "
+    "exact cosine against their stored vectors (the shortlist "
+    "broadcasts onto the corpus scan — candidate-sized I/O, never a "
+    "corpus shuffle; the query side is a local relation from the one "
+    "query collect) and the final top-k ranks by the exact "
     "score; recall@10 at C=10k gated >= 0.9 in scripts/"
     "ann_recall_proof.py (functions/quantization.pq_topk(rerank=25)).",
 )

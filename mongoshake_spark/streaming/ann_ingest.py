@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongoshake_spark.functions.quantization import (
+    PQModel,
     ivfadc_score,
     ivfpq_assign_residuals,
     pq_encode,
@@ -136,29 +137,22 @@ def streaming_ann_ingest(
     a divergent model per batch."""
     from mongoshake_spark.streaming.index_lifecycle import read_current
 
-    from mongoshake_spark.functions.quantization import _codebook_arr
     from mongoshake_spark.functions.similarity import collect_centroid_arr
 
     spark = stream.sparkSession
     cent_path, cb_path, codes_path = _model_paths(index_dir)
     # the model is FROZEN for the stream's lifetime (train-once contract),
-    # so read and pin it once — re-planning two parquet scans per
-    # micro-batch is pure scheduling overhead; the tables are model-sized
-    # (k centroids, m*k codewords), so the eager checkpoint is KB-scale
+    # so read and pin it once — re-planning the parquet scans per
+    # micro-batch is pure scheduling overhead. The codebook becomes a
+    # driver-side PQModel (one collect, m*k rows, under the model
+    # ceiling) that every batch's map-only encode carries in its closure;
+    # the k-centroid table is checkpointed (KB-scale), and its one-row
+    # collected array is aggregated once here instead of inside every
+    # micro-batch's plan (the in-row argmax fold is order-independent,
+    # so reuse is bit-exact)
     cents = spark.read.parquet(cent_path).localCheckpoint(eager=True)
-    codebooks = spark.read.parquet(cb_path).localCheckpoint(eager=True)
-    # the one-row collected model ARRAYS the encode broadcasts are
-    # likewise frozen: aggregate them once here instead of re-running
-    # the collect_list inside every micro-batch's plan (the in-row
-    # argmin/argmax folds are order-independent, so reuse is bit-exact)
+    model = PQModel.from_frame(spark.read.parquet(cb_path))
     cents_arr = collect_centroid_arr(cents).localCheckpoint(eager=True)
-    cb_arr = _codebook_arr(codebooks).localCheckpoint(eager=True)
-    # m comes from the pinned codebook rows (dims for pq_encode): one
-    # tiny collect at stream start saves a probe job per batch
-    m_d = codebooks.agg(
-        F.max("sub").alias("mx"), F.max(F.size("centroid")).alias("d")
-    ).first()
-    dims = (int(m_d["mx"]) + 1, int(m_d["d"]))
     fan = spark.sparkContext.defaultParallelism
     # generation pinned WITH the model: a retrain/compaction cutover
     # (streaming/index_lifecycle) swaps the active generation, and rows
@@ -181,9 +175,9 @@ def streaming_ann_ingest(
         # empty-write task the probe's dedup never sees)
         #
         # fan the batch out first: a maxFilesPerTrigger=1 micro-batch
-        # arrives as ONE scan split, and the in-row nearest-centroid /
-        # nearest-codeword folds are interpreted higher-order exprs —
-        # left on a single task they serialize the whole encode
+        # arrives as ONE scan split, and the in-row nearest-centroid
+        # fold is an interpreted higher-order expr — left on a single
+        # task it serializes the whole assignment
         # (measured ~1.5 s/batch at sf0.1; the row-wise arithmetic is
         # partition-independent, so the fan-out is bit-exact). The
         # exchange carries only the batch's own rows; at production
@@ -194,10 +188,7 @@ def streaming_ann_ingest(
             unit, cents, id_col, vec_col, cents_arr=cents_arr
         )
         # cell rides through the map-only encode (no re-attach join)
-        codes = pq_encode(
-            res, codebooks, id_col, "res",
-            dims=dims, keep_cols=("cell",), cb_arr=cb_arr,
-        )
+        codes = pq_encode(res, model, id_col, "res", keep_cols=("cell",))
         # append-only, like the band index: a crash before the commit
         # replays the batch and re-appends the same rows — the probe
         # path dedups by id, so the store converges

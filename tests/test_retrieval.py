@@ -805,11 +805,12 @@ def test_hash_vectors_compose_with_lsh_neardup(spark, sf_dir):
 
 
 def test_inrow_assignment_plans_are_map_only(spark):
-    """The round-12 in-row restructure (guide §2.4) pinned structurally:
-    nearest-codeword encode and nearest-centroid assignment must not
-    hash-shuffle the corpus — the argmin folds in-row against the
-    broadcast collected model table. A reappearing `Exchange
-    hashpartitioning` on these frames is the regression this guards."""
+    """Nearest-codeword encode and nearest-centroid assignment must not
+    hash-shuffle the corpus: the encode is one map-only ``mapInArrow``
+    pass over the frozen PQ model in its closure, and the centroid
+    argmin folds in-row against the broadcast collected centroid table.
+    A reappearing `Exchange hashpartitioning` on these frames is the
+    regression this guards."""
     from mongoshake_spark.functions import quantization as pq
     from mongoshake_spark.functions.clustering import kmeans_assign
     from mongoshake_spark.functions.similarity import (
@@ -846,3 +847,124 @@ def test_inrow_assignment_plans_are_map_only(spark):
     )
     cell = assign_nearest_centroid(unit, cents)
     assert "hashpartitioning" not in plan(cell)
+
+
+def _pq_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_pq_train_and_topk_are_partition_width_invariant(spark, sf_dir):
+    """The Lloyd mean sums per partition and the ADC pass keeps a
+    per-partition top-k, so both are checked at several widths: the
+    codebook rows and the top-k rows (ADC-only and re-ranked) must be
+    identical with the corpus split into 1, 3 and 8 partitions."""
+    from mongoshake_spark.functions import quantization as pq
+    from mongoshake_spark.sources.tables import load_table
+
+    vecs = load_table(spark, sf_dir, "embeddings")
+    qids = list(range(10))
+
+    def run(df):
+        cb = pq.pq_train(df, m=4, k=8, iters=3)
+        return (
+            [(r["sub"], r["cluster"], tuple(r["centroid"])) for r in cb.collect()],
+            _pq_rows(pq.pq_topk(df, qids, k=5, codebooks=cb)),
+            _pq_rows(pq.pq_topk(df, qids, k=5, iters=2, rerank=25)),
+        )
+
+    base = run(vecs.repartition(1))
+    assert len(base[0]) == 32 and len(base[1]) == 50 and len(base[2]) == 50
+    for width in (3, 8):
+        assert run(vecs.repartition(width)) == base, width
+
+
+def test_pq_model_and_lut_ceilings(spark, monkeypatch):
+    """The frozen model (m·k·d entries) and the query LUT (Q·m·k
+    entries) are driver-resident: each passes AT its ceiling and fails
+    loudly one entry above it."""
+    from mongoshake_spark.functions import quantization as pq
+
+    rows = [(i, [float((i * 5 + j) % 7) for j in range(8)]) for i in range(12)]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    model_entries = 2 * 4 * 4  # m * k * d
+    monkeypatch.setattr(pq, "_PQ_MODEL_MAX_ENTRIES", model_entries)
+    cb = pq.pq_train(vecs, m=2, k=4, iters=2)
+    assert pq.PQModel.from_frame(cb).codebook.size == model_entries
+    monkeypatch.setattr(pq, "_PQ_MODEL_MAX_ENTRIES", model_entries - 1)
+    with pytest.raises(ValueError, match="ceiling"):
+        pq.pq_train(vecs, m=2, k=4, iters=2)
+    with pytest.raises(ValueError, match="ceiling"):
+        pq.PQModel.from_frame(cb)
+    monkeypatch.setattr(pq, "_PQ_MODEL_MAX_ENTRIES", model_entries)
+    lut_entries = 3 * 2 * 4  # Q * m * k
+    monkeypatch.setattr(pq, "_PQ_LUT_MAX_ENTRIES", lut_entries)
+    assert len(pq.pq_topk(vecs, [0, 1, 2], k=2, codebooks=cb).collect()) == 6
+    monkeypatch.setattr(pq, "_PQ_LUT_MAX_ENTRIES", lut_entries - 1)
+    with pytest.raises(ValueError, match="ceiling"):
+        pq.pq_topk(vecs, [0, 1, 2], k=2, codebooks=cb)
+
+
+def test_pq_degenerate_inputs(spark):
+    """Null and wrong-length embeddings raise ValueError naming the id
+    (on the driver for collected rows; inside a task Spark re-raises the
+    worker's ValueError text); a zero-norm query is dropped; NaN scores
+    rank first, as Spark's descending window ranks them."""
+    from mongoshake_spark.functions import quantization as pq
+
+    rows = [(i, [float((i * 3 + j) % 5) + 1.0 for j in range(8)]) for i in range(12)]
+    schema = "vec_id long, embedding array<double>"
+    vecs = spark.createDataFrame(rows, schema)
+    cb = pq.pq_train(vecs, m=2, k=4, iters=2)
+
+    bad_len = spark.createDataFrame(rows + [(20, [1.0] * 7)], schema)
+    with pytest.raises(Exception, match=r"ValueError.*vec_id=20 is of length 7"):
+        pq.pq_encode(bad_len, cb).collect()
+    with pytest.raises(Exception, match=r"ValueError.*vec_id=20 is of length 7"):
+        pq.pq_train(bad_len, m=2, k=4, iters=2)
+    null_vec = spark.createDataFrame(rows + [(21, None)], schema)
+    with pytest.raises(Exception, match=r"ValueError.*vec_id=21 is null"):
+        pq.pq_topk(null_vec, [0], k=3, codebooks=cb).collect()
+    # a null query embedding is collected on the driver: a plain ValueError
+    with pytest.raises(ValueError, match=r"vec_id=21 is null"):
+        pq.pq_topk(null_vec, [21], k=3, codebooks=cb)
+
+    # zero-norm query: dropped like with_norm drops it, others unaffected
+    with_zero = spark.createDataFrame(rows + [(30, [0.0] * 8)], schema)
+    got = pq.pq_topk(with_zero, [0, 30], k=3, codebooks=cb).collect()
+    assert {r["query_id"] for r in got} == {0}
+    assert got == pq.pq_topk(with_zero, [0], k=3, codebooks=cb).collect()
+
+    # an infinite query coordinate makes every cosine inf/inf = NaN:
+    # NaN ranks first and the neighbor id breaks the tie, at any width
+    with_inf = spark.createDataFrame(
+        rows + [(40, [float("inf")] + [1.0] * 7)], schema
+    )
+    for width in (1, 4):
+        top = pq.pq_topk(
+            with_inf.repartition(width), [40], k=4, codebooks=cb
+        ).collect()
+        assert [r["neighbor_id"] for r in top] == [0, 1, 2, 3]
+        assert all(math.isnan(r["cos_sim"]) for r in top)
+
+
+def test_ann_pq_adc_job_count_and_map_in_arrow_plan(spark, sf_dir):
+    """One ann_pq_adc call runs at most 8 Spark jobs (seed collect,
+    Lloyd pass, query collect, scoring pass + window + orderBy; the HOF
+    plan ran 20), and its executed plan scores through MapInArrow with
+    no zip_with/aggregate fold left."""
+    from mongoshake_spark.plans import QUERIES
+
+    sc = spark.sparkContext
+    group = "test-ann-pq-adc-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        df = QUERIES["ann_pq_adc"].fn(spark, sf_dir)
+        assert len(df.collect()) == 50
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(jobs) <= 8, sorted(jobs)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert "zip_with" not in plan and "aggregate(" not in plan, plan
