@@ -13,6 +13,7 @@ from mongoshake_spark.plans.queries._shared import (  # noqa: F401
     load_table,
     similarity,
 )
+from mongoshake_spark.streaming.drain import drain, stream_session
 
 
 
@@ -687,29 +688,27 @@ def stream_ann_ingest_q(spark, sf_dir):
         streaming_ann_ingest,
     )
 
-    vecs = load_table(spark, sf_dir, "embeddings")
+    # 8 partitions: model-sized aggregates (k centroids, m*k codewords)
+    # make 32 near-empty shuffle tasks per Lloyd/score stage pure
+    # scheduling overhead; the map-only encode keeps full scan width
+    ss = stream_session(spark, 8)
+    vecs = load_table(ss, sf_dir, "embeddings")
     tmp = _stream_tmpdir("annidx_")
     feed_dir, ckpt_dir, index_dir = f"{tmp}/feed", f"{tmp}/ckpt", f"{tmp}/index"
-    # model-sized aggregates everywhere (k centroids, m*k codewords):
-    # 32 near-empty shuffle tasks per Lloyd/score stage are pure
-    # scheduling overhead at ANY corpus size — same override as
-    # stream_dedup; the map-only encode stages keep full scan width
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         ann_index_bootstrap(vecs, index_dir, m=4, k_code=8, iters=2)
         _write_class_feed(vecs, F.col("vec_id") % 3, 3, feed_dir, tmp)
         stream = (
-            spark.readStream.schema(vecs.schema)
+            ss.readStream.schema(vecs.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed_dir)
         )
-        q = streaming_ann_ingest(stream, index_dir, ckpt_dir)
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("ann ingest stream drain timed out")
+        drain(
+            streaming_ann_ingest(stream, index_dir, ckpt_dir),
+            "stream_ann_ingest",
+        )
         out = ann_index_topk(
-            spark,
+            ss,
             index_dir,
             vecs.filter(F.col("vec_id") < 10),
             k=5,
@@ -717,7 +716,6 @@ def stream_ann_ingest_q(spark, sf_dir):
         )
         return out.orderBy("query_id", "rank").localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -757,11 +755,11 @@ def stream_ann_compaction_q(spark, sf_dir):
         read_current,
     )
 
-    vecs = load_table(spark, sf_dir, "embeddings")
+    # 8 partitions: the same model-sized sizing as stream_ann_ingest
+    ss = stream_session(spark, 8)
+    vecs = load_table(ss, sf_dir, "embeddings")
     tmp = _stream_tmpdir("annlc_")
     feed_dir, index_dir = f"{tmp}/feed", f"{tmp}/index"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         ann_index_bootstrap(vecs, index_dir, m=4, k_code=8, iters=2)
         os.makedirs(feed_dir, exist_ok=True)
@@ -771,19 +769,19 @@ def stream_ann_compaction_q(spark, sf_dir):
         os.replace(os.path.join(d, part), f"{feed_dir}/c0.parquet")
         os.utime(f"{feed_dir}/c0.parquet", (time.time() - 10,) * 2)
 
-        stream = spark.readStream.schema(vecs.schema).parquet(feed_dir)
-        q = streaming_ann_ingest(stream, index_dir, f"{tmp}/ck1")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("ann lifecycle drain timed out")
+        stream = ss.readStream.schema(vecs.schema).parquet(feed_dir)
+        drain(
+            streaming_ann_ingest(stream, index_dir, f"{tmp}/ck1"),
+            "stream_ann_compaction",
+        )
         # crash-replay worst case: every code row appended a second time
         # (byte-identical rows — what a replayed feed writes; the actual
         # via-checkpoint replay is pinned in tests/test_index_lifecycle)
         codes_path = os.path.join(index_dir, "codes")
-        spark.read.parquet(codes_path).localCheckpoint(eager=True).write.mode(
+        ss.read.parquet(codes_path).localCheckpoint(eager=True).write.mode(
             "append"
         ).parquet(codes_path)
-        stats = compact_ann_store(spark, index_dir)
+        stats = compact_ann_store(ss, index_dir)
         if stats["rows_after"] * 2 != stats["rows_before"]:
             raise RuntimeError(
                 f"compaction did not halve the replay-doubled store: {stats}"
@@ -791,7 +789,7 @@ def stream_ann_compaction_q(spark, sf_dir):
         if read_current(index_dir) != stats["generation"]:
             raise RuntimeError("generation pointer did not cut over")
         out = ann_index_topk(
-            spark,
+            ss,
             index_dir,
             vecs.filter(F.col("vec_id") < 10),
             k=5,
@@ -799,7 +797,6 @@ def stream_ann_compaction_q(spark, sf_dir):
         )
         return out.orderBy("query_id", "rank").localCheckpoint(eager=True)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(tmp, ignore_errors=True)
 
 

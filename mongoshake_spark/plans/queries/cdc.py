@@ -21,6 +21,7 @@ from mongoshake_spark.plans.queries._shared import (  # noqa: F401
     range_scan,
     transforms,
 )
+from mongoshake_spark.streaming.drain import drain, stream_session
 
 
 
@@ -912,7 +913,11 @@ def q31(spark, sf_dir):
     # cross-batch reassembly is fully exercised), while the per-batch
     # stateful-callback count — one Python call per live session per
     # micro-batch, the dominant cost — drops 5x
-    base = _oplog(spark, sf_dir).filter(
+    # 4 state-store partitions instead of the session's 32: per-batch cost
+    # of a stateful stream scales with store instances, and this drain
+    # runs 3 micro-batches over a small session-key space
+    ss = stream_session(spark, 4)
+    base = _oplog(ss, sf_dir).filter(
         F.col("op").isin("i", "u", "d") & (F.col("user_id") % 5 == 0)
     )
     txn = base.select(
@@ -948,31 +953,19 @@ def q31(spark, sf_dir):
         for i, f in enumerate(parts):
             os.utime(os.path.join(feed_dir, f), (t0 + i, t0 + i))
         stream = (
-            spark.readStream.schema(feed.schema)
+            ss.readStream.schema(feed.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed_dir)
         )
         out_dir = f"{tmp}/out"
-        # 4 state-store partitions instead of the session's 32: per-batch
-        # cost of a stateful stream scales with store instances, and this
-        # bounded drain runs 3 micro-batches over a small session-key space
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                reassemble_transactions(stream)
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("stream drain timed out")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        drain(
+            reassemble_transactions(stream)
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt_dir),
+            "q31_txn_crossbatch",
+        )
         # emitted rows flow executor->sink->scan, never through the driver;
         # the eager localCheckpoint detaches the result from the temp dir
         # (deleted below) while keeping the rows in distributed blocks
@@ -1174,7 +1167,10 @@ def q37_multi_ns(spark, sf_dir):
 
     from mongoshake_spark.streaming.multi import run_multi_incr_sync
 
-    two_ns = _oplog(spark, sf_dir).withColumn(
+    # 8 shuffle partitions: each micro-batch runs one MERGE cycle whose
+    # constant scales with partition count, not rows, at this feed size
+    ss = stream_session(spark, 8)
+    two_ns = _oplog(ss, sf_dir).withColumn(
         "ns",
         F.when(F.col("user_id") % 2 == 0, F.lit("db0.even")).otherwise(
             F.lit("db0.odd")
@@ -1194,23 +1190,14 @@ def q37_multi_ns(spark, sf_dir):
     base = time.time() - len(parts) - 10
     for i, f in enumerate(parts):
         os.utime(os.path.join(feed, f), (base + i, base + i))
-    # 8 shuffle partitions for the drain: each micro-batch runs one MERGE
-    # cycle and the per-cycle constant scales with partition count, not
-    # rows, at this feed size (same sizing rule as the other bounded
-    # stream drains)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        # n_buckets sized to the fixture like shuffle partitions: each
-        # flush rewrites every touched bucket file, and at ~7k keys 8
-        # buckets keeps the per-batch file I/O constant small (64-bucket
-        # default is a 100TB-state sizing); kernel semantics are
-        # invariant to the bucket count
-        kernel = run_multi_incr_sync(
-            spark, feed, root, ckpt, max_files_per_trigger=1, n_buckets=8
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    # n_buckets sized to the fixture like shuffle partitions: each flush
+    # rewrites every touched bucket file, and at ~7k keys 8 buckets keeps
+    # the per-batch file I/O constant small (64-bucket default is a
+    # 100TB-state sizing); kernel semantics are invariant to the bucket
+    # count
+    kernel = run_multi_incr_sync(
+        ss, feed, root, ckpt, max_files_per_trigger=1, n_buckets=8
+    )
     return (
         kernel.state_view()
         .select("ns", "user_id", "value")
@@ -1354,14 +1341,17 @@ def q40_receiver_daemon(spark, sf_dir):
     from mongoshake_spark.sources import socket_tunnel as st
     from mongoshake_spark.streaming.receive import run_receiver
 
-    ov = _oplog(spark, sf_dir)
+    # 8 shuffle partitions for the receiver's apply kernel: the same
+    # per-MERGE-cycle constant sizing as q37_multi_ns_sync
+    ss = stream_session(spark, 8)
+    ov = _oplog(ss, sf_dir)
     tmp = _stream_tmpdir("q40_")
     port_ready = threading.Event()
     box: dict = {}
 
     def _serve():
         box["summary"] = run_receiver(
-            spark,
+            ss,
             f"{tmp}/target",
             idle_timeout=0.5,
             max_wall=120,
@@ -1380,15 +1370,8 @@ def q40_receiver_daemon(spark, sf_dir):
     th.start()
     if not port_ready.wait(30):
         raise RuntimeError("q40: receiver did not bind within 30s")
-    # 8 shuffle partitions for the apply drain, the same per-MERGE-cycle
-    # constant sizing every bounded stream drain here uses
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        st.write_socket_tunnel(ov, "127.0.0.1", box["port"], batch_size=4096)
-        th.join(120)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    st.write_socket_tunnel(ov, "127.0.0.1", box["port"], batch_size=4096)
+    th.join(120)
     if th.is_alive():
         raise RuntimeError("q40: receiver did not drain within 120s")
     return (

@@ -12,6 +12,7 @@ from mongoshake_spark.plans.queries._shared import (  # noqa: F401
     load_table,
     merge,
 )
+from mongoshake_spark.streaming.drain import drain, stream_session
 
 
 
@@ -35,7 +36,11 @@ def stream_dedup_q(spark, sf_dir):
 
     from mongoshake_spark.streaming.dedup import stream_exact_dedup
 
-    base = load_table(spark, sf_dir, "documents")
+    # 8 state-store partitions instead of the session's 32: the dedup
+    # store commits every instance each micro-batch, so per-batch wall on
+    # this 2-batch drain scales with store instances, not rows
+    ss = stream_session(spark, 8)
+    base = load_table(ss, sf_dir, "documents")
     shift = 1 << 40  # re-crawl copies sort after every original
     docs = (
         base.select("doc_id", "text")
@@ -61,28 +66,19 @@ def stream_dedup_q(spark, sf_dir):
             docs, F.col("doc_id") >= shift, 2, feed_dir, tmp
         )
         stream = (
-            spark.readStream.schema(docs.schema)
+            ss.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed_dir)
         )
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                stream_exact_dedup(stream, watermark="10 hours")
-                .select("text_hash")
-                .writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError("stream drain timed out")
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        drain(
+            stream_exact_dedup(stream, watermark="10 hours")
+            .select("text_hash")
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt_dir),
+            "stream_dedup",
+        )
         return (
             spark.read.parquet(out_dir)
             .select("text_hash")
@@ -128,8 +124,11 @@ def session_window_stream_q(spark, sf_dir):
 
     from mongoshake_spark.streaming.windows import session_counts
 
+    # 4 state-store partitions: the session store commits every instance
+    # each micro-batch, and the 1/5 user sample holds few session keys
+    ss = stream_session(spark, 4)
     ev = (
-        load_table(spark, sf_dir, "events")
+        load_table(ss, sf_dir, "events")
         .filter(F.col("user_id") % 5 == 0)  # sample: state cost, not semantics
         .select("user_id", "event_id", "ts")
     )
@@ -150,7 +149,7 @@ def session_window_stream_q(spark, sf_dir):
 
     max_ts = ev.agg(F.max("ts")).first()[0]
     sentinel_ts = max_ts + dt.timedelta(hours=16)
-    sentinel = spark.createDataFrame(
+    sentinel = ss.createDataFrame(
         [(-1, -1, sentinel_ts)], "user_id bigint, event_id bigint, ts timestamp"
     )
     (
@@ -169,28 +168,19 @@ def session_window_stream_q(spark, sf_dir):
     for i, f in enumerate(parts):
         os.utime(os.path.join(feed_dir, f), (t0 + i, t0 + i))
     stream = (
-        spark.readStream.schema(ev.schema)
+        ss.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed_dir)
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            session_counts(stream, gap="12 hours", watermark="2 hours")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # a wedged drain must not be read as a (short) result
-            q.stop()
-            raise RuntimeError("session_window_stream: drain timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    drain(
+        session_counts(stream, gap="12 hours", watermark="2 hours")
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt_dir),
+        "session_window_stream",
+        300,
+    )
     return (
         spark.read.parquet(out_dir)
         .filter(F.col("user_id") >= 0)  # the sentinel's session stays open
@@ -235,17 +225,14 @@ def stream_static_enrich_q(spark, sf_dir):
     enriched = stream.join(
         F.broadcast(dim), stream["user_id"] == dim["c_custkey"], "left"
     ).select("event_id", "user_id", "c_mktsegment")
-    q = (
+    drain(
         enriched.writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt_dir),
+        "stream_static_enrich",
+        300,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_static_enrich: drain timed out")
     return (
         spark.read.parquet(out_dir)
         .groupBy(
@@ -280,7 +267,11 @@ def stream_join_q(spark, sf_dir):
 
     from mongoshake_spark.streaming.joins import stream_interval_join
 
-    ev = load_table(spark, sf_dir, "events")
+    # 4 partitions: a stream-stream join commits TWO state stores per
+    # partition every micro-batch, so per-batch wall on this bounded
+    # drain scales with store instances, not data
+    ss = stream_session(spark, 4)
+    ev = load_table(ss, sf_dir, "events")
     # watermarks require TIMESTAMP (with zone); the parquet NTZ cast is
     # lossless and the joined output carries no ts columns, so the zone
     # never reaches the compared result
@@ -305,40 +296,27 @@ def stream_join_q(spark, sf_dir):
         for i, f in enumerate(parts):
             os.utime(os.path.join(feed, f), (base + i, base + i))
     ls = (
-        spark.readStream.schema(lt.schema)
+        ss.readStream.schema(lt.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(ldir)
     )
     rs = (
-        spark.readStream.schema(rt.schema)
+        ss.readStream.schema(rt.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(rdir)
     )
     joined = stream_interval_join(
         ls, rs, "user_id", "l_ts", "r_ts", 0, 1800, watermark="720 hours"
     )
-    # 4 state-store partitions instead of the session's 32: a
-    # stream-stream join keeps TWO stores per partition and commits all
-    # of them every micro-batch — per-batch wall scales with store
-    # instances, not data, on this bounded drain (same sizing rule as
-    # q31/stream_dedup/session_window_stream)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            joined.select("user_id", "l_id", "r_id")
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("stream_join: drain timed out")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    drain(
+        joined.select("user_id", "l_id", "r_id")
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ck),
+        "stream_join",
+        300,
+    )
     return (
         spark.read.parquet(out)
         .groupBy("user_id")
@@ -381,20 +359,18 @@ def stream_neardup_q(spark, sf_dir):
 
     from mongoshake_spark.streaming.neardup import run_streaming_lsh_dedup
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # 8 partitions: each batch's band probe and pair distinct shuffle a
+    # batch-sized frame, where 32 near-empty tasks are pure scheduling
+    ss = stream_session(spark, 8)
+    docs = load_table(ss, sf_dir, "documents").select("doc_id", "text")
     tmp = _stream_tmpdir("sndup_")
     feed = os.path.join(tmp, "feed")
     # one feed file per arrival class, mtime-stamped so the tail admits
     # them in class order (the replay convention, see write_replay_feed)
     _write_class_feed(docs, F.col("doc_id") % 2, 2, feed, tmp)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        pairs = run_streaming_lsh_dedup(
-            spark, feed, "doc_id bigint, text string", os.path.join(tmp, "w")
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    pairs = run_streaming_lsh_dedup(
+        ss, feed, "doc_id bigint, text string", os.path.join(tmp, "w")
+    )
     return pairs.orderBy("origin", "doc_a", "doc_b").localCheckpoint(
         eager=True
     )
@@ -436,12 +412,12 @@ def stream_media_neardup_q(spark, sf_dir):
             .option("maxFilesPerTrigger", 1)
             .parquet(feed_dir)
         )
-        q = streaming_phash_dedup(
-            stream, f"{tmp}/index", f"{tmp}/pairs", f"{tmp}/ckpt"
+        drain(
+            streaming_phash_dedup(
+                stream, f"{tmp}/index", f"{tmp}/pairs", f"{tmp}/ckpt"
+            ),
+            "stream_media_neardup",
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("media neardup stream drain timed out")
         return (
             spark.read.parquet(f"{tmp}/pairs")
             .select("doc_a", "doc_b", "hamming")

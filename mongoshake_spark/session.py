@@ -1,6 +1,7 @@
 """SparkSession factory tuned for the engine.
 
-Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]``; the same config
+Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the
+cores this process may run on); the same config
 block is what we would ship for a 1000-executor cluster (AQE on, skew-join
 handling on, shuffle partitions sized to the cluster, broadcast threshold
 left to Catalyst). Nothing here is local-mode-specific except the master.
@@ -16,6 +17,14 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 LISTING_THRESHOLD = "256"
 
 
+def default_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]``, else one task slot per core this
+    process may run on: more slots than cores oversubscribes the host
+    (each Arrow/pandas stage starts one Python worker per slot)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
+
 def get_spark(app_name: str = "mongoshake_spark", master: str | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
@@ -24,8 +33,7 @@ def get_spark(app_name: str = "mongoshake_spark", master: str | None = None) -> 
     AQE re-coalesces small post-shuffle partitions at runtime either way,
     and splits skewed ones (skew-join on).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or default_master()
     # one BLAS thread per task slot: Spark already runs one python worker
     # per core, so a multi-threaded BLAS inside each worker oversubscribes
     # the host (measured on the sf1 scaling run: the tiled numpy pair scan

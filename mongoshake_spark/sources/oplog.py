@@ -65,18 +65,6 @@ def oplog_view(events: DataFrame) -> DataFrame:
     )
 
 
-def register_oplog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Expose the CDC view to SQL consumers as ``oplog_v``. Goes through
-    load_table so the fixture's TIMESTAMP(NANOS) ts column gets the same
-    nanos->micros normalization every DataFrame consumer sees — a raw
-    parquet read here would hand SQL a different ts domain."""
-    from mongoshake_spark.sources.tables import load_table
-
-    df = oplog_view(load_table(spark, sf_dir, "events"))
-    df.createOrReplaceTempView("oplog_v")
-    return df
-
-
 # ---------------------------------------------------------------------------
 # chunks fixture — shard chunk-range table for the orphan filter (F6, Q7).
 # Models sharding.ShardCollection ranges

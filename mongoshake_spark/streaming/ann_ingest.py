@@ -45,6 +45,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from mongoshake_spark.functions.quantization import (
     PQModel,
@@ -126,11 +127,11 @@ def streaming_ann_ingest(
     checkpoint_dir: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    trigger_available_now: bool = True,
-):
-    """Start the ingest stream over ``stream`` (a streaming DataFrame of
+) -> DataStreamWriter:
+    """Wire the ingest stream over ``stream`` (a streaming DataFrame of
     vectors): each micro-batch is encoded against the bootstrapped model
-    and appended to the code table. Returns the started StreamingQuery.
+    and appended to the code table. Returns the unstarted, checkpointed
+    writer (``streaming/drain.drain`` runs it to the end of the feed).
 
     The model MUST exist (:func:`ann_index_bootstrap`) — encoding
     against a missing model fails the batch loudly rather than training
@@ -194,12 +195,9 @@ def streaming_ann_ingest(
         # path dedups by id, so the store converges
         codes.write.mode("append").parquet(codes_path)
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
+    return stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ann_index_topk(

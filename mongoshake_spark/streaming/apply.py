@@ -91,6 +91,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from mongoshake_spark.operators import merge
+from mongoshake_spark.streaming.drain import drain
 
 TARGET_SCHEMA = "user_id bigint, value double, id bigint"
 
@@ -595,11 +596,13 @@ def run_incr_sync(
     mirror: object | None = None,
 ) -> ApplyKernel:
     """Entry point 1 (SURVEY §3.1) end-to-end: stream the replay feed
-    through the apply kernel until the feed is drained (availableNow
-    trigger = run to current end, then stop — the exit-point semantics of
-    B6 for a bounded run). checkpointLocation gives resume (S13).
-    ``mirror`` passes through to ``ApplyKernel.mirror`` (the live-target
-    hook, e.g. sources/live.mongo_ops_mirror for tunnel=direct)."""
+    through the apply kernel until the feed is drained (``drain_feed``:
+    run to the current end, then stop — the exit-point semantics of B6
+    for a bounded run). checkpointLocation gives resume (S13). The drain
+    runs in ``spark`` itself, so a listener on its ``streams`` hears
+    every batch. ``mirror`` passes through to ``ApplyKernel.mirror`` (the
+    live-target hook, e.g. sources/live.mongo_ops_mirror for
+    tunnel=direct)."""
     kernel = ApplyKernel(spark, target_dir, dead_letter_dir, mirror=mirror)
     drain_feed(
         spark, feed_dir, kernel.process_batch, checkpoint_dir,
@@ -615,26 +618,16 @@ def drain_feed(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
     timeout_sec: float = 300.0,
-) -> None:
-    """The bounded-drain scaffolding shared by the single-table and
-    multi-namespace entry points: availableNow run of the replay feed
-    through ``process_batch`` under one checkpoint. On timeout the query
-    is STOPPED and TimeoutError raised — returning while process_batch
-    is still flushing in the background would hand the caller torn state
-    and leak a running query (the checkpoint makes a re-run resume
-    cleanly)."""
+) -> list[dict]:
+    """Drain the replay feed at ``feed_dir`` through ``process_batch``
+    under one checkpoint, as one ``streaming/drain.drain`` run in
+    ``spark``; returns the drain's per-batch progress. On timeout the
+    query is stopped and TimeoutError raised; a re-run resumes from the
+    checkpoint."""
     from mongoshake_spark.streaming.replay import read_oplog_stream
 
     stream = read_oplog_stream(spark, feed_dir, max_files_per_trigger)
-    q = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    writer = stream.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_dir
     )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(
-            f"incremental sync did not drain within {timeout_sec}s; "
-            "stream stopped — re-run to resume from the checkpoint"
-        )
+    return drain(writer, "incremental sync", timeout_sec)

@@ -78,11 +78,11 @@ def run_multi_incr_sync(
     **kernel_kwargs,
 ) -> ApplyKernel:
     """Drain a replay feed into the multi-namespace table at ``root_dir``
-    (availableNow run, one checkpoint for the whole deployment — the
-    reference's single replication job over all namespaces). Shares
-    ``drain_feed`` with the single-table entry point: identical
-    timeout/resume contract (TimeoutError, stream stopped, checkpoint
-    resumes)."""
+    (one bounded drain, one checkpoint for the whole deployment — the
+    reference's single replication job over all namespaces). Drains
+    through ``drain_feed``, the single-table entry point's runner, so the
+    timeout/resume contract is ``streaming/drain.drain``'s
+    (TimeoutError, stream stopped, checkpoint resumes)."""
     kernel = multi_ns_kernel(spark, root_dir, **kernel_kwargs)
     drain_feed(
         spark, feed_dir, kernel.process_batch, checkpoint_dir,

@@ -36,12 +36,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from mongoshake_spark.functions.dedup import (
     incremental_minhash_pairs,
     minhash_band_pairs,
     minhash_bands,
 )
+from mongoshake_spark.streaming.drain import drain
 from mongoshake_spark.streaming.index_lifecycle import resolve_store
 
 
@@ -51,12 +53,13 @@ def streaming_lsh_dedup(
     pairs_dir: str,
     checkpoint_dir: str,
     text_col: str = "text",
-    trigger_available_now: bool = True,
-):
-    """Start the ingest-time near-dup stream over ``stream`` (a streaming
-    DataFrame of documents). Returns the started StreamingQuery; pairs
-    accumulate under ``pairs_dir`` as ``(doc_a, doc_b, origin,
-    batch_id)``, the band index under ``index_dir``."""
+) -> DataStreamWriter:
+    """Wire the ingest-time near-dup stream over ``stream`` (a streaming
+    DataFrame of documents). Returns the unstarted, checkpointed writer
+    (``streaming/drain.drain`` runs it to the end of the feed; ``.start()``
+    runs it continuously); pairs accumulate under ``pairs_dir`` as
+    ``(doc_a, doc_b, origin, batch_id)``, the band index under
+    ``index_dir``."""
     spark = stream.sparkSession
 
     fan = spark.sparkContext.defaultParallelism
@@ -104,12 +107,9 @@ def streaming_lsh_dedup(
         # growing an index whose pairs were never reported
         inc_bands.write.mode("append").parquet(idx)
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
+    return stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _index_exists(index_dir: str) -> bool:
@@ -139,10 +139,10 @@ def run_streaming_lsh_dedup(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(feed_dir)
     )
-    q = streaming_lsh_dedup(stream, index_dir, pairs_dir, ckpt, text_col)
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise RuntimeError("streaming_lsh_dedup: drain timed out")
+    drain(
+        streaming_lsh_dedup(stream, index_dir, pairs_dir, ckpt, text_col),
+        "streaming_lsh_dedup", timeout_sec,
+    )
     return spark.read.parquet(pairs_dir).select("doc_a", "doc_b", "origin").distinct()
 
 
@@ -153,8 +153,7 @@ def streaming_phash_dedup(
     checkpoint_dir: str,
     decoder: str = "fake",
     max_hamming: int = 3,
-    trigger_available_now: bool = True,
-):
+) -> DataStreamWriter:
     """MEDIA twin of :func:`streaming_lsh_dedup`: ingest-time perceptual
     near-dup over a media stream. Per micro-batch: fingerprint each
     payload (operators/multimodal.phash64), band the 64-bit hashes with
@@ -223,9 +222,6 @@ def streaming_phash_dedup(
         # index append LAST (crash => batch replays => same pairs re-emit)
         bands.write.mode("append").parquet(idx)
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
+    return stream.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -45,8 +45,8 @@ QUERIES = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SCALE_DIR", "/root/sfscale/sf1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("bench-scaling")
+    cores = spark.sparkContext.defaultParallelism
     from mongoshake_spark.plans import QUERIES as REG
     from mongoshake_spark.functions.dedup import release_shingle_indexes
 

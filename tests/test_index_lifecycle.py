@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mongoshake_spark.streaming import index_lifecycle as lc
+from mongoshake_spark.streaming.drain import drain
 
 
 def _feed_file(df, tmp_path, feed, name):
@@ -53,17 +54,19 @@ def test_band_index_compaction_survives_restart_and_cutover(spark, tmp_path):
     for i in range(2):
         _feed_file(docs.filter(F.col("doc_id") % 2 == i), tmp_path, feed, f"c{i}")
 
-    def drain(ck):
+    def drain_from(ck):
         stream = (
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = streaming_lsh_dedup(stream, index_dir, pairs_dir, str(tmp_path / ck))
-        assert q.awaitTermination(300)
+        drain(
+            streaming_lsh_dedup(stream, index_dir, pairs_dir, str(tmp_path / ck)),
+            "band index drain", 300,
+        )
 
-    drain("ck1")
-    drain("ck2")  # full replay: every band row appended twice
+    drain_from("ck1")
+    drain_from("ck2")  # full replay: every band row appended twice
     inflated = spark.read.parquet(lc.resolve_store(index_dir))
     rows_before, rows_distinct = inflated.count(), inflated.distinct().count()
     assert rows_before == 2 * rows_distinct
@@ -87,7 +90,7 @@ def test_band_index_compaction_survives_restart_and_cutover(spark, tmp_path):
         .select("doc_id", "text")
     )
     _feed_file(extra, tmp_path, feed, "c2")
-    drain("ck1")
+    drain_from("ck1")
     gen_rows = spark.read.parquet(lc.resolve_store(index_dir)).count()
     assert gen_rows > rows_distinct  # batch 3 appended INTO the generation
 
@@ -113,10 +116,12 @@ def test_band_index_retention_predicate(spark, tmp_path):
     index_dir = str(tmp_path / "index")
     _feed_file(docs, tmp_path, feed, "c0")
     stream = spark.readStream.schema(docs.schema).parquet(feed)
-    q = streaming_lsh_dedup(
-        stream, index_dir, str(tmp_path / "pairs"), str(tmp_path / "ck")
+    drain(
+        streaming_lsh_dedup(
+            stream, index_dir, str(tmp_path / "pairs"), str(tmp_path / "ck")
+        ),
+        "band index drain", 300,
     )
-    assert q.awaitTermination(300)
     stats = lc.compact_band_index(spark, index_dir, retention="doc_id >= 50")
     kept = spark.read.parquet(lc.resolve_store(index_dir))
     assert kept.filter(F.col("doc_id") < 50).count() == 0
@@ -135,8 +140,7 @@ def _drain_ann(spark, vecs, feed, index_dir, ck):
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
-    q = streaming_ann_ingest(stream, index_dir, ck)
-    assert q.awaitTermination(600)
+    drain(streaming_ann_ingest(stream, index_dir, ck), "ann ingest drain", 600)
 
 
 def test_ann_store_compaction_preserves_probe(spark, tmp_path):
@@ -202,9 +206,7 @@ def test_ann_generation_guard_fails_loudly_then_restart_resumes(
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
-    q = streaming_ann_ingest(
-        stream, index_dir, ck, trigger_available_now=False
-    )
+    q = streaming_ann_ingest(stream, index_dir, ck).start()  # continuous
     try:
         deadline = time.time() + 300
         codes_flat = os.path.join(index_dir, "codes")

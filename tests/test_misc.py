@@ -31,6 +31,17 @@ def test_config_rejects(kw):
         SyncConfig(**kw).validate()
 
 
+def test_get_spark_master_defaults_to_the_hosts_cores(monkeypatch):
+    import os
+
+    from mongoshake_spark.session import default_master
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_master() == f"local[{len(os.sched_getaffinity(0))}]"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_master() == "local[3]"
+
+
 def test_transform_dbref(spark):
     o = '{"link": {"$ref": "c1", "$db": "db0", "$id": 5}, "other": [1, {"x": 2}]}'
     df = spark.createDataFrame([(1, o)], "id long, o string")

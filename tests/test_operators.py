@@ -50,6 +50,17 @@ def test_gid_filter_empty_passes_all(spark):
     assert [r["id"] for r in out] == [1]
 
 
+def test_strip_gid_nulls_the_gid_and_passes_gidless_frames(spark):
+    """F8 (collector/syncer.go:618-633): the gid is cleared before the
+    oplog leaves the collector; a frame without the column is untouched."""
+    df = _oplog_df(spark, [(1, 1, "i", "a.b", "{}", "g1"), (2, 2, "u", "a.b", "{}", None)])
+    out = filters.strip_gid(df).collect()
+    assert [r["g"] for r in out] == [None, None]
+    assert [tuple(r)[:5] for r in out] == [tuple(r)[:5] for r in df.collect()]
+    no_gid = df.drop("g")
+    assert filters.strip_gid(no_gid) is no_gid
+
+
 def test_ns_regex_compilation():
     """oplog_filter.go:107-124 regex form: exact match OR db-prefix."""
     pat = filters.compile_ns_regex(["db1", "db2.c5"])
@@ -377,6 +388,17 @@ def test_db_fanout_explode(spark):
     assert got == [(1, "t1.c1"), (1, "t2.c1"), (2, "other.c2")]
 
 
+def test_remarshal_serializes_the_named_columns(spark):
+    """N3 (collector/syncer.go:461-480): the named columns re-marshal into
+    one JSON document per row, the other columns ride along."""
+    df = spark.createDataFrame(
+        [(1, "x", 2.5), (2, None, 0.0)], "a long, b string, c double"
+    )
+    out = transforms.remarshal(df, ["a", "b"]).collect()
+    assert [r["value"] for r in out] == ['{"a":1,"b":"x"}', '{"a":2}']
+    assert [r["c"] for r in out] == [2.5, 0.0]
+
+
 def test_flatten_apply_ops(spark):
     o = '{"applyOps":[{"op":"i","ns":"a.b","o":"{\\"x\\":1}"},{"op":"d","ns":"a.c","o":"{\\"y\\":2}"}]}'
     df = spark.createDataFrame([(1, "c", "admin.$cmd", o)], "id long, op string, ns string, o string")
@@ -449,6 +471,31 @@ def test_worker_by_id_preserves_per_key_order(spark):
     out.select("ts", "worker").rdd.mapPartitions(
         lambda it: check(list(it))
     ).count()
+
+
+def test_worker_by_whitelist_hashes_listed_ns_by_key_others_by_ns(spark):
+    """P3 (oplog/hasher.go:87-110): a whitelisted collection hashes by the
+    document key, so one key lands on one worker across whitelisted
+    namespaces and its keys spread; any other namespace hashes by ns,
+    so all of its rows share one worker."""
+    rows = [
+        (i, i, k, "i", ns, "{}", None)
+        for i, (k, ns) in enumerate(
+            (k, ns) for ns in ("a.hot", "a.hot2", "b.cold") for k in range(20)
+        )
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, ts long, user_id long, op string, ns string, o string, g string"
+    )
+    out = partitioners.worker_by_whitelist(df, 8, ["a.hot", "a.hot2"]).collect()
+    by = {(r["ns"], r["user_id"]): r["worker"] for r in out}
+    assert all(by["a.hot", k] == by["a.hot2", k] for k in range(20))
+    assert len({by["a.hot", k] for k in range(20)}) > 1
+    assert len({by["b.cold", k] for k in range(20)}) == 1
+    want = spark.sql(
+        "SELECT pmod(abs(hash('b.cold')), 8) AS w, pmod(abs(hash('7')), 8) AS k"
+    ).first()
+    assert by["b.cold", 0] == want["w"] and by["a.hot", 7] == want["k"]
 
 
 # ---------------------------------------------------------------------------

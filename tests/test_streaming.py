@@ -11,6 +11,7 @@ from mongoshake_spark.operators import merge
 from mongoshake_spark.sources.oplog import oplog_view
 from mongoshake_spark.sources.tables import load_table
 from mongoshake_spark.streaming.apply import ApplyKernel, run_incr_sync
+from mongoshake_spark.streaming.drain import drain, stream_session
 from mongoshake_spark.streaming.replay import read_oplog_stream, write_replay_feed
 
 
@@ -1453,16 +1454,15 @@ def test_ann_ingest_store_matches_batch_and_is_replay_idempotent(
         part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
         os.replace(os.path.join(d, part), f"{feed}/c{i}.parquet")
 
-    def drain(ckpt):
+    def drain_from(ckpt):
         stream = (
             spark.readStream.schema(vecs.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = streaming_ann_ingest(stream, idx, ckpt)
-        assert q.awaitTermination(300)
+        drain(streaming_ann_ingest(stream, idx, ckpt), "ann ingest drain", 300)
 
-    drain(str(tmp_path / "ckpt1"))
+    drain_from(str(tmp_path / "ckpt1"))
     queries = vecs.filter(F.col("vec_id") < 5)
     got1 = sorted(
         tuple(r) for r in ann_index_topk(spark, idx, queries, k=5, n_probe=2).collect()
@@ -1475,7 +1475,7 @@ def test_ann_ingest_store_matches_batch_and_is_replay_idempotent(
     )
     assert got1 == want and len(got1) == 25
     # replay: fresh checkpoint reprocesses every file -> duplicate appends
-    drain(str(tmp_path / "ckpt2"))
+    drain_from(str(tmp_path / "ckpt2"))
     got2 = sorted(
         tuple(r) for r in ann_index_topk(spark, idx, queries, k=5, n_probe=2).collect()
     )
@@ -1534,18 +1534,20 @@ def test_streaming_phash_dedup_matches_batch_and_replays_idempotently(
         part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
         os.replace(os.path.join(d, part), f"{feed}/c{i}.parquet")
 
-    def drain(ck):
+    def drain_from(ck):
         stream = (
             spark.readStream.schema(media.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
         )
-        q = streaming_phash_dedup(
-            stream, str(tmp_path / "index"), str(tmp_path / "pairs"), ck
+        drain(
+            streaming_phash_dedup(
+                stream, str(tmp_path / "index"), str(tmp_path / "pairs"), ck
+            ),
+            "phash drain", 300,
         )
-        assert q.awaitTermination(300)
 
-    drain(str(tmp_path / "ck1"))
+    drain_from(str(tmp_path / "ck1"))
     got = {
         (r["doc_a"], r["doc_b"], r["hamming"])
         for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
@@ -1558,7 +1560,7 @@ def test_streaming_phash_dedup_matches_batch_and_replays_idempotently(
     }
     assert origins == {"increment", "corpus"}
     # replay: fresh checkpoint reprocesses the feed; pair SET unchanged
-    drain(str(tmp_path / "ck2"))
+    drain_from(str(tmp_path / "ck2"))
     got2 = {
         (r["doc_a"], r["doc_b"], r["hamming"])
         for r in spark.read.parquet(str(tmp_path / "pairs")).collect()
@@ -1614,3 +1616,149 @@ def test_write_class_feed_empty_class_fails_loudly(spark, tmp_path):
         _write_class_feed(
             df, F.col("doc_id") % 2, 2, str(tmp_path / "feed"), str(tmp_path)
         )
+
+
+def _two_file_feed(spark, tmp_path):
+    import os
+    import time
+
+    feed = str(tmp_path / "feed")
+    os.makedirs(feed)
+    for i in range(2):
+        d = str(tmp_path / f"b{i}")
+        spark.range(i * 10, i * 10 + 10).coalesce(1).write.parquet(d)
+        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
+        os.replace(os.path.join(d, part), f"{feed}/c{i}.parquet")
+        os.utime(f"{feed}/c{i}.parquet", (time.time() - 10 + i,) * 2)
+    return (
+        spark.readStream.schema("id bigint")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(feed)
+    )
+
+
+def test_drain_returns_per_batch_progress(spark, tmp_path):
+    """One progress entry per micro-batch (two feed files, one file per
+    trigger, a stateless sink: no closing no-data batch), each carrying
+    its ``durationMs`` phases; the rows all reach the sink."""
+    seen = []
+    progress = drain(
+        _two_file_feed(spark, tmp_path)
+        .writeStream.foreachBatch(lambda df, bid: seen.append(df.count()))
+        .option("checkpointLocation", str(tmp_path / "ck")),
+        "two-file drain",
+        300,
+    )
+    assert seen == [10, 10]
+    assert [p["numInputRows"] for p in progress] == [10, 10]
+    assert all("addBatch" in p["durationMs"] for p in progress)
+
+
+def test_drain_timeout_stops_the_query_and_names_it(spark, tmp_path):
+    import time
+
+    def slow(df, bid):
+        time.sleep(2)
+
+    with pytest.raises(TimeoutError, match="slow drain did not drain"):
+        drain(
+            _two_file_feed(spark, tmp_path)
+            .writeStream.foreachBatch(slow)
+            .option("checkpointLocation", str(tmp_path / "ck")),
+            "slow drain",
+            0.5,
+        )
+    assert not spark.streams.active
+
+
+def test_stream_session_is_one_child_per_width_with_the_callers_conf(spark):
+    """One reused child per (caller, width); its SQL conf is the caller's
+    except the width, and follows the caller's later conf changes."""
+    width = "spark.sql.shuffle.partitions"
+    child = stream_session(spark, 8)
+    assert stream_session(spark, 8) is child
+    assert child is not spark and stream_session(spark, 4) is not child
+    assert child.sparkContext is spark.sparkContext
+    # keyed on the caller object: a rebuilt session gets fresh children
+    assert stream_session(spark.newSession(), 8) is not child
+
+    def others(s):
+        return {k: v for k, v in s.conf.getAll.items() if k != width}
+
+    assert child.conf.get(width) == "8"
+    assert others(child) == others(spark)
+    marker = "spark.mongoshake.test.streamSessionMarker"
+    spark.conf.set(marker, "on")
+    try:
+        assert stream_session(spark, 8).conf.get(marker, None) == "on"
+    finally:
+        spark.conf.unset(marker)
+    assert stream_session(spark, 8).conf.get(marker, None) is None
+    assert others(child) == others(spark)
+
+
+def test_stream_session_makes_one_child_per_width_under_contention(spark):
+    """Many threads asking for the same fresh widths at once get one child
+    per width (the lookup-or-create is one atomic step)."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    widths = [5, 6] * 16
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            got = list(ex.map(lambda w: (w, stream_session(spark, w)), widths))
+    finally:
+        sys.setswitchinterval(old)
+    for w in (5, 6):
+        children = {id(c) for width, c in got if width == w}
+        assert len(children) == 1
+    assert {c.conf.get("spark.sql.shuffle.partitions") for _, c in got} == {"5", "6"}
+
+
+def test_concurrent_width_setting_streams_leave_the_session_width_alone(
+    spark, sf_dir
+):
+    """Two stream queries that drain at their own widths (stream_join at 4,
+    stream_dedup at 8) run in two threads on ONE session, while a third
+    thread polls the session's shuffle width: both results must match
+    their DuckDB oracles, and the session must never show another width."""
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mongoshake_spark.plans import QUERIES
+
+    from tests.oracle_harness import compare, run_oracle
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    polled, done = [], threading.Event()
+
+    def poll():
+        while not done.is_set():
+            polled.append(spark.conf.get(key))
+            time.sleep(0.01)
+
+    def run(name):
+        q = QUERIES[name]
+        return compare(q.fn(spark, sf_dir), run_oracle(sf_dir, q.oracle))
+
+    poller = threading.Thread(target=poll, daemon=True)
+    poller.start()
+    try:
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            results = dict(
+                zip(
+                    ("stream_join", "stream_dedup"),
+                    ex.map(run, ("stream_join", "stream_dedup")),
+                )
+            )
+    finally:
+        done.set()
+        poller.join(10)
+    for name, (ok, msg) in results.items():
+        assert ok, f"{name}: {msg}"
+    assert polled and set(polled) == {before}
+    assert spark.conf.get(key) == before
