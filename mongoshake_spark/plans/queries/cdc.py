@@ -1190,14 +1190,7 @@ def q37_multi_ns(spark, sf_dir):
     base = time.time() - len(parts) - 10
     for i, f in enumerate(parts):
         os.utime(os.path.join(feed, f), (base + i, base + i))
-    # n_buckets sized to the fixture like shuffle partitions: each flush
-    # rewrites every touched bucket file, and at ~7k keys 8 buckets keeps
-    # the per-batch file I/O constant small (64-bucket default is a
-    # 100TB-state sizing); kernel semantics are invariant to the bucket
-    # count
-    kernel = run_multi_incr_sync(
-        ss, feed, root, ckpt, max_files_per_trigger=1, n_buckets=8
-    )
+    kernel = run_multi_incr_sync(ss, feed, root, ckpt, max_files_per_trigger=1)
     return (
         kernel.state_view()
         .select("ns", "user_id", "value")
@@ -1356,7 +1349,6 @@ def q40_receiver_daemon(spark, sf_dir):
             idle_timeout=0.5,
             max_wall=120,
             poll=0.05,
-            n_buckets=8,
             # the oracle checks END STATE: let the whole feed settle into
             # ONE kernel flush instead of ~15 4096-row MERGE cycles (the
             # multi-flush micro-batching contract is pinned by the

@@ -66,20 +66,38 @@ spread, not the state size; the reference's apply layer is incremental for
 the same reason (executor/db_writer_bulk.go writes only the batch's
 documents). The slice is re-read from disk every batch, so the plan never
 deepens across batches; the write lands beside the files it replaces,
-not on them, so it needs no checkpoint. ``n_buckets`` is persisted in a
-``_layout.json`` marker inside the state dir; on open, a legacy flat
-``*.parquet`` layout or a bucket-count mismatch triggers a ONE-TIME
-re-bucketing rewrite (staged into a sibling dir and swapped in, so the
-old state survives a crash mid-migration). A state dir whose
-subdirectories hold their own ``_layout.json`` (the retired
-one-kernel-per-namespace layout) is refused at open. On a real cluster
-the state table is Delta and the fold is a single ``MERGE INTO``
-(``_apply_delta``).
+not on them, so it needs no checkpoint.
+
+The bucket count follows the state's row count: a batch's fixed cost
+grows with the buckets it touches (a footer, a file read, a file written
+and two renames each, ~5 ms a file), so a fixed large count costs small
+states dearly. With no ``n_buckets`` given, a new parquet state starts
+at ONE bucket; once a flush leaves a bucket above ``ROWS_PER_BUCKET``
+rows (read from the staged files' footers, no Spark job), the count
+doubles until that bucket's share fits. ``pmod(hash, 2n)`` splits each
+bucket in two, so all growth rewrites together cost O(final state). The
+count only grows, and the one persisted in the ``_layout.json`` marker
+is authoritative on reopen. A given ``n_buckets`` pins the count
+instead: a legacy flat ``*.parquet`` layout or a bucket-count mismatch
+triggers a ONE-TIME re-bucketing rewrite on open.
+
+Growth and migration run the same rebucket (``_rebucket``): the rewrite
+and its marker are staged into a sibling ``.__rebucket__`` dir, the live
+state moves to ``.__old__`` and the rewrite is renamed in. Every open
+(``_recover_rebucket``) restores ``.__old__`` when the state dir is
+missing, or else carries its side tables (the multi-namespace kernel's
+``_dead_letter``) over before dropping it, so no crash point loses a
+committed row. A state dir whose subdirectories hold their own
+``_layout.json`` (the retired one-kernel-per-namespace layout) is refused
+at open. On a real cluster the state table is Delta and the fold is a
+single ``MERGE INTO`` (``_apply_delta``); Delta keeps a fixed count
+(``DELTA_BUCKETS`` when none is given) and refuses a reopen with another.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 from dataclasses import dataclass, field
@@ -101,6 +119,19 @@ TARGET_SCHEMA = "user_id bigint, value double, id bigint"
 STAGING_DIR = "_staging"
 ASIDE_DIR = "_aside"
 
+#: the bucket count of a Delta state opened without one
+DELTA_BUCKETS = 64
+
+#: a rule-sized parquet state doubles its bucket count once a flushed
+#: bucket holds more rows than this. Per-batch medians on 4 cores (4
+#: rounds; seconds at 8 / 16 / 32 / 64 / 256 buckets): 1,024-key batches
+#: over 10k keys 0.64 / 0.75 / 0.80 / 1.09 / 2.14, over 200k keys
+#: 0.96 / 1.05 / 1.10 / 1.39 / 2.40; 32-key batches over 200k keys
+#: (scripts/scale_proof.py's shape) 0.98 / 0.96 / 0.98 / 0.95 / 0.80.
+#: Dense batches touch every bucket, so each bucket is pure file cost;
+#: sparse ones read less per extra bucket. 2**13 gives 200k keys 32.
+ROWS_PER_BUCKET = 1 << 13
+
 
 @dataclass
 class ApplyKernel:
@@ -114,7 +145,9 @@ class ApplyKernel:
     key: str | tuple[str, ...] = "user_id"
     val: str = "value"
     ord: str = "id"
-    n_buckets: int = 64
+    # None: the parquet plane sizes the count by the rule (module
+    # docstring), Delta takes DELTA_BUCKETS; a count pins it
+    n_buckets: int | None = None
     # State-plane format. "parquet" (default) is the self-contained local
     # form: bucket-pruned slice reads + a staged per-bucket swap.
     # "delta" is the 100 TB production form (DEPLOYMENT.md): the same
@@ -140,6 +173,8 @@ class ApplyKernel:
     mirror: object | None = None
     ddl_log: list[tuple] = field(default_factory=list)
     _layout_checked: bool = field(default=False, repr=False)
+    # True when n_buckets follows the state (parquet, no count given)
+    _sized: bool = field(default=False, init=False, repr=False)
     # Low watermark for tombstone compaction: max ordinal across batches
     # whose flush has committed. Replay (at-least-once) re-delivers only
     # the uncommitted batch, whose ordinals are all above this, so op='d'
@@ -172,6 +207,9 @@ class ApplyKernel:
                     "its extensions (delta.pip_utils."
                     "configure_spark_with_delta_pip)"
                 ) from exc
+        self._sized = self.n_buckets is None and not self._is_delta
+        if self.n_buckets is None:
+            self.n_buckets = DELTA_BUCKETS if self._is_delta else 1
         if os.path.isdir(self.target_dir):
             nested = sorted(
                 d for d in os.listdir(self.target_dir)
@@ -212,9 +250,9 @@ class ApplyKernel:
             F.hash(*[F.col(k) for k in self._keys]), F.lit(self.n_buckets)
         )
 
-    def _marker_path(self) -> str:
+    def _marker_path(self, root: str | None = None) -> str:
         # leading underscore: invisible to Spark's file index, like _SUCCESS
-        return os.path.join(self.target_dir, "_layout.json")
+        return os.path.join(root or self.target_dir, "_layout.json")
 
     def _read_marker(self) -> dict:
         """``_layout.json``, or ``{}`` when missing or torn (a legacy
@@ -226,17 +264,17 @@ class ApplyKernel:
         except (OSError, json.JSONDecodeError):
             return {}
 
-    def _write_marker(self) -> None:
+    def _write_marker(self, root: str | None = None) -> None:
         # atomic: the marker rewrites after EVERY flush, so an in-place
         # truncate+write would leave a corrupt file under a crash mid-dump
         # and poison every subsequent open; write-then-rename leaves either
         # the old or the new marker, never a torn one.
-        tmp = self._marker_path() + ".tmp"
-        with open(tmp, "w") as f:
+        path = self._marker_path(root)
+        with open(path + ".tmp", "w") as f:
             json.dump(
                 {"n_buckets": self.n_buckets, "watermark": self._watermark}, f
             )
-        os.replace(tmp, self._marker_path())
+        os.replace(path + ".tmp", path)
 
     def _bucket_dirs(self) -> list[str]:
         if not os.path.isdir(self.target_dir):
@@ -244,22 +282,23 @@ class ApplyKernel:
         return [f for f in os.listdir(self.target_dir) if f.startswith("_bucket=")]
 
     def _ensure_layout(self) -> None:
-        """Open-time layout guard (once per kernel): a legacy flat
-        ``*.parquet`` layout, or a bucketed layout whose ``_layout.json``
-        n_buckets disagrees with this kernel's, is re-bucketed ONCE into
-        the configured layout. Without this, the first bucketed
-        flush into a flat dir would leave the flat files beside the new
-        ``_bucket=`` dirs (conflicting structures / double-counted rows),
-        and resuming with a different n_buckets would scatter keys across
-        two generations of buckets — silent duplicates.
-
-        The rewrite stages into a sibling dir and swaps via rename, so a
-        crash mid-migration leaves the original state intact. A flush cut
-        mid-swap is recovered first (``_recover_swap``).
+        """Layout guard, run before each batch and each state read; it
+        acts once per kernel, and again after a cut rebucket. A cut
+        rebucket is recovered first (``_recover_rebucket``), then the
+        marker is read: a rule-sized kernel adopts its bucket count, and
+        a legacy flat ``*.parquet`` layout, or a bucketed layout whose
+        count disagrees with this kernel's, is re-bucketed ONCE. Without
+        this, the first bucketed flush into a flat dir would leave the
+        flat files beside the new ``_bucket=`` dirs (conflicting
+        structures / double-counted rows), and resuming with a different
+        n_buckets would scatter keys across two generations of buckets —
+        silent duplicates. A flush cut mid-swap is recovered too
+        (``_recover_swap``).
         """
         if self._layout_checked:
             return
         self._layout_checked = True
+        self._recover_rebucket()
         if not os.path.isdir(self.target_dir):
             return
         self._recover_swap()
@@ -302,10 +341,27 @@ class ApplyKernel:
                     "keys — reopen with the original bucket count"
                 )
             return
+        if self._sized and marker is not None:
+            self.n_buckets = marker  # authoritative; the rule only grows it
+        flat = any(f.endswith(".parquet") for f in entries)
+        bucketed = any(f.startswith("_bucket=") for f in entries)
+        if flat or (bucketed and marker != self.n_buckets):
+            # a rule-sized state with no count on record starts over at
+            # the current count; the next flush grows it
+            self._rebucket(self.n_buckets)
+
+    def _rebucket(self, n_buckets: int) -> None:
+        """Rewrite the whole state (flat legacy files and bucket dirs)
+        into ``n_buckets`` buckets: the rewrite and its marker are staged
+        into a sibling dir, then swapped in by two renames (state aside,
+        rewrite in). Until the swap is through, the kernel counts as
+        unchecked, so after a cut the next ``_ensure_layout`` recovers
+        the state and re-reads the count on record."""
+        self._layout_checked = False
+        self.n_buckets = n_buckets
+        entries = os.listdir(self.target_dir)
         flat = [f for f in entries if f.endswith(".parquet")]
         bucketed = [f for f in entries if f.startswith("_bucket=")]
-        if not flat and (not bucketed or marker == self.n_buckets):
-            return
         parts = []
         if flat:
             parts.append(
@@ -319,32 +375,47 @@ class ApplyKernel:
                 .parquet(*[os.path.join(self.target_dir, b) for b in bucketed])
                 .drop("_bucket")
             )
-        full = parts[0]
-        for p in parts[1:]:
-            full = full.unionByName(p)
-        tmp = self.target_dir.rstrip("/") + ".__rebucket__"
-        old = self.target_dir.rstrip("/") + ".__old__"
-        for leftover in (tmp, old):  # debris from a crashed prior migration
-            if os.path.isdir(leftover):
-                shutil.rmtree(leftover)
+        tmp, old = self._rebucket_dirs()
         (
-            full.withColumn("_bucket", self._bucket_expr())
+            reduce(DataFrame.unionByName, parts)
+            .withColumn("_bucket", self._bucket_expr())
             .repartition(self.spark.sparkContext.defaultParallelism, "_bucket")
             .write.mode("overwrite")
             .partitionBy("_bucket")
             .parquet(tmp)
         )
+        self._write_marker(tmp)
         os.rename(self.target_dir, old)
         os.rename(tmp, self.target_dir)
-        # side tables kept under the state dir (the multi-namespace
-        # kernel's default _dead_letter) are not state: carry them over
-        for e in os.listdir(old):
-            if e.startswith("_") and not e.startswith(
-                ("_bucket=", "_SUCCESS", "_layout.json")
-            ):
-                os.rename(os.path.join(old, e), os.path.join(self.target_dir, e))
-        shutil.rmtree(old)
-        self._write_marker()
+        self._recover_rebucket()
+        self._layout_checked = True
+
+    def _rebucket_dirs(self) -> tuple[str, str]:
+        """A rebucket's staged rewrite and the state it set aside."""
+        root = self.target_dir.rstrip("/")
+        return root + ".__rebucket__", root + ".__old__"
+
+    def _recover_rebucket(self) -> None:
+        """Finish or undo a rebucket cut at any point. With the state dir
+        missing, the set-aside state is restored (the rewrite is a pure
+        re-layout, so the old state is as committed as the new). With
+        both present, the swap went through: the side tables kept under
+        the state dir (the multi-namespace kernel's default
+        ``_dead_letter``) are not state and move over before the
+        set-aside dir is dropped. A staged rewrite left behind is debris
+        either way."""
+        tmp, old = self._rebucket_dirs()
+        if os.path.isdir(old) and not os.path.isdir(self.target_dir):
+            os.rename(old, self.target_dir)
+        elif os.path.isdir(old):
+            for e in os.listdir(old):
+                side = os.path.join(self.target_dir, e)
+                if e.startswith("_") and not e.startswith(
+                    ("_bucket=", "_SUCCESS", "_layout.json")
+                ) and not os.path.exists(side):
+                    os.rename(os.path.join(old, e), side)
+            shutil.rmtree(old)
+        shutil.rmtree(tmp, ignore_errors=True)
 
     def _read_slice(self, touched: list[int]) -> tuple[DataFrame | None, list]:
         """The committed rows of the ``touched`` buckets, and the parquet
@@ -366,12 +437,13 @@ class ApplyKernel:
         schema = from_arrow_schema(footers[0].schema.to_arrow_schema())
         return self.spark.read.schema(schema).parquet(*files), footers
 
-    def _apply_parquet(self, crud: DataFrame, touched: list[int]) -> None:
+    def _apply_parquet(self, crud: DataFrame, touched: list[int]) -> int:
         """The batch's one MERGE on the parquet plane (steps 2-5 of the
         module docstring): one ``_bucket`` shuffle, one write. The slice
         read covers ONLY the touched buckets' files and the swap replaces
         only those buckets, so state I/O per batch is O(touched buckets),
-        not O(state)."""
+        not O(state). Returns the rows of the largest flushed bucket, from
+        the staged footers, on a rule-sized kernel (else 0)."""
         self._recover_swap()
         state, footers = self._read_slice(touched)
         self.last_state_files_read = len(footers)
@@ -391,6 +463,13 @@ class ApplyKernel:
         staging = os.path.join(self.target_dir, STAGING_DIR)
         aside = os.path.join(self.target_dir, ASIDE_DIR)
         out.write.mode("overwrite").partitionBy("_bucket").parquet(staging)
+        largest = max(
+            sum(
+                pq.read_metadata(os.path.join(d, f)).num_rows
+                for f in files if f.endswith(".parquet")
+            )
+            for d, _, files in os.walk(staging)
+        ) if self._sized else 0
         # the live dir moves aside before its staged copy comes in, so no
         # crash point loses a bucket (_recover_swap puts it back)
         os.makedirs(aside)
@@ -405,6 +484,7 @@ class ApplyKernel:
         shutil.rmtree(staging)
         if not os.path.isfile(self._marker_path()):
             self._write_marker()
+        return largest
 
     def _recover_swap(self) -> None:
         """Undo a flush cut between its swaps: restore every set-aside
@@ -507,6 +587,8 @@ class ApplyKernel:
     # -- the foreachBatch callback ------------------------------------------
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        # before the census: its bucket ids need the count on record
+        self._ensure_layout()
         batch = batch.persist()
         try:
             if self.journal_dir:
@@ -554,12 +636,12 @@ class ApplyKernel:
             crud = batch.filter(is_crud)
             # barriers before the batch's MERGE commits (module docstring)
             self._apply_ddl(ddl_rows)
+            largest = 0
             if touched:
-                self._ensure_layout()
                 if self._is_delta:
                     self._apply_delta(crud, touched)
                 else:
-                    self._apply_parquet(crud, touched)
+                    largest = self._apply_parquet(crud, touched)
             if self.mirror is not None and touched:
                 # net ops from COMMITTED state (replay-safe: a replayed
                 # batch re-reads the same converged rows), restricted to
@@ -581,6 +663,12 @@ class ApplyKernel:
                 # tombstones are never compacted prematurely
                 self._watermark = max(self._watermark or 0, batch_max)
                 self._write_marker()
+            if largest > ROWS_PER_BUCKET:
+                # the rule: a flushed bucket outgrew its share, so the
+                # count doubles until it fits (after the mirror read the
+                # batch's buckets under the old count)
+                grow = math.ceil(math.log2(largest / ROWS_PER_BUCKET))
+                self._rebucket(self.n_buckets << grow)
         finally:
             batch.unpersist()
 

@@ -18,13 +18,20 @@ only this module changes, nothing downstream.
 
 from __future__ import annotations
 
+import json
 import math
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructField, StructType
 
 from mongoshake_spark.sources.oplog import oplog_view
 from mongoshake_spark.sources.tables import load_table
+
+#: the footer key under which Spark's parquet writer records its schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 # Matches incr_sync.adaptive.batching_max_size=1024 (conf/collector.conf:290)
 DEFAULT_BATCH_ROWS = 1024
@@ -69,8 +76,28 @@ def read_oplog_stream(
     """S1 as a streaming DataFrame: file-source tail of the replay feed.
     `maxFilesPerTrigger` bounds each micro-batch (B1 adaptive batching /
     B7 rate limit — the reference's batching_max_size and QoS collapse
-    into this one admission knob)."""
-    schema = spark.read.parquet(feed_dir).schema
+    into this one admission knob). The schema is read on the driver from
+    one feed file's footer, as Spark's own inference reads it (the Spark
+    schema its writer recorded, else the Arrow types; every column
+    nullable): building the stream runs no Spark job."""
+    files = sorted(
+        f for f in os.listdir(feed_dir)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    if not files:
+        raise FileNotFoundError(
+            f"replay feed {feed_dir} holds no parquet file to take the "
+            "stream's schema from"
+        )
+    arrow = pq.read_schema(os.path.join(feed_dir, files[0]))
+    recorded = (arrow.metadata or {}).get(SPARK_SCHEMA_KEY)
+    footer = (
+        StructType.fromJson(json.loads(recorded))
+        if recorded else from_arrow_schema(arrow)
+    )
+    schema = StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in footer]
+    )
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

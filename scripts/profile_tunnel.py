@@ -77,7 +77,6 @@ def main() -> None:
                 idle_timeout=0.5,
                 max_wall=120,
                 poll=0.05,
-                n_buckets=8,
                 batch_rows=1_000_000,
                 on_ready=lambda p: (box.__setitem__("port", p), port_ready.set()),
             )

@@ -256,7 +256,8 @@ def test_batch_over_wide_state_runs_five_jobs_one_file_per_bucket(
     write), also when its slice spans more bucket files than Spark's
     default parallel-listing threshold (32). After each flush every
     bucket dir holds exactly one parquet file, whatever the write
-    width."""
+    width. The count is pinned at 64: a rule-sized kernel keeps this
+    state in one bucket."""
     import datetime
     import os
 
@@ -273,7 +274,7 @@ def test_batch_over_wide_state_runs_five_jobs_one_file_per_bucket(
         )
 
     target = str(tmp_path / "t")
-    kernel = ApplyKernel(spark, target)
+    kernel = ApplyKernel(spark, target, n_buckets=64)
     kernel.process_batch(batch(0), 0)
     sc = spark.sparkContext
     group = "apply-jobs-wide-slice"
@@ -393,6 +394,191 @@ def test_crash_between_bucket_swaps_replays_to_same_state(
         entries = set(os.listdir(target))
         assert not {STAGING_DIR, ASIDE_DIR} & entries
         assert f"_bucket={doomed}" not in entries
+
+
+def test_rebucket_cut_between_its_renames_loses_no_row(
+    spark, tmp_path, monkeypatch
+):
+    """A rebucket cut between its two renames (the state set aside, the
+    rewrite not yet in) loses nothing: the next open restores the
+    set-aside state, and the rebucket then completes with every committed
+    row and the ``_dead_letter`` side table kept under the state dir."""
+    import os
+
+    from mongoshake_spark.streaming.multi import multi_ns_kernel
+
+    root = str(tmp_path / "root")
+    rows = [
+        (i, None, i % 30, "iu"[i % 2], f"db0.c{i % 3}", float(i), "{}")
+        for i in range(1, 200)
+    ] + [(500, None, 7, "i", None, 1.0, "{}")]  # NULL ns: dead letter
+    multi_ns_kernel(spark, root, n_buckets=2).process_batch(
+        spark.createDataFrame(rows, _MULTI_SCHEMA), 0
+    )
+
+    def rows_of(kernel):
+        return sorted(tuple(r) for r in kernel.state_view().collect())
+
+    want = rows_of(multi_ns_kernel(spark, root))
+
+    real_rename, calls = os.rename, []
+
+    def rename(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("injected crash between the rebucket's renames")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", rename)
+        with pytest.raises(OSError, match="injected"):
+            multi_ns_kernel(spark, root, n_buckets=8).state_view()
+    assert not os.path.exists(root)  # the cut left the state set aside
+
+    kernel = multi_ns_kernel(spark, root, n_buckets=8)
+    assert rows_of(kernel) == want
+    assert kernel.n_buckets == 8
+    dead = spark.read.parquet(f"{root}/_dead_letter").collect()
+    assert [r["id"] for r in dead] == [500]
+    assert sorted(os.listdir(tmp_path)) == ["root"]
+
+
+def test_bucket_count_grows_past_rows_per_bucket(spark, tmp_path):
+    """A rule-sized state starts at one bucket; a flush that leaves a
+    bucket above ``ROWS_PER_BUCKET`` rows doubles the count until its
+    share fits, every row survives, later batches fold under the new
+    count, and a reopened kernel keeps it."""
+    import json
+    import os
+
+    from mongoshake_spark.streaming.apply import ROWS_PER_BUCKET
+
+    n = 5 * ROWS_PER_BUCKET // 2  # one bucket's share fits at 4 buckets
+
+    def batch(first, n_keys, op):
+        return spark.range(n_keys).select(
+            (F.col("id") + first).alias("id"),
+            F.lit(None).cast("timestamp").alias("ts"),
+            F.col("id").alias("user_id"),
+            F.lit(op).alias("op"),
+            F.lit("db0.c1").alias("ns"),
+            (F.col("id") + first).cast("double").alias("value"),
+            F.lit("{}").alias("o"),
+        )
+
+    target = str(tmp_path / "t")
+    kernel = ApplyKernel(spark, target)
+    kernel.process_batch(batch(1, 100, "i"), 0)
+    assert kernel.n_buckets == 1
+    kernel.process_batch(batch(1000, n, "i"), 1)
+    assert kernel.n_buckets == 4
+    with open(os.path.join(target, "_layout.json")) as f:
+        assert json.load(f) == {"n_buckets": 4, "watermark": 1000 + n - 1}
+    buckets = sorted(d for d in os.listdir(target) if d.startswith("_bucket="))
+    assert buckets == [f"_bucket={b}" for b in range(4)]
+    kernel.process_batch(batch(10**6, 10, "u"), 2)
+    got = {r["user_id"]: r["value"] for r in kernel.state_view().collect()}
+    assert got == {k: float(k + (10**6 if k < 10 else 1000)) for k in range(n)}
+    reopened = ApplyKernel(spark, target)
+    reopened.process_batch(batch(2 * 10**6, 1, "u"), 3)
+    assert reopened.n_buckets == 4
+    assert reopened.state_view().count() == n
+
+
+def test_rule_sized_and_pinned_kernels_reach_identical_state(
+    spark, feed, tmp_path, monkeypatch
+):
+    """The bucket count is layout, not semantics: one feed drained by a
+    rule-sized kernel, by one whose rule grows mid-stream (a lowered
+    ``ROWS_PER_BUCKET``) and by one pinned at 64 gives identical
+    ``state_view()`` rows."""
+    from mongoshake_spark.streaming import apply
+    from mongoshake_spark.streaming.apply import drain_feed
+
+    def drained(name, **kw):
+        kernel = ApplyKernel(spark, str(tmp_path / name), **kw)
+        drain_feed(spark, feed, kernel.process_batch, str(tmp_path / f"{name}_ck"))
+        return kernel, sorted(tuple(r) for r in kernel.state_view().collect())
+
+    rule, rows = drained("rule")
+    pinned, pinned_rows = drained("pinned", n_buckets=64)
+    with monkeypatch.context() as m:
+        m.setattr(apply, "ROWS_PER_BUCKET", 2)
+        grown, grown_rows = drained("grown")
+    assert (rule.n_buckets, pinned.n_buckets) == (1, 64)
+    assert grown.n_buckets >= 8  # 15 keys, at most 2 rows a bucket
+    assert rows and rows == pinned_rows == grown_rows
+
+
+_VANILLA_APPLY_JOBS = """
+import datetime, json, sys, tempfile
+from pyspark.sql import SparkSession
+from mongoshake_spark.streaming.apply import ApplyKernel
+
+spark = (SparkSession.builder.master("local[4]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+sc, t0 = spark.sparkContext, datetime.datetime(2024, 1, 1)
+kernel = ApplyKernel(spark, tempfile.mkdtemp(dir=sys.argv[1]))
+jobs = []
+for b in range(4):
+    batch = spark.createDataFrame(
+        [(1000 * b + i, t0 + datetime.timedelta(seconds=1000 * b + i),
+          (7 * i + b) % 150, "iud"[i % 3], "db0.c1", float(i), "{}")
+         for i in range(1000)],
+        "id long, ts timestamp, user_id long, op string, ns string, "
+        "value double, o string")
+    sc.setJobGroup(f"g{b}", f"g{b}")
+    kernel.process_batch(batch, b)
+    jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"g{b}")))
+print(json.dumps(jobs[1:]))
+"""
+
+
+def test_apply_runs_at_most_five_jobs_per_batch_on_a_vanilla_session(
+    tmp_path,
+):
+    """On a session built with no engine settings of ours (as an outside
+    driver builds it), a default kernel's batch over existing state runs
+    at most five Spark jobs: a fixed 64-bucket layout touched ~58 slice
+    files, more than Spark's default parallel-listing threshold (32), and
+    paid a sixth job for the listing. Runs in a fresh interpreter, since
+    this process's session is ``get_spark``'s."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _VANILLA_APPLY_JOBS, str(tmp_path)],
+        cwd=repo, capture_output=True, text=True, timeout=300,
+        env={**os.environ, "PYTHONPATH": repo},
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    jobs = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len(jobs) == 3 and max(jobs) <= 5, jobs
+
+
+def test_feed_stream_schema_comes_from_one_footer(spark, feed, tmp_path):
+    """``read_oplog_stream`` takes the feed's schema from one file's
+    footer on the driver: it equals Spark's inferred schema, building the
+    stream runs no Spark job, and an empty feed dir fails naming it."""
+    import os
+
+    sc = spark.sparkContext
+    sc.setJobGroup("feed-schema", "feed-schema")
+    try:
+        stream = read_oplog_stream(spark, feed)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("feed-schema") == []
+    assert stream.schema == spark.read.parquet(feed).schema
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    with pytest.raises(FileNotFoundError, match="no parquet file") as err:
+        read_oplog_stream(spark, empty)
+    assert empty in str(err.value)
 
 
 W7_BAD_ROWS = {
