@@ -19,8 +19,9 @@ read-union-rewrite on plain parquet here).
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import lru_cache
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -79,18 +80,33 @@ def merge_upsert(
     column meet in one task, so a ``partitionBy`` write of the result
     emits one file per value.
     """
-    keys = [key_col] if isinstance(key_col, str) else list(key_col)
-    rows = updates.filter(F.col(op_col).isin("i", "u", "d"))
+    keys = (key_col,) if isinstance(key_col, str) else tuple(key_col)
+    is_op, cols, folds = _fold_exprs(keys, val_col, ord_col, op_col)
+    rows = updates.filter(is_op)
     if target is not None:
-        cols = [*keys, val_col, op_col, ord_col]
         rows = target.select(*cols).unionByName(rows.select(*cols))
     if partition_by is not None:
         width = rows.sparkSession.sparkContext.defaultParallelism
-        rows = rows.repartition(width, partition_by)
-    return rows.groupBy(*keys).agg(
-        F.expr(f"max_by({val_col}, {ord_col})").alias(val_col),
-        F.expr(f"max_by({op_col}, {ord_col})").alias(op_col),
-        F.max(ord_col).alias(ord_col),
+        rows = rows.repartition(width, cols[keys.index(partition_by)])
+    return rows.groupBy(*cols[: len(keys)]).agg(*folds)
+
+
+@lru_cache(maxsize=None)
+def _fold_exprs(
+    keys: tuple[str, ...], val_col: str, ord_col: str, op_col: str
+) -> tuple[Column, tuple[Column, ...], tuple[Column, ...]]:
+    """``merge_upsert``'s op filter, state columns (keys first) and fold
+    aggregates, built once per column naming: under PySpark's call-site
+    capture each Column call is several py4j round trips, and the apply
+    kernel folds every micro-batch."""
+    return (
+        F.col(op_col).isin("i", "u", "d"),
+        tuple(F.col(c) for c in (*keys, val_col, op_col, ord_col)),
+        (
+            F.expr(f"max_by({val_col}, {ord_col})").alias(val_col),
+            F.expr(f"max_by({op_col}, {ord_col})").alias(op_col),
+            F.max(ord_col).alias(ord_col),
+        ),
     )
 
 
@@ -111,8 +127,10 @@ def compact(
     consulted again and is dead weight. Without this, 100 TB of churn grows
     state monotonically with every key ever deleted.
     """
+    # a SQL string: one py4j call, where the Column form costs a few
+    # dozen on every flush
     return state.filter(
-        ~((F.col(op_col) == "d") & (F.col(ord_col) <= F.lit(low_watermark)))
+        f"NOT (`{op_col}` = 'd' AND `{ord_col}` <= {int(low_watermark)})"
     )
 
 

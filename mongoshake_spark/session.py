@@ -14,7 +14,16 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+LISTING_KEY = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 LISTING_THRESHOLD = "256"
+#: writes each streaming metadata log file (offsets, commits, sources)
+#: through ``FileSystem.rename``; Spark's default renames through
+#: ``FileContext``, whose link check runs a ``readlink`` process on a
+#: local filesystem without the native Hadoop library (DEPLOYMENT.md)
+CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def default_master() -> str:
@@ -32,6 +41,15 @@ def get_spark(app_name: str = "mongoshake_spark", master: str | None = None) -> 
     manager) and ``spark.sql.shuffle.partitions`` (≈ 2-3× total cores);
     AQE re-coalesces small post-shuffle partitions at runtime either way,
     and splits skewed ones (skew-join on).
+
+    Streaming queries keep their offset and commit logs through
+    ``CHECKPOINT_MANAGER``: with Spark's default manager the stream
+    thread started ~24 ``readlink`` processes per micro-batch here (the
+    link checks of its log-file renames); the swap cut a traced
+    ``oplog_catchup`` trigger's non-``addBatch`` time from 0.115 to
+    0.040-0.045 s at 4 cores. The apply kernel plans its batches in a
+    child session with its own settings (``streaming/apply.ApplyKernel``);
+    nothing else in the engine moves off the caller's session.
     """
     master = master or default_master()
     # one BLAS thread per task slot: Spark already runs one python worker
@@ -71,13 +89,16 @@ def get_spark(app_name: str = "mongoshake_spark", master: str | None = None) -> 
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # The driver lists up to this many paths itself instead of running
-        # a Spark listing job (one task per path; default 32). Above the
-        # streaming apply kernel's 64-bucket slice, so its per-batch state
-        # read launches no job (measured 270-370 ms per batch for the
-        # 58-task job on oplog_catchup, 4 cores). An object-store
-        # deployment with slow per-path listing may want it lower again.
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-                LISTING_THRESHOLD)
+        # a Spark listing job (one task per path; default 32). Above a
+        # 64-bucket apply state, so reading it whole launches no job
+        # (measured 270-370 ms per batch for the 58-task job on
+        # oplog_catchup, 4 cores); the apply kernel's own session sets
+        # it for its slice reads whatever the caller's session says. An
+        # object-store deployment with slow per-path listing may want it
+        # lower again.
+        .config(LISTING_KEY, LISTING_THRESHOLD)
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                CHECKPOINT_MANAGER)
         # The fixture parquet stores TIMESTAMP(NANOS); Spark has no ns type.
         # Read as long and convert in sources.tables.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -43,7 +43,7 @@ same MERGE. Each micro-batch:
    the max ordinal, the W7 bad-row count and the DDL rows,
 2. reads ONLY the touched buckets' files back, with the schema of their
    footers (untouched buckets are never opened; Spark infers nothing,
-   and the driver lists the files: session.get_spark raises Spark's
+   and the driver lists the files: the kernel's session raises Spark's
    parallel-listing threshold above the slice),
 3. MERGEs the batch into that slice in ONE fold: the slice and the
    batch's CRUD rows are unioned, hash-partitioned on ``_bucket`` across
@@ -67,6 +67,22 @@ the same reason (executor/db_writer_bulk.go writes only the batch's
 documents). The slice is re-read from disk every batch, so the plan never
 deepens across batches; the write lands beside the files it replaces,
 not on them, so it needs no checkpoint.
+
+The kernel plans steps 1-4 in a session of its own, made once per
+kernel: a ``newSession()`` child of the caller (the same SparkContext
+and cache, its own SQL conf), kept in sync with the caller's conf the
+way ``streaming/drain.stream_session`` keeps its children, with AQE off,
+``spark.sql.shuffle.partitions`` at the default parallelism and the
+driver-listing threshold of ``session.get_spark``. The persisted batch
+enters it through a global temp view named per kernel. A batch then runs
+two Spark jobs, the census and the fold with its write (five at AQE on:
+a cache stage, and each shuffle split off into a job of its own), and
+the stream itself stays on the caller's session, where its listeners
+hear it; ``state_view`` reads there too. The batch's Column expressions
+are built once per bucket count (``_exprs``), not per batch: under
+PySpark's call-site capture each Column call is several py4j round
+trips, and a batch made 646 of them when it rebuilt its expressions; it
+now makes ~100.
 
 The bucket count follows the state's row count: a batch's fixed cost
 grows with the buckets it touches (a footer, a file read, a file written
@@ -100,16 +116,19 @@ import json
 import math
 import os
 import shutil
+import uuid
 from dataclasses import dataclass, field
 from functools import reduce
+from typing import NamedTuple
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from mongoshake_spark.operators import merge
-from mongoshake_spark.streaming.drain import drain
+from mongoshake_spark.session import LISTING_KEY, LISTING_THRESHOLD
+from mongoshake_spark.streaming.drain import WIDTH_KEY, drain, synced_child
 
 TARGET_SCHEMA = "user_id bigint, value double, id bigint"
 
@@ -131,6 +150,15 @@ DELTA_BUCKETS = 64
 #: Dense batches touch every bucket, so each bucket is pure file cost;
 #: sparse ones read less per extra bucket. 2**13 gives 200k keys 32.
 ROWS_PER_BUCKET = 1 << 13
+
+
+class _Exprs(NamedTuple):
+    """A batch's Column expressions at one bucket count."""
+
+    bucket: Column  # pmod(hash(*key), n_buckets)
+    crud: Column  # a CRUD row with its key columns and ordinal set
+    bad: Column  # a row no path applies (W7)
+    census: tuple[Column, ...]  # the census's group key, then aggregates
 
 
 @dataclass
@@ -190,6 +218,17 @@ class ApplyKernel:
     # tests/test_streaming.py.
     last_state_files_read: int = field(default=0, repr=False)
     last_state_rows_read: int = field(default=0, repr=False)
+    # the session the kernel plans in, what it sets over the caller's
+    # conf, the caller's conf it was synced to, and the (database, name)
+    # of the global temp view a batch enters it through
+    _session: SparkSession | None = field(default=None, init=False, repr=False)
+    _settings: dict[str, str] = field(default_factory=dict, init=False, repr=False)
+    _synced: object = field(default=None, init=False, repr=False)
+    _view: tuple[str, str] = field(default=("", ""), init=False, repr=False)
+    # _Exprs and the bucket count they were built for
+    _built: tuple[int, _Exprs] | None = field(
+        default=None, init=False, repr=False
+    )
 
     def __post_init__(self) -> None:
         if self.state_format not in ("parquet", "delta"):
@@ -207,6 +246,22 @@ class ApplyKernel:
                     "its extensions (delta.pip_utils."
                     "configure_spark_with_delta_pip)"
                 ) from exc
+        # the kernel's session: AQE off runs a batch in two jobs (the
+        # census; the fold and its write) instead of five, at the width
+        # AQE would coalesce to, one partition per task slot (AQE off at
+        # a 32-wide shuffle took a fold-and-write 0.22 -> 0.61 s). The
+        # listing threshold keeps a slice read on the driver whatever
+        # the caller's session says.
+        self._settings = {
+            "spark.sql.adaptive.enabled": "false",
+            WIDTH_KEY: str(self.spark.sparkContext.defaultParallelism),
+            LISTING_KEY: LISTING_THRESHOLD,
+        }
+        self._plan_session()
+        self._view = (
+            self.spark.conf.get("spark.sql.globalTempDatabase"),
+            f"apply_batch_{uuid.uuid4().hex}",
+        )
         self._sized = self.n_buckets is None and not self._is_delta
         if self.n_buckets is None:
             self.n_buckets = DELTA_BUCKETS if self._is_delta else 1
@@ -239,16 +294,60 @@ class ApplyKernel:
     def _delta_table(self):
         from delta.tables import DeltaTable
 
-        if DeltaTable.isDeltaTable(self.spark, self.target_dir):
-            return DeltaTable.forPath(self.spark, self.target_dir)
+        if DeltaTable.isDeltaTable(self._session, self.target_dir):
+            return DeltaTable.forPath(self._session, self.target_dir)
         return None
+
+    # -- the kernel's session -------------------------------------------------
+
+    def _plan_session(self) -> SparkSession:
+        """The kernel's session, re-synced if the caller's conf changed."""
+        self._session, self._synced = synced_child(
+            self.spark, self._settings, self._session, self._synced
+        )
+        return self._session
+
+    def _exprs(self) -> _Exprs:
+        """The batch's Column expressions, built once per bucket count:
+        under PySpark's call-site capture each Column call costs several
+        py4j round trips, ~550 of a batch's 646 when rebuilt per batch."""
+        if self._built is None or self._built[0] != self.n_buckets:
+            # W7: rows which cannot be applied reach the dead-letter
+            # table — an unknown or NULL op, a CRUD row with a NULL key
+            # column or a NULL ordinal (nothing to merge on or to order
+            # by), a command with a NULL ns (no namespace to run on).
+            # coalesce makes the test null-safe: a plain filter on a NULL
+            # predicate would silently DROP the row from every path
+            # (not quarantined, not applied)
+            op = F.col("op")
+            keyed = reduce(
+                lambda a, b: a & b,
+                [F.col(c).isNotNull() for c in (*self._keys, self.ord)],
+            )
+            crud = op.isin("i", "u", "d") & keyed
+            ddl = (op == "c") & F.col("ns").isNotNull()
+            bad = ~F.coalesce(crud | ddl | (op == "n"), F.lit(False))
+            bucket = F.pmod(
+                F.hash(*[F.col(k) for k in self._keys]), F.lit(self.n_buckets)
+            )
+            # the census: one aggregate, one row per touched bucket with
+            # its max ordinal (the next watermark candidate), plus one
+            # row (_b NULL) carrying the DDL rows and the bad-row count
+            census = (
+                F.when(crud, bucket).alias("_b"),
+                F.max(self.ord).alias("_m"),
+                F.count_if(bad).alias("_bad"),
+                F.collect_list(
+                    F.when(ddl, F.struct("id", "ts", "ns", "o"))
+                ).alias("_ddl"),
+            )
+            self._built = (self.n_buckets, _Exprs(bucket, crud, bad, census))
+        return self._built[1]
 
     # -- target state -------------------------------------------------------
 
-    def _bucket_expr(self):
-        return F.pmod(
-            F.hash(*[F.col(k) for k in self._keys]), F.lit(self.n_buckets)
-        )
+    def _bucket_expr(self) -> Column:
+        return self._exprs().bucket
 
     def _marker_path(self, root: str | None = None) -> str:
         # leading underscore: invisible to Spark's file index, like _SUCCESS
@@ -365,13 +464,13 @@ class ApplyKernel:
         parts = []
         if flat:
             parts.append(
-                self.spark.read.parquet(
+                self._session.read.parquet(
                     *[os.path.join(self.target_dir, f) for f in flat]
                 )
             )
         if bucketed:
             parts.append(
-                self.spark.read.option("basePath", self.target_dir)
+                self._session.read.option("basePath", self.target_dir)
                 .parquet(*[os.path.join(self.target_dir, b) for b in bucketed])
                 .drop("_bucket")
             )
@@ -435,7 +534,7 @@ class ApplyKernel:
         if not files:
             return None, footers
         schema = from_arrow_schema(footers[0].schema.to_arrow_schema())
-        return self.spark.read.schema(schema).parquet(*files), footers
+        return self._session.read.schema(schema).parquet(*files), footers
 
     def _apply_parquet(self, crud: DataFrame, touched: list[int]) -> int:
         """The batch's one MERGE on the parquet plane (steps 2-5 of the
@@ -543,7 +642,7 @@ class ApplyKernel:
                 .mode("overwrite")
                 .save(self.target_dir)
             )
-            t = DeltaTable.forPath(self.spark, self.target_dir)
+            t = DeltaTable.forPath(self._session, self.target_dir)
         if self._watermark is not None:
             buckets = ", ".join(str(int(b)) for b in touched)
             t.delete(
@@ -589,51 +688,30 @@ class ApplyKernel:
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         # before the census: its bucket ids need the count on record
         self._ensure_layout()
+        spark = self._plan_session()
+        db, view = self._view
+        # persisted, so the census and the fold share one scan of the
+        # feed (the trigger's progress counts the rows of every scan)
         batch = batch.persist()
         try:
+            batch.createOrReplaceGlobalTempView(view)
+            rows = spark.table(f"{db}.{view}")
+            ex = self._exprs()
             if self.journal_dir:
                 # M4 audit journal (collector/syncer.go:635-638): append-only
                 # side output of every oplog handled, before filtering.
-                batch.write.mode("append").parquet(self.journal_dir)
-            # W7: rows which cannot be applied reach the dead-letter
-            # table — an unknown or NULL op, a CRUD row with a NULL key
-            # column or a NULL ordinal (nothing to merge on or to order
-            # by), a command with a NULL ns (no namespace to run on).
-            # coalesce makes the test null-safe: a plain filter on a NULL
-            # predicate would silently DROP the row from every path
-            # (not quarantined, not applied)
-            op = F.col("op")
-            keyed = reduce(
-                lambda a, b: a & b,
-                [F.col(c).isNotNull() for c in (*self._keys, self.ord)],
-            )
-            is_crud = op.isin("i", "u", "d") & keyed
-            is_ddl = (op == "c") & F.col("ns").isNotNull()
-            bad = ~F.coalesce(is_crud | is_ddl | (op == "n"), F.lit(False))
-            # the census: one aggregate, one row per touched bucket with
-            # its max ordinal (the next watermark candidate), plus one
-            # row (_b NULL) carrying the DDL rows and the bad-row count
-            census = (
-                batch.groupBy(F.when(is_crud, self._bucket_expr()).alias("_b"))
-                .agg(
-                    F.max(self.ord).alias("_m"),
-                    F.count_if(bad).alias("_bad"),
-                    F.collect_list(
-                        F.when(is_ddl, F.struct("id", "ts", "ns", "o"))
-                    ).alias("_ddl"),
-                )
-                .collect()
-            )
+                rows.write.mode("append").parquet(self.journal_dir)
+            census = rows.groupBy(ex.census[0]).agg(*ex.census[1:]).collect()
             per_bucket = {r["_b"]: r["_m"] for r in census if r["_b"] is not None}
             touched = list(per_bucket)
             batch_max = max(per_bucket.values(), default=None)
             if self.dead_letter_dir and any(r["_bad"] for r in census):
-                batch.filter(bad).write.mode("append").parquet(self.dead_letter_dir)
+                rows.filter(ex.bad).write.mode("append").parquet(self.dead_letter_dir)
             ddl_rows = sorted(
                 (d for r in census for d in r["_ddl"]),
                 key=lambda d: (d["ts"], d["id"]),
             )
-            crud = batch.filter(is_crud)
+            crud = rows.filter(ex.crud)
             # barriers before the batch's MERGE commits (module docstring)
             self._apply_ddl(ddl_rows)
             largest = 0
@@ -649,7 +727,7 @@ class ApplyKernel:
                 # slice read _apply_parquet uses, never O(state)
                 keys = crud.select(*self._keys).distinct()
                 committed = (
-                    self.spark.read.format("delta").load(self.target_dir)
+                    spark.read.format("delta").load(self.target_dir)
                     .filter(F.col("_bucket").isin(touched)).drop("_bucket")
                     if self._is_delta else self._read_slice(touched)[0]
                 )
@@ -670,6 +748,7 @@ class ApplyKernel:
                 grow = math.ceil(math.log2(largest / ROWS_PER_BUCKET))
                 self._rebucket(self.n_buckets << grow)
         finally:
+            spark.catalog.dropGlobalTempView(view)
             batch.unpersist()
 
 

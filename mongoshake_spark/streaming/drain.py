@@ -12,7 +12,8 @@ child session from :func:`stream_session` instead of setting the width
 on a session other queries share: queries run concurrently on one
 session (bench.py's client pool), and a set-then-restore of
 ``spark.sql.shuffle.partitions`` there leaks into whatever else plans in
-that window.
+that window. The apply kernel plans its batches in a child of its own
+the same way (:func:`synced_child`).
 """
 
 from __future__ import annotations
@@ -62,21 +63,35 @@ def stream_session(spark: SparkSession, width: int) -> SparkSession:
     changed re-syncs the child. A StreamingQueryListener only hears
     queries of its own session, so a drain whose listener sits on the
     caller must not move here."""
+    with _CHILDREN_LOCK:
+        children = _CHILDREN.setdefault(spark, {})
+        children[width] = synced_child(
+            spark, {WIDTH_KEY: str(width)}, *children.get(width, (None, None))
+        )
+        return children[width][0]
+
+
+def synced_child(
+    spark: SparkSession,
+    overrides: dict[str, str],
+    child: SparkSession | None = None,
+    synced: object = None,
+) -> tuple[SparkSession, object]:
+    """``child`` (a new ``spark.newSession()`` when None) with its conf
+    made equal to the caller's plus ``overrides``, and the caller's conf
+    it now matches. ``synced`` is that conf from the previous call: the
+    child is re-synced only when the caller's conf differs from it."""
     # the caller's conf as an immutable JVM map: comparing it there costs
     # two py4j calls, where ``conf.getAll`` costs one per entry (~40 ms)
     snapshot = spark.conf._jconf.getAll()
-    with _CHILDREN_LOCK:
-        children = _CHILDREN.setdefault(spark, {})
-        child, synced = children.get(width, (None, None))
-        if child is None:
-            child = spark.newSession()
-        if synced is None or not snapshot.equals(synced):
-            want = {**spark.conf.getAll, WIDTH_KEY: str(width)}
-            have = child.conf.getAll
-            for key in have.keys() - want.keys():
-                child.conf.unset(key)
-            for key, value in want.items():
-                if have.get(key) != value:
-                    child.conf.set(key, value)
-            children[width] = (child, snapshot)
-    return child
+    if child is None:
+        child = spark.newSession()
+    if synced is None or not snapshot.equals(synced):
+        want = {**spark.conf.getAll, **overrides}
+        have = child.conf.getAll
+        for key in have.keys() - want.keys():
+            child.conf.unset(key)
+        for key, value in want.items():
+            if have.get(key) != value:
+                child.conf.set(key, value)
+    return child, snapshot

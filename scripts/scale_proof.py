@@ -151,7 +151,7 @@ def main() -> None:
             "seed_rows": SEED_ROWS,
             "batch_keys": BATCH_KEYS,
             "n_batches": N_BATCHES,
-            "n_buckets": N_BUCKETS,
+            "n_buckets": kernel.n_buckets,
             "seed_sec": round(seed_secs, 3),
             "mean_batch_sec": mean("wall_sec"),
             "rows_per_sec": round(

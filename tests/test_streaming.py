@@ -518,31 +518,33 @@ from mongoshake_spark.streaming.apply import ApplyKernel
 spark = (SparkSession.builder.master("local[4]")
          .config("spark.ui.enabled", "false").getOrCreate())
 sc, t0 = spark.sparkContext, datetime.datetime(2024, 1, 1)
-kernel = ApplyKernel(spark, tempfile.mkdtemp(dir=sys.argv[1]))
-jobs = []
-for b in range(4):
-    batch = spark.createDataFrame(
-        [(1000 * b + i, t0 + datetime.timedelta(seconds=1000 * b + i),
-          (7 * i + b) % 150, "iud"[i % 3], "db0.c1", float(i), "{}")
-         for i in range(1000)],
-        "id long, ts timestamp, user_id long, op string, ns string, "
-        "value double, o string")
-    sc.setJobGroup(f"g{b}", f"g{b}")
-    kernel.process_batch(batch, b)
-    jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"g{b}")))
-print(json.dumps(jobs[1:]))
+out = {}
+for name, n_buckets in (("default", None), ("pinned", 64)):
+    kernel = ApplyKernel(spark, tempfile.mkdtemp(dir=sys.argv[1]),
+                         n_buckets=n_buckets)
+    jobs = []
+    for b in range(4):
+        batch = spark.createDataFrame(
+            [(1000 * b + i, t0 + datetime.timedelta(seconds=1000 * b + i),
+              (7 * i + b) % 150, "iud"[i % 3], "db0.c1", float(i), "{}")
+             for i in range(1000)],
+            "id long, ts timestamp, user_id long, op string, ns string, "
+            "value double, o string")
+        sc.setJobGroup(f"{name}{b}", f"{name}{b}")
+        kernel.process_batch(batch, b)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(f"{name}{b}")))
+    out[name] = {"jobs": jobs[1:], "files": kernel.last_state_files_read}
+print(json.dumps(out))
 """
 
 
-def test_apply_runs_at_most_five_jobs_per_batch_on_a_vanilla_session(
-    tmp_path,
-):
-    """On a session built with no engine settings of ours (as an outside
-    driver builds it), a default kernel's batch over existing state runs
-    at most five Spark jobs: a fixed 64-bucket layout touched ~58 slice
-    files, more than Spark's default parallel-listing threshold (32), and
-    paid a sixth job for the listing. Runs in a fresh interpreter, since
-    this process's session is ``get_spark``'s."""
+@pytest.fixture(scope="module")
+def vanilla_apply_jobs(tmp_path_factory):
+    """Spark jobs per warm batch of a default and of a 64-bucket kernel,
+    and the slice files the latter's last batch read, on a session built
+    with no engine settings of ours (as an outside driver builds it). Run
+    in a fresh interpreter, since this process's session is
+    ``get_spark``'s."""
     import json
     import os
     import subprocess
@@ -550,13 +552,138 @@ def test_apply_runs_at_most_five_jobs_per_batch_on_a_vanilla_session(
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
-        [sys.executable, "-c", _VANILLA_APPLY_JOBS, str(tmp_path)],
+        [sys.executable, "-c", _VANILLA_APPLY_JOBS,
+         str(tmp_path_factory.mktemp("vanilla"))],
         cwd=repo, capture_output=True, text=True, timeout=300,
         env={**os.environ, "PYTHONPATH": repo},
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    jobs = json.loads(out.stdout.strip().splitlines()[-1])
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def test_apply_runs_at_most_five_jobs_per_batch_on_a_vanilla_session(
+    vanilla_apply_jobs,
+):
+    """On a vanilla session a default kernel's batch over existing state
+    runs at most five Spark jobs: a fixed 64-bucket layout touched ~58
+    slice files, more than Spark's default parallel-listing threshold
+    (32), and paid a sixth job for the listing."""
+    jobs = vanilla_apply_jobs["default"]["jobs"]
     assert len(jobs) == 3 and max(jobs) <= 5, jobs
+
+
+def test_apply_runs_at_most_two_jobs_per_batch_on_a_vanilla_session(
+    vanilla_apply_jobs,
+):
+    """The kernel plans in a session of its own whatever the caller's
+    says: on a vanilla session (AQE on, the default listing threshold) a
+    warm batch runs the census and the fold-and-write, two jobs, both on
+    a default kernel and on one pinned at 64 buckets whose slice spans
+    more files than Spark's default parallel-listing threshold (32)."""
+    default, pinned = vanilla_apply_jobs["default"], vanilla_apply_jobs["pinned"]
+    assert pinned["files"] > 32
+    for jobs in (default["jobs"], pinned["jobs"]):
+        assert len(jobs) == 3 and max(jobs) <= 2, vanilla_apply_jobs
+
+
+def _warm_batches(spark, kernel, monkeypatch, n=4):
+    """Feed ``kernel`` ``n`` 1000-row batches over 1500 keys; per batch
+    after the first, the Spark jobs it ran (its job group) and the py4j
+    round trips this thread made inside ``process_batch``."""
+    import collections
+    import datetime
+    import threading
+
+    import py4j.clientserver
+
+    sent = collections.Counter()
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counted(conn, command):
+        sent[threading.get_ident()] += 1
+        return send(conn, command)
+
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", counted
+    )
+    me, sc, t0 = threading.get_ident(), spark.sparkContext, datetime.datetime(2024, 1, 1)
+    out = []
+    for b in range(n):
+        batch = spark.createDataFrame(
+            [(1000 * b + i, t0 + datetime.timedelta(seconds=1000 * b + i),
+              (7 * i + b) % 1500, "iud"[i % 3], "db0.c1", float(i), "{}")
+             for i in range(1000)],
+            _MULTI_SCHEMA,
+        )
+        group = f"warm-{id(kernel)}-{b}"
+        sc.setJobGroup(group, group)
+        try:
+            before = sent[me]
+            kernel.process_batch(batch, b)
+            trips = sent[me] - before
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        out.append((len(sc.statusTracker().getJobIdsForGroup(group)), trips))
+    return out[1:]
+
+
+def test_warm_default_kernel_runs_two_jobs_per_batch(spark, tmp_path, monkeypatch):
+    """A warm default kernel's batch on ``get_spark``'s session runs two
+    Spark jobs: the census (its shuffle reads the batch's cache as it
+    fills it) and the fold with its write. At AQE on there were five: a
+    cache stage, the census's two and the fold's two. The caller's
+    session keeps its own AQE and width."""
+    caller = {k: spark.conf.get(k) for k in (
+        "spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")}
+    kernel = ApplyKernel(spark, str(tmp_path / "t"))
+    jobs = [j for j, _ in _warm_batches(spark, kernel, monkeypatch)]
+    assert max(jobs) <= 2, jobs
+    assert kernel.state_view().count() > 0
+    # the kernel's settings stay in its own session
+    assert {k: spark.conf.get(k) for k in caller} == caller
+
+
+def test_warm_batch_makes_few_py4j_round_trips(spark, tmp_path, monkeypatch):
+    """A warm batch makes at most 150 py4j round trips from its own
+    thread (646 when its Column expressions were rebuilt per batch): the
+    kernel builds them once per bucket count, ``merge_upsert`` once per
+    column naming."""
+    kernel = ApplyKernel(spark, str(tmp_path / "t"))
+    trips = [t for _, t in _warm_batches(spark, kernel, monkeypatch)]
+    assert min(trips) > 0  # the counter sits on the gateway's connection
+    assert max(trips) <= 150, trips
+
+
+def test_checkpoint_log_manager_refuses_to_overwrite(spark, tmp_path):
+    """The session's streaming checkpoint file manager is
+    ``session.CHECKPOINT_MANAGER``, and its no-overwrite create over an
+    existing log file still raises ``FileAlreadyExistsException`` and
+    leaves the file as it was: ``HDFSMetadataLog`` relies on it to refuse
+    a concurrent writer of the same batch ("Concurrent update to the
+    log")."""
+    from py4j.protocol import Py4JJavaError
+
+    from mongoshake_spark.session import CHECKPOINT_MANAGER
+
+    jvm = spark.sparkContext._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    log = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "offsets"))
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(log, conf)
+    assert manager.getClass().getName() == CHECKPOINT_MANAGER
+    manager.mkdirs(log)
+    entry = jvm.org.apache.hadoop.fs.Path(log, "0")
+
+    def write(byte):
+        out = manager.createAtomic(entry, False)
+        out.write(byte)
+        out.close()
+
+    write(1)
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExistsException"):
+        write(2)
+    assert (tmp_path / "offsets" / "0").read_bytes() == b"\x01"
 
 
 def test_feed_stream_schema_comes_from_one_footer(spark, feed, tmp_path):
