@@ -21,6 +21,7 @@ from mongoshake_spark.sources.oplog import (
     oplog_view,
 )
 from mongoshake_spark.sources.tables import load_table, range_scan  # noqa: F401
+from mongoshake_spark.streaming.replay import stamp_feed
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -120,17 +121,16 @@ def _write_class_feed(df, class_expr, n_classes: int, feed_dir: str, tmp: str):
     """Write a replay feed split by DETERMINISTIC arrival class in ONE
     job: ``class_expr`` (int in [0, n_classes)) names each row's
     micro-batch, and every class must land in exactly one parquet file
-    so ``maxFilesPerTrigger=1`` makes file = batch. A ``partitionBy``
+    so a one-file-per-trigger replay makes file = batch. A ``partitionBy``
     write on the class column from a single task yields one file per
     class while scanning/computing ``df`` ONCE — the per-class
     ``filter(pred).coalesce(1)`` loop it replaces ran one full plan per
     class (guide §1.2: don't compute things you throw away N-1 times).
     The data files exclude the class column, so the feed schema is
-    ``df``'s own. Files are mtime-stamped in class order (the file
-    source admits oldest-first)."""
+    ``df``'s own. Files are mtime-stamped in class order
+    (``streaming/replay.stamp_feed``)."""
     import os
     import shutil
-    import time
 
     d = os.path.join(tmp, "_classes")
     (
@@ -155,9 +155,7 @@ def _write_class_feed(df, class_expr, n_classes: int, feed_dir: str, tmp: str):
             ) from None
         os.replace(os.path.join(cdir, part), f"{feed_dir}/class{i}.parquet")
     shutil.rmtree(d, ignore_errors=True)
-    t0 = time.time() - n_classes - 10
-    for i in range(n_classes):
-        os.utime(f"{feed_dir}/class{i}.parquet", (t0 + i, t0 + i))
+    stamp_feed(feed_dir, [f"class{i}.parquet" for i in range(n_classes)])
 
 
 _POLY_SHINGLE = poly_hash_duckdb("shingle")

@@ -14,6 +14,7 @@ from mongoshake_spark.plans.queries._shared import (  # noqa: F401
     similarity,
 )
 from mongoshake_spark.streaming.drain import drain, stream_session
+from mongoshake_spark.streaming.replay import read_oplog_stream
 
 
 
@@ -698,13 +699,10 @@ def stream_ann_ingest_q(spark, sf_dir):
     try:
         ann_index_bootstrap(vecs, index_dir, m=4, k_code=8, iters=2)
         _write_class_feed(vecs, F.col("vec_id") % 3, 3, feed_dir, tmp)
-        stream = (
-            ss.readStream.schema(vecs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed_dir)
-        )
         drain(
-            streaming_ann_ingest(stream, index_dir, ckpt_dir),
+            streaming_ann_ingest(
+                read_oplog_stream(ss, feed_dir), index_dir, ckpt_dir
+            ),
             "stream_ann_ingest",
         )
         out = ann_index_topk(
@@ -743,7 +741,6 @@ def stream_ann_ingest_q(spark, sf_dir):
 def stream_ann_compaction_q(spark, sf_dir):
     import os
     import shutil
-    import time
 
     from mongoshake_spark.streaming.ann_ingest import (
         ann_index_bootstrap,
@@ -762,16 +759,11 @@ def stream_ann_compaction_q(spark, sf_dir):
     feed_dir, index_dir = f"{tmp}/feed", f"{tmp}/index"
     try:
         ann_index_bootstrap(vecs, index_dir, m=4, k_code=8, iters=2)
-        os.makedirs(feed_dir, exist_ok=True)
-        d = f"{tmp}/b0"
-        vecs.coalesce(1).write.mode("overwrite").parquet(d)
-        part = next(f for f in os.listdir(d) if f.endswith(".parquet"))
-        os.replace(os.path.join(d, part), f"{feed_dir}/c0.parquet")
-        os.utime(f"{feed_dir}/c0.parquet", (time.time() - 10,) * 2)
-
-        stream = ss.readStream.schema(vecs.schema).parquet(feed_dir)
+        _write_class_feed(vecs, F.lit(0), 1, feed_dir, tmp)
         drain(
-            streaming_ann_ingest(stream, index_dir, f"{tmp}/ck1"),
+            streaming_ann_ingest(
+                read_oplog_stream(ss, feed_dir), index_dir, f"{tmp}/ck1"
+            ),
             "stream_ann_compaction",
         )
         # crash-replay worst case: every code row appended a second time

@@ -22,6 +22,7 @@ from mongoshake_spark.plans.queries._shared import (  # noqa: F401
     transforms,
 )
 from mongoshake_spark.streaming.drain import drain, stream_session
+from mongoshake_spark.streaming.replay import read_oplog_stream, write_feed
 
 
 
@@ -901,10 +902,7 @@ def q31(spark, sf_dir):
     ran 6 files, buying nothing the 3-file replay doesn't assert),
     reassembles with the stateful operator, and returns the emitted op
     sequence."""
-    import os
     import shutil
-    import tempfile
-    import time
 
     from mongoshake_spark.streaming.txn import reassemble_transactions
 
@@ -939,27 +937,12 @@ def q31(spark, sf_dir):
     tmp = _stream_tmpdir("q31_")
     feed_dir, ckpt_dir = f"{tmp}/feed", f"{tmp}/ckpt"
     try:
-        (
-            feed.repartitionByRange(3, "seq")
-            .sortWithinPartitions("seq")
-            .write.mode("overwrite")
-            .parquet(feed_dir)
-        )
-        # file source admits oldest-mtime-first; stamp range order so the
-        # replay is the oplog order (a commit seen before its chunks would
-        # drop the transaction)
-        parts = sorted(f for f in os.listdir(feed_dir) if f.endswith(".parquet"))
-        t0 = time.time() - len(parts) - 10
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(feed_dir, f), (t0 + i, t0 + i))
-        stream = (
-            ss.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed_dir)
-        )
+        # replayed in seq order: a commit seen before its chunks would
+        # drop the transaction
+        write_feed(feed, feed_dir, 3, "seq")
         out_dir = f"{tmp}/out"
         drain(
-            reassemble_transactions(stream)
+            reassemble_transactions(read_oplog_stream(ss, feed_dir))
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out_dir)
@@ -1163,14 +1146,10 @@ WHERE last_op <> 'd' ORDER BY ns, user_id""",
 )
 def q37_multi_ns(spark, sf_dir):
     import os
-    import time
 
     from mongoshake_spark.streaming.multi import run_multi_incr_sync
 
-    # 8 shuffle partitions: each micro-batch runs one MERGE cycle whose
-    # constant scales with partition count, not rows, at this feed size
-    ss = stream_session(spark, 8)
-    two_ns = _oplog(ss, sf_dir).withColumn(
+    two_ns = _oplog(spark, sf_dir).withColumn(
         "ns",
         F.when(F.col("user_id") % 2 == 0, F.lit("db0.even")).otherwise(
             F.lit("db0.odd")
@@ -1178,19 +1157,10 @@ def q37_multi_ns(spark, sf_dir):
     )
     tmp = _stream_tmpdir("q37_")
     feed, root, ckpt = (os.path.join(tmp, d) for d in ("feed", "root", "ck"))
-    (
-        two_ns.repartitionByRange(2, "ts", "id")
-        .sortWithinPartitions("ts", "id")
-        .write.parquet(feed)
-    )
-    # the file stream admits oldest-mtime-first; one write job shares an
-    # mtime — stamp range order so replay follows the oplog order the
-    # kernel's compaction watermark assumes (see write_replay_feed)
-    parts = sorted(f for f in os.listdir(feed) if f.endswith(".parquet"))
-    base = time.time() - len(parts) - 10
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(feed, f), (base + i, base + i))
-    kernel = run_multi_incr_sync(ss, feed, root, ckpt, max_files_per_trigger=1)
+    # replayed in oplog order, which the kernel's compaction watermark
+    # assumes
+    write_feed(two_ns, feed, 2, "ts", "id")
+    kernel = run_multi_incr_sync(spark, feed, root, ckpt, max_files_per_trigger=1)
     return (
         kernel.state_view()
         .select("ns", "user_id", "value")
@@ -1334,17 +1304,14 @@ def q40_receiver_daemon(spark, sf_dir):
     from mongoshake_spark.sources import socket_tunnel as st
     from mongoshake_spark.streaming.receive import run_receiver
 
-    # 8 shuffle partitions for the receiver's apply kernel: the same
-    # per-MERGE-cycle constant sizing as q37_multi_ns_sync
-    ss = stream_session(spark, 8)
-    ov = _oplog(ss, sf_dir)
+    ov = _oplog(spark, sf_dir)
     tmp = _stream_tmpdir("q40_")
     port_ready = threading.Event()
     box: dict = {}
 
     def _serve():
         box["summary"] = run_receiver(
-            ss,
+            spark,
             f"{tmp}/target",
             idle_timeout=0.5,
             max_wall=120,

@@ -13,6 +13,7 @@ from mongoshake_spark.plans.queries._shared import (  # noqa: F401
     merge,
 )
 from mongoshake_spark.streaming.drain import drain, stream_session
+from mongoshake_spark.streaming.replay import read_oplog_stream, write_feed
 
 
 
@@ -65,13 +66,10 @@ def stream_dedup_q(spark, sf_dir):
         _write_class_feed(
             docs, F.col("doc_id") >= shift, 2, feed_dir, tmp
         )
-        stream = (
-            ss.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed_dir)
-        )
         drain(
-            stream_exact_dedup(stream, watermark="10 hours")
+            stream_exact_dedup(
+                read_oplog_stream(ss, feed_dir), watermark="10 hours"
+            )
             .select("text_hash")
             .writeStream.outputMode("append")
             .format("parquet")
@@ -118,10 +116,6 @@ FROM s GROUP BY user_id, session_no ORDER BY user_id, session_start""",
     stream=True,
 )
 def session_window_stream_q(spark, sf_dir):
-    import os
-    import tempfile
-    import time
-
     from mongoshake_spark.streaming.windows import session_counts
 
     # 4 state-store partitions: the session store commits every instance
@@ -152,28 +146,11 @@ def session_window_stream_q(spark, sf_dir):
     sentinel = ss.createDataFrame(
         [(-1, -1, sentinel_ts)], "user_id bigint, event_id bigint, ts timestamp"
     )
-    (
-        ev.unionByName(sentinel)
-        .repartitionByRange(2, "ts")
-        .sortWithinPartitions("ts")
-        .write.mode("overwrite")
-        .parquet(feed_dir)
-    )
-    # mtime order = replay order: ascending ts ranges (range partition i
-    # is written as part-i, so lexical order IS range order)
-    parts = sorted(
-        f for f in os.listdir(feed_dir) if f.endswith(".parquet")
-    )
-    t0 = time.time() - len(parts) - 10
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(feed_dir, f), (t0 + i, t0 + i))
-    stream = (
-        ss.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
+    write_feed(ev.unionByName(sentinel), feed_dir, 2, "ts")
     drain(
-        session_counts(stream, gap="12 hours", watermark="2 hours")
+        session_counts(
+            read_oplog_stream(ss, feed_dir), gap="12 hours", watermark="2 hours"
+        )
         .writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
@@ -205,23 +182,12 @@ GROUP BY 1 ORDER BY 1""",
     stream=True,
 )
 def stream_static_enrich_q(spark, sf_dir):
-    import os
-    import time
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     tmp = _stream_tmpdir("senrich_")
     feed_dir, ckpt_dir, out_dir = f"{tmp}/feed", f"{tmp}/ckpt", f"{tmp}/out"
-    ev.repartitionByRange(2, "event_id").write.mode("overwrite").parquet(feed_dir)
-    parts = sorted(f for f in os.listdir(feed_dir) if f.endswith(".parquet"))
-    t0 = time.time() - len(parts) - 10
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(feed_dir, f), (t0 + i, t0 + i))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
+    write_feed(ev, feed_dir, 2, "event_id")
+    stream = read_oplog_stream(spark, feed_dir)
     enriched = stream.join(
         F.broadcast(dim), stream["user_id"] == dim["c_custkey"], "left"
     ).select("event_id", "user_id", "c_mktsegment")
@@ -263,7 +229,6 @@ GROUP BY 1 ORDER BY 1""",
 )
 def stream_join_q(spark, sf_dir):
     import os
-    import time
 
     from mongoshake_spark.streaming.joins import stream_interval_join
 
@@ -289,24 +254,11 @@ def stream_join_q(spark, sf_dir):
     ldir, rdir, ck, out = (
         os.path.join(tmp, d) for d in ("left", "right", "ck", "out")
     )
-    for df, feed, ts in ((lt, ldir, "l_ts"), (rt, rdir, "r_ts")):
-        df.repartitionByRange(2, ts).sortWithinPartitions(ts).write.parquet(feed)
-        parts = sorted(f for f in os.listdir(feed) if f.endswith(".parquet"))
-        base = time.time() - len(parts) - 10
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(feed, f), (base + i, base + i))
-    ls = (
-        ss.readStream.schema(lt.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ldir)
-    )
-    rs = (
-        ss.readStream.schema(rt.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(rdir)
-    )
+    write_feed(lt, ldir, 2, "l_ts")
+    write_feed(rt, rdir, 2, "r_ts")
     joined = stream_interval_join(
-        ls, rs, "user_id", "l_ts", "r_ts", 0, 1800, watermark="720 hours"
+        read_oplog_stream(ss, ldir), read_oplog_stream(ss, rdir),
+        "user_id", "l_ts", "r_ts", 0, 1800, watermark="720 hours",
     )
     drain(
         joined.select("user_id", "l_id", "r_id")
@@ -366,11 +318,9 @@ def stream_neardup_q(spark, sf_dir):
     tmp = _stream_tmpdir("sndup_")
     feed = os.path.join(tmp, "feed")
     # one feed file per arrival class, mtime-stamped so the tail admits
-    # them in class order (the replay convention, see write_replay_feed)
+    # them in class order (the replay convention, streaming/replay.py)
     _write_class_feed(docs, F.col("doc_id") % 2, 2, feed, tmp)
-    pairs = run_streaming_lsh_dedup(
-        ss, feed, "doc_id bigint, text string", os.path.join(tmp, "w")
-    )
+    pairs = run_streaming_lsh_dedup(ss, feed, os.path.join(tmp, "w"))
     return pairs.orderBy("origin", "doc_a", "doc_b").localCheckpoint(
         eager=True
     )
@@ -407,14 +357,10 @@ def stream_media_neardup_q(spark, sf_dir):
     feed_dir = f"{tmp}/feed"
     try:
         _write_class_feed(media, F.col("doc_id") % 2, 2, feed_dir, tmp)
-        stream = (
-            spark.readStream.schema(media.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed_dir)
-        )
         drain(
             streaming_phash_dedup(
-                stream, f"{tmp}/index", f"{tmp}/pairs", f"{tmp}/ckpt"
+                read_oplog_stream(spark, feed_dir),
+                f"{tmp}/index", f"{tmp}/pairs", f"{tmp}/ckpt",
             ),
             "stream_media_neardup",
         )

@@ -175,7 +175,7 @@ def streaming_ann_ingest(
         # batch, the same price as just encoding an empty batch (one
         # empty-write task the probe's dedup never sees)
         #
-        # fan the batch out first: a maxFilesPerTrigger=1 micro-batch
+        # fan the batch out first: a one-feed-file micro-batch
         # arrives as ONE scan split, and the in-row nearest-centroid
         # fold is an interpreted higher-order expr — left on a single
         # task it serializes the whole assignment

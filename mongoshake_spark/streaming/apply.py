@@ -68,19 +68,21 @@ documents). The slice is re-read from disk every batch, so the plan never
 deepens across batches; the write lands beside the files it replaces,
 not on them, so it needs no checkpoint.
 
-The kernel plans steps 1-4 in a session of its own, made once per
-kernel: a ``newSession()`` child of the caller (the same SparkContext
-and cache, its own SQL conf), kept in sync with the caller's conf the
-way ``streaming/drain.stream_session`` keeps its children, with AQE off,
-``spark.sql.shuffle.partitions`` at the default parallelism and the
-driver-listing threshold of ``session.get_spark``. The persisted batch
-enters it through a global temp view named per kernel. A batch then runs
-two Spark jobs, the census and the fold with its write (five at AQE on:
-a cache stage, and each shuffle split off into a job of its own), and
-the stream itself stays on the caller's session, where its listeners
-hear it; ``state_view`` reads there too. The batch's Column expressions
-are built once per bucket count (``_exprs``), not per batch: under
-PySpark's call-site capture each Column call is several py4j round
+The kernel plans steps 1-4 in a child session of the caller (the same
+SparkContext and cache, its own SQL conf) taken from the per-caller pool
+of ``streaming/drain.child_session``, keyed on the caller and the
+kernel's settings: AQE off, ``spark.sql.shuffle.partitions`` at the
+default parallelism and the driver-listing threshold of
+``session.get_spark``. Every kernel on one caller therefore plans in the
+same child, which follows the caller's conf; the CLI's incr syncs and
+perfbench's repetitions, one kernel each, add no session. The persisted
+batch enters it through a global temp view named per kernel. A batch
+then runs two Spark jobs, the census and the fold with its write (five
+at AQE on: a cache stage, and each shuffle split off into a job of its
+own), and the stream itself stays on the caller's session, where its
+listeners hear it; ``state_view`` reads there too. The batch's Column
+expressions are built once per bucket count (``_exprs``), not per batch:
+under PySpark's call-site capture each Column call is several py4j round
 trips, and a batch made 646 of them when it rebuilt its expressions; it
 now makes ~100.
 
@@ -128,7 +130,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 
 from mongoshake_spark.operators import merge
 from mongoshake_spark.session import LISTING_KEY, LISTING_THRESHOLD
-from mongoshake_spark.streaming.drain import WIDTH_KEY, drain, synced_child
+from mongoshake_spark.streaming.drain import WIDTH_KEY, child_session, drain
 
 TARGET_SCHEMA = "user_id bigint, value double, id bigint"
 
@@ -218,12 +220,8 @@ class ApplyKernel:
     # tests/test_streaming.py.
     last_state_files_read: int = field(default=0, repr=False)
     last_state_rows_read: int = field(default=0, repr=False)
-    # the session the kernel plans in, what it sets over the caller's
-    # conf, the caller's conf it was synced to, and the (database, name)
-    # of the global temp view a batch enters it through
-    _session: SparkSession | None = field(default=None, init=False, repr=False)
-    _settings: dict[str, str] = field(default_factory=dict, init=False, repr=False)
-    _synced: object = field(default=None, init=False, repr=False)
+    # the (database, name) of the global temp view a batch enters the
+    # kernel's session through
     _view: tuple[str, str] = field(default=("", ""), init=False, repr=False)
     # _Exprs and the bucket count they were built for
     _built: tuple[int, _Exprs] | None = field(
@@ -246,18 +244,6 @@ class ApplyKernel:
                     "its extensions (delta.pip_utils."
                     "configure_spark_with_delta_pip)"
                 ) from exc
-        # the kernel's session: AQE off runs a batch in two jobs (the
-        # census; the fold and its write) instead of five, at the width
-        # AQE would coalesce to, one partition per task slot (AQE off at
-        # a 32-wide shuffle took a fold-and-write 0.22 -> 0.61 s). The
-        # listing threshold keeps a slice read on the driver whatever
-        # the caller's session says.
-        self._settings = {
-            "spark.sql.adaptive.enabled": "false",
-            WIDTH_KEY: str(self.spark.sparkContext.defaultParallelism),
-            LISTING_KEY: LISTING_THRESHOLD,
-        }
-        self._plan_session()
         self._view = (
             self.spark.conf.get("spark.sql.globalTempDatabase"),
             f"apply_batch_{uuid.uuid4().hex}",
@@ -298,14 +284,20 @@ class ApplyKernel:
             return DeltaTable.forPath(self._session, self.target_dir)
         return None
 
-    # -- the kernel's session -------------------------------------------------
-
-    def _plan_session(self) -> SparkSession:
-        """The kernel's session, re-synced if the caller's conf changed."""
-        self._session, self._synced = synced_child(
-            self.spark, self._settings, self._session, self._synced
-        )
-        return self._session
+    @property
+    def _session(self) -> SparkSession:
+        """The session the kernel plans in: the caller's pooled child
+        with the kernel's settings. AQE off runs a batch in two jobs (the
+        census; the fold and its write) instead of five, at the width AQE
+        would coalesce to, one partition per task slot (AQE off at a
+        32-wide shuffle took a fold-and-write 0.22 -> 0.61 s). The
+        listing threshold keeps a slice read on the driver whatever the
+        caller's session says."""
+        return child_session(self.spark, {
+            "spark.sql.adaptive.enabled": "false",
+            WIDTH_KEY: str(self.spark.sparkContext.defaultParallelism),
+            LISTING_KEY: LISTING_THRESHOLD,
+        })
 
     def _exprs(self) -> _Exprs:
         """The batch's Column expressions, built once per bucket count:
@@ -688,7 +680,7 @@ class ApplyKernel:
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
         # before the census: its bucket ids need the count on record
         self._ensure_layout()
-        spark = self._plan_session()
+        spark = self._session
         db, view = self._view
         # persisted, so the census and the fold share one scan of the
         # feed (the trigger's progress counts the rows of every scan)

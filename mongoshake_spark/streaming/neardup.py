@@ -45,6 +45,7 @@ from mongoshake_spark.functions.dedup import (
 )
 from mongoshake_spark.streaming.drain import drain
 from mongoshake_spark.streaming.index_lifecycle import resolve_store
+from mongoshake_spark.streaming.replay import read_oplog_stream
 
 
 def streaming_lsh_dedup(
@@ -122,7 +123,6 @@ def _index_exists(index_dir: str) -> bool:
 def run_streaming_lsh_dedup(
     spark: SparkSession,
     feed_dir: str,
-    schema,
     work_dir: str,
     text_col: str = "text",
     max_files_per_trigger: int = 1,
@@ -134,11 +134,7 @@ def run_streaming_lsh_dedup(
     index_dir, pairs_dir, ckpt = (
         os.path.join(work_dir, d) for d in ("index", "pairs", "ck")
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(feed_dir)
-    )
+    stream = read_oplog_stream(spark, feed_dir, max_files_per_trigger)
     drain(
         streaming_lsh_dedup(stream, index_dir, pairs_dir, ckpt, text_col),
         "streaming_lsh_dedup", timeout_sec,

@@ -1,4 +1,5 @@
-"""Replayable oplog feed — the incremental-plane *source* (S1/S2).
+"""Replayable feeds — the incremental-plane *source* (S1/S2), and the one
+place that knows the feed convention every stream query replays through.
 
 The reference tails `local.oplog.rs` with a resumable cursor
 (collector/reader/oplog_reader.go:100-241: `{ts:{$gt: ckpt}}` predicate,
@@ -7,13 +8,20 @@ is: a Structured Streaming source that (a) delivers rows in bounded
 micro-batches, (b) supports resume from a recorded offset, (c) pushes the
 ts predicate down.
 
-For tests and local runs we materialize the `events`-derived oplog view
-as a directory of parquet files ordered by (ts, id) — one file per
-micro-batch's worth of rows — and read it with the file stream source
-(`maxFilesPerTrigger` = the reference's fetch-batch knob, B7's rate limit).
-In production the same pipeline binds to the Spark-Mongo connector's
-change-stream `readStream` or a Kafka topic carrying the oplog (S8/S12) —
-only this module changes, nothing downstream.
+For tests and local runs a feed is a directory of parquet files, one per
+micro-batch, each holding one contiguous range of the stream order and
+stamped with strictly increasing mtimes in that order; the file stream
+source admits files oldest-mtime-first, so reading it with
+`maxFilesPerTrigger` = 1 (the reference's fetch-batch knob, B7's rate
+limit) replays the stream in order. :func:`write_feed` writes a ranged
+feed and :func:`stamp_feed` orders any set of feed files;
+:func:`read_oplog_stream` tails one. The oplog feed
+(:func:`write_replay_feed`) and every stream query's own feed (the
+registry's q31, q37, session windows, enrichment, joins, near-dup and ANN
+streams) go through them. In production the same pipeline binds to the
+Spark-Mongo connector's change-stream `readStream` or a Kafka topic
+carrying the oplog (S8/S12) — only this module changes, nothing
+downstream.
 """
 
 from __future__ import annotations
@@ -21,6 +29,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import time
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -40,34 +49,43 @@ DEFAULT_BATCH_ROWS = 1024
 def write_replay_feed(
     spark: SparkSession, sf_dir: str, out_dir: str, batch_rows: int = DEFAULT_BATCH_ROWS
 ) -> int:
-    """Materialize the oplog view as N parquet files, each holding one
-    contiguous (ts, id) range — the replayable feed. Returns file count.
-
-    repartitionByRange on the stream order keeps each file a clean time
-    slice, so `maxFilesPerTrigger=1` replays the stream in order, which is
-    what the per-key ordering guarantees downstream assume (P1/P2).
-    """
+    """Materialize the oplog view as the replay feed: one file per
+    ``batch_rows`` rows, each one contiguous (ts, id) range, which is the
+    per-key order the apply kernel assumes downstream (P1/P2). Returns
+    the file count."""
     oplog = oplog_view(load_table(spark, sf_dir, "events"))
-    total = oplog.count()
-    n_files = max(1, math.ceil(total / batch_rows))
+    n_files = max(1, math.ceil(oplog.count() / batch_rows))
+    return write_feed(oplog, out_dir, n_files, "ts", "id")
+
+
+def write_feed(df: DataFrame, out_dir: str, n_files: int, *order: str) -> int:
+    """Write ``df`` to ``out_dir`` as a feed of (at most) ``n_files``
+    parquet files, each holding one contiguous range of ``order`` sorted
+    within, and stamp them in range order (:func:`stamp_feed`), so
+    ``maxFilesPerTrigger=1`` replays ``df`` in ``order``. Returns the
+    file count."""
     (
-        oplog.repartitionByRange(n_files, "ts", "id")
-        .sortWithinPartitions("ts", "id")
+        df.repartitionByRange(n_files, *order)
+        .sortWithinPartitions(*order)
         .write.mode("overwrite")
         .parquet(out_dir)
     )
-    # The file stream source admits files oldest-mtime-first; files written
-    # in one job share an mtime, leaving their order arbitrary. The oplog
-    # is a totally ordered stream, so stamp strictly increasing mtimes in
-    # range order (part-00000 = lowest (ts, id) range) to make the replay
-    # deterministic.
+    # range partition i is written as part-i: lexical order is range order
     parts = sorted(f for f in os.listdir(out_dir) if f.endswith(".parquet"))
-    import time as _time
-
-    base = _time.time() - len(parts) - 10
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(out_dir, f), (base + i, base + i))
+    stamp_feed(out_dir, parts)
     return len(parts)
+
+
+def stamp_feed(feed_dir: str, files: list[str]) -> None:
+    """Stamp the feed ``files`` (names under ``feed_dir``) with strictly
+    increasing mtimes in list order. The file stream source admits files
+    oldest-mtime-first, and files written in one job share an mtime,
+    leaving their order arbitrary: a replay must not deliver a later
+    range (a transaction's commit, a re-crawl copy) before an earlier
+    one."""
+    base = time.time() - len(files) - 10
+    for i, f in enumerate(files):
+        os.utime(os.path.join(feed_dir, f), (base + i, base + i))
 
 
 def read_oplog_stream(

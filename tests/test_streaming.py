@@ -12,7 +12,11 @@ from mongoshake_spark.sources.oplog import oplog_view
 from mongoshake_spark.sources.tables import load_table
 from mongoshake_spark.streaming.apply import ApplyKernel, run_incr_sync
 from mongoshake_spark.streaming.drain import drain, stream_session
-from mongoshake_spark.streaming.replay import read_oplog_stream, write_replay_feed
+from mongoshake_spark.streaming.replay import (
+    read_oplog_stream,
+    write_feed,
+    write_replay_feed,
+)
 
 
 @pytest.fixture(scope="module")
@@ -706,6 +710,59 @@ def test_feed_stream_schema_comes_from_one_footer(spark, feed, tmp_path):
     with pytest.raises(FileNotFoundError, match="no parquet file") as err:
         read_oplog_stream(spark, empty)
     assert empty in str(err.value)
+
+
+@pytest.mark.parametrize("frame", ["keys", "oplog"])
+def test_write_feed_replays_one_key_range_per_file_in_order(
+    spark, sf_dir, frame, tmp_path
+):
+    """Each feed file holds one contiguous range of the feed order, and
+    mtime order is range order, so a one-file-per-trigger drain replays
+    the frame in that order: on a frame that is not the oplog (a key with
+    a tie-break, spread over partitions out of order) and on the oplog
+    feed ``write_replay_feed`` writes through the same writer."""
+    import os
+
+    feed = str(tmp_path / "feed")
+    if frame == "keys":
+        order = ("k", "t")
+        df = spark.range(0, 600, numPartitions=3).select(
+            ((F.col("id") * 7919) % 200).alias("k"), F.col("id").alias("t")
+        )
+        rows = sorted(tuple(r) for r in df.collect())
+        n = write_feed(df, feed, 4, *order)
+        assert n == 4
+    else:
+        order = ("ts", "id")
+        n = write_replay_feed(spark, sf_dir, feed, batch_rows=256)
+        rows = sorted(
+            tuple(r) for r in spark.read.parquet(feed).select(*order).collect()
+        )
+    files = sorted(f for f in os.listdir(feed) if f.endswith(".parquet"))
+    mtimes = [os.path.getmtime(os.path.join(feed, f)) for f in files]
+    assert len(files) == n > 1
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == n
+    ranges = [
+        sorted(
+            tuple(r) for r in
+            spark.read.parquet(os.path.join(feed, f)).select(*order).collect()
+        )
+        for f in files
+    ]
+    assert [r for part in ranges for r in part] == rows
+    batches = []
+    drain(
+        read_oplog_stream(spark, feed)
+        .writeStream.foreachBatch(
+            lambda b, _: batches.append(
+                sorted(tuple(r) for r in b.select(*order).collect())
+            )
+        )
+        .option("checkpointLocation", str(tmp_path / "ck")),
+        "feed replay",
+        300,
+    )
+    assert batches == ranges
 
 
 W7_BAD_ROWS = {
@@ -1624,13 +1681,13 @@ def test_streaming_neardup_index_persists_across_runs(spark, tmp_path):
 
     feed_file("one", [(1, text_a), (2, text_c)], 20)
     pairs1 = {tuple(r) for r in run_streaming_lsh_dedup(
-        spark, feed, "doc_id bigint, text string", work
+        spark, feed, work
     ).collect()}
     assert pairs1 == set()  # nothing near-duplicated yet
     # restart with a new arrival that near-dups doc 1
     feed_file("two", [(3, text_b)], 10)
     pairs2 = {tuple(r) for r in run_streaming_lsh_dedup(
-        spark, feed, "doc_id bigint, text string", work
+        spark, feed, work
     ).collect()}
     assert (1, 3, "corpus") in pairs2
     assert all(p[1] == 3 for p in pairs2)  # only the new doc pairs
@@ -1656,7 +1713,7 @@ def test_streaming_neardup_first_batch_emits_increment_pairs(spark, tmp_path):
     docs.coalesce(1).write.parquet(feed)
     work = str(tmp_path / "work")
     pairs = {tuple(r) for r in run_streaming_lsh_dedup(
-        spark, feed, "doc_id bigint, text string", work
+        spark, feed, work
     ).collect()}
     assert pairs == {(1, 3, "increment")}
     assert {(a, b) for a, b, _ in pairs} == {
@@ -2028,6 +2085,74 @@ def test_stream_session_makes_one_child_per_width_under_contention(spark):
         children = {id(c) for width, c in got if width == w}
         assert len(children) == 1
     assert {c.conf.get("spark.sql.shuffle.partitions") for _, c in got} == {"5", "6"}
+
+
+def test_kernels_on_one_caller_plan_in_one_pooled_child(spark, tmp_path, monkeypatch):
+    """Every apply kernel plans in its caller's pooled child session: three
+    kernels on one caller, one batch each, make one child between them,
+    and kernels on a second caller make one more. A child per kernel was
+    released by the JVM only once py4j dropped it, so a process opening
+    kernels in a loop kept sessions alive."""
+    import datetime
+
+    from pyspark.sql import SparkSession
+
+    callers = [spark.newSession(), spark.newSession()]  # no pooled child yet
+    made = []
+    new = SparkSession.newSession
+
+    def counted(self):
+        made.append(self)
+        return new(self)
+
+    monkeypatch.setattr(SparkSession, "newSession", counted)
+    t0 = datetime.datetime(2024, 1, 1)
+    for i, caller in enumerate(callers[:1] * 3 + callers[1:] * 2):
+        kernel = ApplyKernel(caller, str(tmp_path / f"t{i}"))
+        batch = caller.createDataFrame(
+            [(j, t0 + datetime.timedelta(seconds=j), j % 5, "i", "db0.c1",
+              float(j), "{}") for j in range(10)],
+            _MULTI_SCHEMA,
+        )
+        kernel.process_batch(batch, 0)
+        assert kernel.state_view().count() == 5
+    assert len(made) == 2
+    assert made[0] is callers[0] and made[1] is callers[1]
+
+
+def test_feed_files_and_child_sessions_are_made_in_one_module_each():
+    """Source guard: in the package only ``streaming/replay.py`` stamps
+    feed mtimes (``os.utime``) or sets ``maxFilesPerTrigger``, and only
+    ``streaming/drain.py`` makes child sessions (``newSession()``). A
+    stream query that hand-rolls either bypasses the replay convention or
+    the per-caller session pool."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "mongoshake_spark"
+    found: dict[str, set[str]] = {
+        "utime": set(), "maxfilespertrigger": set(), "newSession": set()
+    }
+    for path in pkg.rglob("*.py"):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            name = getattr(node.func, "attr", getattr(node.func, "id", None))
+            if name in ("utime", "newSession"):
+                found[name].add(rel)
+            # Spark reads option keys case-insensitively
+            keys = [kw.arg for kw in node.keywords] + [
+                a.value for a in node.args
+                if isinstance(a, ast.Constant) and isinstance(a.value, str)
+            ]
+            if any((k or "").lower() == "maxfilespertrigger" for k in keys):
+                found["maxfilespertrigger"].add(rel)
+    assert found == {
+        "utime": {"streaming/replay.py"},
+        "maxfilespertrigger": {"streaming/replay.py"},
+        "newSession": {"streaming/drain.py"},
+    }
 
 
 def test_concurrent_width_setting_streams_leave_the_session_width_alone(
