@@ -10,130 +10,31 @@ Lloyd's algorithm made fully deterministic and cross-engine replayable:
   ties to the smallest cluster id (the rounding pins the argmin across
   engines whose unrounded doubles differ in the last ulp);
 - update: element-wise mean, ROUNDED to 6 decimals before the next
-  iteration (so both engines iterate from bit-identical centroids —
-  float sums are order-sensitive and each engine aggregates in its own
-  order; without the rounding the drift compounds per iteration);
+  iteration (so both engines iterate from bit-identical centroids); the
+  sum behind the mean is exact, so the centroids do not depend on how
+  the corpus is partitioned;
 - fixed iteration count (the caller picks; no data-dependent stopping).
 
-Scale shape: centroids are a k-row table BROADCAST to every task — the
-corpus is never shuffled for assignment (a map-side zip_with/aggregate
-fold per row). The only corpus-wide exchange per iteration is the
-centroid update: posexplode emits dim rows per vector and the
-(cluster, pos) partial means combine map-side, so the shuffle carries
-k*dim rows per upstream partition, not the corpus. Driver holds nothing
-but the plan. At 100 TB use sampled init (e.g. min-id within hash
-buckets) and fewer update passes — the operator shape is unchanged.
+k-means is product quantization with one subspace, so it runs on the PQ
+trainer (``quantization._pq_fit`` with ``m=1``) and the
+``functions/vec`` kernels: one seed collect, one map-only ``mapInArrow``
+pass per Lloyd update whose output is k·dim exact partial sums per
+partition, and one map-only assignment pass (``vec.assign_batches``).
+The centroids are a frozen driver-side model under the PQ model
+ceiling, shipped in each task's closure; the corpus never shuffles and
+is never collected.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-
-def _init_centroids(vecs: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
-    """k-row (cluster, centroid) table: the k smallest-id vectors, cluster
-    ids assigned 0..k-1 in id order.
-
-    The k rows are collected to the driver — bounded by the operator's
-    own ``k`` parameter, never by data size (the same driver-residency
-    Spark MLlib gives k-means centroids), and the cluster-id numbering
-    needs a total order that a distributed plan would spell as a global
-    ordered window. Rounding happens Spark-side (``F.round`` is
-    HALF_UP like the oracle's; Python's ``round`` is banker's and would
-    diverge on exact half-ulp ties)."""
-    rows = vecs.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
-    spark = vecs.sparkSession
-    init = spark.createDataFrame(
-        [(i, list(r[1])) for i, r in enumerate(rows)],
-        "cluster int, centroid array<double>",
-    )
-    return init.select(
-        "cluster",
-        F.transform("centroid", lambda x: F.round(x, 6)).alias("centroid"),
-    )
-
-
-def _best_struct(cents_arr, vec_col: str):
-    """Per-row argmin over a collected ``array<struct<cluster,centroid>>``
-    column: ``struct<d2, cluster>`` of the nearest centroid, computed
-    entirely in-row. The d2 arithmetic is the exact fold the old
-    grouped form used — zip_with squared-diff fold, ``round(.., 6)`` —
-    and ``array_min`` over ``(d2, cluster)`` structs is the same
-    lexicographic comparison as ``min(struct(d2, cluster))``, so the
-    winning (cluster, d2) per vector is bit-identical; only the plan
-    shape changes (no per-vector shuffle)."""
-    def one(c):
-        d2 = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                c["centroid"],
-                lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.struct(
-            F.round(d2, 6).alias("d2"), c["cluster"].alias("cluster")
-        )
-
-    return F.array_min(F.transform(cents_arr, one))
-
-
-def _assign_carry(
-    vecs: DataFrame, cents: DataFrame, vec_col: str
-) -> DataFrame:
-    """All of ``vecs``'s columns plus ``(cluster, d2)`` — the nearest
-    centroid computed IN-ROW against the k-row centroid table collected
-    into a one-row array and broadcast (guide §2.4: the old shape
-    exploded k candidate rows per vector and re-grouped them by id,
-    shuffling the corpus once per assignment; the argmin needs no
-    exchange at all). Carrying the vector through means the update pass
-    needs no corpus self-join either."""
-    carr = cents.agg(
-        F.collect_list(F.struct("cluster", "centroid")).alias("_cents")
-    )
-    best = _best_struct(F.col("_cents"), vec_col)
-    return (
-        vecs.crossJoin(F.broadcast(carr))
-        .withColumn("_best", best)
-        .select(
-            *vecs.columns,
-            F.col("_best.cluster").alias("cluster"),
-            F.col("_best.d2").alias("d2"),
-        )
-    )
-
-
-def _assign(vecs: DataFrame, cents: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, cluster, d2): nearest centroid per vector — map-only, no
-    shuffle (see :func:`_assign_carry`). Ties break to the smaller
-    cluster id via the (rounded d2, cluster) lexicographic min."""
-    return _assign_carry(vecs.select(id_col, vec_col), cents, vec_col).select(
-        id_col, "cluster", "d2"
-    )
-
-
-def _update_from(assigned_full: DataFrame, vec_col: str) -> DataFrame:
-    """New centroids from an assignment that carries its vectors
-    (:func:`_assign_carry`): per-(cluster, position) mean, rounded to 6,
-    packed back into arrays. k*dim result rows; the mean combines
-    map-side — the ONLY exchange of a Lloyd iteration, carrying k·dim
-    rows per upstream partition. (The former shape joined the (id,
-    cluster) assignment back to the vector table by id — a corpus-sized
-    shuffle of both sides per iteration that the carried vector makes
-    unnecessary; the averaged row multiset is identical.)"""
-    pos = assigned_full.select(
-        "cluster", F.posexplode(vec_col).alias("pos", "val")
-    )
-    means = pos.groupBy("cluster", "pos").agg(
-        F.round(F.avg(F.col("val").cast("double")), 6).alias("m")
-    )
-    return means.groupBy("cluster").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-        ).alias("centroid")
-    )
+from mongoshake_spark.functions import vec
 
 
 def kmeans_fit(
@@ -146,21 +47,31 @@ def kmeans_fit(
     """Run ``iters`` Lloyd iterations; returns ``(assigned, centroids)``
     — the final assignment ``(id_col, cluster, d2)`` and the centroid
     table ``(cluster, centroid)`` it was computed against (the LAST
-    update's centroids; clusters emptied by an update disappear)."""
-    if k < 1 or iters < 1:
-        raise ValueError("kmeans_assign: k and iters must be >= 1")
-    cents = _init_centroids(vecs, k, id_col, vec_col)
-    # the assignment carries the vector through the whole loop so the
-    # update pass never joins back to the corpus (see _update_from)
-    full = _assign_carry(vecs.select(id_col, vec_col), cents, vec_col)
-    for _ in range(iters - 1):
-        # truncate the k-row centroid lineage each update (MLlib does the
-        # same): without it every downstream use re-analyzes and re-runs
-        # the whole preceding Lloyd chain — plan depth (and driver
-        # analysis time) grows per iteration while the data is k rows
-        cents = _update_from(full, vec_col).localCheckpoint()
-        full = _assign_carry(vecs.select(id_col, vec_col), cents, vec_col)
-    return full.select(id_col, "cluster", "d2"), cents
+    update's centroids, as a local relation; clusters emptied by an
+    update disappear). A null, wrong-length or null-element embedding
+    raises ``ValueError`` naming its id."""
+    from mongoshake_spark.functions.quantization import _pq_fit
+
+    model = _pq_fit(vecs, 1, k, iters, id_col, vec_col, who="kmeans_fit")
+    cb, mask = model.codebook[0], model.mask[0]
+    cents = vecs.sparkSession.createDataFrame(
+        [(int(c), cb[c].tolist()) for c in np.flatnonzero(mask)],
+        "cluster int, centroid array<double>",
+    )
+    assigned = vecs.select(id_col, vec_col).mapInArrow(
+        partial(
+            vec.assign_batches, centroids=cb, mask=mask, id_col=id_col,
+            vec_col=vec_col,
+        ),
+        StructType(
+            [
+                vecs.schema[id_col],
+                StructField("cluster", IntegerType()),
+                StructField("d2", DoubleType()),
+            ]
+        ),
+    )
+    return assigned, cents
 
 
 def kmeans_assign(
@@ -197,10 +108,10 @@ def sample_cluster_balanced(
     the sample's topical coverage flat regardless of cluster mass.
     Returns ``(id_col, cluster, d2)`` for the survivors.
 
-    Scale shape: assignment is the broadcast-centroid map from
-    ``kmeans_assign`` (the corpus never shuffles to be assigned); the
-    quota reuses ``cap_per_domain``'s skew-safe two-phase top-K with the
-    hash as the order, so even a cluster holding most of the corpus
+    Scale shape: assignment is ``kmeans_assign``'s map-only pass (the
+    corpus never shuffles to be assigned); the quota reuses
+    ``cap_per_domain``'s skew-safe two-phase top-K with the hash as the
+    order, so even a cluster holding most of the corpus
     spreads over the scan's partitions — no single task ever sorts a
     whole cluster. Deterministic end to end (no RNG state): re-running
     on a re-partitioned corpus keeps the identical sample, and a smaller
@@ -241,9 +152,9 @@ def cluster_topics(
     readable label. Returns ``(cluster, term, rank, score)`` with rank
     1..top_terms per cluster (ties break term-ascending).
 
-    Scale shape: assignment is the broadcast-centroid map; the corpus
-    shuffle carries (cluster, term) pairs with map-side combine — one
-    row per DISTINCT (cluster, term), never per token; the cluster df
+    Scale shape: assignment is ``kmeans_assign``'s map-only pass; the
+    corpus shuffle carries (cluster, term) pairs with map-side combine —
+    one row per DISTINCT (cluster, term), never per token; the cluster df
     is a second aggregate OF that table (k·|vocab| rows max); the rank
     window partitions by cluster, groups bounded by a cluster's
     distinct-term count. The documents themselves never re-shuffle.

@@ -14,16 +14,17 @@ Pieces. The PQ family runs on the numpy kernels of
 :class:`PQModel` (an (m, k, d) codebook plus a mask of the codewords
 that exist):
 
-- :func:`pq_train` — per-subspace codebooks via the same deterministic
-  Lloyd arithmetic as ``clustering.kmeans_fit`` (smallest-id init,
-  rounded centroids/distances), all m subspaces trained jointly. The
+- :func:`pq_train` — per-subspace codebooks by deterministic Lloyd
+  iterations (smallest-id init, rounded centroids/distances), all m
+  subspaces trained jointly; ``clustering.kmeans_fit`` is its
+  one-subspace case (:func:`_pq_fit` with ``m=1``). The
   seed is one ``orderBy(id).limit(k)`` collect; each update is one
   map-only pass that emits per-partition ``(sum, count)`` for every
   (sub, cluster, pos), combined on the driver. Returns the m·k-row
   ``(sub, cluster, centroid)`` frame as a local relation;
 - :func:`pq_encode` — nearest codeword per subspace, one map-only
   ``mapInArrow`` pass over the corpus (ties to the smaller cluster id,
-  as ``clustering._assign`` and the oracle break them);
+  as ``vec.nearest_code`` and the oracle break them);
 - :func:`pq_reconstruct` — codes back to the quantized vector (codebook
   lookups, order-preserving flatten);
 - :func:`pq_topk` — asymmetric distance computation (ADC): the query
@@ -74,7 +75,8 @@ from pyspark.sql.types import (
 
 from mongoshake_spark.functions import vec
 from mongoshake_spark.functions.similarity import (
-    assign_nearest_centroid,
+    CentroidTable,
+    _cell_pass,
     dot_expr,
     with_norm,
 )
@@ -96,15 +98,6 @@ _PQ_MODEL_MAX_ENTRIES = 1 << 22
 _PQ_LUT_MAX_ENTRIES = 1 << 22
 
 
-def _check_ceiling(what: str, entries: int, cap: int) -> None:
-    if entries > cap:
-        raise ValueError(
-            f"{what}: {entries} entries exceed the driver-residency "
-            f"ceiling {cap} — the table is collected to the driver and "
-            "shipped to every task by design; lower m, k or the query count"
-        )
-
-
 class PQModel:
     """A frozen PQ quantizer: ``codebook`` (m, k, d) doubles and ``mask``
     (m, k), True where codeword (sub, cluster) exists (a codeword that
@@ -116,7 +109,7 @@ class PQModel:
         self.codebook = np.asarray(codebook, dtype=np.float64)
         self.mask = np.asarray(mask, dtype=bool)
         self.m, self.k, self.d = self.codebook.shape
-        _check_ceiling("PQModel", self.codebook.size, _PQ_MODEL_MAX_ENTRIES)
+        vec.check_ceiling("PQModel", self.codebook.size, _PQ_MODEL_MAX_ENTRIES)
 
     @classmethod
     def from_frame(cls, codebooks: DataFrame) -> "PQModel":
@@ -130,7 +123,7 @@ class PQModel:
         d = len(rows[0]["centroid"])
         if any(len(r["centroid"]) != d for r in rows):
             raise ValueError("PQModel: codewords of different lengths")
-        _check_ceiling("PQModel", m * k * d, _PQ_MODEL_MAX_ENTRIES)
+        vec.check_ceiling("PQModel", m * k * d, _PQ_MODEL_MAX_ENTRIES)
         cb = np.zeros((m, k, d))
         mask = np.zeros((m, k), dtype=bool)
         for r in rows:
@@ -191,42 +184,43 @@ def _pq_fit(
     iters: int,
     id_col: str,
     vec_col: str,
+    who: str = "pq_train",
 ) -> PQModel:
-    """The :class:`PQModel` behind :func:`pq_train`.
+    """The :class:`PQModel` behind :func:`pq_train` and, at ``m=1``,
+    ``clustering.kmeans_fit`` (``who`` names the caller in errors).
 
-    All m subspaces train jointly with the arithmetic of
-    ``clustering.kmeans_fit``: the k smallest-id vectors seed every
+    All m subspaces train jointly: the k smallest-id vectors seed every
     subspace (rounded to 6 dp), and each of the ``iters - 1`` updates is
     ONE map-only pass (``vec.lloyd_partials``) whose per-partition exact
     sums the driver combines into ``round(sum / count, 6)`` means. The
     sum is exact, so the codebook is the same at any partition width."""
     if k < 1 or iters < 1:
-        raise ValueError("pq_train: k and iters must be >= 1")
+        raise ValueError(f"{who}: k and iters must be >= 1")
     if k >= _LUT_STRIDE:
         # ivfadc_score's flattened (sub·stride + cluster) LUT keys are
         # collision-free only while cluster ids stay below the stride;
         # map_from_entries is last-wins, so a collision would silently
         # corrupt ADC scores
         raise ValueError(
-            f"pq_train: k_code={k} >= LUT stride {_LUT_STRIDE} — "
+            f"{who}: k={k} >= LUT stride {_LUT_STRIDE} — "
             "codeword ids would collide in the flattened ADC lookup maps"
         )
     # init: the k smallest-id vectors (k bounded by the operator's own
-    # parameter — the driver residency clustering._init_centroids has);
-    # the dimension comes from the seed rows themselves
+    # parameter, like the model itself); the dimension comes from the
+    # seed rows themselves
     seed_rows = (
         vecs.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
     )
     if not seed_rows:
-        raise ValueError("pq: empty vector table")
+        raise ValueError(f"{who}: empty vector table")
     dim = next(
         (len(r[vec_col]) for r in seed_rows if r[vec_col] is not None), 0
     )
     if dim % m != 0:
-        raise ValueError(f"pq_train: dim {dim} not divisible by m={m}")
+        raise ValueError(f"{who}: dim {dim} not divisible by m={m}")
     d = dim // m
     n = len(seed_rows)
-    seeds = vec.rows_matrix(seed_rows, id_col, vec_col, dim, "pq_train")
+    seeds = vec.rows_matrix(seed_rows, id_col, vec_col, dim, who)
     model = PQModel(
         vec.spark_round(seeds.reshape(n, m, d).transpose(1, 0, 2)),
         np.ones((m, n), dtype=bool),
@@ -237,7 +231,7 @@ def _pq_fit(
             .mapInArrow(
                 partial(
                     vec.lloyd_partials, codebook=model.codebook,
-                    mask=model.mask, id_col=id_col, vec_col=vec_col,
+                    mask=model.mask, id_col=id_col, vec_col=vec_col, who=who,
                 ),
                 _LLOYD_SCHEMA,
             )
@@ -267,8 +261,8 @@ def pq_encode(
 ) -> DataFrame:
     """(id, *keep_cols, codes array<int>): nearest codeword per
     subspace, codes ordered by subspace index. Distance ties break to
-    the smaller cluster id, exactly like ``clustering._assign`` (and
-    the oracle).
+    the smaller cluster id, exactly like k-means' assignment (and the
+    oracle).
 
     ``codebooks`` is a :class:`PQModel` or a ``(sub, cluster,
     centroid)`` frame (collected once, here). Encoding is ONE map-only
@@ -406,7 +400,7 @@ def pq_topk(
     qnorm = np.sqrt(vec.fold_dot(qv, qv))
     keep = qnorm > 0
     qv, qids, qnorm = qv[keep], qids[keep], qnorm[keep]
-    _check_ceiling("pq_topk LUT", len(qids) * m * model.k, _PQ_LUT_MAX_ENTRIES)
+    vec.check_ceiling("pq_topk LUT", len(qids) * m * model.k, _PQ_LUT_MAX_ENTRIES)
     lut = np.stack(
         [
             vec.fold_dot(qv[:, None, s * d : (s + 1) * d], model.codebook[s][None])
@@ -493,9 +487,10 @@ def ivfpq_topk(
     denominator — the residual ADC sum alone is dot(q-c, r̂), not
     dot(q, r̂))
 
-    Scale shape: coarse assignment is one broadcast-centroid aggregate;
-    residual train/encode are the pq_train/pq_encode passes (map-only +
-    k·m-row model state); the scoring pass reads m-byte codes of the
+    Scale shape: coarse assignment and residual are one map-only pass
+    over the frozen centroid sample; residual train/encode are the
+    pq_train/pq_encode passes (map-only + k·m-row model state); the
+    scoring pass reads m-byte codes of the
     PROBED cells only (probe map broadcast), so per-query I/O is
     n_probe/|cells| of a code-sized store — the two compression levers
     (cell restriction × code compression) multiply.
@@ -509,35 +504,10 @@ def ivfpq_topk(
     compression × exact finish.
     """
     unit = with_norm(vecs, vec_col)
-    # the centroid table is MODEL-sized (|corpus| / centroid_mod rows)
-    # but derived from a corpus scan — without the eager checkpoint
-    # every consumer re-ran that scan (the assignment broadcast, the
-    # probe broadcast, the query-context broadcast, the cross-term
-    # build: ~5 corpus scans per query for a KB-scale table). One
-    # materialization, every reuse reads the checkpointed rows
-    # (guide §1.2/§2.3; same pin streaming_ann_ingest holds).
-    cents = (
-        unit.filter((F.col(id_col) % centroid_mod) == 0)
-        .select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("cvec"),
-            F.col("vnorm").alias("cnorm"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # one driver action validates the centroid sample AND infers the
-    # dimension (centroids are corpus rows, same dim) — isEmpty +
-    # _infer_dim would be two scans' worth of job-launch latency
-    cent_probe = cents.select(F.size("cvec").alias("d")).first()
-    if cent_probe is None:
-        raise ValueError(
-            f"ivfpq_topk: no {id_col} divisible by {centroid_mod} — "
-            "choose a centroid_mod matching the corpus id space"
-        )
-    dim = int(cent_probe["d"])
-    if dim % m != 0:
-        raise ValueError(f"ivfpq_topk: dim {dim} not divisible by m={m}")
-    d = dim // m
+    cents = CentroidTable.sample(unit, centroid_mod, id_col, vec_col, "ivfpq_topk")
+    if cents.dim % m != 0:
+        raise ValueError(f"ivfpq_topk: dim {cents.dim} not divisible by m={m}")
+    d = cents.dim // m
     # persist, NOT an eager localCheckpoint: checkpointing an AQE
     # plan can materialize at ~2 coalesced partitions, which would
     # serialize every downstream Lloyd pass and the code scan; the
@@ -554,7 +524,7 @@ def ivfpq_topk(
     )
     return ivfadc_score(
         codes,
-        cents,
+        cents.to_frame(unit.sparkSession),
         model.to_frame(unit.sparkSession),
         queries,
         m=m,
@@ -570,31 +540,20 @@ def ivfpq_topk(
 
 def ivfpq_assign_residuals(
     unit: DataFrame,
-    cents: DataFrame,
+    cents: DataFrame | CentroidTable,
     id_col: str,
     vec_col: str,
-    cents_arr: DataFrame | None = None,
 ) -> DataFrame:
     """(id, cell, res) — nearest-cell assignment plus the residual
-    ``v - centroid(cell)`` that IVFADC quantizes. Shared by the batch
-    :func:`ivfpq_topk` and the streaming ingest encoder
-    (streaming/ann_ingest) so a vector encodes IDENTICALLY whether it
-    arrived in the training corpus or in a later micro-batch.
-    ``cents_arr``: optional pre-aggregated one-row centroid array
-    (see similarity.collect_centroid_arr) for many-batch callers."""
-    assigned = assign_nearest_centroid(
-        unit, cents, vec_col, id_col, carry=(vec_col,), cents_arr=cents_arr
-    )
-    return assigned.join(
-        F.broadcast(cents.select(F.col("cid").alias("cell"), "cvec")), "cell"
-    ).select(
-        id_col,
-        "cell",
-        F.zip_with(
-            F.col(vec_col),
-            F.col("cvec"),
-            lambda x, y: x.cast("double") - y.cast("double"),
-        ).alias("res"),
+    ``v - centroid(cell)`` that IVFADC quantizes, both from ONE
+    ``mapInArrow`` pass (``vec.cell_batches``) over the frozen
+    ``cents`` (a ``similarity.CentroidTable`` or a ``(cid, cvec, …)``
+    frame, collected once here). Shared by the batch :func:`ivfpq_topk`
+    and the streaming ingest encoder (streaming/ann_ingest) so a vector
+    encodes IDENTICALLY whether it arrived in the training corpus or in
+    a later micro-batch."""
+    return _cell_pass(
+        unit, cents, vec_col, id_col, (), True, "ivfpq_assign_residuals"
     )
 
 

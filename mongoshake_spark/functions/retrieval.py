@@ -145,8 +145,8 @@ def hybrid_rrf_topk(
     side, so the scored corpus never shuffles for the rank — and ranks
     1..k are assigned on the driver over the k collected survivors
     (bounded by the operator's own ``k_lex``/``k_sem``, the same
-    driver-residency contract as ``clustering._init_centroids``; the
-    limit's total order IS the rank order). Each ranked list re-enters
+    driver-residency contract as the k-means seed collect; the limit's
+    total order IS the rank order). Each ranked list re-enters
     the plan as a k-row local relation, so the fusion join is k-sized.
     Scores are rounded to 6 decimals BEFORE ranking (rank ties then
     break by id), which is what makes the ranks — and therefore the
@@ -181,8 +181,8 @@ def hybrid_rrf_topk(
 
 
 #: hard ceiling on :func:`_ranked_topk_local`'s k — the collect below is
-#: DRIVER-resident by design (bounded by the operator's own k, the
-#: _init_centroids contract); a caller passing an unbounded k would turn
+#: DRIVER-resident by design (bounded by the operator's own k, as the
+#: k-means seed collect is); a caller passing an unbounded k would turn
 #: it into an unguarded driver collect, so the bound is enforced loudly.
 _RANKED_TOPK_MAX_K = 10_000
 
@@ -202,7 +202,7 @@ def _ranked_topk_local(
     order the limit had already fixed (guide §1.2 order-of-operations:
     the checkpoint/exchange cost was per-QUERY fixed overhead, and at
     100 TB the k-row driver residency is bounded by the operator's own
-    ``k`` — the ``_init_centroids`` contract — not by data size)."""
+    ``k`` — as the k-means seed collect is — not by data size)."""
     if k > _RANKED_TOPK_MAX_K:
         raise ValueError(
             f"_ranked_topk_local: k={k} exceeds the driver-residency "

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from mongoshake_spark.functions.texthash import MOD
 
@@ -356,67 +357,137 @@ def _neardup_pairs_lsh(
     )
 
 
-def collect_centroid_arr(centroids: DataFrame) -> DataFrame:
-    """The (cid, cvec, cnorm) centroid table collected into the ONE-row
-    ``_cents`` array :func:`assign_nearest_centroid` broadcasts. Callers
-    that assign MANY batches against one frozen table (the streaming
-    ingest encoder) checkpoint this once instead of re-running the
-    collect_list aggregate inside every micro-batch plan."""
-    return centroids.agg(
-        F.collect_list(F.struct("cid", "cvec", "cnorm")).alias("_cents")
+#: ceiling on a frozen :class:`CentroidTable` (cells·dim doubles, 32
+#: MiB): the table is collected to the driver and pickled into every
+#: assignment task, so an unbounded sample or k fails here, loudly
+_CENTROID_MAX_ENTRIES = 1 << 22
+
+
+class CentroidTable:
+    """A frozen coarse quantizer: ``cids`` (k,) ascending, ``cvecs``
+    (k, d) doubles and their norms ``cnorms``, collected once on the
+    driver under ``_CENTROID_MAX_ENTRIES`` and shipped to tasks inside
+    their closures. A zero-norm centroid has no direction and is
+    dropped, as :func:`with_norm` drops zero-norm vectors."""
+
+    def __init__(self, frame: DataFrame, who: str):
+        """The table of ``frame``'s first two columns, ``(cid, cvec)``
+        — one collect (none for a local relation). The norms are
+        ``vec.fold_dot`` folds, bit-identical to ``norm_expr``."""
+        import numpy as np
+
+        from mongoshake_spark.functions import vec
+
+        cid, cvec = frame.columns[:2]
+        self.cid_field = StructField("cid", frame.schema[cid].dataType)
+        self.cvec_field = StructField("cvec", frame.schema[cvec].dataType)
+        rows = frame.select(cid, cvec).collect()
+        dim = next((len(r[1]) for r in rows if r[1] is not None), 0)
+        vec.check_ceiling(who + " centroids", len(rows) * dim, _CENTROID_MAX_ENTRIES)
+        cvecs = vec.rows_matrix(rows, cid, cvec, dim, who)
+        cnorms = np.sqrt(vec.fold_dot(cvecs, cvecs))
+        cids = np.array([r[0] for r in rows])
+        order = np.argsort(cids, kind="stable")
+        order = order[cnorms[order] != 0]
+        self.cids, self.cvecs, self.cnorms = cids[order], cvecs[order], cnorms[order]
+        self.dim = dim
+
+    @classmethod
+    def sample(
+        cls, vecs: DataFrame, centroid_mod: int, id_col: str, vec_col: str, who: str
+    ) -> "CentroidTable":
+        """The deterministic id-sample of an untrained IVF: every vector
+        whose ``id % centroid_mod == 0`` (reproducible across engines
+        without RNG state). An id space with no multiple of
+        ``centroid_mod`` would empty the assignment and silently return
+        nothing, so it raises instead."""
+        table = cls(
+            vecs.filter((F.col(id_col) % centroid_mod) == 0).select(id_col, vec_col),
+            who,
+        )
+        if not len(table.cids):
+            raise ValueError(
+                f"{who}: no centroids — no {id_col} divisible by "
+                f"{centroid_mod}; choose a centroid_mod matching the corpus "
+                "id space"
+            )
+        return table
+
+    def to_frame(self, spark) -> DataFrame:
+        """``(cid, cvec, cnorm)``, one row per centroid, as a local
+        relation with the collected column types."""
+        return spark.createDataFrame(
+            [
+                (c.item(), v.tolist(), float(n))
+                for c, v, n in zip(self.cids, self.cvecs, self.cnorms)
+            ],
+            StructType(
+                [self.cid_field, self.cvec_field, StructField("cnorm", DoubleType())]
+            ),
+        )
+
+
+def _as_table(centroids, who: str) -> CentroidTable:
+    return (
+        centroids
+        if isinstance(centroids, CentroidTable)
+        else CentroidTable(centroids.select("cid", "cvec"), who)
+    )
+
+
+def _cell_pass(
+    unit: DataFrame,
+    centroids,
+    vec_col: str,
+    id_col: str,
+    carry: tuple[str, ...],
+    residual: bool,
+    who: str,
+) -> DataFrame:
+    """One ``mapInArrow`` pass of ``vec.cell_batches`` over ``unit``
+    against the frozen table: ``(id_col, *carry, cell[, res])``."""
+    from functools import partial
+
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from mongoshake_spark.functions import vec
+
+    table = _as_table(centroids, who)
+    fields = [unit.schema[c] for c in (id_col, *carry)]
+    fields.append(StructField("cell", table.cid_field.dataType))
+    if residual:
+        fields.append(StructField("res", ArrayType(DoubleType())))
+    return unit.select(*dict.fromkeys([id_col, *carry, vec_col, "vnorm"])).mapInArrow(
+        partial(
+            vec.cell_batches, cents=table.cvecs, cnorm=table.cnorms,
+            cids=table.cids, cell_type=to_arrow_type(table.cid_field.dataType),
+            id_col=id_col, vec_col=vec_col, keep_cols=carry,
+            residual=residual, who=who,
+        ),
+        StructType(fields),
     )
 
 
 def assign_nearest_centroid(
     unit: DataFrame,
-    centroids: DataFrame,
+    centroids: DataFrame | CentroidTable,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     carry: tuple[str, ...] = (),
-    cents_arr: DataFrame | None = None,
 ) -> DataFrame:
     """Nearest-centroid cell assignment — the ONE implementation shared by
-    :func:`ivf_assign`, :func:`ivf_topk` and :func:`semantic_neardup`
-    (the (cos, -cid) tie-break must stay bit-identical to every oracle's
-    ``row_number ORDER BY cs DESC, cid``, so it lives in exactly one
-    place). ``unit`` carries ``vnorm`` (see :func:`with_norm`);
-    ``centroids`` is small — (cid, cvec, cnorm) — and broadcast. The
-    argmax runs IN-ROW over the centroid table collected into a one-row
-    array and broadcast (guide §2.4): the per-(cos, -cid) struct max is
-    the same lexicographic comparison the old grouped
-    ``max(struct(cs, ncid))`` aggregate used, computed by ``array_max``
-    over the k candidates of each row — so the winning cell per vector
-    is bit-identical but the corpus never shuffles at all (the former
-    shape exploded k candidate rows per vector and re-grouped them by
-    id — one corpus exchange per assignment). ``carry`` columns simply
-    stay on the row. Returns ``(id_col, *carry, cell)``. ``cents_arr``
-    (optional): a pre-built :func:`collect_centroid_arr` frame — the
-    same one-row array, aggregated once by the caller instead of per
-    plan (argmax over the array is order-independent, so reuse is
-    bit-exact)."""
-    carr = cents_arr if cents_arr is not None else collect_centroid_arr(centroids)
-
-    def one(c):
-        cs = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                c["cvec"],
-                lambda x, y: x.cast("double") * y.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ) / (F.col("vnorm") * c["cnorm"])
-        return F.struct(cs.alias("cs"), (-c["cid"]).alias("ncid"))
-
-    best = F.array_max(F.transform(F.col("_cents"), one))
-    return (
-        unit.crossJoin(F.broadcast(carr))
-        .withColumn("_best", best)
-        # an empty centroid table produced zero rows in the grouped form
-        # (nothing to explode); the in-row form must drop the null-best
-        # rows to match
-        .filter(F.col("_best").isNotNull())
-        .select(F.col(id_col), *carry, (-F.col("_best.ncid")).alias("cell"))
+    :func:`ivf_assign`, :func:`ivf_topk`, :func:`semantic_neardup` and
+    the IVF-PQ residuals (the (cs desc, cid asc) order must stay
+    bit-identical to every oracle's ``row_number ORDER BY cs DESC,
+    cid``, so it lives in exactly one place: ``vec.nearest_cosine``).
+    ``unit`` carries ``vnorm`` (see :func:`with_norm`); ``centroids`` is
+    a :class:`CentroidTable` or a ``(cid, cvec, …)`` frame, collected
+    once here. The argmax is one map-only ``mapInArrow`` pass over the
+    frozen table: the corpus never shuffles, and ``carry`` columns stay
+    on the row. A null, wrong-length or null-element embedding raises
+    ``ValueError`` naming its id. Returns ``(id_col, *carry, cell)``."""
+    return _cell_pass(
+        unit, centroids, vec_col, id_col, carry, False, "assign_nearest_centroid"
     )
 
 
@@ -428,13 +499,10 @@ def ivf_assign(
 ) -> DataFrame:
     """IVF cell assignment: each vector joins its nearest centroid by
     cosine (tiebreak: lower centroid id). Thin wrapper over
-    :func:`assign_nearest_centroid` that derives the norms; ``centroids``
-    needs only (cid, cvec)."""
+    :func:`assign_nearest_centroid` that derives the vector norms;
+    ``centroids`` needs only (cid, cvec). Returns ``(id_col, cell)``."""
     unit = with_norm(vecs.select(F.col(id_col), F.col(vec_col)), vec_col)
-    cents = centroids.select(
-        "cid", "cvec", F.expr(norm_expr("cvec")).alias("cnorm")
-    )
-    return assign_nearest_centroid(unit, cents, vec_col, id_col)
+    return assign_nearest_centroid(unit, centroids, vec_col, id_col)
 
 
 def ivf_topk(
@@ -459,48 +527,25 @@ def ivf_topk(
     Trained centroids concentrate true neighbors into fewer probed cells
     (scripts/ann_recall_proof.py measures the recall gain).
 
-    Scale shape: centroids and the probe map are tiny and broadcast; the
-    only corpus-sized operations are one broadcast-join cell assignment
-    (aggregate, not window) and one broadcast semi-join restricting the
-    scan to probed cells — candidate scoring touches |probed cells| of the
+    Scale shape: the centroids are a frozen :class:`CentroidTable` (one
+    collect, under its ceiling) and the probe map is tiny and broadcast;
+    the only corpus-sized operations are one map-only ``mapInArrow``
+    cell assignment and one broadcast semi-join restricting the scan to
+    probed cells — candidate scoring touches |probed cells| of the
     corpus instead of all of it. The final top-k window partitions by
     query_id (small side)."""
     unit = with_norm(vecs, vec_col)
     if centroids is not None:
-        ccid, ccvec = centroids.columns[:2]
-        centroids = with_norm(
-            centroids.select(F.col(ccid).alias("cid"), F.col(ccvec).alias("cvec")),
-            "cvec",
-        ).withColumnRenamed("vnorm", "cnorm")
-        if centroids.isEmpty():
+        table = CentroidTable(centroids, "ivf_topk")
+        if not len(table.cids):
             raise ValueError("ivf_topk: trained centroid table is empty")
     else:
-        # model-sized rows from a corpus scan: checkpoint once so the
-        # emptiness probe, the assignment broadcast and the probe-map
-        # broadcast reuse ONE materialization instead of three corpus
-        # scans (guide §1.2; same pin as ivfpq_topk)
-        centroids = (
-            unit.filter((F.col(id_col) % centroid_mod) == 0)
-            .select(
-                F.col(id_col).alias("cid"),
-                F.col(vec_col).alias("cvec"),
-                F.col("vnorm").alias("cnorm"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        if centroids.isEmpty():
-            # an id space with no multiple of centroid_mod would otherwise
-            # empty the assignment and silently return zero results — the
-            # violated sampling assumption must be loud
-            raise ValueError(
-                f"no centroids: no {id_col} divisible by {centroid_mod} — "
-                "choose a centroid_mod matching the corpus id space"
-            )
-    # cell assignment carrying the vector+norm through the aggregate
-    # (one map-side-combined shuffle; avoids a corpus self-join with
-    # ivf_assign's (id, cell) output)
+        table = CentroidTable.sample(unit, centroid_mod, id_col, vec_col, "ivf_topk")
+    centroids = table.to_frame(unit.sparkSession)
+    # cell assignment carrying the vector+norm on the row (no corpus
+    # self-join with ivf_assign's (id, cell) output)
     assigned = assign_nearest_centroid(
-        unit, centroids, vec_col, id_col, carry=(vec_col, "vnorm")
+        unit, table, vec_col, id_col, carry=(vec_col, "vnorm")
     )
     queries = unit.filter(F.col(id_col).isin(list(query_ids))).select(
         F.col(id_col).alias("query_id"),
@@ -643,8 +688,8 @@ def semantic_neardup(
     trade-off; the oracle replays the identical clustering so the recall
     loss is part of the pinned contract).
 
-    Scale shape: cell assignment is one broadcast join + partial-combine
-    aggregate (no window, corpus shuffles once); pair generation is one
+    Scale shape: cell assignment is one map-only ``mapInArrow`` pass over
+    the frozen centroid sample (no shuffle); pair generation is one
     shuffle of the corpus partitioned BY CELL and a vectorized numpy block
     per cell (Arrow batches, no Python-per-row). A degenerate giant cell
     re-concentrates the quadratic cost — pick centroid density so cells
@@ -654,26 +699,9 @@ def semantic_neardup(
     import pandas as pd
 
     unit = with_norm(vecs, vec_col)
-    # model-sized rows from a corpus scan: checkpoint once so the
-    # emptiness probe and the assignment broadcast reuse ONE
-    # materialization instead of two corpus scans (guide §1.2)
-    centroids = (
-        unit.filter((F.col(id_col) % centroid_mod) == 0)
-        .select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("cvec"),
-            F.col("vnorm").alias("cnorm"),
-        )
-        .localCheckpoint(eager=True)
+    centroids = CentroidTable.sample(
+        unit, centroid_mod, id_col, vec_col, "semantic_neardup"
     )
-    if centroids.isEmpty():
-        # an id space with no multiple of centroid_mod would otherwise
-        # empty the assignment and silently return zero results — the
-        # violated sampling assumption must be loud
-        raise ValueError(
-            f"no centroids: no {id_col} divisible by {centroid_mod} — "
-            "choose a centroid_mod matching the corpus id space"
-        )
     assigned = assign_nearest_centroid(
         unit, centroids, vec_col, id_col, carry=(vec_col,)
     ).withColumnRenamed(id_col, "_id")

@@ -1,9 +1,9 @@
-"""Bit-exact numpy kernels for the PQ ANN plane.
+"""Bit-exact numpy kernels for the vector plane: PQ, k-means and IVF.
 
 Each kernel replays, over whole row blocks at once, the arithmetic the
-Spark SQL expressions of the quantized ANN path perform one row at a
-time, so a ``mapInArrow`` pass built on them returns the same doubles
-the higher-order-function plans (and the DuckDB oracles) return:
+Spark SQL expressions of the vector plane perform one row at a time, so
+a ``mapInArrow`` pass built on them returns the same doubles the
+higher-order-function plans (and the DuckDB oracles) return:
 
 - :func:`fold_dot` — ``similarity.dot_expr``: ``acc = acc + a_j * b_j``
   from 0.0, left to right over the last axis. Vectorized across rows,
@@ -19,7 +19,11 @@ the higher-order-function plans (and the DuckDB oracles) return:
   half-even on the binary value, so it differs on decimal ties.
 - :func:`nearest_code` — ``array_min`` over ``(round(d2, 6), cluster)``
   structs: the smallest rounded distance, ties to the smaller cluster
-  id, NaN ordered above every number (Spark's double ordering).
+  id, NaN ordered above every number (Spark's double ordering). PQ
+  encodes with it per subspace; k-means is its one-subspace case.
+- :func:`nearest_cosine` — ``array_max`` over ``(cs, -cid)`` structs:
+  the IVF cell of a vector, the largest cosine, ties to the smaller
+  cell id, NaN above every number.
 - :func:`adc_sum` — the per-subspace LUT lookups of ADC scoring, folded
   in subspace order.
 - :func:`topk_desc` — the ``ORDER BY score DESC, id ASC`` order of the
@@ -28,9 +32,13 @@ the higher-order-function plans (and the DuckDB oracles) return:
   distributed mean does not depend on how the rows are split.
 
 The Arrow batch kernels at the end (:func:`encode_batches`,
-:func:`lloyd_partials`, :func:`adc_topk`) are the bodies of the PQ
-``mapInArrow`` passes. Nothing here touches Spark: the callers in
-``functions/quantization`` own every collect and every plan.
+:func:`lloyd_partials`, :func:`assign_batches`, :func:`cell_batches`,
+:func:`adc_topk`) are the bodies of the vector plane's ``mapInArrow``
+passes. Nothing here touches Spark: the callers in
+``functions/quantization``, ``functions/clustering`` and
+``functions/similarity`` own every collect and every plan, and each
+frozen model they collect sits under a declared ceiling
+(:func:`check_ceiling`).
 """
 
 from __future__ import annotations
@@ -49,6 +57,19 @@ _MICRO = Decimal("1e-6")
 _FAST_MAX = float(2**40)
 #: scaled values whose fraction is this close to .5 take the exact path
 _TIE_EPS = 1e-3
+#: rows per block of :func:`nearest_cosine`: bounds its (rows, cells)
+#: score matrix, whatever the Arrow batch size
+_ROW_BLOCK = 1024
+
+
+def check_ceiling(what: str, entries: int, cap: int) -> None:
+    """Fail loudly when a driver-resident model table exceeds its cap."""
+    if entries > cap:
+        raise ValueError(
+            f"{what}: {entries} entries exceed the driver-residency "
+            f"ceiling {cap} — the table is collected to the driver and "
+            "shipped to every task by design; shrink the model or the query set"
+        )
 
 
 def fold_dot(a, b) -> np.ndarray:
@@ -117,6 +138,25 @@ def nearest_code(sv, codebook, mask) -> np.ndarray:
         better = (best < 0) | (d < best_d) | (np.isnan(best_d) & ~np.isnan(d))
         best[better] = c
         best_d[better] = d[better]
+    return best
+
+
+def nearest_cosine(x, xnorm, cents, cnorm) -> np.ndarray:
+    """(n,) row indices into ``cents`` (k >= 1, d), whose rows are in
+    ascending cell-id order: for each row of ``x`` (n, d) with norm
+    ``xnorm``, the centroid of the largest cosine
+    ``fold_dot(x, c) / (xnorm * cnorm)``. Equal cosines go to the
+    earlier row (the smaller id), ``-0.0`` equals ``0.0`` and NaN ranks
+    above every number, as Spark orders ``(cs, -cid)`` structs;
+    ``np.argmax`` returns the first maximum and the first NaN."""
+    best = np.empty(x.shape[0], dtype=np.int64)
+    for lo in range(0, x.shape[0], _ROW_BLOCK):
+        hi = lo + _ROW_BLOCK
+        with np.errstate(invalid="ignore", divide="ignore"):
+            cs = fold_dot(x[lo:hi, None, :], cents[None]) / (
+                xnorm[lo:hi, None] * cnorm[None]
+            )
+        best[lo:hi] = np.argmax(cs, axis=1)
     return best
 
 
@@ -245,7 +285,7 @@ def encode_batches(batches, codebook, mask, id_col, vec_col, keep_cols):
         )
 
 
-def lloyd_partials(batches, codebook, mask, id_col, vec_col):
+def lloyd_partials(batches, codebook, mask, id_col, vec_col, who):
     """One Lloyd update's pass: assign each row to its nearest codeword
     per subspace and yield, once per partition, one row per (sub,
     cluster, pos) with the member count ``n`` and the
@@ -256,7 +296,7 @@ def lloyd_partials(batches, codebook, mask, id_col, vec_col):
     parts: dict = {}
     counts = np.zeros(mask.shape, dtype=np.int64)
     for b in batches:
-        x = batch_matrix(b, id_col, vec_col, m * d, "pq_train")
+        x = batch_matrix(b, id_col, vec_col, m * d, who)
         codes = encode(x, codebook, mask)
         for s in range(m):
             xs = x[:, s * d : (s + 1) * d]
@@ -281,6 +321,51 @@ def lloyd_partials(batches, codebook, mask, id_col, vec_col):
                 ),
             }
         )
+
+
+def assign_batches(batches, centroids, mask, id_col, vec_col):
+    """k-means' assignment pass: ``(id, cluster int32, d2)`` per batch,
+    the cluster from :func:`nearest_code` against the (k, d)
+    ``centroids`` and ``d2`` its ``round(d2, 6)``."""
+    import pyarrow as pa
+
+    for b in batches:
+        x = batch_matrix(b, id_col, vec_col, centroids.shape[1], "kmeans_assign")
+        code = nearest_code(x, centroids, mask)
+        d2 = spark_round(fold_sqdiff(x, centroids[code]))
+        yield pa.RecordBatch.from_arrays(
+            [b.column(id_col), pa.array(code, pa.int32()), pa.array(d2)],
+            names=[id_col, "cluster", "d2"],
+        )
+
+
+def cell_batches(
+    batches, cents, cnorm, cids, cell_type, id_col, vec_col, keep_cols,
+    residual, who,
+):
+    """The IVF cell pass: ``(id, *keep_cols, cell)`` per batch, the cell
+    from :func:`nearest_cosine` over the batch's ``vnorm`` column, plus
+    the residual ``res`` = vector − its cell's centroid when
+    ``residual``. No centroids, no rows (an empty cell table assigns
+    nothing)."""
+    import pyarrow as pa
+
+    dim = cents.shape[1]
+    for b in batches:
+        if not len(cids):
+            continue
+        x = batch_matrix(b, id_col, vec_col, dim, who)
+        norm = b.column("vnorm").to_numpy(zero_copy_only=False)
+        best = nearest_cosine(x, norm, cents, cnorm)
+        cols = [b.column(c) for c in (id_col, *keep_cols)]
+        cols.append(pa.array(cids[best], cell_type))
+        names = [id_col, *keep_cols, "cell"]
+        if residual:
+            res = (x - cents[best]).reshape(-1)
+            offsets = np.arange(0, len(res) + 1, dim, dtype=np.int32)
+            cols.append(pa.ListArray.from_arrays(pa.array(offsets), pa.array(res)))
+            names.append("res")
+        yield pa.RecordBatch.from_arrays(cols, names=names)
 
 
 def adc_topk(batches, codebook, mask, lut, qnorm, qids, depth, id_col, vec_col):

@@ -171,7 +171,7 @@ ORDER BY query_id, rank"""
     "ann_ivf_topk",
     _IVF_ORACLE,
     "IVF-flat ANN: deterministic sampled centroids, nearest-centroid cell "
-    "assignment (broadcast join + struct-max aggregate), n_probe=2 cell "
+    "assignment (one map-only pass over the frozen sample), n_probe=2 cell "
     "probe per query — candidate scoring touches only probed cells. The "
     "oracle replays the identical index construction, so recall loss vs "
     "brute force is part of the pinned contract.",
@@ -224,8 +224,10 @@ a2 AS (SELECT d.vec_id, min(d.cluster) AS cluster, min(m.md) AS d2
     "embeddings: min-id init, nearest-centroid assignment with rounded "
     "distances (ties to the smallest cluster id), centroids re-rounded "
     "each update so both engines iterate from bit-identical state. "
-    "Centroids broadcast (corpus never shuffled for assignment); the "
-    "update shuffle carries k*dim partial means per partition "
+    "k-means is one-subspace PQ: the centroids are a frozen driver-side "
+    "model, each Lloyd update is one map-only mapInArrow pass emitting "
+    "k*dim exact partial sums per partition, and the assignment is one "
+    "more map-only pass — the corpus never shuffles "
     "(functions/clustering.kmeans_assign).",
 )
 def kmeans_embed_q(spark, sf_dir):
@@ -259,7 +261,8 @@ WHERE rank <= 3 ORDER BY cluster, rank""",
     "cluster's documents, rank terms by tf_(t,c) * n_clusters / "
     "df_t where df counts CLUSTERS containing the term — high when "
     "frequent here and absent elsewhere, which is what makes a readable "
-    "label. The corpus shuffle carries distinct (cluster, term) pairs "
+    "label. Assignment is k-means' map-only pass; the corpus shuffle "
+    "carries distinct (cluster, term) pairs "
     "with map-side combine; the cluster-df aggregate and the per-cluster "
     "rank window are both bounded by k x vocab, and the documents "
     "themselves never re-shuffle (functions/clustering.cluster_topics).",
@@ -288,8 +291,8 @@ SELECT vec_id, cluster, d2 FROM ranked WHERE rk <= 25 ORDER BY vec_id""",
     "(SemDeDup-adjacent): k-means-assign every vector (k=8, 2 Lloyd "
     "iterations, the deterministic kmeans_embed chain), then keep "
     "exactly 25 per cluster by portable-hash priority, so a dominant "
-    "content cluster cannot flood the training mix. Assignment is the "
-    "broadcast-centroid map (corpus never shuffles to be assigned); the "
+    "content cluster cannot flood the training mix. Assignment is "
+    "k-means' map-only pass (corpus never shuffles to be assigned); the "
     "quota reuses cap_per_domain's skew-safe two-phase top-K, so even a "
     "cluster holding most of the corpus spreads over the scan's "
     "partitions. No RNG state: the sample reproduces under any "
@@ -362,10 +365,11 @@ ORDER BY query_id, rank"""
     "IVF-flat ANN with a TRAINED coarse quantizer: the deterministic "
     "k-means (k=8, 2 Lloyd iterations, rounded centroids) fits the cell "
     "centroids, then the standard IVF probe (n_probe=2) scores only the "
-    "probed cells. Centroids stay a k-row broadcast on both the fit and "
-    "probe sides; the corpus is touched by one assignment pass per Lloyd "
-    "iteration plus one cell-restricted scoring pass — no all-pairs "
-    "stage anywhere (functions/clustering.kmeans_fit + "
+    "probed cells. The centroids are a frozen k-row driver-side table "
+    "on both the fit and probe sides; the corpus is touched by one "
+    "map-only pass per Lloyd update, one map-only cell assignment and "
+    "one cell-restricted scoring pass — no all-pairs stage anywhere "
+    "(functions/clustering.kmeans_fit + "
     "functions/similarity.ivf_topk(centroids=...)).",
 )
 def ann_ivf_trained_q(spark, sf_dir):
@@ -380,7 +384,7 @@ def ann_ivf_trained_q(spark, sf_dir):
 
 def _pq_d2(sv: str, cent: str) -> str:
     """DuckDB squared-L2 between a subvector and a codeword — same
-    left-to-right fold and round(…, 6) as clustering._assign."""
+    left-to-right fold and round(…, 6) as vec.nearest_code."""
     return (
         f"round(list_sum(list_transform(range(1, len({sv}) + 1), "
         f"i -> (CAST({sv}[i] AS DOUBLE) - {cent}[i]) "

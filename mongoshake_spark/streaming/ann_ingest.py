@@ -16,9 +16,9 @@ Production contract — train once, encode forever:
    drained store's top-k hash-equals the batch ``ivfpq_topk`` on the
    same corpus.
 2. :func:`streaming_ann_ingest` runs inside ``foreachBatch``: assign
-   each batch vector to its nearest cell (broadcast centroid join),
-   compute the residual, PQ-encode against the frozen codebooks (all
-   map-only against broadcast model state — the batch never shuffles),
+   each batch vector to its nearest cell and compute the residual in
+   one pass, PQ-encode against the frozen codebooks (all map-only
+   against frozen driver-side model state — the batch never shuffles),
    and APPEND (id, cell, codes) to the parquet code table. State is the
    code table itself — no state store; a replayed batch re-appends the
    same rows, and the query path deduplicates by id, so restarts
@@ -54,7 +54,7 @@ from mongoshake_spark.functions.quantization import (
     pq_encode,
     pq_train,
 )
-from mongoshake_spark.functions.similarity import with_norm
+from mongoshake_spark.functions.similarity import CentroidTable, with_norm
 
 
 def _model_paths(index_dir: str) -> tuple[str, str, str]:
@@ -86,28 +86,13 @@ def ann_index_bootstrap(
     probe path read these tables as frozen model state."""
     cent_path, cb_path, _ = _model_paths(index_dir)
     unit = with_norm(vecs, vec_col)
-    # model-sized rows from a corpus scan: checkpoint once so the probe
-    # action, the residual-assignment broadcast and the model write all
-    # reuse ONE materialization instead of three corpus scans (same
-    # reasoning as ivfpq_topk — guide §1.2)
-    cents = (
-        unit.filter((F.col(id_col) % centroid_mod) == 0)
-        .select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("cvec"),
-            F.col("vnorm").alias("cnorm"),
-        )
-        .localCheckpoint(eager=True)
+    cents = CentroidTable.sample(
+        unit, centroid_mod, id_col, vec_col, "ann_index_bootstrap"
     )
-    cent_probe = cents.select(F.size("cvec").alias("d")).first()
-    if cent_probe is None:
+    if cents.dim % m != 0:
         raise ValueError(
-            f"ann_index_bootstrap: no {id_col} divisible by {centroid_mod} — "
-            "choose a centroid_mod matching the corpus id space"
+            f"ann_index_bootstrap: dim {cents.dim} not divisible by m={m}"
         )
-    dim = int(cent_probe["d"])
-    if dim % m != 0:
-        raise ValueError(f"ann_index_bootstrap: dim {dim} not divisible by m={m}")
     res = ivfpq_assign_residuals(unit, cents, id_col, vec_col).persist()
     try:
         # no eager count: pq_train's seed collect (orderBy + limit) is
@@ -115,7 +100,7 @@ def ann_index_bootstrap(
         # the persisted residuals itself — a count first was one extra
         # full pass over the corpus for a number nothing used
         codebooks = pq_train(res, m, k_code, iters, id_col, "res")
-        cents.write.mode("overwrite").parquet(cent_path)
+        cents.to_frame(vecs.sparkSession).write.mode("overwrite").parquet(cent_path)
         codebooks.write.mode("overwrite").parquet(cb_path)
     finally:
         res.unpersist()
@@ -138,23 +123,18 @@ def streaming_ann_ingest(
     a divergent model per batch."""
     from mongoshake_spark.streaming.index_lifecycle import read_current
 
-    from mongoshake_spark.functions.similarity import collect_centroid_arr
-
     spark = stream.sparkSession
     cent_path, cb_path, codes_path = _model_paths(index_dir)
     # the model is FROZEN for the stream's lifetime (train-once contract),
     # so read and pin it once — re-planning the parquet scans per
-    # micro-batch is pure scheduling overhead. The codebook becomes a
-    # driver-side PQModel (one collect, m*k rows, under the model
-    # ceiling) that every batch's map-only encode carries in its closure;
-    # the k-centroid table is checkpointed (KB-scale), and its one-row
-    # collected array is aggregated once here instead of inside every
-    # micro-batch's plan (the in-row argmax fold is order-independent,
-    # so reuse is bit-exact)
-    cents = spark.read.parquet(cent_path).localCheckpoint(eager=True)
+    # micro-batch is pure scheduling overhead. The centroids and the
+    # codebook become driver-side frozen tables (one collect each, under
+    # their ceilings) that every batch's map-only passes carry in their
+    # closures
+    cents = CentroidTable(
+        spark.read.parquet(cent_path).select("cid", "cvec"), "streaming_ann_ingest"
+    )
     model = PQModel.from_frame(spark.read.parquet(cb_path))
-    cents_arr = collect_centroid_arr(cents).localCheckpoint(eager=True)
-    fan = spark.sparkContext.defaultParallelism
     # generation pinned WITH the model: a retrain/compaction cutover
     # (streaming/index_lifecycle) swaps the active generation, and rows
     # encoded under the pinned model must not land in a store this stream
@@ -174,20 +154,8 @@ def streaming_ann_ingest(
         # no isEmpty() pre-check: the guard itself cost one job per
         # batch, the same price as just encoding an empty batch (one
         # empty-write task the probe's dedup never sees)
-        #
-        # fan the batch out first: a one-feed-file micro-batch
-        # arrives as ONE scan split, and the in-row nearest-centroid
-        # fold is an interpreted higher-order expr — left on a single
-        # task it serializes the whole assignment
-        # (measured ~1.5 s/batch at sf0.1; the row-wise arithmetic is
-        # partition-independent, so the fan-out is bit-exact). The
-        # exchange carries only the batch's own rows; at production
-        # batch sizes the scan arrives pre-split and the repartition
-        # cost stays one narrow pass of the batch, never the store.
-        unit = with_norm(batch_df.repartition(fan), vec_col)
-        res = ivfpq_assign_residuals(
-            unit, cents, id_col, vec_col, cents_arr=cents_arr
-        )
+        unit = with_norm(batch_df, vec_col)
+        res = ivfpq_assign_residuals(unit, cents, id_col, vec_col)
         # cell rides through the map-only encode (no re-attach join)
         codes = pq_encode(res, model, id_col, "res", keep_cols=("cell",))
         # append-only, like the band index: a crash before the commit

@@ -111,8 +111,8 @@ def test_kmeans_k1_and_validation(spark):
 
 
 def test_kmeans_assignment_plan_broadcasts_centroids(spark, sf_dir):
-    """Assignment must not shuffle the corpus: the centroid join is a
-    broadcast (nested-loop over a k-row side), and no corpus-sized
+    """Assignment must not shuffle the corpus: the centroids ride in the
+    assignment pass's closure (no join at all), and no corpus-sized
     exchange precedes it."""
     from mongoshake_spark.sources.tables import load_table
     from tests.test_plans import _plan
@@ -806,11 +806,10 @@ def test_hash_vectors_compose_with_lsh_neardup(spark, sf_dir):
 
 def test_inrow_assignment_plans_are_map_only(spark):
     """Nearest-codeword encode and nearest-centroid assignment must not
-    hash-shuffle the corpus: the encode is one map-only ``mapInArrow``
-    pass over the frozen PQ model in its closure, and the centroid
-    argmin folds in-row against the broadcast collected centroid table.
-    A reappearing `Exchange hashpartitioning` on these frames is the
-    regression this guards."""
+    hash-shuffle the corpus: the encode, the k-means assignment and the
+    IVF cell assignment are each one map-only ``mapInArrow`` pass over
+    a frozen model in its closure. A reappearing `Exchange
+    hashpartitioning` on these frames is the regression this guards."""
     from mongoshake_spark.functions import quantization as pq
     from mongoshake_spark.functions.clustering import kmeans_assign
     from mongoshake_spark.functions.similarity import (
@@ -856,9 +855,12 @@ def _pq_rows(df):
 def test_pq_train_and_topk_are_partition_width_invariant(spark, sf_dir):
     """The Lloyd mean sums per partition and the ADC pass keeps a
     per-partition top-k, so both are checked at several widths: the
-    codebook rows and the top-k rows (ADC-only and re-ranked) must be
-    identical with the corpus split into 1, 3 and 8 partitions."""
+    codebook rows, the top-k rows (ADC-only and re-ranked), the k-means
+    centroids and assignment (one-subspace PQ) and the IVF cells must
+    be identical with the corpus split into 1, 3 and 8 partitions."""
     from mongoshake_spark.functions import quantization as pq
+    from mongoshake_spark.functions.clustering import kmeans_fit
+    from mongoshake_spark.functions.similarity import ivf_assign
     from mongoshake_spark.sources.tables import load_table
 
     vecs = load_table(spark, sf_dir, "embeddings")
@@ -866,14 +868,23 @@ def test_pq_train_and_topk_are_partition_width_invariant(spark, sf_dir):
 
     def run(df):
         cb = pq.pq_train(df, m=4, k=8, iters=3)
+        assigned, cents = kmeans_fit(df, k=8, iters=3)
+        sample = df.filter("vec_id % 29 = 0").selectExpr(
+            "vec_id AS cid", "embedding AS cvec"
+        )
         return (
             [(r["sub"], r["cluster"], tuple(r["centroid"])) for r in cb.collect()],
             _pq_rows(pq.pq_topk(df, qids, k=5, codebooks=cb)),
             _pq_rows(pq.pq_topk(df, qids, k=5, iters=2, rerank=25)),
+            sorted((r["cluster"], tuple(r["centroid"])) for r in cents.collect()),
+            _pq_rows(assigned),
+            _pq_rows(ivf_assign(df, sample)),
         )
 
     base = run(vecs.repartition(1))
     assert len(base[0]) == 32 and len(base[1]) == 50 and len(base[2]) == 50
+    n = vecs.count()
+    assert len(base[3]) == 8 and len(base[4]) == n and len(base[5]) == n
     for width in (3, 8):
         assert run(vecs.repartition(width)) == base, width
 
@@ -928,6 +939,29 @@ def test_pq_degenerate_inputs(spark):
     with pytest.raises(ValueError, match=r"vec_id=21 is null"):
         pq.pq_topk(null_vec, [21], k=3, codebooks=cb)
 
+    # k-means (one-subspace PQ) and the IVF cell pass read embeddings
+    # through the same batch_matrix: a bad row raises naming its id
+    # instead of landing in cluster (or cell) 0
+    from mongoshake_spark.functions.similarity import ivf_assign
+
+    short = spark.createDataFrame(rows + [(23, [1.0])], schema)
+    null_elem = spark.createDataFrame(
+        rows + [(22, [1.0, None] + [1.0] * 6)], schema
+    )
+    for bad, what in (
+        (null_vec, "vec_id=21 is null"),
+        (short, "vec_id=23 is of length 1"),
+        (null_elem, "vec_id=22 is holding a null"),
+    ):
+        for iters in (1, 2):
+            with pytest.raises(Exception, match=rf"ValueError.*{what}"):
+                kmeans_assign(bad, k=4, iters=iters).collect()
+    cents = vecs.filter("vec_id % 4 = 0").selectExpr(
+        "vec_id AS cid", "embedding AS cvec"
+    )
+    with pytest.raises(Exception, match=r"ValueError.*vec_id=23 is of length 1"):
+        ivf_assign(short, cents).collect()
+
     # zero-norm query: dropped like with_norm drops it, others unaffected
     with_zero = spark.createDataFrame(rows + [(30, [0.0] * 8)], schema)
     got = pq.pq_topk(with_zero, [0, 30], k=3, codebooks=cb).collect()
@@ -950,21 +984,29 @@ def test_pq_degenerate_inputs(spark):
 def test_ann_pq_adc_job_count_and_map_in_arrow_plan(spark, sf_dir):
     """One ann_pq_adc call runs at most 8 Spark jobs (seed collect,
     Lloyd pass, query collect, scoring pass + window + orderBy; the HOF
-    plan ran 20), and its executed plan scores through MapInArrow with
-    no zip_with/aggregate fold left."""
+    plan ran 20) and one kmeans_embed call at most 5 (seed collect,
+    Lloyd pass, assignment pass + orderBy; the HOF plan ran 11). Each
+    executed plan runs through MapInArrow with no zip_with/aggregate
+    fold left."""
     from mongoshake_spark.plans import QUERIES
+    from mongoshake_spark.sources.tables import load_table
 
     sc = spark.sparkContext
-    group = "test-ann-pq-adc-jobs"
-    sc.setJobGroup(group, group)
-    try:
-        df = QUERIES["ann_pq_adc"].fn(spark, sf_dir)
-        assert len(df.collect()) == 50
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(jobs) <= 8, sorted(jobs)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan, plan
-    assert "zip_with" not in plan and "aggregate(" not in plan, plan
+    n_vecs = load_table(spark, sf_dir, "embeddings").count()
+    for name, max_jobs, n_rows in (
+        ("ann_pq_adc", 8, 50),
+        ("kmeans_embed", 5, n_vecs),
+    ):
+        group = f"test-{name}-jobs"
+        sc.setJobGroup(group, group)
+        try:
+            df = QUERIES[name].fn(spark, sf_dir)
+            assert len(df.collect()) == n_rows, name
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(jobs) <= max_jobs, (name, sorted(jobs))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, plan
+        assert "zip_with" not in plan and "aggregate(" not in plan, plan

@@ -101,6 +101,60 @@ def test_nearest_code_breaks_ties_to_smaller_cluster():
     assert vec.nearest_code(sv[:1], cb_nan, np.ones(2, bool)).tolist() == [1]
 
 
+def test_nearest_cosine_matches_spark_array_max(spark, monkeypatch):
+    """The IVF cell argmax replays ``array_max`` over ``(cs, -cid)``
+    structs, the in-row fold it replaced: the largest cosine, equal
+    cosines to the smaller cid, NaN above every number. Checked against
+    that Spark expression inline on random rows plus duplicate
+    centroids (ties), NaN and infinite coordinates, with a small row
+    block so the blocking is exercised too."""
+    monkeypatch.setattr(vec, "_ROW_BLOCK", 7)
+    rng = np.random.default_rng(5)
+    x = np.vstack(
+        [
+            rng.normal(size=(40, 3)),
+            [[1.0, 0.0, 0.0], [0.0, 2.0, 0.0], [np.nan, 1.0, 0.0],
+             [np.inf, 1.0, 0.0], [0.0, 0.0, 3.0]],
+        ]
+    )
+    base = np.vstack([rng.normal(size=(5, 3)), [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]])
+    tables = {
+        "ties": (base[[0, 5, 1, 5, 6, 2, 6]], [9, 4, 7, 2, 11, 3, 5]),
+        "nan": (np.vstack([base[:3], [[0.5, np.nan, 0.0]]]), [6, 1, 8, 4]),
+    }
+    xnorm = np.sqrt(vec.fold_dot(x, x))
+    for name, (cents, cids) in tables.items():
+        cnorm = np.sqrt(vec.fold_dot(cents, cents))
+        arr = [
+            (int(c), v.tolist(), float(n)) for c, v, n in zip(cids, cents, cnorm)
+        ]
+        df = spark.createDataFrame(
+            [(i, x[i].tolist(), float(xnorm[i]), arr) for i in range(len(x))],
+            "i long, v array<double>, vnorm double, "
+            "cents array<struct<cid: long, cvec: array<double>, cnorm: double>>",
+        )
+
+        def one(c):
+            cs = F.aggregate(
+                F.zip_with("v", c["cvec"], lambda a, b: a * b),
+                F.lit(0.0),
+                lambda acc, t: acc + t,
+            ) / (F.col("vnorm") * c["cnorm"])
+            return F.struct(cs.alias("cs"), (-c["cid"]).alias("ncid"))
+
+        want = [
+            -r["ncid"]
+            for r in df.select(
+                "i", F.array_max(F.transform("cents", one))["ncid"].alias("ncid")
+            )
+            .orderBy("i")
+            .collect()
+        ]
+        order = np.argsort(cids)
+        best = vec.nearest_cosine(x, xnorm, cents[order], cnorm[order])
+        assert np.asarray(cids)[order][best].tolist() == want, name
+
+
 def test_topk_desc_orders_like_the_spark_window(spark):
     from pyspark.sql import Window
 
