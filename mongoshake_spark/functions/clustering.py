@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from mongoshake_spark.functions import vec
+from mongoshake_spark.functions.quantization import _pq_fit
 
 
 def kmeans_fit(
@@ -50,8 +51,6 @@ def kmeans_fit(
     update's centroids, as a local relation; clusters emptied by an
     update disappear). A null, wrong-length or null-element embedding
     raises ``ValueError`` naming its id."""
-    from mongoshake_spark.functions.quantization import _pq_fit
-
     model = _pq_fit(vecs, 1, k, iters, id_col, vec_col, who="kmeans_fit")
     cb, mask = model.codebook[0], model.mask[0]
     cents = vecs.sparkSession.createDataFrame(

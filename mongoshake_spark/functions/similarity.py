@@ -427,14 +427,6 @@ class CentroidTable:
         )
 
 
-def _as_table(centroids, who: str) -> CentroidTable:
-    return (
-        centroids
-        if isinstance(centroids, CentroidTable)
-        else CentroidTable(centroids.select("cid", "cvec"), who)
-    )
-
-
 def _cell_pass(
     unit: DataFrame,
     centroids,
@@ -452,7 +444,11 @@ def _cell_pass(
 
     from mongoshake_spark.functions import vec
 
-    table = _as_table(centroids, who)
+    table = (
+        centroids
+        if isinstance(centroids, CentroidTable)
+        else CentroidTable(centroids.select("cid", "cvec"), who)
+    )
     fields = [unit.schema[c] for c in (id_col, *carry)]
     fields.append(StructField("cell", table.cid_field.dataType))
     if residual:
